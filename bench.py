@@ -232,9 +232,10 @@ HEADLINE = [
     "merkle_range_sync_plan",
 ]
 
-# queries whose FIRST run materializes an at-rest table into a session
-# cache (_INDEX_CACHE / _BUCKET_CACHE / _SIG_CACHE / _BUCKETED_CACHE /
-# _POSTING_CACHE) — their cold-vs-warm delta is the one-time write cost
+# queries whose FIRST run materializes an at-rest table (built once per
+# session through oracle_vector_search_spark.io.at_rest: the index, LSH
+# buckets, MinHash signatures, bucketed tables, postings, ...) — their
+# cold-vs-warm delta is the one-time write cost
 AT_REST_WRITERS = {
     "minhash_near_dup_pairs",
     "lsh_ann_topk",

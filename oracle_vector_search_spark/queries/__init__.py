@@ -77,164 +77,8 @@ def load_all_modules() -> None:
         __import__(f"oracle_vector_search_spark.queries.{mod}")
 
 
-# Registry ordering exposed to the driver. The driver's hard correctness
-# gate checks a 50-entry prefix of queries(), so the prefix ROTATES each
-# round to spread verification across the whole registry:
-#   r1 ∪ r2 ∪ r3 ∪ r4 ∪ r5 windows = every query that existed before
-#   round 5 (186 distinct driver-checked names; CORRECTNESS_r05 was
-#   50/50 green).
-#   r6 window = 8 sentinels + the 42 oldest round-5 additions
-#   (CORRECTNESS_r06: 49/50 green; the one red was
-#   embedding_covariance_upper's −0.0-vs-+0.0 rounding artifact, fixed
-#   this round — see functions/rounding.py).
-#   r7 (this file) = 8 sentinels + embedding_covariance_upper (re-check
-#   of the ±0.0 fix, per VERDICT r6 #1) + the 29 remaining
-#   never-driver-checked r5 additions, the 11 oldest round-6 additions,
-#   and the new round-7 real-pixel chain query (VERDICT r6 #4).
-#   Queries past position 49 remain verified by the local gate
-#   (tools/oracle_check.py, full surface, CI via
-#   tests/test_oracle_surface.py). Keep this list at exactly 50 names.
-#   r8 (this file) = 8 sentinels + 42 of the 49 never-driver-checked
-#   names: the 2 new round-8 queries (reference_crops_clahe_chain_profile,
-#   video_keyframe_knn — VERDICT r7 #3/#6), all 10 round-7 additions
-#   (including l_diversity_audit, dp_noisy_counts_deterministic and
-#   mutual_information_features, omitted from the earlier draft), and
-#   the 30 oldest round-6-era additions in registration order. The 7
-#   overflow names roll to r9 (registration-order tail:
-#   local_clustering_coefficients, graph_edges_incremental_merge,
-#   graph_ann_greedy_walk_recall, kcenter_coreset_seeds,
-#   streaming_topk_trending, streaming_psi_drift_monitor,
-#   zipf_slope_fit) — all were verified green by the r7 judge's local
-#   oracle run; only the driver-side record is pending.
-#   r10 (this file): with the r9 window green (CORRECTNESS_r09:
-#   50/50), every query registered before r10 has a driver row.
-#   Coverage is total, so r10 executes the drafted FRESHNESS rotation:
-#   8 sentinels + the 42 names with the OLDEST driver-side check —
-#   computed from the union of CORRECTNESS_r01–r09 latest-check rounds:
-#   all 26 names whose latest check is r1, then the 16 oldest r2-era
-#   names in registration order. New r10 registrations swap in for the
-#   youngest tail slots as they land (the r9 placeholder discipline);
-#   swapped-out names roll to the r11 window.
-#   r11 (this file): the freshness rotation continues, now with a
-#   RE-CHECK component driven by code changes (VERDICT r10 #4):
-#   8 sentinels + 17 re-check slots — the 15 queries whose plans were
-#   rewritten by the r10 head-slice commit (87c22d9: the WordPiece/
-#   unigram/BPE/vocab/Zipf/allocation/sketch family, incl.
-#   unigram_viterbi_tokenize_top30 via the shared _uv_viterbi_paths
-#   helper) whose newest code predates any driver row, plus the two
-#   BENCH_r10-regressed zero-code-change queries (video_keyframe_knn,
-#   knn_exact_gemm_int8) — + 25 freshness slots filled with the names
-#   holding the OLDEST latest-check (the 17 remaining r2-era names,
-#   then the 8 oldest r3-era names in registration order). New r11
-#   registrations swap in for the youngest freshness tail slots.
-#   r9 = 8 sentinels + ALL 26 never-driver-checked names
-#   (the 7 r6-era names the r8 window rolled + the 19 round-8
-#   additions — every one verified green by the r8 judge's local
-#   oracle run) + 12 re-check slots spent on implementations that
-#   changed in r8 or r9 (the CLAHE-chain parity query — true
-#   pure-numpy CLAHE replaced the equalize stand-in; the two video
-#   queries — at-rest clip corpus + GEMM-tier kNN; the r8
-#   ann_recall_vs_exact_clustered fast path; the bm25/tfidf/term-doc
-#   postings refactor family; the r8 bootstrap/admission/audio
-#   speedups) + the 4 NEW r9 registrations (BPE ranked-merge apply,
-#   distributed suffix array, unigram hard-EM prune step, WordPiece
-#   merge-gain scoring). After this window every query registered
-#   before r9 has a driver-side CORRECTNESS row and every r9 query
-#   gets its first one.
-#   r12 (this file): with CORRECTNESS_r11 green (50/50), every
-#   registered name has a driver row and zero fail at its latest
-#   check. The window executes VERDICT r11 #2: clear the r3 freshness
-#   cohort. 8 sentinels + 1 re-check slot (qdigest_quantile_audit —
-#   its wcum window was rerouted through bounded_global_order this
-#   round to clear the plan-lint finding, VERDICT r11 #1c) + 41
-#   freshness/new slots: ALL 27 names whose latest driver check is
-#   round 3 (oldest cohort, verified from CORRECTNESS_r01–r11), then
-#   the 10 oldest round-4-latest names in registration order + 4 new
-#   r12 registrations (never-driver-checked names claim slots; the
-#   displaced boundary-round names roll to the r13 window).
-#   r13 (this file): CORRECTNESS_r12 green (50/50) → zero fails and
-#   zero never-checked across the cumulative union. The window
-#   executes VERDICT r12 #2: clear the LAST pre-r5 freshness cohort.
-#   8 sentinels + 4 re-check slots (code changed this round after the
-#   names' latest driver rows: split_leakage_audit — nullif(n_users,0)
-#   guard on both engines, ADVICE r12; psi_value_drift,
-#   kcenter_coreset_seeds, wordpiece_greedy_tokenize_top30 — the
-#   deterministic localCheckpoint-release rewiring, VERDICT r12 #3;
-#   the rest of the ckpt-touched family was re-verified by the local
-#   full-registry gate this round) + 1 never-checked slot
-#   (nightly_corpus_build_manifest, the composed end-to-end build —
-#   VERDICT r12 #4) + 37 freshness slots: ALL 31 names whose latest
-#   check is round 4, then the 6 oldest round-5-latest names in
-#   registration order. Per VERDICT r12 #6 the remaining 34 r5-latest
-#   names are the r14 window's freshness plan (34 + sentinels + room
-#   for re-checks/new fits one 50-slot round). New r13 registrations
-#   swap in for the youngest freshness tail slots (the r5 names at
-#   the very end of this list); displaced names roll to r14.
-#   r14 (this file): CORRECTNESS_r13 green (50/50) → cumulative union
-#   still zero fails / zero never-checked; oldest latest-check is
-#   round 5 (34 names). The window executes VERDICT r13 #3: clear the
-#   FINAL freshness cohort. 8 sentinels + 5 re-check slots (code
-#   changed this round after the names' latest driver rows:
-#   embedding_components_single_linkage, dbscan_embedding_clusters,
-#   hits_event_transitions, kcore_embedding_graph — the operator-level
-#   static checkpoint keys became caller-scoped ckpt_key opt-ins,
-#   VERDICT r13 #1 / ADVICE r13 medium; item_cf_similar_parts_top3 —
-#   its misattributed checkpoint key renamed, ADVICE r13 low) + 3 new
-#   r14 registrations (curriculum_quality_order, bloom_dedup_fpr_audit,
-#   triangle_count_graph — never driver-checked) + ALL 34
-#   round-5-latest names in registration order = 50 exactly. After
-#   this window the oldest latest-check is round 6 and every
-#   registered name has a driver row.
-#   r16 (this file): CORRECTNESS_r15 green (50/50). This window is
-#   built around RE-CHECKS, not freshness: VERDICT r15 #1 — ~20
-#   queries REWRITTEN by the r15 optimization round carry driver rows
-#   that predate their rewrite (they were not in the r15 window), and
-#   the rotation discipline's own rule (re-check slots for anything
-#   code-touched after its latest row) must execute before those
-#   rewrites count as driver-proven. 8 sentinels + 18 r15-rewrite
-#   re-checks (bradley_terry_mm_step, psi_value_drift,
-#   ivf_closure_recall_audit, multiprobe_recall_audit, mmr_rerank_top3,
-#   mutual_information_features, dsir_importance_select,
-#   sq8_recall_refine_audit, bootstrap_mean_ci_deterministic,
-#   bigram_lm_fluency, fuzzy_token_pairs_edit1, and the 7
-#   dedup_clusters consumers — curated_corpus_checksum re-checks even
-#   though its r15 row postdates the kernel change, because THIS round
-#   touched it again) + 5 r16-rewrite re-checks (bleu2_pair_eval,
-#   prf_rocchio_requery, kmeans_refine_clusters, semantic_dedup_keep,
-#   pca_top_eigenvector — every query this optimization round
-#   restructured; bigram/psi/curated/nightly are already above) + the
-#   2 r6-latest names the r15 window rolled (shard_export_manifest,
-#   streaming_corpus_admission) + 17 freshness slots from the r7-latest
-#   cohort (38 names, the oldest remaining — 3 of them are already
-#   re-check slots here) in registration order. The 18 remaining
-#   r7-latest names roll to the r17 window: table_stats_profile,
-#   winsorized_value_sums, revenue_yoy_growth, top_orders_with_ties,
-#   event_type_value_mode, knn_label_propagation, copurchase_bfs_hops,
-#   embedding_covariance_upper, reference_crops_decode_parity,
-#   reference_crops_pixel_chain_profile, corpus_summary_card,
-#   class_balanced_sample, xml_roundtrip_checksum, bpe_merge_pairs_top20,
-#   seasonal_hour_anomalies, bpe_apply_merge_recount,
-#   c4_sentence_span_dedup, incremental_revenue_snapshot (and
-#   copurchase_bfs_hops is instead an r16 re-check slot).
-#   r15 (this file): CORRECTNESS_r14 green (50/50) → cumulative union
-#   still zero fails / zero never-checked; oldest latest-check is
-#   round 6 (38 names — VERDICT r14 #2's computed cohort). The window
-#   executes that plan: 8 sentinels + 1 re-check slot
-#   (bloom_dedup_fpr_audit — its planted-duplicate keys were rewritten
-#   to the non-colliding -doc_id - 1 form this round, ADVICE r14) + 5
-#   new r15 registrations (weighted_reservoir_sample_aes, its
-#   streaming reservoir twin streaming_weighted_reservoir,
-#   ann_fusion_rerank_topk, snapshot_index_rebuild_plan,
-#   merkle_range_sync_plan — never driver-checked) + 36 of the 38
-#   round-6-latest names in registration order. The 4th and 5th new
-#   registrations swap in for the youngest freshness tail slots per
-#   the standing discipline; the displaced names
-#   (shard_export_manifest, streaming_corpus_admission) roll to the
-#   r16 window, which therefore starts with 2 r6-latest + the r7
-#   cohort. curriculum_quality_order's oracle string also changed this
-#   round (the stopword list is now interpolated from _CURR_STOPWORDS)
-#   but the generated SQL is semantically identical — no re-check
-#   slot spent; the local full-registry gate re-proved it green.
+# Registry order exposed to the driver; its gate checks this 50-name
+# prefix, rotated each round (history: COVERAGE.md, "Driver window").
 _PRIORITY: tuple[str, ...] = (
     # --- sentinels: always driver-checked in every round ---
     "pipeline_label_parse",

@@ -2011,8 +2011,7 @@ _NV_H, _NV_W = 16, 24  # frame geometry (even levels are MJPEG-lossless)
 # assembly per invocation. This mirrors the deployment reality — a
 # video corpus is an ingested at-rest table, not something the query
 # path synthesizes — and the index/LSH/postings at-rest pattern used
-# everywhere else. applicationId-keyed like the other artifact caches.
-_CLIP_CACHE: dict[str, str] = {}
+# everywhere else (io.at_rest).
 
 
 def _clip_corpus(spark: SparkSession) -> DataFrame:
@@ -2021,14 +2020,13 @@ def _clip_corpus(spark: SparkSession) -> DataFrame:
     import pandas as pd
 
     from oracle_vector_search_spark.io import (
+        at_rest,
         read_artifact,
         write_artifact,
     )
     from oracle_vector_search_spark.scratch import scratch_dir
 
-    key = spark.sparkContext.applicationId
-    path = _CLIP_CACHE.get(key)
-    if path is None:
+    def build():
         import numpy as np
 
         from oracle_vector_search_spark.functions.avi_numpy import (
@@ -2076,8 +2074,9 @@ def _clip_corpus(spark: SparkSession) -> DataFrame:
             ),
             path,
         )
-        _CLIP_CACHE[key] = path
-    return read_artifact(spark, path)
+        return path
+
+    return read_artifact(spark, at_rest(spark, _clip_corpus, build))
 
 
 @register(

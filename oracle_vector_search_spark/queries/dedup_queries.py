@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from oracle_vector_search_spark.functions import text as T
 from oracle_vector_search_spark.io import (
+    at_rest,
     load_table,
     read_artifact,
     write_artifact,
@@ -30,22 +31,16 @@ MINHASH_THRESHOLD = 0.4
 NGRAM_THRESHOLD = 0.35
 SIMHASH_MAX_HAMMING = 1  # tiny synthetic vocab collapses fingerprints; 3 floods pairs
 
-# Session-scoped materialized MinHash signature table:
-# (applicationId, sf_dir) -> parquet path. Signatures (plus the shingle
-# sets used for exact-Jaccard verification) are computed and written
-# ONCE per corpus; near-dup passes read them back — the at-scale shape,
-# where signatures live at rest next to the documents.
-_SIG_CACHE: dict[tuple[str, str], str] = {}
-
-
+# Session-scoped materialized MinHash signature table. Signatures (plus
+# the shingle sets used for exact-Jaccard verification) are computed and
+# written ONCE per corpus; near-dup passes read them back — the at-scale
+# shape, where signatures live at rest next to the documents.
 def _minhash_sig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from oracle_vector_search_spark.scratch import scratch_dir
 
     from oracle_vector_search_spark.operators.dedup import minhash_signatures
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _SIG_CACHE.get(key)
-    if path is None:
+    def build():
         path = scratch_dir("ovs_minhash_sigs_")
         # the fixture is a single parquet file → one input partition;
         # spread the (interpreted, per-row) hash expressions across
@@ -54,30 +49,29 @@ def _minhash_sig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.sparkContext.defaultParallelism
         )
         write_artifact(minhash_signatures(docs), path)
-        _SIG_CACHE[key] = path
+        return path
+
+    path = at_rest(spark, (_minhash_sig_table, sf_dir), build)
     return read_artifact(spark, path)
 
 
 # Session-scoped at-rest SimHash fingerprint table, same shape as the
-# MinHash signature cache: the 28-bit majority-vote expression is the
+# MinHash signature table: the 28-bit majority-vote expression is the
 # expensive part (interpreted higher-order aggregate, O(bits × tokens)
 # per doc), so it is evaluated ONCE per corpus and every consumer —
 # banded near-dup, Hamming kNN — reads 4-byte fingerprints back.
-_FP_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _simhash_fp_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from oracle_vector_search_spark.scratch import scratch_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _FP_CACHE.get(key)
-    if path is None:
+    def build():
         path = scratch_dir("ovs_simhash_fps_")
         docs = load_table(spark, sf_dir, "documents").repartition(
             spark.sparkContext.defaultParallelism
         )
         write_artifact(simhash_fingerprints(docs), path)
-        _FP_CACHE[key] = path
+        return path
+
+    path = at_rest(spark, (_simhash_fp_table, sf_dir), build)
     return read_artifact(spark, path)
 
 

@@ -79,27 +79,24 @@ def csv_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _checksum(events_via_csv(spark, sf_dir))
 
 
-_EVOLVE_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _evolved_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """Scratch parquet dir simulating schema evolution: an 'old' file
     set written WITHOUT the props column (events before the field
     existed) and a 'new' file set with it — the layout a long-lived
     100 TB table actually has after a column was added mid-history."""
-    from oracle_vector_search_spark.io import load_table
+    from oracle_vector_search_spark.io import at_rest, load_table
     from oracle_vector_search_spark.scratch import scratch_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _EVOLVE_CACHE.get(key)
-    if path is None:
+    def build():
         path = scratch_dir("ovs_evolved_")
         ev = load_table(spark, sf_dir, "events")
         old = ev.filter(F.col("event_id") % 2 == 0).drop("props")
         new = ev.filter(F.col("event_id") % 2 == 1)
         old.coalesce(2).write.mode("append").parquet(path)
         new.coalesce(2).write.mode("append").parquet(path)
-        _EVOLVE_CACHE[key] = path
+        return path
+
+    path = at_rest(spark, (_evolved_events_dir, sf_dir), build)
     return path
 
 

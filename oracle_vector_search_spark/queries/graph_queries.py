@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from oracle_vector_search_spark.io import (
+    at_rest,
     load_table,
     read_artifact,
     write_artifact,
@@ -38,14 +39,10 @@ from oracle_vector_search_spark.plans.ckpt import (
 _DAMPING = 0.85
 _N_ITER = 3
 
-# (applicationId, sf_dir) -> scratch path of the extracted edge list.
 # The graph is an at-rest artifact (same build-once/query-many story as
 # the LSH buckets and the pipeline index): edge extraction scans the
 # corpus ONCE per session; every PageRank run afterwards reads the tiny
 # parquet instead of re-deriving the window pass.
-_GRAPH_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _graph_tables(spark: SparkSession, sf_dir: str):
     """Extract the transition graph once per session and persist it at
     rest; return ``(edges, nodes)`` read back from parquet.
@@ -55,9 +52,7 @@ def _graph_tables(spark: SparkSession, sf_dir: str):
     PageRank node, exactly as the oracle defines it."""
     from oracle_vector_search_spark.scratch import scratch_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _GRAPH_CACHE.get(key)
-    if path is None:
+    def build():
         ev = load_table(spark, sf_dir, "events")
         w = Window.partitionBy("user_id").orderBy(
             F.expr("ts_ns div 1000"), "event_id"
@@ -75,7 +70,9 @@ def _graph_tables(spark: SparkSession, sf_dir: str):
         path = scratch_dir("ovs_graph_")
         write_artifact(edges, path + "/edges")
         write_artifact(nodes, path + "/nodes")
-        _GRAPH_CACHE[key] = path
+        return path
+
+    path = at_rest(spark, (_graph_tables, sf_dir), build)
     return (
         read_artifact(spark, path + "/edges"),
         read_artifact(spark, path + "/nodes"),

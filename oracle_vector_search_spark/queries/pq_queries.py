@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from oracle_vector_search_spark.functions.vector import cosine_similarity
 from oracle_vector_search_spark.io import (
+    at_rest,
     load_table,
     read_artifact,
     write_artifact,
@@ -240,9 +241,6 @@ approx AS (
 )"""
 
 
-_IVFPQ_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _spark_ivfpq_approx(spark: SparkSession, sf_dir: str):
     """(vec_id, cluster_id, av) — the Spark twin of the oracle CTEs.
 
@@ -252,16 +250,15 @@ def _spark_ivfpq_approx(spark: SparkSession, sf_dir: str):
     the probed clusters' partitions."""
     from oracle_vector_search_spark.scratch import scratch_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _IVFPQ_CACHE.get(key)
-    if path is not None:
-        return read_artifact(spark, path)
-    out = _build_ivfpq_approx(spark, sf_dir)
-    path = scratch_dir("ovs_ivfpq_")
-    write_artifact(
-        out.repartition("cluster_id"), path, partition_by=["cluster_id"]
-    )
-    _IVFPQ_CACHE[key] = path
+    def build():
+        out = _build_ivfpq_approx(spark, sf_dir)
+        path = scratch_dir("ovs_ivfpq_")
+        write_artifact(
+            out.repartition("cluster_id"), path, partition_by=["cluster_id"]
+        )
+        return path
+
+    path = at_rest(spark, (_spark_ivfpq_approx, sf_dir), build)
     return read_artifact(spark, path)
 
 

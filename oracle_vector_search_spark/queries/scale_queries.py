@@ -26,6 +26,7 @@ from oracle_vector_search_spark.scratch import scratch_dir
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from oracle_vector_search_spark.io import (
+    at_rest,
     load_table,
     read_artifact,
     write_artifact,
@@ -37,18 +38,14 @@ from oracle_vector_search_spark.operators.skew import (
 )
 from oracle_vector_search_spark.queries import register
 
-# Session-scoped bucketed fact tables: (applicationId, sf_dir) ->
-# (orders_table, lineitem_table) catalog names. Written once, joined
-# many times — the point of bucketing.
-_BUCKETED_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
 _BUCKETS = 16
 
 
+# Bucketed fact tables, once per session: (orders_table,
+# lineitem_table) catalog names. Written once, joined many times — the
+# point of bucketing.
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    names = _BUCKETED_CACHE.get(key)
-    if names is None:
+    def build():
         suffix = re.sub(r"\W+", "_", sf_dir).strip("_")
         ord_t, li_t = f"ovs_ord_b_{suffix}", f"ovs_li_b_{suffix}"
         orders = load_table(spark, sf_dir, "orders").select(
@@ -65,9 +62,9 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             spark, li, li_t, "l_orderkey", buckets=_BUCKETS,
             path=scratch_dir("ovs_bucket_li_"),
         )
-        names = (ord_t, li_t)
-        _BUCKETED_CACHE[key] = names
-    return names
+        return ord_t, li_t
+
+    return at_rest(spark, (_bucketed_tables, sf_dir), build)
 
 
 _PRIORITY_REVENUE_SQL = """
@@ -166,9 +163,6 @@ def salted_skew_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SKEW_PROFILE_CACHE: dict[str, str] = {}
-
-
 def skew_profile_table(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -179,15 +173,16 @@ def skew_profile_table(
     from oracle_vector_search_spark.operators.skew import key_profile
     from oracle_vector_search_spark.scratch import scratch_dir
 
-    path = _SKEW_PROFILE_CACHE.get(sf_dir)
-    if path is None:
+    def build():
         ev = load_table(spark, sf_dir, "events").select("user_id")
         orders = load_table(spark, sf_dir, "orders").select(
             F.col("o_custkey").alias("user_id")
         )
         path = scratch_dir("ovs_skew_profile_")
         write_artifact(key_profile(ev, orders, "user_id", top_n=20), path)
-        _SKEW_PROFILE_CACHE[sf_dir] = path
+        return path
+
+    path = at_rest(spark, (skew_profile_table, sf_dir), build)
     return read_artifact(spark, path)
 
 
@@ -477,15 +472,10 @@ def bloom_prefiltered_urgent_revenue(
 # row lost, duplicated or mutated by the rewrite hash-mismatches.
 # File-count/size mechanics are pinned in tests/test_compaction.py.
 
-_COMPACT_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _compacted_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from oracle_vector_search_spark.operators import compaction
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    dest = _COMPACT_CACHE.get(key)
-    if dest is None:
+    def build():
         frag = scratch_dir("ovs_events_frag_")
         dest = scratch_dir("ovs_events_compact_")
         events = load_table(spark, sf_dir, "events").select(
@@ -503,7 +493,9 @@ def _compacted_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             target_file_bytes=max(1, total // 4),
             sort_cols=["event_id"],
         )
-        _COMPACT_CACHE[key] = dest
+        return dest
+
+    dest = at_rest(spark, (_compacted_events, sf_dir), build)
     return spark.read.parquet(dest)
 
 
@@ -671,13 +663,8 @@ def zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Events written partitioned by event_type at rest — the layout that
 # lets a selective dimension-side filter prune fact partitions at
 # RUNTIME (Spark inserts a DynamicPruning subquery into the scan).
-_DPP_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _dpp_events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _DPP_CACHE.get(key)
-    if path is None:
+    def build():
         path = scratch_dir("ovs_dpp_events_")
         write_artifact(
             load_table(spark, sf_dir, "events").select(
@@ -689,7 +676,9 @@ def _dpp_events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             path,
             partition_by=["event_type"],
         )
-        _DPP_CACHE[key] = path
+        return path
+
+    path = at_rest(spark, (_dpp_events_table, sf_dir), build)
     return read_artifact(spark, path)
 
 

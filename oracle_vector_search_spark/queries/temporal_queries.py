@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from oracle_vector_search_spark.io import load_table
+from oracle_vector_search_spark.io import at_rest, load_table
 from oracle_vector_search_spark.operators.temporal import (
     asof_join,
     range_join_within,
@@ -221,15 +221,6 @@ def purchase_asof_order_salted(
     ).select("event_id", "user_id", "ts_us", "o_orderkey", "o_totalprice")
 
 
-# (applicationId, sf_dir) -> collected key_profile rows. In the
-# deployment the profile is AT-REST telemetry refreshed on ingest and
-# the dispatcher only reads it; computing it per invocation (two scans
-# + aggregations) misrepresented the dispatch premium in the bench —
-# the session cache makes the warm path profile-read + plan choice,
-# exactly the 100 TB shape. ≤ top_n rows per entry, metadata-sized.
-_ASOF_PROFILE_CACHE: dict[tuple, list] = {}
-
-
 @register("purchase_asof_order_auto", _PURCHASE_ASOF_ORACLE)
 def purchase_asof_order_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME as-of semantics served by the PROFILE-DISPATCHED tier
@@ -272,11 +263,11 @@ def purchase_asof_order_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to asof_join_auto would execute it a second time (r12 review).
     # Session-cached: refreshed telemetry belongs to ingest, not to
     # every query invocation (bounded: <= 20 rows per (app, sf)).
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    prof_rows = _ASOF_PROFILE_CACHE.get(cache_key)
-    if prof_rows is None:
-        prof_rows = key_profile(l, r, "user_id").collect()
-        _ASOF_PROFILE_CACHE[cache_key] = prof_rows
+    prof_rows = at_rest(
+        spark,
+        (purchase_asof_order_auto, sf_dir),
+        lambda: key_profile(l, r, "user_id").collect(),
+    )
     sizes = [
         (row["n_left"] or 0) + (row["n_right"] or 0) for row in prof_rows
     ]

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from oracle_vector_search_spark.functions import text as T
-from oracle_vector_search_spark.io import load_table
+from oracle_vector_search_spark.io import at_rest, load_table
 from oracle_vector_search_spark.operators.topk import global_topn_ranked
 from oracle_vector_search_spark.queries import register
 
@@ -323,9 +323,6 @@ def bigram_collocations_top20(
     )
 
 
-_JSONL_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _jsonl_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-time scratch JSONL corpus: documents re-serialized as JSON
     lines plus one planted extra doc and two planted broken lines —
@@ -337,9 +334,7 @@ def _jsonl_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_documents_jsonl,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _JSONL_CACHE.get(key)
-    if path is None:
+    def build():
         path = scratch_dir("ovs_docs_jsonl_")
         docs = load_table(spark, sf_dir, "documents")
         docs.repartition(4).write.mode("overwrite").json(path)
@@ -350,7 +345,9 @@ def _jsonl_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             f.write('{"doc_id": 7, "text": "truncated rec\n')
             f.write("not json at all }{\n")
-        _JSONL_CACHE[key] = path
+        return path
+
+    path = at_rest(spark, (_jsonl_corpus, sf_dir), build)
     return read_documents_jsonl(spark, path)
 
 

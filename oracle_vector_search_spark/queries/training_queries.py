@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from oracle_vector_search_spark.functions import text as T
 from oracle_vector_search_spark.io import (
+    at_rest,
     load_table,
     read_artifact,
     write_artifact,
@@ -651,16 +652,6 @@ def view_purchase_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session-materialized inverted-index tables: (applicationId, sf_dir) ->
-# (postings_path, stats_path). Postings hold one row per distinct
-# (doc_id, term) with the term frequency and the doc length
-# denormalized in; written partitioned by a 16-way first-character
-# bucket (`tb`) that is computable OUTSIDE Spark (ord(term[0]) % 16),
-# so a query for known terms prunes 15/16 of the files at the metadata
-# level — the same at-rest design as the LSH bucket table. The stats
-# side is one row: corpus size + average doc length.
-_POSTING_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
 N_TERM_BUCKETS = 16
 
 
@@ -707,14 +698,20 @@ def build_posting_tables(
     return postings, stats
 
 
+# Session-materialized inverted-index tables: (postings_path,
+# stats_path). Postings hold one row per distinct (doc_id, term) with
+# the term frequency and the doc length denormalized in; written
+# partitioned by a 16-way first-character bucket (`tb`) that is
+# computable OUTSIDE Spark (ord(term[0]) % 16), so a query for known
+# terms prunes 15/16 of the files at the metadata level — the same
+# at-rest design as the LSH bucket table. The stats side is one row:
+# corpus size + average doc length.
 def _posting_tables(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     from oracle_vector_search_spark.scratch import scratch_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    paths = _POSTING_CACHE.get(key)
-    if paths is None:
+    def build():
         p_path = scratch_dir("ovs_postings_")
         s_path = scratch_dir("ovs_corpus_stats_")
         docs = load_table(spark, sf_dir, "documents")
@@ -723,8 +720,9 @@ def _posting_tables(
             postings.repartition("tb"), p_path, partition_by=["tb"]
         )
         write_artifact(stats, s_path)
-        paths = (p_path, s_path)
-        _POSTING_CACHE[key] = paths
+        return p_path, s_path
+
+    paths = at_rest(spark, (_posting_tables, sf_dir), build)
     return (
         read_artifact(spark, paths[0]),
         read_artifact(spark, paths[1]),
@@ -2260,9 +2258,6 @@ def domain_oversample_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TFIDF_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
-
 def _tfidf_tables(spark: SparkSession, sf_dir: str):
     """At-rest TF-IDF statistics (the nightly-build artifacts): the
     per-term idf table (term-bucket-partitioned like the postings, so
@@ -2272,9 +2267,7 @@ def _tfidf_tables(spark: SparkSession, sf_dir: str):
     re-aggregating the corpus."""
     from oracle_vector_search_spark.scratch import scratch_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    paths = _TFIDF_CACHE.get(key)
-    if paths is None:
+    def build():
         postings, stats = _posting_tables(spark, sf_dir)
         idf_path = scratch_dir("ovs_tfidf_idf_")
         norm_path = scratch_dir("ovs_tfidf_norms_")
@@ -2306,8 +2299,9 @@ def _tfidf_tables(spark: SparkSession, sf_dir: str):
             ),
             norm_path,
         )
-        paths = (idf_path, norm_path)
-        _TFIDF_CACHE[key] = paths
+        return idf_path, norm_path
+
+    paths = at_rest(spark, (_tfidf_tables, sf_dir), build)
     return (
         read_artifact(spark, paths[0]),
         read_artifact(spark, paths[1]),

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from oracle_vector_search_spark.io import (
+    at_rest,
     load_table,
     read_artifact,
     write_artifact,
@@ -402,19 +403,13 @@ def embedding_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------ int8-quantized exact search (r5 #5)
 REFINE = 50  # stage-1 candidates per query before float rescore
 
-# At-rest int8 codes table: (applicationId, sf_dir) -> parquet path.
-# Written once per corpus (1 byte/dim payload), scanned by every
-# int8-GEMM query — the 100 TB storage shape.
-_INT8_CODES_CACHE: dict[tuple[str, str], str] = {}
-
-
+# At-rest int8 codes table, written once per corpus (1 byte/dim
+# payload), scanned by every int8-GEMM query — the 100 TB storage shape.
 def _int8_codes_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from oracle_vector_search_spark.operators.knn import quantize_unit_int8
     from oracle_vector_search_spark.scratch import scratch_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _INT8_CODES_CACHE.get(key)
-    if path is None:
+    def build():
         path = scratch_dir("ovs_int8_codes_")
         # Inherit the SOURCE's partition grain instead of a pinned
         # repartition(32): parquet splits grow with bytes, so at 100 TB
@@ -426,7 +421,9 @@ def _int8_codes_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         # this query was this overhead breathing with host load).
         emb = load_table(spark, sf_dir, "embeddings")
         write_artifact(quantize_unit_int8(emb), path)
-        _INT8_CODES_CACHE[key] = path
+        return path
+
+    path = at_rest(spark, (_int8_codes_table, sf_dir), build)
     return read_artifact(spark, path)
 
 

@@ -9,6 +9,10 @@ interpreter exit (atexit). Previously each site called
 runs; now a crashed or finished run leaves at most the root that was
 live at crash time.
 
+Which artifacts exist, and when one is built, is decided by
+``io.at_rest``: each artifact's build runs once per Spark application
+and writes under a ``scratch_dir``; later calls reuse its path.
+
 In a real deployment these would be warehouse paths with a retention
 policy; the single-root-plus-atexit shape is the local-mode stand-in.
 """

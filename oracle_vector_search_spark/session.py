@@ -14,6 +14,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half of physical memory, capped at 48g: large hosts keep the 48g
+    heap, small ones leave room for the OS and the Python workers."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "48g"
+    return f"{min(phys // 2, 48 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "oracle_vector_search_spark",
     cpus: int | None = None,
@@ -46,7 +56,8 @@ def get_spark(
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
         builder = builder.master(master)
         builder = builder.config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
         )
 
     spark = builder.getOrCreate()

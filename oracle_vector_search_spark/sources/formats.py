@@ -25,11 +25,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from oracle_vector_search_spark.io import load_table
+from oracle_vector_search_spark.io import at_rest, load_table
 from oracle_vector_search_spark.scratch import scratch_dir
-
-_ORC_CACHE: dict[tuple[str, str], str] = {}
-_CSV_CACHE: dict[tuple[str, str], str] = {}
 
 # µs-precision timestamps survive CSV only with an explicit format
 _CSV_TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -43,14 +40,14 @@ EVENTS_CSV_SCHEMA = (
 def events_via_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table round-tripped through ORC (written once per
     session, re-read thereafter)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _ORC_CACHE.get(key)
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("ovs_orc_"), "events")
         load_table(spark, sf_dir, "events").repartition(4).write.mode(
             "overwrite"
         ).orc(path)
-        _ORC_CACHE[key] = path
+        return path
+
+    path = at_rest(spark, (events_via_orc, sf_dir), build)
     return spark.read.orc(path)
 
 
@@ -58,9 +55,7 @@ def events_via_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table round-tripped through CSV with explicit schema,
     µs timestamp format, and RFC-4180 quote-doubling (props is a JSON
     string full of quotes/commas — the adversarial CSV payload)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _CSV_CACHE.get(key)
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("ovs_csv_"), "events")
         (
             load_table(spark, sf_dir, "events")
@@ -72,7 +67,9 @@ def events_via_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("timestampFormat", _CSV_TS_FMT)
             .csv(path)
         )
-        _CSV_CACHE[key] = path
+        return path
+
+    path = at_rest(spark, (events_via_csv, sf_dir), build)
     return (
         spark.read.schema(EVENTS_CSV_SCHEMA)
         .option("header", "true")
@@ -83,9 +80,6 @@ def events_via_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_XML_CACHE: dict[tuple[str, str], str] = {}
-
-
 def events_via_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table round-tripped through XML (Spark 4's built-in
     XML source). Same lossiness discipline as CSV: explicit schema and
@@ -93,9 +87,7 @@ def events_via_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``props`` payload (quotes, braces, ampersand-free but
     angle-bracket-adjacent text) is the adversarial part the checksum
     guards."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _XML_CACHE.get(key)
-    if path is None:
+    def build():
         path = os.path.join(scratch_dir("ovs_xml_"), "events")
         (
             load_table(spark, sf_dir, "events")
@@ -107,7 +99,9 @@ def events_via_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("timestampFormat", _CSV_TS_FMT)
             .save(path)
         )
-        _XML_CACHE[key] = path
+        return path
+
+    path = at_rest(spark, (events_via_xml, sf_dir), build)
     return (
         spark.read.schema(EVENTS_CSV_SCHEMA)
         .format("xml")

@@ -2,7 +2,7 @@
 
 The driver's hard correctness gate compares only a 50-entry prefix of
 ``queries()`` against the DuckDB oracle, so the prefix ROTATES per round
-(see ``_PRIORITY``'s comment): sentinels are always present, this
+(history in COVERAGE.md, "Driver window"): sentinels are always present, this
 round's declared re-checks claim their slots, every never-driver-checked
 name claims one, and the remaining slots go to the names with the
 OLDEST latest driver check. The rotation rule itself is asserted

@@ -1,9 +1,11 @@
 #!/usr/bin/env python
-"""Interleaved A/B: old (git HEAD) vs new (working tree) query impls.
+"""Interleaved A/B: old (a git ref) vs new (working tree) query impls.
 
 Alternates old/new run-for-run in ONE session so ambient host phases
 hit both variants (the r15 methodology). Usage:
-    python /tmp/ab_r16.py <sf_dir> <pairs> <query...>
+    python tools/ab_interleaved.py <base_ref> <sf_dir> <pairs> <query...>
+<base_ref> is the commit before the change under test (e.g. HEAD~1
+once the change is committed; HEAD only while it is uncommitted).
 """
 import os
 import statistics
@@ -14,15 +16,18 @@ import types
 
 sys.path.insert(0, __import__("os").path.dirname(__import__("os").path.dirname(__import__("os").path.abspath(__file__))))
 
-sf_dir = sys.argv[1]
-pairs = int(sys.argv[2])
-names = sys.argv[3:]
+if len(sys.argv) < 5:
+    sys.exit(__doc__)
+base_ref = sys.argv[1]
+sf_dir = sys.argv[2]
+pairs = int(sys.argv[3])
+names = sys.argv[4:]
 
 from oracle_vector_search_spark.session import get_spark  # noqa: E402
 import oracle_vector_search_spark.queries as Q  # noqa: E402
 import __spark_entry__ as entry  # noqa: E402
 
-spark = get_spark("ab_r16")
+spark = get_spark("ab_interleaved")
 new_qs = entry.queries()
 
 # map query -> module file
@@ -48,13 +53,13 @@ def load_old_fn(qname):
     path = MOD[qname]
     if path not in _old_mod_cache:
         src = subprocess.check_output(
-            ["git", "-C", os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "show", os.environ.get("AB_REF", "HEAD") + ":" + path]
+            ["git", "-C", os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "show", f"{base_ref}:{path}"]
         ).decode()
         mod = types.ModuleType(f"old_{path.replace('/', '_')}")
         orig = Q.register
         Q.register = lambda name, sql: (lambda fn: fn)
         try:
-            exec(compile(src, f"HEAD:{path}", "exec"), mod.__dict__)
+            exec(compile(src, f"{base_ref}:{path}", "exec"), mod.__dict__)
         finally:
             Q.register = orig
         _old_mod_cache[path] = mod
