@@ -174,7 +174,17 @@ def _query_embeddings(
     (query_stem, embedding, qid). F5: images with no detection simply
     produce no rows. Factored out (ADVICE r5) so :func:`search` and
     :func:`search_radius` cannot diverge — e.g. the best-box tie-break
-    lives in exactly one place."""
+    lives in exactly one place.
+
+    The uploads are hash-partitioned on ``stem`` before the first
+    Python stage: one exchange of the raw upload bytes, which AQE
+    coalesces by size — one task for a single upload, many for a large
+    batch. Without it the five Python stages, each a worker hand-off
+    per task, ran on the caller's partitions: ``defaultParallelism`` of
+    them for a ``createDataFrame`` upload, nearly all empty. ``stem``
+    is the key the best-box aggregate and the crop join group on, so
+    all images of a stem stay in one task."""
+    query_images = query_images.repartition("stem")
     decoded = decode_images(query_images).filter(
         F.col("pixels").isNotNull()
     )

@@ -28,10 +28,14 @@ def formatted_plan(df: DataFrame) -> str:
 def assert_plan_contains(df: DataFrame, *needles: str) -> None:
     plan = formatted_plan(df)
     missing = [n for n in needles if n not in plan]
-    assert not missing, f"plan lacks {missing}:\n{plan}"
+    if missing:
+        raise AssertionError(f"plan lacks {missing}:\n{plan}")
 
 
 def assert_plan_lacks(df: DataFrame, *needles: str) -> None:
     plan = formatted_plan(df)
     present = [n for n in needles if n in plan]
-    assert not present, f"plan unexpectedly contains {present}:\n{plan}"
+    if present:
+        raise AssertionError(
+            f"plan unexpectedly contains {present}:\n{plan}"
+        )

@@ -395,17 +395,18 @@ def semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # declared design ("at 100 TB the assignment is the already-written
     # IVF at-rest table") is now the code: _ivf_assign_table IS
     # ann.ivf_assign at the SAME stride (_SEM_SEED_STRIDE == SEED_STRIDE
-    # == 31, asserted below) and the same lowest-seed tie rule, so the
+    # == 31, checked below) and the same lowest-seed tie rule, so the
     # rows are identical and the warm path reads cluster-partitioned
     # parquet instead of re-scoring the corpus 3×.
     from oracle_vector_search_spark.operators.ann import SEED_STRIDE
 
-    assert _SEM_SEED_STRIDE == SEED_STRIDE, (
-        "semantic_dedup_keep assumes the shared at-rest IVF assignment;"
-        " if _SEM_SEED_STRIDE diverges from ann.SEED_STRIDE, revert to"
-        " inline ivf_assign(emb, vec_col='v',"
-        " seed_stride=_SEM_SEED_STRIDE)"
-    )
+    if _SEM_SEED_STRIDE != SEED_STRIDE:
+        raise RuntimeError(
+            "semantic_dedup_keep assumes the shared at-rest IVF "
+            "assignment; if _SEM_SEED_STRIDE diverges from "
+            "ann.SEED_STRIDE, revert to inline ivf_assign(emb, "
+            "vec_col='v', seed_stride=_SEM_SEED_STRIDE)"
+        )
     assigned = _ivf_assign_table(spark, sf_dir)
     members = assigned.join(emb, "vec_id").select(
         "vec_id", "cluster_id", "v"

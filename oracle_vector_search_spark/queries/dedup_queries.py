@@ -1277,7 +1277,10 @@ def _soft_weights_sql() -> str:
     """Extend the cluster oracle with sizes + inverse-size weights."""
     base_sql = _duck_cluster_sql(3)
     final = "SELECT node AS doc_id, canonical_id FROM l3"
-    assert base_sql.endswith(final)
+    if not base_sql.endswith(final):
+        raise RuntimeError(
+            f"cluster oracle SQL no longer ends with {final!r}"
+        )
     return (
         base_sql[: -len(final)]
         + """,

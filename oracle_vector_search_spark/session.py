@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -66,3 +68,18 @@ def get_spark(
             spark.conf.set(k, v)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def jvm_alive(sc: SparkContext) -> bool:
+    """Whether the driver JVM behind ``sc`` still answers. A JVM killed
+    from outside (e.g. by the kernel OOM killer) leaves the Python side
+    holding a gateway whose every call fails with
+    ``ConnectionRefusedError``."""
+    proc = getattr(sc._gateway, "proc", None)
+    if proc is not None and proc.poll() is not None:
+        return False
+    try:
+        sc._jvm.java.lang.System.nanoTime()
+    except (Py4JError, OSError):
+        return False
+    return True

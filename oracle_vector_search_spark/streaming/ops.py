@@ -376,7 +376,8 @@ def upsert_snapshot_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # a lone micro-batch is only legitimate when it carried no
         # rows (an empty source can still emit one empty part file);
         # with real data the multi-file fixture guarantees >= 2 epochs
-        assert snap.isEmpty(), "stream produced fewer than 2 merge epochs"
+        if not snap.isEmpty():
+            raise RuntimeError("stream produced fewer than 2 merge epochs")
     return snap
 
 
@@ -623,9 +624,10 @@ def index_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap = spark.read.schema(idx_schema).parquet(state["path"])
     if state["version"] < 2:
         # same single-empty-micro-batch allowance as the upsert stream
-        assert snap.isEmpty(), (
-            "stream produced fewer than 2 index maintenance epochs"
-        )
+        if not snap.isEmpty():
+            raise RuntimeError(
+                "stream produced fewer than 2 index maintenance epochs"
+            )
     return snap
 
 
@@ -875,10 +877,11 @@ def weighted_reservoir_stream(
         return spark.createDataFrame(
             [], "doc_id long, source string, w int, aes_key double"
         )
-    assert state["epochs"] >= 2, (
-        f"reservoir stream drained in {state['epochs']} epochs; "
-        "expected multi-batch arrival"
-    )
+    if state["epochs"] < 2:
+        raise RuntimeError(
+            f"reservoir stream drained in {state['epochs']} epochs; "
+            "expected multi-batch arrival"
+        )
     return spark.read.parquet(state["path"])
 
 
@@ -983,10 +986,11 @@ def corpus_admission_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, classifier_keep int, dup_of bigint, "
             "admitted int",
         )
-    assert n_epochs["n"] >= 2, (
-        f"admission stream drained in {n_epochs['n']} epochs; expected "
-        "multi-batch arrival"
-    )
+    if n_epochs["n"] < 2:
+        raise RuntimeError(
+            f"admission stream drained in {n_epochs['n']} epochs; "
+            "expected multi-batch arrival"
+        )
     return spark.read.parquet(dec_dir)
 
 
@@ -1229,10 +1233,11 @@ def audio_vad_admission_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if n_epochs["n"] == 0:
         # empty source — registry-wide empty-input contract
         return spark.createDataFrame([], dec_schema)
-    assert n_epochs["n"] >= 2, (
-        f"VAD admission stream drained in {n_epochs['n']} epochs; "
-        "expected multi-batch arrival"
-    )
+    if n_epochs["n"] < 2:
+        raise RuntimeError(
+            f"VAD admission stream drained in {n_epochs['n']} epochs; "
+            "expected multi-batch arrival"
+        )
     return spark.read.schema(dec_schema).parquet(dec_dir)
 
 

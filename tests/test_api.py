@@ -260,3 +260,124 @@ def test_live_results_coexist_across_invocations(spark, corpus_dir, labels):
         k2 = {(r["query_stem"], r["rank"], r["match_id"])
               for r in live[1][1].collect()}
         assert k2 <= k3
+
+
+# --------------------------------------------- query-side pipeline oracle
+def _expected_query_embeddings(uploads, mode, dims):
+    """Pure-numpy twin of ``api._query_embeddings``: decode, preprocess,
+    the stub detector's centered box and md5 confidence, the best box
+    per stem by (conf, x1), that box cropped from EVERY decodable image
+    of the stem, then the hash embedding. Returns sorted
+    (query_stem, embedding) pairs."""
+    import hashlib
+
+    from oracle_vector_search_spark.functions.embed import (
+        hash_projection_embed_batch,
+    )
+    from oracle_vector_search_spark.sources.images import (
+        _blur3,
+        _decode_one,
+        _equalize,
+        _gamma_lut,
+    )
+
+    lut = _gamma_lut(1.5)
+    pre = []
+    for stem, content in uploads:
+        arr = _decode_one(content)
+        if arr is None:
+            continue
+        if mode == "gamma_blur":
+            arr = _blur3(lut[arr])
+        elif mode == "clahe":
+            arr = _equalize(arr)
+        pre.append((stem, arr))
+    best = {}
+    for stem, arr in pre:
+        h, w = arr.shape[:2]
+        hsh = hashlib.md5(arr.tobytes()).hexdigest()
+        conf = round(int(hsh[:6], 16) / float(0xFFFFFF), 6)
+        box = (w // 4, h // 4, 3 * w // 4, 3 * h // 4)
+        if stem not in best or (conf, box[0]) > best[stem][0]:
+            best[stem] = ((conf, box[0]), box)
+    out = []
+    for stem, arr in pre:
+        x1, y1, x2, y2 = best[stem][1]
+        crop = arr[y1:y2, x1:x2]
+        if crop.size:
+            (emb,) = hash_projection_embed_batch([crop.tobytes()], dims)
+            out.append((stem, tuple(emb)))
+    return sorted(out)
+
+
+def _uploads():
+    """One stem shared by two different images (different sizes, so the
+    best box of one is cropped from the other), a plain upload and a
+    corrupt one."""
+    rng = np.random.RandomState(5)
+    img = lambda h, w: encode_fake_image(  # noqa: E731
+        rng.randint(0, 256, (h, w, 3), dtype=np.uint8)
+    )
+    return [
+        ("shared", img(32, 32)),
+        ("shared", img(24, 40)),
+        ("solo", img(20, 28)),
+        ("broken", b"NOTIMG"),
+    ]
+
+
+@pytest.mark.parametrize("mode", ["gamma_blur", "clahe", "none"])
+def test_query_embeddings_match_numpy_oracle(spark, mode):
+    from oracle_vector_search_spark.api import _query_embeddings
+
+    uploads = _uploads()
+    frame = spark.createDataFrame(
+        [(s, f"q/{s}.fake", c) for s, c in uploads],
+        "stem string, path string, content binary",
+    )
+    rows = _query_embeddings(frame, mode, 8).collect()
+    got = sorted((r["query_stem"], tuple(r["embedding"])) for r in rows)
+    want = _expected_query_embeddings(uploads, mode, 8)
+    assert [s for s, _ in want] == ["shared", "shared", "solo"]
+    assert got == want
+    qids = spark.createDataFrame([(s,) for s, _ in want], "s string")
+    expect_qid = {
+        r["s"]: r["q"]
+        for r in qids.select("s", F.xxhash64("s").alias("q")).collect()
+    }
+    assert all(r["qid"] == expect_qid[r["query_stem"]] for r in rows)
+
+
+def test_query_uploads_are_stem_partitioned_before_python(spark):
+    """Every branch of the query pipeline hash-partitions the uploads on
+    ``stem`` before its first Python stage, so AQE can size the stages
+    by bytes instead of inheriting the caller's partitions."""
+    from oracle_vector_search_spark.api import _query_embeddings
+    from oracle_vector_search_spark.plans.inspect import physical_plan
+
+    frame = spark.createDataFrame(
+        [(s, f"q/{s}.fake", c) for s, c in _uploads()],
+        "stem string, path string, content binary",
+    )
+    plan = physical_plan(_query_embeddings(frame, "gamma_blur", 8))
+    lines = plan.splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    firsts = []
+    for i, line in enumerate(lines):
+        if "MapInPandas" not in line:
+            continue
+        below = []
+        for other in lines[i + 1:]:
+            if depth(other) <= depth(line):
+                break
+            below.append(other)
+        if not any("MapInPandas" in b for b in below):
+            firsts.append(below)
+    assert len(firsts) == 2  # the detect branch and the crop branch
+    for below in firsts:
+        assert any(
+            "Exchange hashpartitioning(stem#" in b for b in below
+        ), plan

@@ -2,11 +2,14 @@
 """Interleaved A/B: old (a git ref) vs new (working tree) query impls.
 
 Alternates old/new run-for-run in ONE session so ambient host phases
-hit both variants (the r15 methodology). Usage:
+hit both variants (the r15 methodology). Any registered query works:
+the old version is loaded from the base ref's copy of the file that
+defines the registered function. Usage:
     python tools/ab_interleaved.py <base_ref> <sf_dir> <pairs> <query...>
 <base_ref> is the commit before the change under test (e.g. HEAD~1
 once the change is committed; HEAD only while it is uncommitted).
 """
+import inspect
 import os
 import statistics
 import subprocess
@@ -14,7 +17,8 @@ import sys
 import time
 import types
 
-sys.path.insert(0, __import__("os").path.dirname(__import__("os").path.dirname(__import__("os").path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 if len(sys.argv) < 5:
     sys.exit(__doc__)
@@ -30,30 +34,18 @@ import __spark_entry__ as entry  # noqa: E402
 spark = get_spark("ab_interleaved")
 new_qs = entry.queries()
 
-# map query -> module file
-MOD = {
-    "merkle_range_sync_plan": "oracle_vector_search_spark/queries/audit_queries.py",
-    "snapshot_index_rebuild_plan": "oracle_vector_search_spark/queries/ann_queries.py",
-    "bradley_terry_mm_step": "oracle_vector_search_spark/queries/preference_queries.py",
-    "bleu2_pair_eval": "oracle_vector_search_spark/queries/sft_queries.py",
-    "prf_rocchio_requery": "oracle_vector_search_spark/queries/vector_queries.py",
-    "kmeans_refine_clusters": "oracle_vector_search_spark/queries/ann_queries.py",
-    "semantic_dedup_keep": "oracle_vector_search_spark/queries/curation_queries.py",
-    "curated_corpus_checksum": "oracle_vector_search_spark/queries/curation_queries.py",
-    "nightly_corpus_build_manifest": "oracle_vector_search_spark/queries/curation_queries.py",
-    "psi_value_drift": "oracle_vector_search_spark/queries/feature_queries.py",
-    "bigram_lm_fluency": "oracle_vector_search_spark/queries/lm_queries.py",
-    "pca_top_eigenvector": "oracle_vector_search_spark/queries/linalg_queries.py",
-}
-
 _old_mod_cache = {}
 
 
 def load_old_fn(qname):
-    path = MOD[qname]
+    """The base ref's version of a registered query: the module that
+    defines the registered function, as of <base_ref>, executed with
+    registration switched off."""
+    fn = new_qs[qname]
+    path = os.path.relpath(inspect.getsourcefile(fn), ROOT)
     if path not in _old_mod_cache:
         src = subprocess.check_output(
-            ["git", "-C", os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "show", f"{base_ref}:{path}"]
+            ["git", "-C", ROOT, "show", f"{base_ref}:{path}"]
         ).decode()
         mod = types.ModuleType(f"old_{path.replace('/', '_')}")
         orig = Q.register
@@ -63,7 +55,7 @@ def load_old_fn(qname):
         finally:
             Q.register = orig
         _old_mod_cache[path] = mod
-    return getattr(_old_mod_cache[path], qname)
+    return getattr(_old_mod_cache[path], fn.__name__)
 
 
 for qname in names:
