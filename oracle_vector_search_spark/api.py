@@ -279,18 +279,16 @@ def search(
     Result lifetime: the returned DataFrame is lazy and independent of
     any other invocation — hold as many live results as you like and
     collect them in any order (each call pins its own GC-owned
-    checkpoint; nothing here is keyed to a shared release)."""
+    checkpoint; no later call releases it)."""
     # the decode→preprocess→detect→embed pipeline feeds both the top-k
     # scan and the metadata name join — pin it so it runs once
     # (ADVICE r6 low: q was re-executed per consumer). Deliberately a
-    # LAZY, UNKEYED localCheckpoint (GC-owned): this is a public entry
-    # point returning a lazy DataFrame whose lifetime the CALLER owns —
-    # a keyed pin under a static key (the r13 regression, VERDICT r13
-    # #1) made the second search() destroy the first result's only
-    # blocks, crashing any caller holding two live results. Keyed
-    # deterministic release (plans/ckpt.py) is for registry-invoked
-    # queries with a consume-before-reinvoke contract only; no API
-    # entry point may return a keyed-pinned frame.
+    # LAZY localCheckpoint outside plans/ckpt.py's scopes (GC-owned):
+    # this is a public entry point returning a lazy DataFrame whose
+    # lifetime the CALLER owns. A pin released by the next search()
+    # would destroy the first result's only blocks, crashing any caller
+    # holding two live results; scoped release is for registered
+    # queries with a consume-before-reinvoke contract only.
     q = _query_embeddings(query_images, preprocess, dims).localCheckpoint(
         eager=False
     )
@@ -344,7 +342,7 @@ def search_radius(
     from oracle_vector_search_spark.operators.knn import radius_search
 
     # pinned for the same reason as in search(): one pipeline run
-    # feeds both the radius scan and the metadata join. Lazy, unkeyed,
+    # feeds both the radius scan and the metadata join. Lazy and
     # GC-owned — see the matching comment in search(); each invocation
     # gets its own checkpoint so N live results can coexist and be
     # collected in any order (VERDICT r13 #1 regression fix).

@@ -60,10 +60,6 @@ def tokens(norm_col: str) -> Column:
     return F.split(F.col(norm_col), " ")
 
 
-def token_count(norm_col: str) -> Column:
-    return F.size(tokens(norm_col))
-
-
 def hash28_sql(expr: str) -> str:
     """SQL fragment: 28-bit portable hash of a string expression.
     DuckDB twin: ``('0x' || substr(md5(x),1,7))::BIGINT``."""

@@ -19,6 +19,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from oracle_vector_search_spark.plans.ckpt import owned_by
+
 TABLES = (
     "region",
     "nation",
@@ -151,10 +153,12 @@ def at_rest(spark: SparkSession, key, build):
     The first call from a new application drops every entry of the
     earlier one. A ``build`` that raises stores nothing, so the next
     call retries. ``build`` may itself call ``at_rest`` (an artifact
-    built from another artifact)."""
+    built from another artifact). Its pins are never released by a
+    query's re-invocation (``owned_by(None)``, plans/ckpt.py)."""
     entries = _at_rest_entries(spark)
     if key not in entries:
-        entries[key] = build()
+        with owned_by(None):
+            entries[key] = build()
     return entries[key]
 
 

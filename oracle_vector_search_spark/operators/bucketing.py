@@ -63,24 +63,3 @@ def write_bucketed(
         writer = writer.option("path", path)
     writer.saveAsTable(table)
     return spark.table(table)
-
-
-def colocated_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    left_key: str,
-    right_key: str,
-    how: str = "inner",
-) -> DataFrame:
-    """Join two same-bucket-count catalog tables on their bucket keys.
-
-    With both sides bucketed identically, the physical plan is a
-    SortMergeJoin whose children are bare bucketed scans — no Exchange
-    on either side (assertable via ``df.explain``; tests do).
-    """
-    left = spark.table(left_table)
-    right = spark.table(right_table)
-    return left.join(
-        right, left[left_key] == right[right_key], how=how
-    )

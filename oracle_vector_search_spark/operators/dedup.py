@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from oracle_vector_search_spark.functions import text as T
+from oracle_vector_search_spark.plans.ckpt import pin, unpin
 
 
 def with_norm_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -449,7 +450,6 @@ def dedup_clusters(
     all_ids: DataFrame,
     id_col: str = "doc_id",
     iterations: int = 3,
-    ckpt_key: str | None = None,
 ) -> DataFrame:
     """Canonical-document assignment: connected components over the
     near-duplicate pair graph, each doc labeled with the MIN id
@@ -464,9 +464,7 @@ def dedup_clusters(
     TWICE (own row + the neighbor-min join side), so Catalyst
     re-evaluated the label subtree 2^k times per run — measured 190
     physical ops / 10 SMJs on the 3-round consumers, and exponential
-    corpus-id-sized replay at scale. ``ckpt_key`` keys the final
-    round's blocks for deterministic release (registry queries pass
-    f"<name>:{sf_dir}"); None keeps them GC-owned.
+    corpus-id-sized replay at scale.
 
     Fault-tolerance trade (ADVICE r15): ``localCheckpoint`` truncates
     lineage, so after executor loss the labels are NOT recomputable —
@@ -475,9 +473,7 @@ def dedup_clusters(
     deployment that must survive executor loss should use reliable
     ``checkpoint()`` with a checkpoint dir, at the cost of an HDFS
     write per round). Same trade applies to ``dedup_clusters_fixpoint``
-    and every RoundScope loop."""
-    from oracle_vector_search_spark.plans.ckpt import RoundScope
-
+    and every pinned loop."""
     edges = (
         pairs.select(
             F.col("left_id").alias("src"), F.col("right_id").alias("dst")
@@ -491,7 +487,6 @@ def dedup_clusters(
         .distinct()
         .persist()  # referenced every iteration — don't recompute LSH 3x
     )
-    scope = RoundScope(all_ids.sparkSession)
     # round 0 is a bare projection of the id column — its two round-1
     # consumers replay one pruned scan each, cheaper than a pin job
     # (unlike the fixpoint tier, which must pin every round because
@@ -499,7 +494,7 @@ def dedup_clusters(
     labels = all_ids.select(
         F.col(id_col).alias("node"), F.col(id_col).alias("canonical_id")
     )
-    for _ in range(iterations):
+    for r in range(iterations):
         # each node adopts min(own label, neighbors' labels)
         neighbor_min = (
             edges.join(
@@ -512,7 +507,7 @@ def dedup_clusters(
             .groupBy("src")
             .agg(F.min("nbr_label").alias("nbr_min"))
         )
-        labels = scope.checkpoint(  # truncate lineage: flat plan
+        prev, labels = labels, pin(  # truncate lineage: flat plan
             labels.join(
                 neighbor_min,
                 labels.node == neighbor_min.src,
@@ -528,12 +523,11 @@ def dedup_clusters(
         )
         # the new round is materialized (eager checkpoint): the prior
         # round's blocks have no remaining consumer — release them now
-        scope.release_superseded()
+        if r:
+            unpin(prev)
     # labels no longer references edges (lineage truncated) — safe to
     # release the LSH cache instead of leaving it to ContextCleaner
     edges.unpersist()
-    if ckpt_key is not None:
-        scope.transfer_to_key(ckpt_key)
     return labels.select(F.col("node").alias(id_col), "canonical_id")
 
 
@@ -542,7 +536,6 @@ def dedup_clusters_fixpoint(
     all_ids: DataFrame,
     id_col: str = "doc_id",
     max_iterations: int = 50,
-    ckpt_key: str | None = None,
 ) -> DataFrame:
     """The 100 TB tier of ``dedup_clusters``: min-label propagation run
     to a FIXPOINT, not a fixed unroll — exact for any component whose
@@ -569,10 +562,7 @@ def dedup_clusters_fixpoint(
         .distinct()
         .persist()
     )
-    from oracle_vector_search_spark.plans.ckpt import RoundScope
-
-    scope = RoundScope(all_ids.sparkSession)
-    labels = scope.checkpoint(
+    labels = pin(
         all_ids.select(
             F.col(id_col).alias("node"), F.col(id_col).alias("canonical_id")
         )
@@ -590,7 +580,7 @@ def dedup_clusters_fixpoint(
             .groupBy("src")
             .agg(F.min("nbr_label").alias("nbr_min"))
         )
-        new_labels = scope.checkpoint(  # truncate lineage: flat plan
+        new_labels = pin(  # truncate lineage: flat plan
             labels.join(
                 neighbor_min, labels.node == neighbor_min.src, "left"
             ).select(
@@ -604,8 +594,8 @@ def dedup_clusters_fixpoint(
         )
         # the new round is materialized (eager checkpoint): the prior
         # round's blocks have no remaining consumer — release them now
-        # instead of waiting for ContextCleaner GC (VERDICT r12 #2)
-        scope.release_superseded()
+        # instead of waiting for ContextCleaner GC
+        unpin(labels)
         changed = new_labels.filter(
             F.col("canonical_id") != F.col("old_label")
         ).count()
@@ -613,15 +603,7 @@ def dedup_clusters_fixpoint(
         if changed == 0:
             break
     edges.unpersist()
-    # the loop's final frame keeps its blocks (the caller consumes it).
-    # Keyed release only when the caller OPTS IN with a ckpt_key scoped
-    # to its input (registry queries pass f"<name>:{sf_dir}"): a static
-    # operator-level key would let a second invocation destroy the
-    # first result's only blocks while a caller still holds it lazily
-    # (the api.py r13 regression class — VERDICT r13 #1 / ADVICE r13).
-    # Default None = GC-owned, safe for arbitrary external callers.
-    if ckpt_key is not None:
-        scope.transfer_to_key(ckpt_key)
+    # the loop's final frame keeps its blocks (the caller consumes it)
     if changed != 0:
         import warnings
 

@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from oracle_vector_search_spark.plans.ckpt import pin, unpin
+
 
 def merge_index_rows(
     old: DataFrame, fresh: DataFrame, id_col: str = "vec_id"
@@ -80,15 +82,7 @@ def incremental_overwrite(
     # checkpoint holds only batch + affected-partition rows, never the
     # corpus; a transactional table format (Iceberg/Delta) would make
     # this staging step implicit.
-    from oracle_vector_search_spark.plans.ckpt import (
-        keyed_local_checkpoint,
-        release_key,
-    )
-
-    rows = keyed_local_checkpoint(
-        merged.join(F.broadcast(affected), on=part_cols, how="semi"),
-        key=f"incremental_overwrite:{path}",
-    )
+    rows = pin(merged.join(F.broadcast(affected), on=part_cols, how="semi"))
     old_mode = spark.conf.get(
         "spark.sql.sources.partitionOverwriteMode", "static"
     )
@@ -101,9 +95,8 @@ def incremental_overwrite(
             .parquet(path)
         )
         # the overwrite was the checkpoint's only consumer — release
-        # the staged blocks now (on failure the next invocation's
-        # keyed checkpoint releases them instead)
-        release_key(spark, f"incremental_overwrite:{path}")
+        # the staged blocks now (on failure the owning scope does)
+        unpin(rows)
     finally:
         spark.conf.set(
             "spark.sql.sources.partitionOverwriteMode", old_mode

@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from oracle_vector_search_spark.plans.ckpt import pin
+
 CLASS_NAMES = [
     "glioma tumor",
     "meningioma tumor",
@@ -130,7 +132,6 @@ def assign_index_ids_two_phase(
     df: DataFrame,
     order_cols: list[str] = ("split", "stem", "box_idx"),
     num_partitions: int | None = None,
-    ckpt_key: str | None = None,
 ) -> DataFrame:
     """A5 at scale: the same dense ids as ``assign_index_ids`` with no
     single-task global sort.
@@ -165,25 +166,13 @@ def assign_index_ids_two_phase(
     # * persist() registers in the CacheManager, which holds a strong
     #   reference until an explicit unpersist — plan-build-time calls
     #   (zipf fit, suffix array) accumulated caches across bench
-    #   iterations (ADVICE r10). localCheckpoint blocks are owned by
-    #   the RDD alone: the ContextCleaner frees them as soon as the
-    #   returned DataFrame is garbage-collected. Tradeoff: lineage is
-    #   truncated, so executor loss fails the job instead of
-    #   recomputing — acceptable for a two-job window.
-    # ``ckpt_key`` hands the pin to the keyed owner (plans/ckpt.py):
-    # the next call under the same key releases the superseded blocks
-    # deterministically — pass it from every per-invocation/looped
-    # call site (VERDICT r12 #2); None keeps the GC-owned behavior for
-    # build-once callers.
-    d = d.withColumn("__local_rank", F.row_number().over(w))
-    if ckpt_key is not None:
-        from oracle_vector_search_spark.plans.ckpt import (
-            keyed_local_checkpoint,
-        )
-
-        d = keyed_local_checkpoint(d, key=ckpt_key)
-    else:
-        d = d.localCheckpoint(eager=True)
+    #   iterations (ADVICE r10). The pin is owned by the calling
+    #   query's scope (plans/ckpt.py) and released when that query
+    #   runs again, or by the ContextCleaner for callers outside any
+    #   query. Tradeoff: lineage is truncated, so executor loss fails
+    #   the job instead of recomputing — acceptable for a two-job
+    #   window.
+    d = pin(d.withColumn("__local_rank", F.row_number().over(w)))
 
     counts = (
         d.groupBy("__pid").count().orderBy("__pid").collect()
@@ -206,15 +195,6 @@ def assign_index_ids_two_phase(
         )
         .drop("__pid", "__local_rank", "__offset")
     )
-
-
-def union_splits(frames: dict[str, DataFrame]) -> DataFrame:
-    """A4: union per-split DataFrames with an explicit split column."""
-    out = None
-    for split, df in frames.items():
-        part = df.withColumn("split", F.lit(split))
-        out = part if out is None else out.unionByName(part)
-    return out
 
 
 def write_index_table(df: DataFrame, path: str, partition_by: str = "split"):

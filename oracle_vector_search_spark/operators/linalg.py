@@ -31,6 +31,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, functions as F
 
 from oracle_vector_search_spark.functions.vector import as_double_array
+from oracle_vector_search_spark.plans.ckpt import pin, unpin
 
 GRAM_SCHEMA = "i INT, j INT, partial DOUBLE"
 
@@ -151,7 +152,6 @@ def power_iteration(
     dim: int,
     n_iter: int = 3,
     val_col: str = "g",
-    ckpt_key: str | None = None,
 ) -> DataFrame:
     """Top eigenvector by ``n_iter`` fixed power-iteration steps:
     v ← normalize(M v), v₀ = 1/√d — entirely as joins/aggregations
@@ -161,33 +161,26 @@ def power_iteration(
     reproducible (and SQL-unrollable for the oracle); sign is pinned by
     v₀, not by an eigensolver convention. Returns ``(i, component)``.
 
-    ``ckpt_key`` (OPTIMIZATION r16, guide §5): each step's matvec w is
+    Each step's matvec w is pinned (OPTIMIZATION r16, guide §5): w is
     consumed TWICE (its own normalization plus the next step's join),
     so unrolled lineage re-evaluates step k's matvec 2^(n_iter−k)
     times. The replays are d-/d²-bounded (never corpus-sized — the
     gram input is already reduced), so this costs planning + tiny jobs,
-    not data passes; still, pinning each step's d-row w with a
-    RoundScope measured ~10% faster at sf0.1 on a quiet host (unlike
-    the pagerank probe, where pin jobs LOST — the difference is 2^3
-    replay fan-out here vs linear there). Opt-in exactly like
-    dedup_clusters: registry queries pass f"<name>:{sf_dir}" so the
-    blocks release on re-invocation; None keeps the pure-lineage
-    unroll (external callers, property tests)."""
+    not data passes; still, pinning each step's d-row w measured ~10%
+    faster at sf0.1 on a quiet host (unlike the pagerank probe, where
+    pin jobs LOST — the difference is 2^3 replay fan-out here vs
+    linear there)."""
     spark = matrix.sparkSession
     full = expand_symmetric(matrix, val_col).localCheckpoint(eager=False)
-    scope = None
-    if ckpt_key is not None:
-        from oracle_vector_search_spark.plans.ckpt import RoundScope
-
-        scope = RoundScope(spark)
     v = spark.range(dim).select(
         F.col("id").cast("int").alias("i"),
         F.lit(1.0 / float(dim) ** 0.5).alias("val"),
     )
+    w = None
     for _ in range(n_iter):
         # the d-row vector broadcasts EXPLICITLY: auto-broadcast relies
         # on stats that vanish once v is an aggregate output
-        w = (
+        prev, w = w, pin(
             full.join(
                 F.broadcast(
                     v.select(F.col("i").alias("j"), F.col("val"))
@@ -197,18 +190,13 @@ def power_iteration(
             .groupBy("i")
             .agg(F.sum(F.col(val_col) * F.col("val")).alias("val"))
         )
-        if scope is not None:
-            w = scope.checkpoint(w)
-            scope.release_superseded()
+        if prev is not None:
+            unpin(prev)
         norm = w.agg(
             F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("nrm")
         )
         v = w.crossJoin(F.broadcast(norm)).select(
             "i", (F.col("val") / F.col("nrm")).alias("val")
         )
-    out = v.select("i", F.col("val").alias("component"))
-    if scope is not None:
-        # the final v lazily references the LAST round's w — hand its
-        # blocks to the keyed owner (released on the next invocation)
-        scope.transfer_to_key(ckpt_key)
-    return out
+    # the final v lazily references the LAST round's w: its pin stays
+    return v.select("i", F.col("val").alias("component"))

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from oracle_vector_search_spark.plans.ckpt import pin, unpin
+
 
 def kcore_peel(
     edges: DataFrame,
@@ -30,7 +32,6 @@ def kcore_peel(
     k: int,
     rounds: int,
     node_col: str = "node",
-    ckpt_key: str | None = None,
 ) -> DataFrame:
     """k-core decomposition by iterative peeling: repeatedly drop nodes
     with fewer than ``k`` neighbors among the survivors. The kernel
@@ -53,13 +54,10 @@ def kcore_peel(
     keeps the plan flat at any round count (the dedup-fixpoint
     discipline, operators/dedup.py:511).
     """
-    from oracle_vector_search_spark.plans.ckpt import RoundScope
-
-    scope = RoundScope(nodes.sparkSession)
     all_nodes = nodes.select(F.col(node_col).alias("node"))
     alive = all_nodes
-    for _ in range(rounds):
-        alive = scope.checkpoint(
+    for r in range(rounds):
+        prev, alive = alive, pin(
             edges.join(
                 alive.select(F.col("node").alias("s")),
                 edges.src == F.col("s"),
@@ -73,13 +71,8 @@ def kcore_peel(
             .filter(F.col("k") >= k)
             .select("node")
         )
-        # new round materialized → prior round's blocks are dead
-        scope.release_superseded()
-    # keyed release is caller opt-in (input-scoped key) — a static key
-    # here would let a second invocation kill a still-held first
-    # result's blocks (the r13 api.py regression class); None = GC-owned
-    if ckpt_key is not None:
-        scope.transfer_to_key(ckpt_key)
+        if r:  # new round materialized → prior round's blocks are dead
+            unpin(prev)
     return all_nodes.join(
         alive.select(F.col("node").alias("_a")),
         all_nodes.node == F.col("_a"),
@@ -147,7 +140,6 @@ def hits_l1(
     edges: DataFrame,
     nodes: DataFrame,
     iters: int = 2,
-    ckpt_key: str | None = None,
 ) -> DataFrame:
     """HITS (Kleinberg 1999) hubs & authorities with sum-1 (L1)
     normalization after every half-step — the kernel under
@@ -160,16 +152,9 @@ def hits_l1(
     1-row broadcast normalizer; scores are localCheckpoint-pinned per
     half-step so the plan stays flat at any iteration count (round
     cost is edge-sized, never corpus-sized)."""
-    from oracle_vector_search_spark.plans.ckpt import RoundScope
-
-    # two owners: this round's `a` is still live when the new `h`
-    # checkpoints (hraw derives from it, the return join reads the
-    # final one) — a single newest-wins scope would free it too early
-    scope_a = RoundScope(nodes.sparkSession)
-    scope_h = RoundScope(nodes.sparkSession)
     h = nodes.select("node", F.lit(1.0).alias("h"))
     a = None
-    for _ in range(iters):
+    for r in range(iters):
         araw = (
             nodes.join(
                 h.select(F.col("node").alias("hsrc"), "h")
@@ -182,12 +167,13 @@ def hits_l1(
             .select("node", F.coalesce("a", F.lit(0.0)).alias("a"))
         )
         asum = araw.agg(F.sum("a").alias("s"))
-        a = scope_a.checkpoint(  # flat plan across half-steps
+        prev_a, a = a, pin(  # flat plan across half-steps
             araw.crossJoin(F.broadcast(asum)).select(
                 "node", (F.col("a") / F.col("s")).alias("a")
             )
         )
-        scope_a.release_superseded()  # prior a: no remaining consumer
+        if r:
+            unpin(prev_a)  # prior a: no remaining consumer
         hraw = (
             nodes.join(
                 a.select(F.col("node").alias("adst"), "a")
@@ -200,16 +186,13 @@ def hits_l1(
             .select("node", F.coalesce("h", F.lit(0.0)).alias("h"))
         )
         hsum = hraw.agg(F.sum("h").alias("s"))
-        h = scope_h.checkpoint(  # flat plan across half-steps
+        prev_h, h = h, pin(  # flat plan across half-steps
             hraw.crossJoin(F.broadcast(hsum)).select(
                 "node", (F.col("h") / F.col("s")).alias("h")
             )
         )
-        scope_h.release_superseded()  # prior h: no remaining consumer
-    # caller opt-in keyed release (see kcore_peel); None = GC-owned
-    if ckpt_key is not None:
-        scope_a.transfer_to_key(f"{ckpt_key}:a")
-        scope_h.transfer_to_key(f"{ckpt_key}:h")
+        if r:
+            unpin(prev_h)  # prior h: no remaining consumer
     return h.join(
         a.select(F.col("node").alias("an"), "a"), h.node == F.col("an")
     ).select("node", "h", "a")
@@ -220,7 +203,6 @@ def dbscan_from_edges(
     nodes: DataFrame,
     min_pts: int,
     id_col: str = "vec_id",
-    ckpt_key: str | None = None,
 ) -> DataFrame:
     """DBSCAN membership given the ε-neighborhood graph — the kernel
     under ``dbscan_embedding_clusters``, factored out so scale probes
@@ -262,9 +244,7 @@ def dbscan_from_edges(
             F.col("src").alias("left_id"), F.col("dst").alias("right_id")
         )
     )
-    comp = dedup_clusters_fixpoint(
-        ce, core_ids, id_col=id_col, ckpt_key=ckpt_key
-    ).select(
+    comp = dedup_clusters_fixpoint(ce, core_ids, id_col=id_col).select(
         F.col(id_col).alias("cnode"), F.col("canonical_id").alias("ccid")
     )
     border = (
@@ -295,7 +275,6 @@ def dbscan_from_edges(
 def triangle_counts(
     pairs: DataFrame,
     id_col: str = "vec_id",
-    ckpt_key: str | None = None,
 ) -> DataFrame:
     """Per-node triangle counts by DEGREE-ORDERED edge orientation —
     the kernel under ``triangle_count_graph`` (queries/
@@ -319,18 +298,10 @@ def triangle_counts(
     Scale shape: one (node)-keyed degree aggregation, two joins on
     node keys to attach endpoint degrees, one wedge self-join keyed on
     the apex, one closing join on (v, w) — every shuffle carries
-    (node, node[, degree]) tuples, never payload. ``ckpt_key`` pins
-    the pair list (read by the degree count, both wedge sides, and
-    the closing join) under the caller-scoped keyed owner; None keeps
-    the GC-owned default for external callers."""
-    if ckpt_key is not None:
-        from oracle_vector_search_spark.plans.ckpt import (
-            keyed_local_checkpoint,
-        )
-
-        pairs = keyed_local_checkpoint(pairs, key=ckpt_key)
-    else:
-        pairs = pairs.localCheckpoint(eager=False)
+    (node, node[, degree]) tuples, never payload. The pair list is
+    pinned: the degree count, both wedge sides, and the closing join
+    all read it."""
+    pairs = pin(pairs)
     deg = (
         pairs.select(F.col("left_id").alias("node"))
         .unionByName(pairs.select(F.col("right_id").alias("node")))

@@ -119,14 +119,3 @@ def top_k_per_group(
         df.withColumn(rank_col, F.row_number().over(w))
         .filter(F.col(rank_col) <= k)
     )
-
-
-def argmax_per_group(
-    df: DataFrame, group_cols: list[str], value: Column, payload: Column
-) -> DataFrame:
-    """``max_by`` — the reference's best-box-by-confidence (A1) as a single
-    partial-aggregable function (map-side combine, one shuffle of one row
-    per group)."""
-    return df.groupBy(*group_cols).agg(
-        F.max_by(payload, value).alias("argmax"), F.max(value).alias("max_value")
-    )

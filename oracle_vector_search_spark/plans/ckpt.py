@@ -1,146 +1,128 @@
-"""Deterministic release of superseded ``localCheckpoint`` blocks.
+"""The one owner of ``localCheckpoint`` pins.
 
 ``DataFrame.localCheckpoint()`` pins MEMORY_AND_DISK blocks that are
 only reclaimed when the JVM ContextCleaner happens to GC the RDD
-reference — so a long-lived session that re-invokes a checkpointing
-query (or runs a multi-round fixpoint loop) accumulates pinned blocks
-and relies on GC timing for storage-memory headroom (VERDICT r12
-"What's wrong" #2: 6 isolated psi runs → 6 persistent RDDs).
+reference. A long-lived session that re-invokes a pinning query, or
+runs a many-round loop, would otherwise hold dead blocks for as long
+as GC takes. This module decides when pins are released; no query or
+operator does.
 
-Two deterministic owners replace that GC dependence:
+* :func:`pin` — an eager ``localCheckpoint``. Inside a scope the pin is
+  recorded by that scope; outside any scope (public ``api.*`` callers,
+  external callers, pool threads) it is GC-owned.
+* :func:`unpin` — releases now the recorded pins that a frame reads
+  (a pinned frame, or any frame derived from pinned ones). Loops call
+  it on the previous round once the new round is pinned; a pin that
+  only feeds a completed write is unpinned right after the write.
+* :func:`owned_by` — a scope. ``queries.register`` runs every
+  registered query under ``owned_by((name, sf_dir))``: entering it
+  again releases everything the previous invocation of the same key
+  pinned (the consume-before-reinvoke contract of the registry; two
+  concurrent invocations of one key would release each other's pins).
+  The outermost scope decides: a registered query called from inside
+  another one, or from inside an ``io.at_rest`` build, joins the
+  outer scope. ``io.at_rest`` builds under ``owned_by(None)``, which
+  records pins for in-build :func:`unpin` but never releases them on
+  a re-invocation, so a memoized value stays readable.
 
-* :func:`keyed_local_checkpoint` — for PER-INVOCATION checkpoints
-  inside registered queries: the checkpoint is recorded under a query
-  key and the PREVIOUS invocation's blocks are unpersisted the moment
-  the query re-derives the table. The superseded DataFrame becomes
-  unusable (localCheckpoint truncates lineage, so its blocks are the
-  only copy) — correct here because a re-invocation supersedes the
-  prior result by contract.
+Ownership is the checkpointed RDD's own id: the analyzed plan of a
+checkpointed Dataset is ``LogicalRDD(rdd)`` wrapping exactly the RDD
+``localCheckpoint`` persisted. A diff of ``getPersistentRDDs`` around
+the call would over-capture: a ``persist()``-ed subtree that
+materializes inside the checkpoint's job would be released with it.
+Only ids that :func:`pin` recorded are ever released, so bystander
+caches and ``createDataFrame`` RDDs in the same plan are never
+touched. If the plan shape stops exposing the id, ownership degrades
+to GC — never to a guess.
 
-* :class:`RoundScope` — for fixpoint loops: each round's checkpoint is
-  recorded, and ``release_superseded()`` unpersists every round except
-  the newest once the newest is materialized. The loop's final frame
-  keeps its blocks (the caller consumes it); only dead rounds free.
-
-Mechanism: a checkpointed Dataset's analyzed plan is a ``LogicalRDD``
-wrapping exactly the RDD that ``localCheckpoint`` persisted, so
-ownership is the ONE id read off
-``df._jdf.queryExecution().analyzed().rdd().id()``. (The first cut
-diffed ``getPersistentRDDs`` around the call instead — this round's
-own adversarial review killed that: a ``persist()``-ed subtree whose
-cache materializes inside the diff window, e.g. the dedup fixpoint's
-edge cache during round 1, was co-captured and then wrongly
-unpersisted by the next release. Direct-id ownership cannot
-over-capture and is safe under concurrent checkpoints.) If the plan
-shape ever stops exposing the id, ownership silently degrades to the
-old GC behavior — never to a guess.
-
-Call-site audit (r14): keyed pins live ONLY inside registered queries
-(queries/*.py, operators invoked by them), where the driver/bench
-contract is consume-before-reinvoke. NO public API entry point returns
-a keyed-pinned frame — api.search and api.search_radius take lazy,
-unkeyed, GC-owned ``localCheckpoint(eager=False)`` per invocation,
-because their callers may hold N live results and collect in any order
-(the r13 static-key pin there destroyed the older result's blocks —
-VERDICT r13 #1). Note :func:`keyed_local_checkpoint` is EAGER by
-design: release ordering is only safe once the new blocks exist.
+Public API results are caller-owned: a caller may hold N live results
+of ``api.search`` and collect them in any order, so no API entry point
+returns a frame whose pins a later call releases (``api.search`` takes
+a lazy, GC-owned ``localCheckpoint(eager=False)`` per call).
 """
 
 from __future__ import annotations
 
+import threading
+from collections.abc import Hashable, Iterator
+from contextlib import contextmanager
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
-# key -> set of persistent-RDD ids owned by the LATEST invocation
-_OWNED: dict[str, set[int]] = {}
+
+class _Scope:
+    """The pins one scope recorded, and the context they live in."""
+
+    __slots__ = ("ids", "sc")
+
+    def __init__(self) -> None:
+        self.ids: set[int] = set()
+        self.sc = None
+
+    def release(self, ids: set[int]) -> None:
+        self.ids -= ids
+        jsc = getattr(self.sc, "_jsc", None)
+        if not ids or jsc is None:  # stopped context: its ids are dead
+            return
+        jmap = jsc.getPersistentRDDs()
+        for rid in ids:
+            rdd = jmap.get(rid)
+            if rdd is not None:
+                rdd.unpersist(False)
 
 
-def _checkpointed_rdd_id(cp: DataFrame) -> int | None:
-    """The id of exactly the RDD ``localCheckpoint`` persisted (the
-    analyzed plan of a checkpointed Dataset is ``LogicalRDD(rdd)``).
-    None if the plan doesn't expose it — callers then skip ownership
-    (GC reclaims, the pre-r13 behavior) rather than over-capture."""
+# the innermost active scope of this thread (absent: no scope)
+_local = threading.local()
+# key -> the scope of its latest invocation
+_OWNED: dict[Hashable, _Scope] = {}
+
+
+def _checkpoint_leaf_ids(df: DataFrame) -> set[int]:
+    """Ids of the ``LogicalRDD`` leaves of ``df``'s analyzed plan."""
     try:
-        return int(cp._jdf.queryExecution().analyzed().rdd().id())
-    except Exception:
-        return None
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        return {
+            int(leaf.rdd().id())
+            for leaf in (leaves.apply(i) for i in range(leaves.size()))
+            if leaf.nodeName() == "LogicalRDD"
+        }
+    except (AttributeError, Py4JError):  # no JVM plan: GC owns it
+        return set()
 
 
-def _unpersist_ids(sc, ids: set[int]) -> None:
-    jmap = sc._jsc.getPersistentRDDs()
-    for rid in ids:
-        rdd = jmap.get(rid)
-        if rdd is not None:
-            rdd.unpersist(False)
-
-
-def keyed_local_checkpoint(df: DataFrame, key: str) -> DataFrame:
-    """``df.localCheckpoint()`` that releases the blocks pinned by the
-    PREVIOUS checkpoint taken under ``key`` (normally the registered
-    query name). The superseded invocation's checkpointed frame dies
-    with its blocks — by contract the caller has consumed it before
-    re-invoking the query."""
-    sc = df.sparkSession.sparkContext
-    app_key = f"{sc.applicationId}:{key}"
-    cp = df.localCheckpoint()  # eager: blocks exist when this returns
-    rid = _checkpointed_rdd_id(cp)
-    stale = _OWNED.pop(app_key, None)
-    if stale:
-        _unpersist_ids(sc, stale)
-    if rid is not None:
-        _OWNED[app_key] = {rid}
+def pin(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint()`` (eager), recorded by the active scope."""
+    cp = df.localCheckpoint()
+    scope = getattr(_local, "scope", None)
+    if scope is not None:
+        scope.sc = cp.sparkSession.sparkContext
+        scope.ids |= _checkpoint_leaf_ids(cp)
     return cp
 
 
-def release_key(spark, key: str) -> None:
-    """Release the blocks owned by ``key`` NOW — for checkpoints whose
-    last consumer has already run (e.g. a checkpoint that only feeds a
-    completed parquet write), instead of waiting for a re-invocation."""
-    sc = spark.sparkContext
-    ids = _OWNED.pop(f"{sc.applicationId}:{key}", None)
-    if ids:
-        _unpersist_ids(sc, ids)
+def unpin(df: DataFrame) -> None:
+    """Release now the active scope's pins that ``df`` reads."""
+    scope = getattr(_local, "scope", None)
+    if scope is not None and scope.ids:
+        scope.release(_checkpoint_leaf_ids(df) & scope.ids)
 
 
-class RoundScope:
-    """Checkpoint owner for fixpoint loops: ``checkpoint()`` each
-    round, then ``release_superseded()`` AFTER the new round is
-    materialized — every round but the newest frees its blocks
-    deterministically instead of waiting for ContextCleaner."""
-
-    def __init__(self, spark) -> None:
-        self._sc = spark.sparkContext
-        self._rounds: list[set[int]] = []
-
-    def checkpoint(self, df: DataFrame) -> DataFrame:
-        cp = df.localCheckpoint()
-        rid = _checkpointed_rdd_id(cp)
-        self._rounds.append(set() if rid is None else {rid})
-        return cp
-
-    def release_superseded(self) -> None:
-        """Unpersist every recorded round except the newest."""
-        while len(self._rounds) > 1:
-            _unpersist_ids(self._sc, self._rounds.pop(0))
-
-    def transfer_to_key(self, key: str) -> None:
-        """Hand every still-owned round to the keyed owner: the NEXT
-        invocation under ``key`` releases them, exactly like
-        :func:`keyed_local_checkpoint`. Call ``release_superseded()``
-        first if only the newest round survives (loops that release
-        in-loop already did); loops whose RESULT lazily references
-        every round (e.g. a union of per-round picks) transfer them
-        all. Releases the previous invocation's transferred blocks."""
-        app_key = f"{self._sc.applicationId}:{key}"
-        stale = _OWNED.pop(app_key, None)
-        if stale:
-            _unpersist_ids(self._sc, stale)
-        final: set[int] = set()
-        while self._rounds:
-            final |= self._rounds.pop(0)
-        _OWNED[app_key] = final
-
-    def release_all(self) -> None:
-        """Unpersist every recorded round (loop result no longer
-        needed — e.g. it was aggregated into a new frame already)."""
-        while self._rounds:
-            _unpersist_ids(self._sc, self._rounds.pop(0))
+@contextmanager
+def owned_by(key: Hashable | None) -> Iterator[None]:
+    """Scope the pins taken inside to ``key``; see the module doc."""
+    outer = getattr(_local, "scope", None)
+    if key is not None and outer is not None:
+        yield  # the outermost scope decides
+        return
+    scope = _Scope()
+    if key is not None:
+        stale = _OWNED.pop(key, None)
+        if stale is not None:
+            stale.release(set(stale.ids))
+        _OWNED[key] = scope
+    _local.scope = scope
+    try:
+        yield
+    finally:
+        _local.scope = outer

@@ -15,9 +15,12 @@ decimals and tie-break orderings by id.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from oracle_vector_search_spark.plans.ckpt import owned_by
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -26,13 +29,21 @@ REGISTRY: dict[str, tuple[SparkQuery, str | None]] = {}
 
 
 def register(name: str, sql: str | None):
-    """Decorator: add a query to the registry."""
+    """Decorator: add a query to the registry. The query runs under
+    ``owned_by((name, sf_dir))`` (plans/ckpt.py): invoking it again
+    releases the pins its previous invocation took."""
 
     def deco(fn: SparkQuery) -> SparkQuery:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = (fn, sql)
-        return fn
+
+        @functools.wraps(fn)
+        def owned(spark: SparkSession, sf_dir: str) -> DataFrame:
+            with owned_by((name, sf_dir)):
+                return fn(spark, sf_dir)
+
+        REGISTRY[name] = (owned, sql)
+        return owned
 
     return deco
 

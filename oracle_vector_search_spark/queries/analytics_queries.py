@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from oracle_vector_search_spark.functions import text as T
 from oracle_vector_search_spark.io import load_table
+from oracle_vector_search_spark.plans.ckpt import pin
 from oracle_vector_search_spark.queries import register
 
 
@@ -667,15 +668,12 @@ def item_cf_similar_parts_top3(
     """
     # pin the distinct projection: the self-join reads it twice and the
     # support table a third time
-    from oracle_vector_search_spark.plans.ckpt import keyed_local_checkpoint
-
-    lp = keyed_local_checkpoint(
+    lp = pin(
         load_table(spark, sf_dir, "lineitem")
         .select(
             F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
         )
         .distinct(),
-        key=f"item_cf_similar_parts_top3:lp:{sf_dir}",
     )
     supp = lp.groupBy("pk").agg(F.count(F.lit(1)).alias("n"))
     a = lp.select("ok", F.col("pk").alias("pa"))
@@ -867,15 +865,12 @@ def association_rules_pairs(
     pair shuffle, supports broadcast back; the support floor does the
     pruning a-priori style (a pair below floor never joins).
     """
-    from oracle_vector_search_spark.plans.ckpt import keyed_local_checkpoint
-
-    lp = keyed_local_checkpoint(
+    lp = pin(
         load_table(spark, sf_dir, "lineitem")
         .select(
             F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
         )
         .distinct(),
-        key=f"association_rules_pairs:lp:{sf_dir}",
     )
     nb = lp.select("ok").distinct().count()
     supp = lp.groupBy("pk").agg(F.count(F.lit(1)).alias("n"))

@@ -22,10 +22,7 @@ from oracle_vector_search_spark.io import (
     write_artifact,
 )
 from oracle_vector_search_spark.operators import ann
-from oracle_vector_search_spark.plans.ckpt import (
-    keyed_local_checkpoint,
-    release_key,
-)
+from oracle_vector_search_spark.plans.ckpt import pin, unpin
 from oracle_vector_search_spark.queries import register
 
 DIMS = 64  # embeddings fixture dimensionality (FIXTURES.md)
@@ -152,10 +149,9 @@ def _audit_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     to_build = [n for n, k in fast.items() if not at_rest_built(spark, k)]
     # deliberately a RAW localCheckpoint: these pins are session-cached
     # by at_rest — one per (app, sf, name), dropped when the session
-    # changes — so residue is already bounded and a keyed release would
-    # never fire (the cache means no re-invocation ever supersedes a
-    # pin). ckpt.py's _OWNED dict is also not lock-protected; the pool
-    # threads only build, and at_rest stores on this thread.
+    # changes — so residue is already bounded and no re-invocation ever
+    # supersedes a pin. The pool threads have no pin scope; they only
+    # build, and at_rest stores on this thread.
     with ThreadPoolExecutor(max_workers=max(len(to_build), 1)) as ex:
         futs = {
             n: ex.submit(lambda f=specs[n][1]: f().localCheckpoint())
@@ -246,11 +242,10 @@ def lsh_similarity_join_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "16")
     try:
-        return keyed_local_checkpoint(
+        return pin(
             ann.lsh_similarity_join(
                 emb, threshold=0.3, dims=DIMS, buckets=buckets
             ),
-            key=f"lsh_similarity_join_approx:{sf_dir}",
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
@@ -298,7 +293,7 @@ def lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "16")
     try:
-        return keyed_local_checkpoint(
+        return pin(
             ann.lsh_ann_topk(
                 emb,
                 queries,
@@ -307,7 +302,6 @@ def lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 index_buckets=ibuckets,
                 query_buckets=qbuckets,
             ),
-            key=f"lsh_ann_topk:{sf_dir}",
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
@@ -494,7 +488,7 @@ def kmeans_refine_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (kmeans_chain_two_steps) pins its iterations: ids only, one
     # corpus pass per run. Same localCheckpoint fault-tolerance trade
     # as operators/dedup.dedup_clusters (documented there).
-    reassigned = keyed_local_checkpoint(
+    reassigned = pin(
         vecs.join(F.broadcast(cents))
         .select(
             "vec_id", "cluster_id",
@@ -503,7 +497,6 @@ def kmeans_refine_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("vec_id", "cluster_id"),
-        key=f"kmeans_refine_clusters:reassigned:{sf_dir}",
     )
     seeds = vecs.filter(F.col("vec_id") % ann.SEED_STRIDE == 0).select(
         F.col("vec_id").alias("cluster_id")
@@ -602,10 +595,7 @@ def _upserted_lsh_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             old = read_artifact(spark, path)
             # checkpoint the batch signatures once: reused by the merge
             # AND the affected-partition scan (batch-sized rows)
-            fresh = keyed_local_checkpoint(
-                ann.lsh_bucket_table(_upsert_batch(emb), dims=DIMS),
-                key="_upserted_lsh_table:fresh",
-            )
+            fresh = pin(ann.lsh_bucket_table(_upsert_batch(emb), dims=DIMS))
             merged = index_maint.merge_index_rows(old, fresh)
             affected = index_maint.affected_partitions(
                 old, fresh, ["band", "bucket"]
@@ -614,7 +604,7 @@ def _upserted_lsh_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, merged, affected, path, ["band", "bucket"]
             )
             # the write was the last consumer — release the pin now
-            release_key(spark, "_upserted_lsh_table:fresh")
+            unpin(fresh)
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         return path
@@ -674,10 +664,7 @@ def _upserted_ivf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 partition_by=["cluster_id"],
             )
             old = read_artifact(spark, path)
-            fresh = keyed_local_checkpoint(
-                ann.ivf_assign(_upsert_batch(emb), seeds=seeds),
-                key="_upserted_ivf_table:fresh",
-            )
+            fresh = pin(ann.ivf_assign(_upsert_batch(emb), seeds=seeds))
             merged = index_maint.merge_index_rows(old, fresh)
             affected = index_maint.affected_partitions(
                 old, fresh, ["cluster_id"]
@@ -686,7 +673,7 @@ def _upserted_ivf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, merged, affected, path, ["cluster_id"]
             )
             # the write was the last consumer — release the pin now
-            release_key(spark, "_upserted_ivf_table:fresh")
+            unpin(fresh)
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         return path
@@ -863,15 +850,9 @@ def kmeans_chain_two_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.shuffle.partitions", "16")
     try:
         # BOTH rounds feed the final stats (f1/f2/st join them), so
-        # each gets its own key — neither is superseded within a run
-        it1 = keyed_local_checkpoint(
-            _lloyd_step(vecs, assigned),
-            key=f"kmeans_chain_two_steps:it1:{sf_dir}",
-        )
-        it2 = keyed_local_checkpoint(
-            _lloyd_step(vecs, it1),
-            key=f"kmeans_chain_two_steps:it2:{sf_dir}",
-        )
+        # neither is superseded within a run
+        it1 = pin(_lloyd_step(vecs, assigned))
+        it2 = pin(_lloyd_step(vecs, it1))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     seeds = vecs.filter(F.col("vec_id") % ann.SEED_STRIDE == 0).select(
@@ -1220,7 +1201,7 @@ def lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "16")
     try:
-        return keyed_local_checkpoint(
+        return pin(
             ann.lsh_ann_topk(
                 emb,
                 queries,
@@ -1229,7 +1210,6 @@ def lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 index_buckets=ibuckets,
                 query_buckets=qprobes,
             ),
-            key=f"lsh_multiprobe_topk:{sf_dir}",
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
@@ -1916,11 +1896,8 @@ def ann_recall_vs_exact_clustered(
         .unionByName(tagged("ivf_closure", ivf_c_cand))
         .unionByName(tagged("ivfpq_adc", pq_scored, with_score=True))
     )
-    # eager pin: one job, every consumer reuses it (keyed: re-runs
-    # release the superseded pin — VERDICT r12 #2)
-    cand_all = keyed_local_checkpoint(
-        cand_all, key=f"ann_recall_vs_exact_clustered:cand:{sf_dir}"
-    )
+    # eager pin: one job, every consumer reuses it
+    cand_all = pin(cand_all)
     # retrieved = candidates for the exact-rerank tiers; the ADC top-5
     # for ivfpq (the only tier whose ranking is approximate)
     wpq2 = Window.partitionBy("query_id").orderBy(
@@ -2327,14 +2304,13 @@ def snapshot_index_rebuild_plan(
     )
     # old snapshot rows: the standing at-rest assignment table joined
     # with the scan-born fingerprint — no assignment window. Pinned
-    # once (keyed, consume-before-reinvoke contract): five consumers
+    # once (consume-before-reinvoke contract): five consumers
     # (unchanged slice, additions, both anti-joins, the old summary)
     # read the 24 B/row triples instead of re-running the scan+join
-    rows_old = keyed_local_checkpoint(
+    rows_old = pin(
         _ivf_assign_table(spark, sf_dir).join(
             vs.select("vec_id", vfp.alias("vfp")), "vec_id"
         ),
-        key=f"snapshot_index_rebuild_plan:rows_old:{sf_dir}",
     )
     # the delta: ONLY the perturbed vectors re-score against the
     # frozen codebook (their argmax may move clusters)
@@ -2356,13 +2332,12 @@ def snapshot_index_rebuild_plan(
     add_rows = rows_old.filter(F.col("vec_id") % 103 == 7).select(
         (-F.col("vec_id") - 1).alias("vec_id"), "cluster_id", "vfp"
     )
-    rows_new = keyed_local_checkpoint(
+    rows_new = pin(
         rows_old.filter(
             (F.col("vec_id") % 101 != 5) & (F.col("vec_id") % 89 != 2)
         )
         .unionByName(mod_rows)
         .unionByName(add_rows),
-        key=f"snapshot_index_rebuild_plan:rows_new:{sf_dir}",
     )
 
     # OPTIMIZATION r15 (guide §2.3/§2.4): both diffs now ride ONE

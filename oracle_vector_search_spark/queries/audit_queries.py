@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from oracle_vector_search_spark.functions import text as T
 from oracle_vector_search_spark.io import load_table
+from oracle_vector_search_spark.plans.ckpt import pin
 from oracle_vector_search_spark.queries import register
 
 # Snapshot-diff cutoff — same mid-range instant the upsert query uses.
@@ -650,13 +651,11 @@ def merkle_range_sync_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per replica ONE count-only aggregation to leaves (the
     at-rest summary table a production sync stores — modeled with a
-    keyed pin so the super rollup and the descent read it once), a
+    pin so the super rollup and the descent read it once), a
     |leaves|/8-sized rollup to supers, and a leaf comparison bounded
     by 8·|flagged supers| rows. Generalizes to k levels: each level
     reads 1/fan-out of the one below, so a 100 TB sync walks
     O(log R) summary tables and re-reads only diverging ranges."""
-    from oracle_vector_search_spark.plans.ckpt import keyed_local_checkpoint
-
     a = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -668,8 +667,8 @@ def merkle_range_sync_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.when(F.col("event_id") % _MK_MUT == 5, 1).otherwise(0),
     )
 
-    def leaves(df: DataFrame, key: str) -> DataFrame:
-        return keyed_local_checkpoint(
+    def leaves(df: DataFrame) -> DataFrame:
+        return pin(
             df.groupBy(
                 F.expr(f"event_id div {_MK_LEAF}").alias("bucket")
             ).agg(
@@ -680,10 +679,9 @@ def merkle_range_sync_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + F.col("cents")
                 ).alias("ck"),
             ),
-            key=f"merkle_range_sync_plan:{key}:{sf_dir}",
         )
 
-    la, lb = leaves(a, "a"), leaves(b, "b")
+    la, lb = leaves(a), leaves(b)
     # OPTIMIZATION r15 (guide §2.3/§2.4): the replica diff at BOTH
     # levels used to be a full-outer sort-merge join (two sorted
     # exchanges + merge per level). A union with a side tag and ONE

@@ -45,6 +45,7 @@ from oracle_vector_search_spark.functions import text as T
 from oracle_vector_search_spark.functions.embed import duck_embedding_expr
 from oracle_vector_search_spark.io import load_table
 from oracle_vector_search_spark.operators.topk import bounded_global_order
+from oracle_vector_search_spark.plans.ckpt import pin, unpin
 from oracle_vector_search_spark.queries import register
 
 # ---------------------------------------------------------------- classifier
@@ -216,16 +217,13 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus passes; measured 115 ops / 16 exchanges). The bucket
     # table is _DSIR_BUCKETS-bounded at any scale; pin it and the run
     # is the designed two passes (train stats + scoring probe).
-    from oracle_vector_search_spark.plans.ckpt import keyed_local_checkpoint
-
-    stats = keyed_local_checkpoint(
+    stats = pin(
         bucketed.groupBy("b").agg(
             F.count("*").alias("r_b"),
             F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
             .cast("bigint")
             .alias("t_b"),
         ),
-        key=f"dsir_importance_select:stats:{sf_dir}",
     )
     totals = stats.agg(
         F.sum("r_b").alias("r_tot"), F.sum("t_b").alias("t_tot")
@@ -755,9 +753,6 @@ def curated_corpus_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_clusters,
         minhash_near_dup,
     )
-    from oracle_vector_search_spark.plans.ckpt import (
-        keyed_local_checkpoint,
-    )
     from oracle_vector_search_spark.queries.dedup_queries import (
         MINHASH_THRESHOLD,
         _minhash_sig_table,
@@ -779,10 +774,7 @@ def curated_corpus_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 241-op census pre-dedup-fix). Pinning the id-sized survivor set
     # leaves exactly ONE gate scan per run; the at-rest signature
     # table replays stay cheap pruned reads (the by-design shape).
-    kept_ids = keyed_local_checkpoint(
-        kept.select("doc_id"),
-        key=f"curated_corpus_checksum:kept_ids:{sf_dir}",
-    )
+    kept_ids = pin(kept.select("doc_id"))
     sigs = _minhash_sig_table(spark, sf_dir).join(
         kept_ids, "doc_id", "left_semi"
     )
@@ -791,7 +783,6 @@ def curated_corpus_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs,
         kept_ids,
         iterations=3,
-        ckpt_key=f"curated_corpus_checksum:clusters:{sf_dir}",
     )
     final = docs.join(
         labels.filter(F.col("doc_id") == F.col("canonical_id")).select(
@@ -1238,7 +1229,7 @@ def nightly_corpus_build_manifest(
     come from the at-rest table semi-joined to survivors; the cluster
     rounds shuffle ids only. The SURVIVOR ID SET — the one subtree two
     consumers need (mixture counts AND the final rows) — is pinned via
-    an id-sized keyed localCheckpoint, so adding the mixture/shuffle
+    an id-sized localCheckpoint, so adding the mixture/shuffle
     stages costs ONE extra documents scan (the payload re-read), not a
     re-derivation of the gate+dedup chain per consumer
     (tests/test_nightly_build.py pins the documents-scan count). The
@@ -1251,10 +1242,6 @@ def nightly_corpus_build_manifest(
     from oracle_vector_search_spark.operators.dedup import (
         dedup_clusters,
         minhash_near_dup,
-    )
-    from oracle_vector_search_spark.plans.ckpt import (
-        keyed_local_checkpoint,
-        release_key,
     )
     from oracle_vector_search_spark.queries.dedup_queries import (
         MINHASH_THRESHOLD,
@@ -1276,10 +1263,7 @@ def nightly_corpus_build_manifest(
     # OPTIMIZATION r16 (guide §2.4/§5): pin the id-sized survivor set —
     # same stage-2 fix as curated_corpus_checksum (the gate's tokenize +
     # weight-sum scan replayed per consumer of kept's ids).
-    kept_ids = keyed_local_checkpoint(
-        kept.select("doc_id"),
-        key=f"nightly_corpus_build_manifest:kept_ids:{sf_dir}",
-    )
+    kept_ids = pin(kept.select("doc_id"))
     sigs = _minhash_sig_table(spark, sf_dir).join(
         kept_ids, "doc_id", "left_semi"
     )
@@ -1288,24 +1272,20 @@ def nightly_corpus_build_manifest(
         pairs,
         kept_ids,
         iterations=3,
-        ckpt_key=f"nightly_corpus_build_manifest:clusters:{sf_dir}",
     )
-    surv = keyed_local_checkpoint(
+    surv = pin(
         labels.filter(F.col("doc_id") == F.col("canonical_id")).select(
             "doc_id"
         ),
-        key=f"nightly_corpus_build_manifest:surv:{sf_dir}",
     )
     # `surv` re-pins everything downstream needs from the label table;
     # the cluster checkpoint has no remaining consumer — release it NOW
     # instead of holding a corpus-sized pin until the next invocation
     # (ADVICE r15). The other dedup consumers RETURN frames that
     # lazily reference their label pin, so they must keep it.
-    release_key(spark, f"nightly_corpus_build_manifest:clusters:{sf_dir}")
+    unpin(labels)
     # kept_ids likewise has no consumer past the pinned surv/labels
-    release_key(
-        spark, f"nightly_corpus_build_manifest:kept_ids:{sf_dir}"
-    )
+    unpin(kept_ids)
     corpus = docs.join(surv, "doc_id").select(
         "doc_id", "lang", F.length("text").cast("bigint").alias("n_bytes")
     )
@@ -1315,10 +1295,7 @@ def nightly_corpus_build_manifest(
     )
     # pin the |langs|-row count table: budget AND rates both consume
     # it, and without the pin each consumer re-scans the corpus
-    counts = keyed_local_checkpoint(
-        corpus.groupBy("lang").agg(F.count("*").alias("n_docs")),
-        key=f"nightly_corpus_build_manifest:counts:{sf_dir}",
-    )
+    counts = pin(corpus.groupBy("lang").agg(F.count("*").alias("n_docs")))
     j = (
         counts.select(
             "lang",
@@ -1774,14 +1751,10 @@ def kcenter_coreset_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
         cosine_similarity,
     )
 
-    from oracle_vector_search_spark.plans.ckpt import RoundScope
-
     # every round's pinned frame is lazily referenced by the final
     # union (each pick recomputes from its round's md), so nothing can
-    # be released mid-loop; the whole set transfers to the query key
-    # and the NEXT invocation frees it (VERDICT r12 #2)
-    scope = RoundScope(spark)
-    d = scope.checkpoint(
+    # be released mid-loop; the query's next invocation frees them all
+    d = pin(
         load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") % _KCEN_MOD == 0)
         .select("vec_id", as_double_array("embedding").alias("v"))
@@ -1792,7 +1765,7 @@ def kcenter_coreset_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     first = d.orderBy("vec_id").limit(1).select(
         F.col("vec_id").alias("sid"), F.col("v").alias("sv")
     )
-    md = scope.checkpoint(
+    md = pin(
         d.crossJoin(F.broadcast(first)).select(
             "vec_id", "v", dist.alias("md")
         )
@@ -1823,7 +1796,7 @@ def kcenter_coreset_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("sel_md").alias("min_dist_at_selection"),
             )
         )
-        md = scope.checkpoint(
+        md = pin(
             md.crossJoin(F.broadcast(nxt.select("sid", "sv"))).select(
                 "vec_id",
                 "v",
@@ -1831,7 +1804,6 @@ def kcenter_coreset_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         picked = picked.unionByName(nxt.select("sid"))
-    scope.transfer_to_key(f"kcenter_coreset_seeds:{sf_dir}")
     return out_rows
 
 

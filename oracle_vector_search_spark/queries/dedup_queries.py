@@ -25,6 +25,7 @@ from oracle_vector_search_spark.operators.dedup import (
     simhash_fingerprints,
     simhash_near_dup,
 )
+from oracle_vector_search_spark.plans.ckpt import pin, unpin
 from oracle_vector_search_spark.queries import register
 
 MINHASH_THRESHOLD = 0.4
@@ -166,17 +167,12 @@ def minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "16")
     try:
-        from oracle_vector_search_spark.plans.ckpt import (
-            keyed_local_checkpoint,
-        )
-
-        return keyed_local_checkpoint(
+        return pin(
             minhash_near_dup(
                 docs,
                 threshold=MINHASH_THRESHOLD,
                 sigs=_minhash_sig_table(spark, sf_dir),
             ),
-            key=f"minhash_near_dup_pairs:{sf_dir}",
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
@@ -352,7 +348,6 @@ def dedup_canonical_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs,
         docs.select("doc_id"),
         iterations=3,
-        ckpt_key=f"dedup_canonical_ids:clusters:{sf_dir}",
     )
 
 
@@ -536,7 +531,6 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs,
         docs.select("doc_id"),
         iterations=3,
-        ckpt_key=f"dedup_keep_best:clusters:{sf_dir}",
     )
     qual = with_norm_tokens(docs).select(
         "doc_id", F.size("toks").cast("long").alias("n_tokens")
@@ -975,7 +969,6 @@ def dedup_cleaned_corpus_checksum(
         pairs,
         docs.select("doc_id"),
         iterations=3,
-        ckpt_key=f"dedup_cleaned_corpus_checksum:clusters:{sf_dir}",
     )
     kept = docs.join(
         labels.filter(F.col("doc_id") == F.col("canonical_id")).select(
@@ -1069,7 +1062,6 @@ def dedup_cascade_scaling_probe(
             pairs,
             corpus.select("doc_id"),
             iterations=4,
-            ckpt_key=f"dedup_cascade_scaling_probe:clusters:{sf_dir}",
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
@@ -1135,15 +1127,12 @@ def dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # the edge list feeds all three join legs — materialize it once
     # (localCheckpoint) instead of re-running band-join + verify 3×
-    from oracle_vector_search_spark.plans.ckpt import keyed_local_checkpoint
-
-    pairs = keyed_local_checkpoint(
+    pairs = pin(
         minhash_near_dup(
             docs,
             threshold=MINHASH_THRESHOLD,
             sigs=_minhash_sig_table(spark, sf_dir),
         ).select("left_id", "right_id"),
-        key=f"dedup_graph_triangles:pairs:{sf_dir}",
     )
     e1 = pairs.select(
         F.col("left_id").alias("a"), F.col("right_id").alias("b")
@@ -1323,7 +1312,6 @@ def dedup_soft_sample_weights(
         pairs,
         docs.select("doc_id"),
         iterations=3,
-        ckpt_key=f"dedup_soft_sample_weights:clusters:{sf_dir}",
     )
     w = Window.partitionBy("canonical_id")
     return comp.select(
@@ -1582,19 +1570,13 @@ def suffix_array_repeated_substrings(
 
     # round 0: dense rank of single tokens (two-phase over DISTINCT)
     keys0 = sufs.select("tok0").distinct()
-    r0 = assign_index_ids_two_phase(
-        keys0,
-        order_cols=["tok0"],
-        ckpt_key=f"suffix_array:ranked:{sf_dir}",
-    )
-    from oracle_vector_search_spark.plans.ckpt import RoundScope
-
-    scope = RoundScope(spark)
-    state = scope.checkpoint(
+    r0 = assign_index_ids_two_phase(keys0, order_cols=["tok0"])
+    state = pin(
         sufs.join(r0, "tok0").select(
             "doc_id", "tp", F.col("id").alias("r")
         )
     )
+    unpin(r0)  # consumed into the state pin
 
     for j in range(_SA_ROUNDS):
         off = 2 ** j
@@ -1607,21 +1589,19 @@ def suffix_array_repeated_substrings(
             "doc_id", "tp", "r", F.coalesce("r2", F.lit(0)).alias("r2")
         )
         keys = keyed.select("r", "r2").distinct()
-        # same key every round: each call releases the PREVIOUS
-        # round's rank pin (already consumed into the state checkpoint)
         ranked = assign_index_ids_two_phase(
             keys,
             order_cols=["r", "r2"],
-            ckpt_key=f"suffix_array:ranked:{sf_dir}",
         ).select("r", "r2", F.col("id").alias("rn"))
-        state = scope.checkpoint(
+        prev, state = state, pin(
             keyed.join(ranked, ["r", "r2"]).select(
                 "doc_id", "tp", F.col("rn").alias("r")
             )
         )
-        # the new round is materialized: the prior round's pinned
-        # blocks have no remaining consumer (VERDICT r12 #2)
-        scope.release_superseded()
+        # the new round is materialized: the prior round's state and
+        # this round's rank pin have no remaining consumer
+        unpin(prev)
+        unpin(ranked)
         # early exit (the standard prefix-doubling termination): ids
         # are dense 1..K, so max == n ⟺ every suffix already has a
         # unique rank and further rounds are identity — real text
@@ -1633,15 +1613,14 @@ def suffix_array_repeated_substrings(
             break
 
     # total SA order (rank, doc_id, tp) → dense said via two-phase
-    sa = assign_index_ids_two_phase(
+    said = assign_index_ids_two_phase(
         state,
         order_cols=["r", "doc_id", "tp"],
-        ckpt_key=f"suffix_array:ranked:{sf_dir}",
     ).select("doc_id", "tp", F.col("id").alias("said"))
-    sa = scope.checkpoint(sa.join(suf_str, ["doc_id", "tp"]))
+    sa = pin(said.join(suf_str, ["doc_id", "tp"]))
     # sa supersedes the last rank round; the NEXT invocation frees sa
-    scope.release_superseded()
-    scope.transfer_to_key(f"suffix_array_repeated_substrings:{sf_dir}")
+    unpin(state)
+    unpin(said)
 
     a = sa.select(
         F.col("said"),

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from oracle_vector_search_spark.functions import text as T
 from oracle_vector_search_spark.io import load_table
 from oracle_vector_search_spark.operators.topk import bounded_global_order
+from oracle_vector_search_spark.plans.ckpt import pin
 from oracle_vector_search_spark.queries import register
 
 N_BINS = 10
@@ -1087,9 +1088,7 @@ def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per consumer and the corpus is scanned 6× (measured 16-scan,
     # 23-exchange plan); with it the events table is read exactly
     # twice (midpoint agg + grouped counts).
-    from oracle_vector_search_spark.plans.ckpt import keyed_local_checkpoint
-
-    g = keyed_local_checkpoint(
+    g = pin(
         ev.crossJoin(F.broadcast(mid))
         .groupBy(
             "event_type",
@@ -1097,7 +1096,6 @@ def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c",
         )
         .agg(F.count(F.lit(1)).alias("k")),
-        key=f"psi_value_drift:{sf_dir}",
     )
     # OPTIMIZATION r15 (guide §2.3, aggregate once with conditionals):
     # the old shape read the pinned half-counts table SIX times (ref
@@ -2015,12 +2013,7 @@ def mutual_information_features(
     # 6 scans at sf0.001). The contingency table is bounded by
     # Σ(feature levels × labels) — metadata-sized at any corpus scale —
     # so pin it once and make the claim true.
-    from oracle_vector_search_spark.plans.ckpt import keyed_local_checkpoint
-
-    joint = keyed_local_checkpoint(
-        m.groupBy("feature", "x", "y").agg(F.count("*").alias("nxy")),
-        key=f"mutual_information_features:joint:{sf_dir}",
-    )
+    joint = pin(m.groupBy("feature", "x", "y").agg(F.count("*").alias("nxy")))
     margx = joint.groupBy("feature", "x").agg(F.sum("nxy").alias("nx"))
     margy = joint.groupBy("feature", "y").agg(F.sum("nxy").alias("ny"))
     tot = joint.groupBy("feature").agg(F.sum("nxy").alias("n"))

@@ -30,11 +30,8 @@ from oracle_vector_search_spark.io import (
     read_artifact,
     write_artifact,
 )
+from oracle_vector_search_spark.plans.ckpt import pin, unpin
 from oracle_vector_search_spark.queries import register
-from oracle_vector_search_spark.plans.ckpt import (
-    RoundScope,
-    keyed_local_checkpoint,
-)
 
 _DAMPING = 0.85
 _N_ITER = 3
@@ -282,26 +279,24 @@ def knn_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the graph: the vote loop references edges once per round and
     # nodes three times — without this the kNN build (a full index scan
     # + GEMM) re-executes per round (measured 9-scan plan at 2 rounds)
-    edges = keyed_local_checkpoint(
+    edges = pin(
         cand.withColumn("rn2", F.row_number().over(w_rank))
         .filter(F.col("rn2") <= _LP_K)
         .select(
             F.col("query_id").alias("src"),
             F.col("neighbor_id").alias("dst"),
         ),
-        key=f"knn_label_propagation:edges:{sf_dir}",
     )
     from oracle_vector_search_spark.operators.propagation import (
         propagate_labels,
     )
 
-    nodes = keyed_local_checkpoint(
+    nodes = pin(
         d.select(
             F.col("vec_id").alias("node"),
             "label",
             (F.col("vec_id") % _LP_SEED_MOD == 0).alias("is_seed"),
         ),
-        key=f"knn_label_propagation:nodes:{sf_dir}",
     )
     prop = propagate_labels(nodes, edges, _LP_ITERS)
     truth = d.select(
@@ -384,17 +379,14 @@ def copurchase_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    nodes = keyed_local_checkpoint(
-        li.select(F.col("pk").alias("node")).distinct(),
-        key=f"copurchase_bfs_hops:nodes:{sf_dir}",
-    )
+    nodes = pin(li.select(F.col("pk").alias("node")).distinct())
     seed = nodes.agg(F.min("node").alias("s"))
     a = li.select("ok", F.col("pk").alias("src"))
     b = li.select(F.col("ok").alias("ok2"), F.col("pk").alias("dst"))
     # pin the graph: three relaxation rounds reference edges/dist
     # repeatedly — unpinned, the lineitem scan + self-join re-executes
     # per reference (measured 30-scan plan)
-    edges = keyed_local_checkpoint(
+    edges = pin(
         a.join(
             b,
             (F.col("ok") == F.col("ok2"))
@@ -402,7 +394,6 @@ def copurchase_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("src", "dst")
         .distinct(),
-        key=f"copurchase_bfs_hops:edges:{sf_dir}",
     )
     dist = nodes.crossJoin(F.broadcast(seed)).select(
         "node",
@@ -414,13 +405,10 @@ def copurchase_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the frontier filter + the left join's own row), so unpinned the
     # relaxation chain re-evaluated 2^k times — 159 physical ops /
     # 23 exchanges / 10 SMJ censused, with node-sized shuffle chains
-    # replayed 8× at any scale. Per-round RoundScope pins (the
-    # dedup_clusters discipline) make each round one join + one
-    # aggregation over the pinned previous round.
-    from oracle_vector_search_spark.plans.ckpt import RoundScope
-
-    scope = RoundScope(spark)
-    for _ in range(_BFS_ROUNDS):
+    # replayed 8× at any scale. Per-round pins (the dedup_clusters
+    # discipline) make each round one join + one aggregation over the
+    # pinned previous round.
+    for r in range(_BFS_ROUNDS):
         frontier = dist.filter(F.col("d").isNotNull()).select(
             F.col("node").alias("fsrc"), F.col("d").alias("fd")
         )
@@ -429,16 +417,16 @@ def copurchase_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("dst").alias("cnode"))
             .agg((F.min("fd") + F.lit(1)).cast("int").alias("cd"))
         )
-        dist = scope.checkpoint(
+        prev, dist = dist, pin(
             dist.join(
                 cand, dist.node == cand.cnode, "left"
             ).select(
                 F.col("node"), F.least(F.col("d"), F.col("cd")).alias("d")
             )
         )
-        scope.release_superseded()
+        if r:
+            unpin(prev)
     # the returned histogram lazily references the LAST round's blocks
-    scope.transfer_to_key(f"copurchase_bfs_hops:dist:{sf_dir}")
     return (
         dist.select(
             F.coalesce(F.col("d"), F.lit(-1)).cast("int").alias("hops")
@@ -518,7 +506,6 @@ def embedding_components_single_linkage(
         pairs,
         emb,
         id_col="vec_id",
-        ckpt_key=f"embedding_components_single_linkage:{sf_dir}",
     )
     w = Window.partitionBy("canonical_id")
     return comp.select(
@@ -605,18 +592,16 @@ def dbscan_embedding_clusters(
     )
     # pin the quadratic pair build: edges/deg/core/border all re-derive
     # it otherwise (measured 15-scan plan)
-    pairs = keyed_local_checkpoint(
+    pairs = pin(
         similarity_join(emb, emb, threshold=_CC_THRESHOLD).select(
             "left_id", "right_id"
         ),
-        key=f"dbscan_embedding_clusters:pairs:{sf_dir}",
     )
     return dbscan_from_edges(
         pairs,
         emb,
         min_pts=_DB_MINPTS,
         id_col="vec_id",
-        ckpt_key=f"dbscan_embedding_clusters:{sf_dir}",
     )
 
 
@@ -699,7 +684,6 @@ def hits_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges,
         nodes,
         iters=_HITS_ITER,
-        ckpt_key=f"hits_event_transitions:{sf_dir}",
     ).select(
         F.col("node").alias("event_type"),
         F.round("h", 6).alias("hub"),
@@ -797,17 +781,14 @@ def kcore_embedding_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    # reused every peel round; keyed so re-runs release the old pin
-    edges = keyed_local_checkpoint(
-        edges, key=f"kcore_embedding_graph:edges:{sf_dir}"
-    )
+    # reused every peel round
+    edges = pin(edges)
     nodes = emb.select(F.col("vec_id").alias("node"))
     return kcore_peel(
         edges,
         nodes,
         k=_KC_K,
         rounds=_KC_ROUNDS,
-        ckpt_key=f"kcore_embedding_graph:{sf_dir}",
     ).select(
         F.col("node").alias("vec_id"), "in_core"
     )
@@ -874,11 +855,10 @@ def graph_degree_assortativity(
     )
     # pin the quadratic pair build (re-derived 6x otherwise: edges
     # twice + both degree probes — measured 12-scan plan)
-    pairs = keyed_local_checkpoint(
+    pairs = pin(
         similarity_join(emb, emb, threshold=_KC_THRESHOLD).select(
             "left_id", "right_id"
         ),
-        key=f"graph_degree_assortativity:pairs:{sf_dir}",
     )
     edges = pairs.select(
         F.col("left_id").alias("src"), F.col("right_id").alias("dst")
@@ -984,11 +964,10 @@ def local_clustering_coefficients(
     )
     # pin the quadratic pair build (edges x2 + the triangle probe all
     # re-derive it otherwise — measured 14-scan plan)
-    pairs = keyed_local_checkpoint(
+    pairs = pin(
         similarity_join(emb, emb, threshold=_KC_THRESHOLD).select(
             F.col("left_id").alias("l"), F.col("right_id").alias("r")
         ),
-        key=f"local_clustering_coefficients:pairs:{sf_dir}",
     )
     edges = pairs.select(
         F.col("l").alias("src"), F.col("r").alias("dst")
@@ -1082,10 +1061,7 @@ def graph_edges_incremental_merge(
     cutoff = ev.agg(
         (F.max("ts_us") - F.lit(_GEM_HOURS * 3_600_000_000)).alias("cut")
     )
-    e = keyed_local_checkpoint(
-        ev.crossJoin(F.broadcast(cutoff)),
-        key=f"graph_edges_incremental_merge:e:{sf_dir}",
-    )
+    e = pin(ev.crossJoin(F.broadcast(cutoff)))
 
     def edges_of(df: DataFrame) -> DataFrame:
         w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
@@ -1100,10 +1076,7 @@ def graph_edges_incremental_merge(
         )
 
     old_events = e.filter(F.col("ts_us") <= F.col("cut"))
-    standing = keyed_local_checkpoint(  # the at-rest table
-        edges_of(old_events),
-        key=f"graph_edges_incremental_merge:standing:{sf_dir}",
-    )
+    standing = pin(edges_of(old_events))
 
     active = (
         e.filter(F.col("ts_us") > F.col("cut"))
@@ -1236,11 +1209,10 @@ def graph_ann_greedy_walk_recall(
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    d = keyed_local_checkpoint(
+    d = pin(
         emb.filter(F.col("vec_id") % _LP_NODE_MOD == 0).select(
             "vec_id", as_double_array("embedding").alias("v")
         ),
-        key=f"graph_ann_greedy_walk_recall:d:{sf_dir}",
     )
     tier = knn_exact if d.count() <= 600 else knn_exact_gemm
     cand = tier(d, d, k=_LP_K + 1, vec_col="v").filter(
@@ -1249,14 +1221,13 @@ def graph_ann_greedy_walk_recall(
     w_rank = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("neighbor_id")
     )
-    edges = keyed_local_checkpoint(
+    edges = pin(
         cand.withColumn("rn2", F.row_number().over(w_rank))
         .filter(F.col("rn2") <= _LP_K)
         .select(
             F.col("query_id").alias("src"),
             F.col("neighbor_id").alias("dst"),
         ),
-        key=f"graph_ann_greedy_walk_recall:edges:{sf_dir}",
     )
     q = emb.filter(
         (F.col("vec_id") % _LP_NODE_MOD == 1)
@@ -1265,16 +1236,13 @@ def graph_ann_greedy_walk_recall(
         F.col("vec_id").alias("query_id"),
         as_double_array("embedding").alias("qv"),
     )
-    q = keyed_local_checkpoint(
-        q, key=f"graph_ann_greedy_walk_recall:q:{sf_dir}"
-    )
+    q = pin(q)
     entry = d.agg(F.min("vec_id").alias("enode"))
-    wscope = RoundScope(spark)
     walk = q.crossJoin(F.broadcast(entry)).select(
         "query_id", F.col("enode").alias("cur")
     )
     score = F.round(cosine_similarity("qv", "v"), 6)
-    for _ in range(_GW_HOPS):
+    for r in range(_GW_HOPS):
         cands = walk.select(
             "query_id", F.col("cur").alias("node")
         ).unionByName(
@@ -1292,15 +1260,14 @@ def graph_ann_greedy_walk_recall(
         w_best = Window.partitionBy("query_id").orderBy(
             F.desc("s"), F.asc("node")
         )
-        walk = wscope.checkpoint(
+        prev, walk = walk, pin(
             scored.withColumn("rn", F.row_number().over(w_best))
             .filter(F.col("rn") == 1)
             .select("query_id", F.col("node").alias("cur"))
         )
-        # the new hop is materialized: prior hop's blocks are dead
-        wscope.release_superseded()
+        if r:  # the new hop is materialized: prior hop's blocks are dead
+            unpin(prev)
     # the final hop feeds the lazy result — the NEXT invocation frees it
-    wscope.transfer_to_key(f"graph_ann_greedy_walk_recall:walk:{sf_dir}")
     exact = tier(
         d, q, k=1, vec_col="v", query_id_col="query_id",
         query_vec_col="qv",
@@ -1395,8 +1362,7 @@ def triangle_count_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     problem (LSH-pruned at 100 TB, like the component/k-core family);
     beyond it every shuffle carries (node, node) pairs or node-sized
     degree tuples. The pinned pair list is read by the degree count,
-    both wedge sides, and the closing semi-join — checkpointed once,
-    keyed to this query + sf_dir."""
+    both wedge sides, and the closing semi-join — checkpointed once."""
     from oracle_vector_search_spark.operators.knn import similarity_join
     from oracle_vector_search_spark.operators.propagation import (
         triangle_counts,
@@ -1411,7 +1377,6 @@ def triangle_count_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = triangle_counts(
         pairs,
         id_col="node",
-        ckpt_key=f"triangle_count_graph:pairs:{sf_dir}",
     )
     nodes = emb.select("vec_id")
     out = nodes.join(

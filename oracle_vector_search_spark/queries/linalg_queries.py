@@ -140,9 +140,4 @@ def pca_top_eigenvector(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically."""
     emb = load_table(spark, sf_dir, "embeddings")
     gram = gram_matrix(emb, dim=_DIM)
-    return power_iteration(
-        gram,
-        dim=_DIM,
-        n_iter=3,
-        ckpt_key=f"pca_top_eigenvector:{sf_dir}",
-    ).select("i", round_signed("component").alias("component"))
+    return power_iteration(gram, dim=_DIM, n_iter=3).select("i", round_signed("component").alias("component"))

@@ -44,10 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from oracle_vector_search_spark.functions import text as T
 from oracle_vector_search_spark.io import load_table
 from oracle_vector_search_spark.operators.topk import global_topn_ranked
-from oracle_vector_search_spark.plans.ckpt import (
-    RoundScope,
-    keyed_local_checkpoint,
-)
+from oracle_vector_search_spark.plans.ckpt import pin
 from oracle_vector_search_spark.queries import register
 
 # integer micro-probability scale for the bigram LM
@@ -575,7 +572,6 @@ def zipf_slope_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = assign_index_ids_two_phase(
         freq.withColumn("negn", -F.col("n")),
         order_cols=["negn", "token"],
-        ckpt_key=f"zipf_slope_fit:ranked:{sf_dir}",
     ).select(
         F.log(F.col("id").cast("double")).alias("x"),
         F.log(F.col("n").cast("double")).alias("y"),
@@ -687,11 +683,9 @@ def wordpiece_greedy_tokenize_top30(
     # top-k), not a global single-task window — a web-scale word
     # histogram is 10^8+ types (VERDICT r9 #1)
     # every pinned frame below (vocab, seed, per-round steps) is
-    # lazily referenced by the final emitted union, so the whole set
-    # transfers to the query key at return and the NEXT invocation
-    # releases it (VERDICT r12 #2: no GC-timing dependence)
-    scope = RoundScope(spark)
-    types = scope.checkpoint(  # reused by mining AND as the loop seed
+    # lazily referenced by the final emitted union, so all of them
+    # stay until the query's next invocation releases them
+    types = pin(  # reused by mining AND as the loop seed
         global_topn_ranked(
             words.groupBy("w").agg(F.count("*").alias("wc")),
             _WP_HEAD, F.desc("wc"), F.asc("w"),
@@ -721,9 +715,9 @@ def wordpiece_greedy_tokenize_top30(
         _WP_VOCAB, F.desc("cnt"), F.asc("piece"),
     ).select("piece")
     chars = cand.filter(F.length("piece") == 1).select("piece").distinct()
-    vocab = scope.checkpoint(top_pieces.union(chars).distinct())
+    vocab = pin(top_pieces.union(chars).distinct())
 
-    active = scope.checkpoint(
+    active = pin(
         types.select(
             F.col("w").alias("word"), "wc", F.lit(0).alias("pos")
         )
@@ -748,7 +742,7 @@ def wordpiece_greedy_tokenize_top30(
             .withColumn("rn", F.row_number().over(best_w))
             .filter(F.col("rn") == 1)  # longest match at the cursor
         )
-        step = scope.checkpoint(
+        step = pin(
             matched.select(
                 "word",
                 "wc",
@@ -764,7 +758,6 @@ def wordpiece_greedy_tokenize_top30(
         ).select("word", "wc", "pos")
         if active.isEmpty():
             break
-    scope.transfer_to_key(f"wordpiece_greedy_tokenize_top30:{sf_dir}")
     return (
         emitted.groupBy("piece")
         .agg(
@@ -794,12 +787,11 @@ def _uv_viterbi_paths(spark: SparkSession, sf_dir: str):
     words = docs.select(
         F.explode(F.split(T.norm_text("text"), " ")).alias("w")
     ).filter(F.length("w").between(1, _UV_MAXLEN))
-    types = keyed_local_checkpoint(
+    types = pin(
         global_topn_ranked(
             words.groupBy("w").agg(F.count("*").alias("wc")),
             _UV_HEAD, F.desc("wc"), F.asc("w"),
         ).drop("rank"),
-        key=f"_uv_viterbi_paths:types:{sf_dir}",
     )
     cand = (
         types.select(
@@ -830,7 +822,7 @@ def _uv_viterbi_paths(spark: SparkSession, sf_dir: str):
     vocab = top_pieces.union(chars).distinct()
     with_cnt = vocab.join(cnts, "piece")
     tot = with_cnt.agg(F.sum("cnt").cast("long").alias("total"))
-    costs = keyed_local_checkpoint(
+    costs = pin(
         with_cnt.crossJoin(F.broadcast(tot)).select(
             "piece",
             (
@@ -838,7 +830,6 @@ def _uv_viterbi_paths(spark: SparkSession, sf_dir: str):
                 - F.length(F.expr("bin(cnt)"))
             ).cast("long").alias("pc"),
         ),
-        key=f"_uv_viterbi_paths:costs:{sf_dir}",
     )
 
     # the WHOLE Viterbi runs inside ONE Catalyst expression per word:
@@ -1099,12 +1090,11 @@ def bpe_apply_ranked_merges_top30(
     words = docs.select(
         F.explode(F.split(T.norm_text("text"), " ")).alias("w")
     ).filter(F.length("w").between(2, _BP_MAXLEN))
-    types = keyed_local_checkpoint(
+    types = pin(
         global_topn_ranked(
             words.groupBy("w").agg(F.count("*").alias("wc")),
             _BP_HEAD, F.desc("wc"), F.asc("w"),
         ).drop("rank"),
-        key=f"bpe_apply_ranked_merges_top30:types:{sf_dir}",
     )
     prs = types.select(
         F.explode(
@@ -1312,9 +1302,8 @@ def unigram_em_prune_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the 144-row survivor table: newtot and the final join both
     # consume it, and without the pin each consumer would re-run the
     # whole E-step DP
-    kept = keyed_local_checkpoint(
+    kept = pin(
         global_topn_ranked(used, _UV_KEEP, F.desc("uses"), F.asc("piece")),
-        key=f"unigram_em_prune_step:kept:{sf_dir}",
     )
     newtot = kept.agg(F.sum("uses").cast("long").alias("t2"))
     return (
@@ -1404,12 +1393,11 @@ def wordpiece_merge_gain_top20(
     words = docs.select(
         F.explode(F.split(T.norm_text("text"), " ")).alias("w")
     ).filter(F.length("w") >= 1)
-    types = keyed_local_checkpoint(
+    types = pin(
         global_topn_ranked(
             words.groupBy("w").agg(F.count("*").alias("wc")),
             _WG_HEAD, F.desc("wc"), F.asc("w"),
         ).drop("rank"),
-        key=f"wordpiece_merge_gain_top20:types:{sf_dir}",
     )
     ucnt = (
         types.select(

@@ -31,6 +31,7 @@ from oracle_vector_search_spark.operators.ingest import (
     denormalize_boxes,
     parse_yolo_labels,
 )
+from oracle_vector_search_spark.plans.ckpt import pin
 from oracle_vector_search_spark.queries import register
 
 IMG_W = 640
@@ -1422,9 +1423,7 @@ def query_path_detect_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") == 1)
     )
     q = _crop_serialize_best(best)
-    from oracle_vector_search_spark.plans.ckpt import keyed_local_checkpoint
-
-    q = keyed_local_checkpoint(
+    q = pin(
         # detect+crop runs ONCE; the GEMM collect and the metadata
         # broadcast below both read the pinned rows
         q.withColumn("crop_md5", F.md5(F.col("crop_csv").cast("binary")))
@@ -1432,7 +1431,6 @@ def query_path_detect_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "qid", F.element_at(F.split("stem", "_"), 2).cast("long")
         ),
-        key=f"query_path_detect_search:q:{sf_dir}",
     )
     qmeta = q.select(
         "qid",

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from oracle_vector_search_spark.io import load_table
+from oracle_vector_search_spark.plans.ckpt import pin
 from oracle_vector_search_spark.queries import register
 
 # Quality score in exact integer micro-units: 1e6 * distinct_tokens /
@@ -288,15 +289,13 @@ def bradley_terry_mm_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     size is bounded by sources² at any corpus scale.  Identical
     integers in, identical IEEE divisions out — hash-equal vs the
     unchanged oracle SQL."""
-    from oracle_vector_search_spark.plans.ckpt import keyed_local_checkpoint
-
     docs = load_table(spark, sf_dir, "documents")
     matches = source_matches(docs)
     # ONE corpus pass: per-unordered-pair match count and s1-win count.
     # w1 (wins of the lexicographically smaller source) + n_ij fully
     # determine the per-side win/match sums below — same integers as
     # summing the match rows directly, in any order.
-    pairs = keyed_local_checkpoint(
+    pairs = pin(
         matches.groupBy(
             F.least("sa", "sb").alias("s1"),
             F.greatest("sa", "sb").alias("s2"),
@@ -307,7 +306,6 @@ def bradley_terry_mm_step(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .otherwise(1 - F.col("a_wins"))
             ).cast("long").alias("w1"),
         ),
-        key=f"bradley_terry_mm_step:pairs:{sf_dir}",
     )
     # expand each unordered pair to both directions, carrying that
     # side's win count; wins and the step-2 denominator both read this
@@ -326,7 +324,7 @@ def bradley_terry_mm_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-source totals + MM step 1 (π¹ = 2·W_i / Σ_j n_ij), pinned:
     # consumed by both step-2 broadcasts and the final projection
-    pi1 = keyed_local_checkpoint(
+    pi1 = pin(
         directed.groupBy("source")
         .agg(
             F.sum("w").cast("long").alias("w_i"),
@@ -341,7 +339,6 @@ def bradley_terry_mm_step(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.col("n_i").cast("double")
             ).alias("p1"),
         ),
-        key=f"bradley_terry_mm_step:pi1:{sf_dir}",
     )
     jo = (
         directed.join(

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from oracle_vector_search_spark.functions import text as T
 from oracle_vector_search_spark.io import at_rest, load_table
 from oracle_vector_search_spark.operators.topk import global_topn_ranked
+from oracle_vector_search_spark.plans.ckpt import pin
 from oracle_vector_search_spark.queries import register
 
 _SW = T.STOPWORDS
@@ -703,12 +704,7 @@ def fuzzy_token_pairs_edit1(
     # (two corpus tokenizations + two vocabulary shuffles per run).
     # The vocabulary is the FastSS design's small table — pin it once
     # and both sides explode variants from the pin.
-    from oracle_vector_search_spark.plans.ckpt import keyed_local_checkpoint
-
-    vocab = keyed_local_checkpoint(
-        words.select("w").unionByName(typos).distinct(),
-        key=f"fuzzy_token_pairs_edit1:vocab:{sf_dir}",
-    )
+    vocab = pin(words.select("w").unionByName(typos).distinct())
     variants = vocab.selectExpr(
         "w",
         "explode(array_distinct(concat(transform("
@@ -784,16 +780,13 @@ def doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc = load_table(spark, sf_dir, "documents")
     base = doc.select("doc_id", T.norm_text().alias("norm"))
     tok = base.withColumn("toks", T.tokens("norm"))
-    from oracle_vector_search_spark.plans.ckpt import keyed_local_checkpoint
-
-    g = keyed_local_checkpoint(
+    g = pin(
         tok.select(
             "doc_id",
             F.explode(
                 F.expr(T.word_shingles_expr("toks", "norm"))
             ).alias("s"),
         ).select("doc_id", F.expr(T.hash28_sql("s")).alias("h")),
-        key=f"doc_ngram_novelty:grams:{sf_dir}",
     )
     per = g.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
     h_agg = g.groupBy("h").agg(

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from oracle_vector_search_spark.io import load_table
+from oracle_vector_search_spark.plans.ckpt import pin
 from oracle_vector_search_spark.queries import register
 
 
@@ -299,13 +300,8 @@ def top_revenue_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # materialize the per-supplier aggregate (tiny) so the max
-    # subquery and the join both read it — lineitem scans ONCE; keyed
-    # so a re-invocation releases the superseded blocks (VERDICT r12 #2)
-    from oracle_vector_search_spark.plans.ckpt import keyed_local_checkpoint
-
-    rev = keyed_local_checkpoint(
-        rev, key=f"top_revenue_suppliers:{sf_dir}"
-    )
+    # subquery and the join both read it — lineitem scans ONCE
+    rev = pin(rev)
     mx = rev.agg(
         F.max("total_revenue_cents").alias("total_revenue_cents")
     )

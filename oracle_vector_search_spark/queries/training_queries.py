@@ -25,6 +25,7 @@ from oracle_vector_search_spark.io import (
     write_artifact,
 )
 from oracle_vector_search_spark.operators.topk import global_topn_ranked
+from oracle_vector_search_spark.plans.ckpt import pin
 from oracle_vector_search_spark.queries import register
 
 QUANT_MAX_ID = 300  # embeddings subset for the per-vector fidelity report
@@ -1336,8 +1337,6 @@ def mmr_rerank_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from oracle_vector_search_spark.operators.knn import knn_exact
 
-    from oracle_vector_search_spark.plans.ckpt import keyed_local_checkpoint
-
     lam = float(MMR_LAMBDA)
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES_HN)
@@ -1348,11 +1347,10 @@ def mmr_rerank_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # physical ops / 38 scans at sf0.001). Pin the ≤k-rows-per-query
     # candidate table and the ≤k²-per-query pairwise-sim table once;
     # every pick round reads the pins.
-    cand = keyed_local_checkpoint(
+    cand = pin(
         knn_exact(emb, queries, k=10)
         .withColumnRenamed("score", "rel")
         .select("query_id", "neighbor_id", "rel"),
-        key=f"mmr_rerank_top3:cand:{sf_dir}",
     )
     vecs = emb.select(
         F.col("vec_id").alias("neighbor_id"),
@@ -1365,13 +1363,12 @@ def mmr_rerank_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = cv.select(
         "query_id", F.col("neighbor_id").alias("bi"), F.col("v").alias("bv")
     )
-    sim = keyed_local_checkpoint(
+    sim = pin(
         a.join(b, "query_id")
         .select(
             "query_id", "ai", "bi",
             F.round(cosine_similarity("av", "bv"), 6).alias("sim"),
         ),
-        key=f"mmr_rerank_top3:sim:{sf_dir}",
     )
 
     def pick(df: DataFrame, score_col: str) -> DataFrame:
@@ -1658,7 +1655,6 @@ def training_order_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = assign_index_ids_two_phase(
         h,
         ["hv", "doc_id"],
-        ckpt_key=f"training_order_shuffle:ranked:{sf_dir}",
     )
     return ranked.select(
         "doc_id",
@@ -2697,7 +2693,6 @@ def curriculum_quality_order(
     ranked = assign_index_ids_two_phase(
         staged,
         ["stage", "hv", "doc_id"],
-        ckpt_key=f"curriculum_quality_order:ranked:{sf_dir}",
     )
     return ranked.select(
         "doc_id", "stage", F.col("id").alias("curriculum_pos")

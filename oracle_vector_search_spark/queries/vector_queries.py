@@ -29,6 +29,7 @@ from oracle_vector_search_spark.operators.knn import (
     knn_join_metadata,
     similarity_join,
 )
+from oracle_vector_search_spark.plans.ckpt import pin
 from oracle_vector_search_spark.queries import register
 
 N_QUERIES = 10  # first N vec_ids serve as the query set (FIXTURES.md)
@@ -579,12 +580,7 @@ def sq8_recall_refine_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both hit joins and the qids projection — unpinned, the corpus
     # kNN crossJoin + window replayed three times per run (measured
     # 128 ops / 13 exchanges). K×|queries| rows: pin once.
-    from oracle_vector_search_spark.plans.ckpt import keyed_local_checkpoint
-
-    exact = keyed_local_checkpoint(
-        knn_exact(emb, queries, k=K).select("query_id", "neighbor_id"),
-        key=f"sq8_recall_refine_audit:exact:{sf_dir}",
-    )
+    exact = pin(knn_exact(emb, queries, k=K).select("query_id", "neighbor_id"))
 
     # stage-1-only top-5: integer code dot products in pure Catalyst
     sq = lambda col: F.aggregate(
@@ -1320,13 +1316,10 @@ def prf_rocchio_requery(spark: SparkSession, sf_dir: str) -> DataFrame:
     from oracle_vector_search_spark.operators.knn import knn_exact
 
     emb = load_table(spark, sf_dir, "embeddings")
-    from oracle_vector_search_spark.plans.ckpt import keyed_local_checkpoint
-
-    d = keyed_local_checkpoint(
+    d = pin(
         emb.select(
             "vec_id", "label", as_double_array("embedding").alias("v")
         ),
-        key=f"prf_rocchio_requery:d:{sf_dir}",
     )
     q = d.filter(F.col("vec_id") < _PRF_NQ).select(
         F.col("vec_id").alias("query_id"),
@@ -1349,13 +1342,12 @@ def prf_rocchio_requery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two (one search before, one after). Pin the first search's
     # labeled result: it is ≤ (K+1)·|queries| rows (30 here) at ANY
     # corpus scale, the canonical small-table pin.
-    r0l = keyed_local_checkpoint(
+    r0l = pin(
         r0.join(F.broadcast(labels), "neighbor_id")
         .join(
             F.broadcast(q.select("query_id", "qlabel")), "query_id"
         )
         .filter(F.col("neighbor_id") != F.col("query_id")),
-        key=f"prf_rocchio_requery:r0l:{sf_dir}",
     )
     before = r0l.filter(F.col("rank") <= _PRF_K + 1).groupBy(
         "query_id"

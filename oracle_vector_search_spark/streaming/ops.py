@@ -1309,16 +1309,18 @@ def preference_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged = part
         # pin BEFORE overwrite — the merged plan reads the very
         # directory the write replaces; released right after (the
-        # write is the only consumer — VERDICT r12 #2)
+        # write is the only consumer). foreachBatch calls back on a
+        # thread with no query scope, hence the scope of its own.
         from oracle_vector_search_spark.plans.ckpt import (
-            keyed_local_checkpoint,
-            release_key,
+            owned_by,
+            pin,
+            unpin,
         )
 
-        keyed_local_checkpoint(
-            merged, key=f"stream_state:{state_dir}"
-        ).write.mode("overwrite").parquet(state_dir)
-        release_key(merged.sparkSession, f"stream_state:{state_dir}")
+        with owned_by(None):
+            state = pin(merged)
+            state.write.mode("overwrite").parquet(state_dir)
+            unpin(state)
 
     q = (
         stream.writeStream.foreachBatch(upd)
@@ -1411,16 +1413,18 @@ def pass_at_k_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged = part
         # pin BEFORE overwrite — the merged plan reads the very
         # directory the write replaces; released right after (the
-        # write is the only consumer — VERDICT r12 #2)
+        # write is the only consumer). foreachBatch calls back on a
+        # thread with no query scope, hence the scope of its own.
         from oracle_vector_search_spark.plans.ckpt import (
-            keyed_local_checkpoint,
-            release_key,
+            owned_by,
+            pin,
+            unpin,
         )
 
-        keyed_local_checkpoint(
-            merged, key=f"stream_state:{state_dir}"
-        ).write.mode("overwrite").parquet(state_dir)
-        release_key(merged.sparkSession, f"stream_state:{state_dir}")
+        with owned_by(None):
+            state = pin(merged)
+            state.write.mode("overwrite").parquet(state_dir)
+            unpin(state)
 
     q = (
         stream.writeStream.foreachBatch(upd)

@@ -214,12 +214,12 @@ def test_live_results_coexist_across_invocations(spark, corpus_dir, labels):
     """VERDICT r13 #1 regression guard: every public entry point must
     return a lazily-collectable result whose blocks SURVIVE later
     invocations of the same (and sibling) entry points. r13 pinned the
-    query pipeline under a static keyed_local_checkpoint key, so the
-    second call released the first result's only blocks and collecting
-    the older frame died with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. Here
-    we build N live results from search (expr, gemm, ann tiers) and
-    search_radius BEFORE collecting any, then collect OLDEST-FIRST —
-    the order that crashes under keyed pinning."""
+    query pipeline under one static release key, so the second call
+    released the first result's only blocks and collecting the older
+    frame died with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. Here we build N
+    live results from search (expr, gemm, ann tiers) and search_radius
+    BEFORE collecting any, then collect OLDEST-FIRST — the order that
+    crashes when a later call releases an earlier call's pins."""
     from oracle_vector_search_spark.api import search_radius
 
     with tempfile.TemporaryDirectory() as out:

@@ -1,20 +1,27 @@
 """localCheckpoint residue stays bounded across repeated invocations.
 
-VERDICT r12 "What's wrong" #2: every ``localCheckpoint()`` pins blocks
-that are only reclaimed when GC happens to trigger ContextCleaner, so a
-long-lived session re-invoking a checkpointing query accumulated one
-persistent RDD per run (measured: 6 psi runs → 6 pinned RDDs). The fix
-(plans/ckpt.py) releases the superseded invocation's blocks
-deterministically: ``keyed_local_checkpoint`` on re-derivation,
-``RoundScope.release_superseded``/``transfer_to_key`` in fixpoint
-loops. These tests are the "done" criterion: N runs in one session must
-NOT grow the persistent-RDD count by N.
+Every ``localCheckpoint()`` pins blocks that are only reclaimed when GC
+happens to trigger ContextCleaner, so a long-lived session re-invoking
+a checkpointing query would accumulate one persistent RDD per run.
+plans/ckpt.py releases them deterministically: a registered query owns
+the pins it takes, its next invocation releases them, and loops
+``unpin`` each superseded round. N runs in one session must NOT grow
+the persistent-RDD count by N, and one query's run must never release
+another query's result.
 """
 
 from __future__ import annotations
 
+import threading
+import uuid
+from contextlib import contextmanager
+
 import pytest
 
+from oracle_vector_search_spark.io import at_rest
+from oracle_vector_search_spark.plans import ckpt
+from oracle_vector_search_spark.plans.ckpt import owned_by, pin, unpin
+from oracle_vector_search_spark.queries import REGISTRY, register
 from oracle_vector_search_spark.queries import queries as registry_queries
 
 
@@ -60,9 +67,9 @@ def _settled_growth(spark, base: int, budget: int, attempts: int = 10):
 @pytest.mark.parametrize(
     "name, per_run_budget",
     [
-        # one keyed checkpoint per invocation → steady-state adds 0
+        # one pin per invocation → steady-state adds 0
         ("psi_value_drift", 0),
-        # loop: every round transfers to the query key; steady-state
+        # loop: every round stays owned by the query; steady-state
         # re-runs replace (not stack) the prior invocation's set
         ("kcenter_coreset_seeds", 0),
         ("wordpiece_greedy_tokenize_top30", 0),
@@ -90,19 +97,22 @@ def test_repeated_invocation_residue_is_bounded(
 def test_mixed_session_residue_is_bounded(spark, sf_dir):
     """The VERDICT's mixed-session scenario: alternating checkpointing
     queries must hold the TOTAL pinned count flat once each query's
-    steady state exists (each key owns exactly one live set)."""
+    steady state exists (each query owns exactly one live set)."""
     qs = registry_queries()
     names = [
         "psi_value_drift",
         "unigram_viterbi_tokenize_top30",
         "bpe_apply_ranked_merges_top30",
         "wordpiece_merge_gain_top20",
-        # r13 sweep: single-pin queries, a prefix-doubling loop, and a
-        # walk loop — all now keyed/scoped
+        # single-pin queries, a prefix-doubling loop, and a walk loop
         "doc_ngram_novelty",
         "top_revenue_suppliers",
         "suffix_array_repeated_substrings",
         "graph_ann_greedy_walk_recall",
+        # shares a helper with unigram_viterbi_tokenize_top30, and an
+        # operator that pins its input
+        "unigram_em_prune_step",
+        "triangle_count_graph",
     ]
     for n in names:  # establish every steady state
         qs[n](spark, sf_dir).count()
@@ -111,61 +121,85 @@ def test_mixed_session_residue_is_bounded(spark, sf_dir):
         for n in names:
             qs[n](spark, sf_dir).count()
     grown = _settled_growth(spark, base, 1)
-    # settled-to-settled, the steady state must not grow: every keyed
-    # site owns exactly one live set and loops release their rounds.
-    # (The pre-r13 failure mode was one NEW pin per run — +16 here.)
+    # settled-to-settled, the steady state must not grow: every query
+    # owns exactly one live set and loops release their rounds. (One
+    # NEW pin per run would grow it by 20 here.)
     assert grown <= 1, (
-        f"mixed 16-run session grew settled persistent RDDs by "
+        f"mixed 20-run session grew settled persistent RDDs by "
         f"{grown} — superseded checkpoints are stacking again"
     )
 
 
-def test_keyed_checkpoint_releases_previous_blocks(spark):
-    """Unit check of the mechanism itself: the second keyed checkpoint
-    under one key unpersists the first's blocks, and the new frame
+def test_query_run_never_releases_another_querys_result(spark, sf_dir):
+    """A result a caller still holds survives a run of a DIFFERENT
+    query, even one that shares a pinning helper with it (both tokenizer
+    queries go through ``_uv_viterbi_paths``)."""
+    qs = registry_queries()
+    held = qs["unigram_viterbi_tokenize_top30"](spark, sf_dir)
+    n = held.count()
+    qs["unigram_em_prune_step"](spark, sf_dir).count()
+    assert held.count() == n
+
+
+def _persistent_ids(spark) -> set[int]:
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(i) for i in jmap.keySet().toArray()}
+
+
+def _rid(df) -> int:
+    (rid,) = ckpt._checkpoint_leaf_ids(df)
+    return rid
+
+
+@contextmanager
+def _registered(name, fn):
+    """``fn`` registered as a query for the duration of the block."""
+    try:
+        yield register(name, None)(fn)
+    finally:
+        REGISTRY.pop(name, None)
+
+
+def test_reinvocation_releases_previous_blocks(spark):
+    """Unit check of the mechanism itself: the second invocation of a
+    registered query unpersists the first's blocks, and the new frame
     stays readable."""
-    from oracle_vector_search_spark.plans.ckpt import (
-        keyed_local_checkpoint,
-    )
+    sizes = iter([100, 200])
 
-    base = _n_persistent(spark)
-    df1 = keyed_local_checkpoint(spark.range(100), key="ckpt-test")
-    assert df1.count() == 100
-    assert _n_persistent(spark) == base + 1
-    df2 = keyed_local_checkpoint(spark.range(200), key="ckpt-test")
-    assert _n_persistent(spark) == base + 1  # df1's blocks released
-    assert df2.count() == 200
+    def q(spark, sf_dir):
+        return pin(spark.range(next(sizes)))
+
+    with _registered(f"ckpt-test-{uuid.uuid4().hex}", q) as wrapped:
+        assert wrapped.__wrapped__ is q and wrapped.__name__ == "q"
+        base = _n_persistent(spark)
+        df1 = wrapped(spark, "sf")
+        assert df1.count() == 100
+        assert _n_persistent(spark) == base + 1
+        df2 = wrapped(spark, "sf")
+        assert _n_persistent(spark) == base + 1  # df1's blocks released
+        assert _rid(df1) not in _persistent_ids(spark)
+        assert df2.count() == 200
 
 
-def test_keyed_checkpoint_never_releases_bystander_caches(spark):
-    """Regression (r13 adversarial review of the first ckpt.py cut):
-    ownership must be the checkpointed RDD's OWN id, not a
+def test_reinvocation_never_releases_bystander_caches(spark):
+    """Ownership must be the checkpointed RDD's OWN id, not a
     getPersistentRDDs diff — a ``persist()``-ed subtree whose cache
     materializes inside the checkpoint's job (the dedup fixpoint's
-    edge cache during round 1 is the live example) was co-captured by
-    the diff and wrongly unpersisted on the next release."""
-    from oracle_vector_search_spark.plans.ckpt import (
-        keyed_local_checkpoint,
-    )
-
-    sc = spark.sparkContext
+    edge cache during round 1 is the live example) would be
+    co-captured by the diff and wrongly unpersisted on the next
+    release."""
+    key = ("bystander-test", uuid.uuid4().hex)
     cached = spark.range(1000).selectExpr("id", "id % 7 AS k").persist()
     try:
         # the cache materializes INSIDE the first checkpoint's job
-        keyed_local_checkpoint(
-            cached.groupBy("k").count(), key="bystander-test"
-        )
-        ids_with_cache = {
-            int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()
-        }
-        # the second checkpoint releases the first's ownership — the
-        # bystander cache must SURVIVE that release
-        keyed_local_checkpoint(
-            cached.groupBy("k").count(), key="bystander-test"
-        )
-        ids_after = {
-            int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()
-        }
+        with owned_by(key):
+            pin(cached.groupBy("k").count())
+        ids_with_cache = _persistent_ids(spark)
+        # the re-invocation releases the first's pin — the bystander
+        # cache must SURVIVE that release
+        with owned_by(key):
+            pin(cached.groupBy("k").count())
+        ids_after = _persistent_ids(spark)
         dropped = ids_with_cache - ids_after
         # exactly one id may drop: the first checkpoint itself
         assert len(dropped) <= 1, (
@@ -176,21 +210,112 @@ def test_keyed_checkpoint_never_releases_bystander_caches(spark):
         cached.unpersist()
 
 
-def test_round_scope_keeps_only_the_newest(spark):
-    from oracle_vector_search_spark.plans.ckpt import RoundScope
-
-    scope = RoundScope(spark)
+def test_loop_keeps_only_the_newest_round(spark):
+    key = ("round-test", uuid.uuid4().hex)
     base = _n_persistent(spark)
-    last = None
-    for i in range(4):
-        last = scope.checkpoint(spark.range(10 + i))
-        scope.release_superseded()
-    assert _n_persistent(spark) == base + 1
+    with owned_by(key):
+        last = None
+        for i in range(4):
+            prev, last = last, pin(spark.range(10 + i))
+            if prev is not None:
+                unpin(prev)
+        assert _n_persistent(spark) == base + 1
     assert last.count() == 13
-    scope.transfer_to_key("round-scope-test")
-    # the transferred final is released by the NEXT key owner
-    scope2 = RoundScope(spark)
-    cp = scope2.checkpoint(spark.range(5))
-    scope2.transfer_to_key("round-scope-test")
+    # the final round is released by the NEXT invocation
+    with owned_by(key):
+        cp = pin(spark.range(5))
     assert _n_persistent(spark) == base + 1
+    assert _rid(last) not in _persistent_ids(spark)
     assert cp.count() == 5
+
+
+def test_pin_inside_at_rest_build_survives_reinvocation(spark):
+    """A memoized at-rest value is read by every later invocation, so
+    the query's re-invocation must not release its pins."""
+    artifact = ("ckpt-test-artifact", uuid.uuid4().hex)
+
+    def q(spark, sf_dir):
+        table = at_rest(spark, artifact, lambda: pin(spark.range(7)))
+        return table, pin(spark.range(3))
+
+    with _registered(f"ckpt-test-{uuid.uuid4().hex}", q) as wrapped:
+        table, own = wrapped(spark, "sf")
+        again, _ = wrapped(spark, "sf")
+        assert again is table
+        ids = _persistent_ids(spark)
+        assert _rid(table) in ids  # memoized: never released
+        assert _rid(own) not in ids  # the query's own pin: released
+        assert table.count() == 7
+
+
+def test_nested_registered_query_joins_the_outer_scope(spark):
+    """A registered query called from inside another one does not open
+    its own scope: its pins belong to the outer invocation, so running
+    the inner query on its own later does not release them."""
+
+    def inner(spark, sf_dir):
+        return pin(spark.range(3))
+
+    with _registered(f"ckpt-inner-{uuid.uuid4().hex}", inner) as q_in:
+
+        def outer(spark, sf_dir):
+            return q_in(spark, sf_dir), pin(spark.range(4))
+
+        with _registered(f"ckpt-outer-{uuid.uuid4().hex}", outer) as q_out:
+            nested, own = q_out(spark, "sf")
+            q_in(spark, "sf")  # the inner query's own invocation
+            assert _rid(nested) in _persistent_ids(spark)
+            assert nested.count() == 3
+            q_out(spark, "sf")  # re-invoking the OUTER releases both
+            ids = _persistent_ids(spark)
+            assert _rid(nested) not in ids and _rid(own) not in ids
+
+
+def test_pin_outside_any_scope_is_not_recorded(spark):
+    """Public API callers, external callers and pool threads run with
+    no scope: their pins are GC-owned — no scope records them, and
+    ``unpin`` leaves them alone."""
+    free = pin(spark.range(9))
+    unpin(free)
+    key = ("pool-test", uuid.uuid4().hex)
+    pooled = []
+    with owned_by(key):
+        # a thread started inside a scope does not inherit it
+        t = threading.Thread(
+            target=lambda: pooled.append(pin(spark.range(6)))
+        )
+        t.start()
+        t.join(timeout=120)
+        assert not t.is_alive() and pooled
+    with owned_by(key):
+        pass
+    recorded = set().union(*(s.ids for s in ckpt._OWNED.values()))
+    ids = _persistent_ids(spark)
+    for df in (free, pooled[0]):
+        assert _rid(df) not in recorded
+        assert _rid(df) in ids
+    assert free.count() == 9 and pooled[0].count() == 6
+
+
+def test_unpin_of_derived_frame_releases_its_pins_only(spark):
+    """``unpin`` walks the checkpoint leaves of a derived frame: it
+    releases the pins the frame reads, and leaves alone other pins of
+    the scope, bystander caches, and ``createDataFrame`` RDDs."""
+    cached = spark.range(50).persist()
+    try:
+        assert cached.count() == 50
+        with owned_by(("derived-test", uuid.uuid4().hex)):
+            a, b, c = (pin(spark.range(n)) for n in (10, 20, 30))
+            local = spark.createDataFrame([(1,)], "id long")
+            derived = (
+                a.join(b, "id")
+                .unionByName(cached)
+                .join(local, "id", "left")
+            )
+            before = _persistent_ids(spark)
+            unpin(derived)
+            after = _persistent_ids(spark)
+        assert before - after == {_rid(a), _rid(b)}
+        assert c.count() == 30 and cached.count() == 50
+    finally:
+        cached.unpersist()

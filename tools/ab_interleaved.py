@@ -41,7 +41,7 @@ def load_old_fn(qname):
     """The base ref's version of a registered query: the module that
     defines the registered function, as of <base_ref>, executed with
     registration switched off."""
-    fn = new_qs[qname]
+    fn = inspect.unwrap(new_qs[qname])  # registered queries are wrappers
     path = os.path.relpath(inspect.getsourcefile(fn), ROOT)
     if path not in _old_mod_cache:
         src = subprocess.check_output(
