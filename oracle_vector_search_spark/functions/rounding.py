@@ -14,6 +14,10 @@ it after rounding is always safe.
 Spark side:  ``round_signed(col)``              (this module)
 Oracle side: ``round(expr, 6) + 0.0 AS name``   (inline in the SQL)
 
+Money columns are integerized instead: ``cents(col)`` is
+``floor(x * 100)`` as BIGINT on the Spark side, paired with
+``CAST(floor(x * 100) AS BIGINT)`` in the oracle SQL.
+
 ``tools/oracle_check.py`` enforces the policy end-to-end: its compare
 flags any +0.0 / −0.0 sign disagreement between the engines as a hard
 failure, matching the driver's bit-pattern hash.
@@ -33,3 +37,11 @@ def round_signed(col: Column | str, scale: int = 6) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.round(c, scale) + F.lit(0.0)
+
+
+def cents(col: Column | str) -> Column:
+    """``floor(x * 100)`` as BIGINT: the deterministic per-row
+    integerization of money columns, so sums hash-match the oracle's
+    ``CAST(floor(x * 100) AS BIGINT)`` exactly."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.floor(c * 100).cast("long")

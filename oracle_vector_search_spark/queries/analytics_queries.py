@@ -19,15 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from oracle_vector_search_spark.functions import text as T
+from oracle_vector_search_spark.functions.rounding import cents
 from oracle_vector_search_spark.io import load_table
 from oracle_vector_search_spark.plans.ckpt import pin
 from oracle_vector_search_spark.queries import register
-
-
-def _cents(col) -> F.Column:
-    return F.floor(
-        (F.col(col) if isinstance(col, str) else col) * 100
-    ).cast("long")
 
 
 @register(
@@ -70,7 +65,7 @@ def revenue_rollup_nation_year(
         .select(
             "n_name",
             F.year("o_orderdate").alias("o_year"),
-            _cents("o_totalprice").alias("cents"),
+            cents("o_totalprice").alias("cents"),
         )
     )
     return (
@@ -130,7 +125,7 @@ def customer_spend_window_suite(
     spend = (
         cust.join(orders, cust.c_custkey == orders.o_custkey)
         .groupBy("c_custkey", "c_mktsegment")
-        .agg(F.sum(_cents("o_totalprice")).alias("spend_cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("spend_cents"))
     )
     w = Window.partitionBy("c_mktsegment").orderBy(
         "spend_cents", "c_custkey"
@@ -369,7 +364,7 @@ def pareto_skyline_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     pts = (
         orders.groupBy(
-            _cents("o_totalprice").alias("price_cents"),
+            cents("o_totalprice").alias("price_cents"),
             F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias(
                 "date_us"
             ),

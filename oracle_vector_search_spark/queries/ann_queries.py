@@ -236,19 +236,12 @@ def lsh_similarity_join_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") % 10 == 0
     )
-    # tiny bucket tables; a 200-partition plain session wastes ~15 s on
-    # task overhead for the candidate distinct — pin low, restore after
     buckets = _bucket_table(spark, sf_dir).filter(F.col("vec_id") % 10 == 0)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        return pin(
-            ann.lsh_similarity_join(
-                emb, threshold=0.3, dims=DIMS, buckets=buckets
-            ),
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    return pin(
+        ann.lsh_similarity_join(
+            emb, threshold=0.3, dims=DIMS, buckets=buckets
+        ),
+    )
 
 
 @register(
@@ -290,21 +283,16 @@ def lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 10)
     ibuckets = _bucket_table(spark, sf_dir)
     qbuckets = ibuckets.filter(F.col("vec_id") < 10)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        return pin(
-            ann.lsh_ann_topk(
-                emb,
-                queries,
-                k=5,
-                dims=DIMS,
-                index_buckets=ibuckets,
-                query_buckets=qbuckets,
-            ),
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    return pin(
+        ann.lsh_ann_topk(
+            emb,
+            queries,
+            k=5,
+            dims=DIMS,
+            index_buckets=ibuckets,
+            query_buckets=qbuckets,
+        ),
+    )
 
 
 _IVF_ORACLE = """
@@ -579,34 +567,27 @@ def _upserted_lsh_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build():
         path = scratch_dir("ovs_lsh_upsert_")
         emb = load_table(spark, sf_dir, "embeddings")
-        # maintenance moves metadata-sized (id, band, bucket) rows; a
-        # 200-partition plain session drowns that in task overhead
-        old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        try:
-            base = emb.filter(F.col("vec_id") % 10 != 0).repartition(32)
-            write_artifact(
-                ann.lsh_bucket_table(base, dims=DIMS).repartition(
-                    "band", "bucket"
-                ),
-                path,
-                partition_by=["band", "bucket"],
-            )
-            old = read_artifact(spark, path)
-            # checkpoint the batch signatures once: reused by the merge
-            # AND the affected-partition scan (batch-sized rows)
-            fresh = pin(ann.lsh_bucket_table(_upsert_batch(emb), dims=DIMS))
-            merged = index_maint.merge_index_rows(old, fresh)
-            affected = index_maint.affected_partitions(
-                old, fresh, ["band", "bucket"]
-            )
-            index_maint.incremental_overwrite(
-                spark, merged, affected, path, ["band", "bucket"]
-            )
-            # the write was the last consumer — release the pin now
-            unpin(fresh)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+        base = emb.filter(F.col("vec_id") % 10 != 0).repartition(32)
+        write_artifact(
+            ann.lsh_bucket_table(base, dims=DIMS).repartition(
+                "band", "bucket"
+            ),
+            path,
+            partition_by=["band", "bucket"],
+        )
+        old = read_artifact(spark, path)
+        # checkpoint the batch signatures once: reused by the merge
+        # AND the affected-partition scan (batch-sized rows)
+        fresh = pin(ann.lsh_bucket_table(_upsert_batch(emb), dims=DIMS))
+        merged = index_maint.merge_index_rows(old, fresh)
+        affected = index_maint.affected_partitions(
+            old, fresh, ["band", "bucket"]
+        )
+        index_maint.incremental_overwrite(
+            spark, merged, affected, path, ["band", "bucket"]
+        )
+        # the write was the last consumer — release the pin now
+        unpin(fresh)
         return path
 
     path = at_rest(spark, (_upserted_lsh_table, sf_dir), build)
@@ -652,30 +633,23 @@ def _upserted_ivf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("seed_id"),
             as_double_array("embedding").alias("sv"),
         )
-        old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        try:
-            base = emb.filter(F.col("vec_id") % 10 != 0).repartition(32)
-            write_artifact(
-                ann.ivf_assign(base, seeds=seeds).repartition(
-                    "cluster_id"
-                ),
-                path,
-                partition_by=["cluster_id"],
-            )
-            old = read_artifact(spark, path)
-            fresh = pin(ann.ivf_assign(_upsert_batch(emb), seeds=seeds))
-            merged = index_maint.merge_index_rows(old, fresh)
-            affected = index_maint.affected_partitions(
-                old, fresh, ["cluster_id"]
-            )
-            index_maint.incremental_overwrite(
-                spark, merged, affected, path, ["cluster_id"]
-            )
-            # the write was the last consumer — release the pin now
-            unpin(fresh)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+        base = emb.filter(F.col("vec_id") % 10 != 0).repartition(32)
+        write_artifact(
+            ann.ivf_assign(base, seeds=seeds).repartition("cluster_id"),
+            path,
+            partition_by=["cluster_id"],
+        )
+        old = read_artifact(spark, path)
+        fresh = pin(ann.ivf_assign(_upsert_batch(emb), seeds=seeds))
+        merged = index_maint.merge_index_rows(old, fresh)
+        affected = index_maint.affected_partitions(
+            old, fresh, ["cluster_id"]
+        )
+        index_maint.incremental_overwrite(
+            spark, merged, affected, path, ["cluster_id"]
+        )
+        # the write was the last consumer — release the pin now
+        unpin(fresh)
         return path
 
     path = at_rest(spark, (_upserted_ivf_table, sf_dir), build)
@@ -846,15 +820,10 @@ def kmeans_chain_two_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     assigned = _ivf_assign_table(spark, sf_dir)
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        # BOTH rounds feed the final stats (f1/f2/st join them), so
-        # neither is superseded within a run
-        it1 = pin(_lloyd_step(vecs, assigned))
-        it2 = pin(_lloyd_step(vecs, it1))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    # BOTH rounds feed the final stats (f1/f2/st join them), so
+    # neither is superseded within a run
+    it1 = pin(_lloyd_step(vecs, assigned))
+    it2 = pin(_lloyd_step(vecs, it1))
     seeds = vecs.filter(F.col("vec_id") % ann.SEED_STRIDE == 0).select(
         F.col("vec_id").alias("cluster_id")
     )
@@ -1198,21 +1167,16 @@ def lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qprobes = ann.multiprobe_query_buckets(
         ibuckets.filter(F.col("vec_id") < 10)
     )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        return pin(
-            ann.lsh_ann_topk(
-                emb,
-                queries,
-                k=5,
-                dims=DIMS,
-                index_buckets=ibuckets,
-                query_buckets=qprobes,
-            ),
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    return pin(
+        ann.lsh_ann_topk(
+            emb,
+            queries,
+            k=5,
+            dims=DIMS,
+            index_buckets=ibuckets,
+            query_buckets=qprobes,
+        ),
+    )
 
 
 @register(

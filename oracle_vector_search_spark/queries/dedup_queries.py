@@ -162,20 +162,13 @@ def minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-duplicate pairs: banded signatures prune the
     pair space, exact word-shingle Jaccard ≥ 0.4 confirms."""
     docs = load_table(spark, sf_dir, "documents")
-    # tiny band-bucket/verify joins — 32+ shuffle partitions are pure
-    # task overhead at fixture scale; pin low, restore after
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        return pin(
-            minhash_near_dup(
-                docs,
-                threshold=MINHASH_THRESHOLD,
-                sigs=_minhash_sig_table(spark, sf_dir),
-            ),
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    return pin(
+        minhash_near_dup(
+            docs,
+            threshold=MINHASH_THRESHOLD,
+            sigs=_minhash_sig_table(spark, sf_dir),
+        ),
+    )
 
 
 @register(
@@ -1054,17 +1047,12 @@ def dedup_cascade_scaling_probe(
     corpus = corpus.repartition(32, "doc_id")
     from oracle_vector_search_spark.operators.dedup import dedup_clusters
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        pairs = minhash_near_dup(corpus, threshold=MINHASH_THRESHOLD)
-        labels = dedup_clusters(
-            pairs,
-            corpus.select("doc_id"),
-            iterations=4,
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    pairs = minhash_near_dup(corpus, threshold=MINHASH_THRESHOLD)
+    labels = dedup_clusters(
+        pairs,
+        corpus.select("doc_id"),
+        iterations=4,
+    )
     kept = labels.filter(F.col("doc_id") == F.col("canonical_id"))
     stats = corpus.agg(
         F.count("*").alias("n_docs_in"),

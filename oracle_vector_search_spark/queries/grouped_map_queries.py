@@ -107,15 +107,7 @@ def stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    # one state-store instance spins up per shuffle partition — at 200
-    # (plain-session default) that's 200 stores for 150 keys; pin low
-    # for the bounded fixture, restore after.
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        mem = run_to_memory(updated, "update")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    mem = run_to_memory(updated, "update")
     # update mode may emit one row per (user, batch); keep the last state
     from pyspark.sql import Window
 

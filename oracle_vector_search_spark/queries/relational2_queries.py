@@ -8,14 +8,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from oracle_vector_search_spark.functions.rounding import cents
 from oracle_vector_search_spark.io import load_table
 from oracle_vector_search_spark.queries import register
-
-
-def _cents(col) -> F.Column:
-    return F.floor(
-        (F.col(col) if isinstance(col, str) else col) * 100
-    ).cast("long")
 
 
 @register(
@@ -64,7 +59,7 @@ def window_range_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return orders.select(
         "o_custkey",
         "o_orderkey",
-        F.sum(_cents("o_totalprice"))
+        F.sum(cents("o_totalprice"))
         .over(w_rows.rowsBetween(-2, 0))
         .alias("last3_cents"),
         F.count("*").over(w_range).alias("n_orders_90d"),
@@ -234,7 +229,7 @@ def customers_above_nation_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     produces anyway, spelled explicitly."""
     cust = load_table(spark, sf_dir, "customer")
     nation_avg = cust.groupBy("c_nationkey").agg(
-        (F.sum(_cents("c_acctbal")) / 100.0 / F.count("*")).alias("avg_bal")
+        (F.sum(cents("c_acctbal")) / 100.0 / F.count("*")).alias("avg_bal")
     )
     return (
         cust.join(F.broadcast(nation_avg), "c_nationkey")

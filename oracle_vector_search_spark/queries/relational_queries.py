@@ -20,19 +20,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from oracle_vector_search_spark.functions.rounding import cents
 from oracle_vector_search_spark.io import load_table
 from oracle_vector_search_spark.operators.topk import (
     top_k_global,
     top_k_per_group,
 )
 from oracle_vector_search_spark.queries import register
-
-
-def _cents(col) -> F.Column:
-    """Deterministic per-row integerization: floor(x*100) as BIGINT."""
-    return F.floor(F.col(col) * 100 if isinstance(col, str) else col * 100).cast(
-        "long"
-    )
 
 
 # ---------------------------------------------------------------- Q1-style
@@ -65,12 +59,12 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
-        F.sum(_cents("l_extendedprice")).alias("sum_base_cents"),
+        F.sum(cents("l_extendedprice")).alias("sum_base_cents"),
         F.sum(
-            _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+            cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
         ).alias("sum_disc_cents"),
         F.sum(
-            _cents(
+            cents(
                 F.col("l_extendedprice")
                 * (1 - F.col("l_discount"))
                 * (1 + F.col("l_tax"))
@@ -80,7 +74,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("l_quantity").cast("long")) * 1.0 / F.count("*"), 6
         ).alias("avg_qty"),
         F.round(
-            F.sum(_cents("l_extendedprice")) / 100.0 / F.count("*"), 6
+            F.sum(cents("l_extendedprice")) / 100.0 / F.count("*"), 6
         ).alias("avg_price"),
         F.count("*").alias("count_order"),
     )
@@ -178,7 +172,7 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy("n_name").agg(
         F.sum(
-            _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+            cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
         ).alias("revenue_cents"),
         F.count("*").alias("n_lineitems"),
     )
@@ -254,7 +248,7 @@ def promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio of two exact integer sums."""
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
-    disc = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    disc = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
     return joined.agg(
         F.round(
@@ -290,10 +284,10 @@ def mktsegment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cust.groupBy("c_mktsegment").agg(
         F.count("*").alias("n_customers"),
         F.countDistinct("c_nationkey").alias("n_nations"),
-        F.sum(_cents("c_acctbal")).alias("sum_acctbal_cents"),
+        F.sum(cents("c_acctbal")).alias("sum_acctbal_cents"),
         F.min("c_acctbal").alias("min_acctbal"),
         F.max("c_acctbal").alias("max_acctbal"),
-        F.round(F.sum(_cents("c_acctbal")) / 100.0 / F.count("*"), 6).alias(
+        F.round(F.sum(cents("c_acctbal")) / 100.0 / F.count("*"), 6).alias(
             "avg_acctbal"
         ),
     )
@@ -318,7 +312,7 @@ def brand_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_parts"),
         F.countDistinct("p_type").alias("n_types"),
         F.max("p_size").alias("max_size"),
-        F.sum(_cents("p_retailprice")).alias("sum_price_cents"),
+        F.sum(cents("p_retailprice")).alias("sum_price_cents"),
     )
 
 
@@ -400,7 +394,7 @@ def supplier_running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_linenumber",
         F.row_number().over(w).alias("rn"),
-        F.sum(_cents("l_extendedprice"))
+        F.sum(cents("l_extendedprice"))
         .over(w.rowsBetween(Window.unboundedPreceding, 0))
         .alias("running_cents"),
         F.lag("l_orderkey").over(w).alias("prev_orderkey"),

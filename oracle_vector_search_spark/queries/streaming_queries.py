@@ -437,7 +437,7 @@ def streaming_audio_vad_admission(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Multimodal curation-on-arrival: WAV clips stream in micro-
-    batches (4 files, maxFilesPerTrigger=1); each batch runs the real
+    batches (4 files, one per trigger); each batch runs the real
     codec → Catalyst framing → integer frame energy → per-clip
     admission (voiced fraction in [0.3, 0.9]) and APPENDS decisions at
     rest. Per-clip decisions are batching-independent, so the drained

@@ -16,14 +16,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from oracle_vector_search_spark.functions.rounding import cents
 from oracle_vector_search_spark.io import load_table
 from oracle_vector_search_spark.queries import register
-
-
-def _cents(col) -> F.Column:
-    return F.floor(
-        (F.col(col) if isinstance(col, str) else col) * 100
-    ).cast("long")
 
 
 @register(
@@ -97,7 +92,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.year("o_orderdate").alias("o_year"),
-            _cents(
+            cents(
                 F.col("l_extendedprice") * (1 - F.col("l_discount"))
             ).alias("vol_cents"),
             F.col("sn.n_name").alias("supp_nation"),
@@ -174,7 +169,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("supp_nation"),
             F.year("o_orderdate").alias("o_year"),
         )
-        .agg(F.sum(_cents(profit)).alias("profit_cents"))
+        .agg(F.sum(cents(profit)).alias("profit_cents"))
     )
 
 
@@ -227,7 +222,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_nationkey") == nation.n_nationkey,
         )
         .groupBy("l_partkey")
-        .agg(F.sum(_cents("l_extendedprice")).alias("value_cents"))
+        .agg(F.sum(cents("l_extendedprice")).alias("value_cents"))
     )
     total = vals.agg(
         F.sum("value_cents").alias("grand_cents"),
@@ -341,7 +336,7 @@ def q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     shipped = (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("l_suppkey")
-        .agg(F.sum(_cents("l_quantity")).alias("qty_cents"))
+        .agg(F.sum(cents("l_quantity")).alias("qty_cents"))
         .filter(F.col("qty_cents") > 10000)
     )
     return shipped.join(

@@ -6,15 +6,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from oracle_vector_search_spark.functions.rounding import cents
 from oracle_vector_search_spark.io import load_table
 from oracle_vector_search_spark.plans.ckpt import pin
 from oracle_vector_search_spark.queries import register
-
-
-def _cents(col) -> F.Column:
-    return F.floor(
-        (F.col(col) if isinstance(col, str) else col) * 100
-    ).cast("long")
 
 
 @register(
@@ -107,7 +102,7 @@ def nation_pair_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         "supp_nation", "cust_nation", F.year("l_shipdate").alias("ship_year")
     ).agg(
         F.sum(
-            _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+            cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
         ).alias("volume_cents")
     )
 
@@ -142,7 +137,7 @@ def top_returning_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         j.groupBy("c_custkey", "c_name")
         .agg(
             F.sum(
-                _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+                cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
             ).alias("returned_cents"),
             F.count("*").alias("n_returned_lines"),
         )
@@ -226,7 +221,7 @@ def brand_discount_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return j.filter(cond).agg(
         F.sum(
-            _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+            cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
         ).alias("revenue_cents")
     )
 
@@ -295,7 +290,7 @@ def top_revenue_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(
             F.sum(
-                _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+                cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
             ).alias("total_revenue_cents")
         )
     )
@@ -338,7 +333,7 @@ def small_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(pa, "l_partkey")
         .filter(F.col("l_quantity") < 0.5 * F.col("avg_qty"))
         .agg(
-            F.sum(_cents("l_extendedprice")).alias("revenue_cents"),
+            F.sum(cents("l_extendedprice")).alias("revenue_cents"),
             F.count("*").alias("n_lines"),
         )
     )
@@ -419,11 +414,11 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     j = li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
-    cents = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    rev = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     promo = F.sum(
-        F.when(F.col("p_type") == "PROMO", cents).otherwise(F.lit(0))
+        F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0))
     )
-    total = F.sum(cents)
+    total = F.sum(rev)
     return j.agg(
         F.round(100.0 * promo / total, 6).alias("promo_pct"),
         promo.cast("long").alias("promo_cents"),
@@ -470,11 +465,11 @@ def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_custkey")
     )
     pos = c.filter(F.col("c_acctbal") > 0).agg(
-        F.sum(_cents("c_acctbal")).alias("sum_cents"),
+        F.sum(cents("c_acctbal")).alias("sum_cents"),
         F.count("*").alias("n"),
     )
     rich = c.crossJoin(F.broadcast(pos)).filter(
-        _cents("c_acctbal") * F.col("n") > F.col("sum_cents")
+        cents("c_acctbal") * F.col("n") > F.col("sum_cents")
     )
     idle = rich.join(
         o, F.col("o_custkey") == F.col("c_custkey"), "left_anti"
@@ -483,7 +478,7 @@ def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         idle.groupBy("c_mktsegment")
         .agg(
             F.count("*").alias("n_customers"),
-            F.sum(_cents("c_acctbal")).alias("total_cents"),
+            F.sum(cents("c_acctbal")).alias("total_cents"),
         )
         .orderBy("c_mktsegment")
     )
@@ -529,7 +524,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
     agg = j.groupBy("l_orderkey", "o_orderdate").agg(
         F.sum(
-            _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+            cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
         )
         .cast("long")
         .alias("revenue_cents")
@@ -577,7 +572,7 @@ def q18_large_volume_customers(
     agg-then-join rewrite); quantities accumulate as exact integer
     hundredths so the threshold and output are engine-exact."""
     li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", _cents("l_quantity").alias("qc")
+        "l_orderkey", cents("l_quantity").alias("qc")
     )
     big = (
         li.groupBy("l_orderkey")
@@ -586,7 +581,7 @@ def q18_large_volume_customers(
     )
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate",
-        _cents("o_totalprice").alias("totalprice_cents"),
+        cents("o_totalprice").alias("totalprice_cents"),
     )
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name"

@@ -5,6 +5,13 @@ but every knob is chosen so the same code runs unchanged on a multi-node
 cluster: AQE on (runtime re-plan + skew-join handling), Arrow on (pandas
 UDF fast path), UTC session timezone (oracle comparability), shuffle
 partitions sized to cores rather than the 200 default.
+
+``get_spark`` is the only code that sizes shuffles; no query or stream
+overrides ``spark.sql.shuffle.partitions``. One count is enough: AQE
+coalesces the shuffles of batch stages (inside ``foreachBatch`` too)
+to what the data needs, and the stateful stream operators, whose state
+stores AQE does not coalesce, use the session's count, which follows
+the host's cores.
 """
 
 from __future__ import annotations

@@ -388,8 +388,7 @@ def _torch_embed_batch(arrays: list) -> list:
 def embed_crops(
     df: DataFrame,
     dims: int = 8,
-    use_torch: bool = False,
-    tier: str | None = None,
+    tier: str = "hash",
 ) -> DataFrame:
     """Pluggable embedder, three tiers:
 
@@ -400,16 +399,14 @@ def embed_crops(
       forward with the torch tier's exact batching contract
       (per-executor weight cache, shape-grouped stacked forwards,
       None on undecodable/too-small crops), ungated in CI.
-    * ``torch`` (or ``use_torch=True``): per-executor-cached
-      ResNet-18 (fc=Identity) — the reference's model
-      (build_faiss_db.py:109-134) — native 512-d features, same-shape
-      crops stacked into one forward per Arrow batch instead of the
-      reference's batch-size-1 loop."""
+    * ``torch``: per-executor-cached ResNet-18 (fc=Identity) — the
+      reference's model (build_faiss_db.py:109-134) — native 512-d
+      features, same-shape crops stacked into one forward per Arrow
+      batch instead of the reference's batch-size-1 loop."""
     from oracle_vector_search_spark.functions.embed import (
         hash_projection_embed_batch,
     )
 
-    tier = tier or ("torch" if use_torch else "hash")
     if tier not in ("hash", "convnet", "torch"):
         raise ValueError(f"unknown embed tier {tier!r}")
     if tier == "torch":

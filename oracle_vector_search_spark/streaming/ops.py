@@ -1,25 +1,49 @@
-"""Streaming operators over the events fixture.
+"""Streaming operators over the fixture tables.
 
 The reference has no streaming (its online path is request/response
 Streamlit reruns, SURVEY.md §2.8); this module supplies the engine's
 streaming surface: windowed aggregation, gap sessionization
-(``session_window``), watermarked late-data handling, and a streaming
-kNN scorer (static broadcast index ⋈ query stream via foreachBatch).
+(``session_window``), watermarked late-data handling, a stream-stream
+join, and streams that maintain an at-rest table as data arrives (CDC
+snapshots, incremental index maintenance, curation on arrival).
 
-Testing pattern: parquet file source → memory sink →
-``processAllAvailable()`` drives the stream to completion synchronously,
-so results are deterministic and comparable to the batch oracle. The
-same code runs against kafka/socket sources on a cluster.
+Every stream drains a bounded source to completion, so its result is
+deterministic and comparable to the batch oracle. There are two ways
+to run one:
+
+* ``run_to_memory``: file source → memory sink →
+  ``processAllAvailable()``, for the stateful operators Spark runs
+  itself (windows, dedup, joins, arbitrary state). These use the
+  session's shuffle-partition count for their state stores.
+* ``drain_file_stream``: the one micro-batch driver for the file-fed
+  streams. It writes the source as 4 parquet files and streams them
+  one file per trigger, so the stream's merge runs several times.
+  Each non-empty micro-batch calls the stream's ``step(batch, prev)``
+  with the previous output version, and writes the result to a fresh
+  version directory. Versions are write-once: no plan ever reads a
+  directory that is being written, so nothing needs pinning. A fold
+  stream returns its last version, an append stream the union of every
+  version. An empty source returns a typed empty frame. Non-empty data
+  that arrived in only one micro-batch raises ``RuntimeError``: the
+  multi-batch merge the stream exists to show never ran.
+
+``upsert_snapshot_stream_recoverable`` stays outside the driver: it
+keeps a durable ledger keyed by ``epoch_id`` and restarts from a
+checkpoint.
 """
 
 from __future__ import annotations
 
 import os
 import uuid
+from collections.abc import Callable
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+
+from oracle_vector_search_spark.io import load_table, write_artifact
+from oracle_vector_search_spark.scratch import scratch_dir
+
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as an unbounded stream (ts_ns BIGINT + µs ts,
@@ -31,8 +55,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     reinterpret values; the batch path (io.load_table) branches on the
     actual type and the stream inherits that decision.
     """
-    from oracle_vector_search_spark.io import load_table
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     batch = load_table(spark, sf_dir, "events")
@@ -72,6 +94,62 @@ def run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     finally:
         q.stop()
     return stream_df.sparkSession.table(name)
+
+
+def drain_file_stream(
+    source: DataFrame,
+    schema: str,
+    step: Callable[[DataFrame, DataFrame | None], DataFrame],
+    append: bool = False,
+) -> DataFrame:
+    """Stream ``source`` in micro-batches and fold or append ``step``'s
+    output into write-once versions (see the module doc).
+
+    ``step(batch, prev)`` runs on every non-empty micro-batch, in
+    arrival order; ``prev`` is the previous version (``None`` on the
+    first), and the result must have the DDL ``schema``. Returns the
+    last version, or with ``append`` the union of every version.
+    ``step`` runs in the stream's cloned session, so state passes
+    between epochs through the version directories, never through
+    session objects."""
+    spark = source.sparkSession
+    src_dir = scratch_dir("ovs_stream_src_")
+    out_root = scratch_dir("ovs_stream_out_")
+    source.repartition(4).write.mode("overwrite").parquet(src_dir)
+    versions: list[str] = []
+
+    def run_epoch(batch: DataFrame, epoch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        prev = None
+        if versions:
+            prev = batch.sparkSession.read.schema(schema).parquet(versions[-1])
+        out = f"{out_root}/v{len(versions)}"
+        write_artifact(step(batch, prev), out)
+        versions.append(out)
+
+    q = (
+        spark.readStream.schema(source.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src_dir)
+        .writeStream.foreachBatch(run_epoch)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    if not versions:
+        return spark.createDataFrame([], schema)
+    if len(versions) == 1:
+        raise RuntimeError(
+            "stream data arrived in one micro-batch; expected multi-batch "
+            "arrival"
+        )
+    return spark.read.schema(schema).parquet(
+        *(versions if append else versions[-1:])
+    )
 
 
 def hourly_windows_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -140,61 +218,37 @@ def streaming_knn_scores(
     spark: SparkSession, sf_dir: str, k: int = 5, n_queries: int = 10
 ) -> DataFrame:
     """Streaming kNN: a stream of query vectors scored per micro-batch
-    against a static (broadcastable) index via foreachBatch — the
-    engine's answer to the reference's online search path (app.py:
-    139-143) under Structured Streaming. Per-batch exact top-k, global
-    re-rank on the accumulated candidates (same merge as the GEMM tier)."""
+    against a static (broadcastable) index — the engine's answer to the
+    reference's online search path (app.py: 139-143) under Structured
+    Streaming. Each micro-batch appends its exact top-k; the global
+    re-rank over the accumulated candidates is the GEMM tier's merge.
+    Nothing collects to the driver, so throughput is unbounded in the
+    number of queries; the candidates are ≤ k rows per query per batch."""
     from pyspark.sql import Window
 
     from oracle_vector_search_spark.functions.vector import (
         as_double_array,
         cosine_similarity,
     )
-    from oracle_vector_search_spark.io import load_table
 
-    index_df = load_table(spark, sf_dir, "embeddings").select(
+    emb = load_table(spark, sf_dir, "embeddings")
+    index_df = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         as_double_array("embedding").alias("v_vec"),
     )
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    qstream = (
-        spark.readStream.schema(
-            T.StructType(
-                [
-                    T.StructField("vec_id", T.LongType()),
-                    T.StructField(
-                        "embedding", T.ArrayType(T.FloatType())
-                    ),
-                    T.StructField("label", T.IntegerType()),
-                ]
-            )
-        )
-        .format("parquet")
-        .option("pathGlobFilter", "embeddings.parquet")
-        .load(sf_dir)
-        .filter(F.col("vec_id") < n_queries)
+    queries = emb.filter(F.col("vec_id") < n_queries).select(
+        "vec_id", "embedding"
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("score"), F.asc("neighbor_id")
     )
 
-    # foreachBatch runs in a cloned session — temp views registered there
-    # are invisible here, so the per-batch top-k goes to a parquet sink
-    # table instead (executor-side append; nothing ever collects to the
-    # driver, so throughput is unbounded in the number of queries). The
-    # final re-rank is a window over the sink — candidates are ≤ k rows
-    # per query per batch, so the sink stays tiny relative to the stream.
-    from oracle_vector_search_spark.scratch import scratch_dir
-
-    sink_path = scratch_dir("ovs_knn_sink_")
-
-    def score_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        q = batch_df.select(
+    def score_batch(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
+        q = batch.select(
             F.col("vec_id").alias("query_id"),
             as_double_array("embedding").alias("q_vec"),
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("neighbor_id")
-        )
-        (
+        return (
             index_df.join(F.broadcast(q))
             .select(
                 "query_id",
@@ -206,21 +260,13 @@ def streaming_knn_scores(
             .withColumn("r", F.row_number().over(w))
             .filter(F.col("r") <= k)
             .select("query_id", "neighbor_id", "score")
-            .write.mode("append")
-            .parquet(sink_path)
         )
 
-    q = qstream.writeStream.foreachBatch(score_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    acc = spark.read.schema(
-        "query_id long, neighbor_id long, score double"
-    ).parquet(sink_path)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
+    acc = drain_file_stream(
+        queries,
+        "query_id long, neighbor_id long, score double",
+        score_batch,
+        append=True,
     )
     return (
         acc.withColumn("rank", F.row_number().over(w))
@@ -253,21 +299,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded fixture every pair is emitted, so the per-user pair counts
     equal the batch interval join exactly (oracle-checked). The raw
     pair stream lands in the memory sink; the per-user rollup runs on
-    the drained table.
-
-    Shuffle partitions pin to 8 for the run: each stream-stream join
-    partition spins up four state stores (left/right x keyed state),
-    so partition count — not data volume — dominates wall clock at
-    fixture scale."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return _stream_stream_join_inner(spark, sf_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
-def _stream_stream_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
+    the drained table."""
     ev = stream_events(spark, sf_dir)
     views = (
         ev.filter(F.col("event_type") == "view")
@@ -301,84 +333,40 @@ def upsert_snapshot_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuild over all events: latest-wins over a total (ts_us,
     event_id) order is associative, so the result is independent of
     how the stream happened to batch.
-
-    The source is the events table re-split into 4 files streamed with
-    maxFilesPerTrigger=1, so the merge genuinely runs multiple times.
-    foreachBatch runs in a cloned session; state passes between
-    epochs via the written parquet paths, not session objects.
     """
-    from oracle_vector_search_spark.scratch import scratch_dir
-
     from pyspark.sql import Window
 
-    from oracle_vector_search_spark.io import load_table
     from oracle_vector_search_spark.operators.merge import merge_upsert
 
-    src_dir = scratch_dir("ovs_upsert_src_")
-    snap_root = scratch_dir("ovs_upsert_snap_")
-    (
-        load_table(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            F.expr("ts_ns div 1000").alias("ts_us"),
-            "event_id",
-            "event_type",
-            F.floor(F.col("value") * 100).cast("long").alias("value_cents"),
-        )
-        .repartition(4)
-        .write.mode("overwrite")
-        .parquet(src_dir)
+    events = load_table(spark, sf_dir, "events").select(
+        "user_id",
+        F.expr("ts_ns div 1000").alias("ts_us"),
+        "event_id",
+        "event_type",
+        F.floor(F.col("value") * 100).cast("long").alias("value_cents"),
     )
-    schema = (
-        "user_id long, ts_us long, event_id long, "
-        "event_type string, value_cents long"
+    w = Window.partitionBy("user_id").orderBy(
+        F.desc("ts_us"), F.desc("event_id")
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    state = {"path": None, "version": 0}
 
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        sess = batch_df.sparkSession
-        w = Window.partitionBy("user_id").orderBy(
-            F.desc("ts_us"), F.desc("event_id")
-        )
+    def merge_batch(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         latest = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
+            batch.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        if state["path"] is not None:
-            base = sess.read.schema(schema).parquet(state["path"])
-            latest = merge_upsert(
-                base, latest, keys=["user_id"], order_cols=["ts_us", "event_id"]
-            )
-        out = f"{snap_root}/v{state['version']}"
-        latest.write.mode("overwrite").parquet(out)
-        state["path"] = out
-        state["version"] += 1
+        if prev is None:
+            return latest
+        return merge_upsert(
+            prev, latest, keys=["user_id"], order_cols=["ts_us", "event_id"]
+        )
 
-    q = stream.writeStream.foreachBatch(merge_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    if state["path"] is None:
-        # empty source: no micro-batch ever arrived — degrade to an
-        # empty snapshot (the multi-epoch invariant below only applies
-        # when there was data to arrive in batches)
-        return spark.createDataFrame([], schema)
-    snap = spark.read.schema(schema).parquet(state["path"])
-    if state["version"] < 2:
-        # a lone micro-batch is only legitimate when it carried no
-        # rows (an empty source can still emit one empty part file);
-        # with real data the multi-file fixture guarantees >= 2 epochs
-        if not snap.isEmpty():
-            raise RuntimeError("stream produced fewer than 2 merge epochs")
-    return snap
+    return drain_file_stream(
+        events,
+        "user_id long, ts_us long, event_id long, "
+        "event_type string, value_cents long",
+        merge_batch,
+    )
 
 
 class _InjectedCrash(RuntimeError):
@@ -425,7 +413,6 @@ def upsert_snapshot_stream_recoverable(
     from pyspark.errors import StreamingQueryException
     from pyspark.sql import Window
 
-    from oracle_vector_search_spark.io import load_table
     from oracle_vector_search_spark.operators.merge import merge_upsert
 
     schema = (
@@ -561,74 +548,23 @@ def index_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     what the DuckDB oracle computes. The reference has no streaming
     ingestion at all (build_faiss_db.py rebuilds offline); this is the
     continuous-ingest shape a 100 TB corpus actually runs.
-
-    Source: embeddings re-split into 4 files, maxFilesPerTrigger=1 →
-    ≥4 genuine merge epochs. foreachBatch runs in a cloned session;
-    state passes between epochs via written parquet paths.
     """
-    from oracle_vector_search_spark.io import load_table
     from oracle_vector_search_spark.operators import ann, index_maint
-    from oracle_vector_search_spark.scratch import scratch_dir
 
-    src_dir = scratch_dir("ovs_idx_stream_src_")
-    snap_root = scratch_dir("ovs_idx_stream_snap_")
-    (
-        load_table(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("embedding"),
-        )
-        .repartition(4)
-        .write.mode("overwrite")
-        .parquet(src_dir)
+    vectors = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.col("embedding").cast("array<double>").alias("embedding"),
     )
-    schema = "vec_id long, embedding array<double>"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+
+    def merge_batch(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
+        fresh = ann.lsh_bucket_table(batch, dims=64)
+        if prev is None:
+            return fresh
+        return index_maint.merge_index_rows(prev, fresh)
+
+    return drain_file_stream(
+        vectors, "vec_id long, band int, bucket int", merge_batch
     )
-    state = {"path": None, "version": 0}
-
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        sess = batch_df.sparkSession
-        fresh = ann.lsh_bucket_table(batch_df, dims=64)
-        if state["path"] is not None:
-            old = sess.read.parquet(state["path"])
-            merged = index_maint.merge_index_rows(old, fresh)
-        else:
-            merged = fresh
-        out = f"{snap_root}/v{state['version']}"
-        merged.write.mode("overwrite").parquet(out)
-        state["path"] = out
-        state["version"] += 1
-
-    # the per-epoch merge moves metadata-sized (id, band, bucket) rows;
-    # default 200 shuffle partitions drown it in task overhead
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    q = stream.writeStream.foreachBatch(merge_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-
-    idx_schema = "vec_id long, band int, bucket int"
-    if state["path"] is None:
-        # empty source — same empty-input degradation as the upsert
-        # snapshot stream above
-        return spark.createDataFrame([], idx_schema)
-    # explicit schema: a lone EMPTY micro-batch writes a file-less
-    # snapshot dir that schema inference cannot read
-    snap = spark.read.schema(idx_schema).parquet(state["path"])
-    if state["version"] < 2:
-        # same single-empty-micro-batch allowance as the upsert stream
-        if not snap.isEmpty():
-            raise RuntimeError(
-                "stream produced fewer than 2 index maintenance epochs"
-            )
-    return snap
 
 
 def has_protobuf() -> bool:
@@ -723,12 +659,7 @@ def transform_with_state_user_type_stats(
         outputMode="Update",
         timeMode="None",
     )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        mem = run_to_memory(updated, "update")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    mem = run_to_memory(updated, "update")
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
@@ -757,7 +688,7 @@ def dedup_within_watermark_stream(
 
     Batching robustness (ADVICE r4): the duplicate copies of an event
     land in DIFFERENT files, so under a multi-batch drain
-    (maxFilesPerTrigger, availableNow batching, checkpoint restart) a
+    (one file per trigger, availableNow batching, checkpoint restart) a
     first-seen copy can arrive in a later batch than events that
     already advanced the watermark past it — and a delay shorter than
     the fixture's time span would drop it as late, diverging from the
@@ -767,9 +698,6 @@ def dedup_within_watermark_stream(
     is unchanged — in production the delay is tuned to the real
     out-of-orderness, here to the fixture's.
     """
-    from oracle_vector_search_spark.io import load_table
-    from oracle_vector_search_spark.scratch import scratch_dir
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     src = scratch_dir("ovs_dup_events_")
     base = load_table(spark, sf_dir, "events").select(
@@ -788,12 +716,7 @@ def dedup_within_watermark_stream(
             "sum_value_cents"
         ),
     )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return run_to_memory(agg, "complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    return run_to_memory(agg, "complete")
 
 
 def weighted_reservoir_stream(
@@ -813,76 +736,35 @@ def weighted_reservoir_stream(
     at 100 TB the state is |sources|·k rows however large the corpus,
     and each epoch's work is one batch-sized scan plus a
     reservoir-sized merge window.
-
-    Source: documents re-split into 4 files, maxFilesPerTrigger=1 →
-    ≥4 genuine reservoir-merge epochs.
     """
     from pyspark.sql import Window
 
-    from oracle_vector_search_spark.io import load_table
     from oracle_vector_search_spark.queries.curation_queries import (
         _AES_K,
         aes_keyed_docs,
     )
-    from oracle_vector_search_spark.scratch import scratch_dir
 
-    src_dir = scratch_dir("ovs_reservoir_src_")
-    state_root = scratch_dir("ovs_reservoir_state_")
-    (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "source", "n_chars")
-        .repartition(4)
-        .write.mode("overwrite")
-        .parquet(src_dir)
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "n_chars"
     )
-    stream = (
-        spark.readStream.schema("doc_id long, source string, n_chars long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
+    win = Window.partitionBy("source").orderBy(
+        F.desc("aes_key"), F.asc("doc_id")
     )
-    state = {"path": None, "epochs": 0}
 
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sess = batch_df.sparkSession
-        incoming = aes_keyed_docs(batch_df)
-        if state["path"] is not None:
-            incoming = incoming.unionByName(
-                sess.read.parquet(state["path"])
-            )
-        win = Window.partitionBy("source").orderBy(
-            F.desc("aes_key"), F.asc("doc_id")
-        )
-        merged = (
+    def merge_batch(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
+        incoming = aes_keyed_docs(batch)
+        if prev is not None:
+            incoming = incoming.unionByName(prev)
+        return (
             incoming.withColumn("rnk", F.row_number().over(win))
             .filter(F.col("rnk") <= _AES_K)
             .drop("rnk")
+            .coalesce(1)
         )
-        new_path = f"{state_root}/v{epoch_id}"
-        merged.coalesce(1).write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
-        state["epochs"] += 1
 
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    q = stream.writeStream.foreachBatch(merge_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-
-    if state["path"] is None:
-        return spark.createDataFrame(
-            [], "doc_id long, source string, w int, aes_key double"
-        )
-    if state["epochs"] < 2:
-        raise RuntimeError(
-            f"reservoir stream drained in {state['epochs']} epochs; "
-            "expected multi-batch arrival"
-        )
-    return spark.read.parquet(state["path"])
+    return drain_file_stream(
+        docs, "doc_id long, source string, w int, aes_key double", merge_batch
+    )
 
 
 def corpus_admission_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -900,16 +782,13 @@ def corpus_admission_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     they are the post-admission merge's job (see
     ``dedup_within_watermark_stream`` / ``index_maintenance_stream``).
 
-    Source: the batch slice (doc_id % 7 = 0) re-split into 4 files,
-    maxFilesPerTrigger=1 → ≥4 genuine admission epochs.
+    The stream is the batch slice (doc_id % 7 = 0).
     """
     from oracle_vector_search_spark.functions import text as TX
-    from oracle_vector_search_spark.io import load_table
     from oracle_vector_search_spark.operators.dedup import (
         minhash_near_dup_against,
         minhash_signatures,
     )
-    from oracle_vector_search_spark.scratch import scratch_dir
 
     threshold = 0.4  # MINHASH_THRESHOLD — the corpus dedup policy
 
@@ -924,35 +803,20 @@ def corpus_admission_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "overwrite"
     ).parquet(sig_path)
 
-    src_dir = scratch_dir("ovs_admission_src_")
-    batch_slice.repartition(4).write.mode("overwrite").parquet(src_dir)
-    dec_dir = scratch_dir("ovs_admission_dec_")
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    n_epochs = {"n": 0}
-
-    def decide_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sess = batch_df.sparkSession
-        standing_sigs = sess.read.parquet(sig_path)
-        batch_sigs = minhash_signatures(batch_df)
+    def decide_batch(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
+        standing_sigs = batch.sparkSession.read.parquet(sig_path)
         pairs = minhash_near_dup_against(
-            batch_sigs, standing_sigs, threshold=threshold
+            minhash_signatures(batch), standing_sigs, threshold=threshold
         )
         dup = pairs.groupBy("batch_id").agg(
             F.min("standing_id").cast("bigint").alias("dup_of")
         )
         gate = (
-            batch_df.withColumn("toks", F.split(TX.norm_text("text"), " "))
+            batch.withColumn("toks", F.split(TX.norm_text("text"), " "))
             .withColumn("ws", F.expr(TX.qc_weight_sum_expr("toks")))
             .select("doc_id", "ws")
         )
-        out = gate.join(
+        return gate.join(
             dup, gate.doc_id == dup.batch_id, "left"
         ).select(
             "doc_id",
@@ -965,33 +829,13 @@ def corpus_admission_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("int")
             .alias("admitted"),
         )
-        out.write.mode("append").parquet(dec_dir)
-        n_epochs["n"] += 1
 
-    # decision batches move ≤ dozens of rows; shrink shuffles for the drain
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    q = stream.writeStream.foreachBatch(decide_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-
-    if n_epochs["n"] == 0:
-        # empty source — no decisions were ever appended; degrade to an
-        # empty decisions table with the sink schema
-        return spark.createDataFrame(
-            [],
-            "doc_id long, classifier_keep int, dup_of bigint, "
-            "admitted int",
-        )
-    if n_epochs["n"] < 2:
-        raise RuntimeError(
-            f"admission stream drained in {n_epochs['n']} epochs; "
-            "expected multi-batch arrival"
-        )
-    return spark.read.parquet(dec_dir)
+    return drain_file_stream(
+        batch_slice,
+        "doc_id long, classifier_keep int, dup_of bigint, admitted int",
+        decide_batch,
+        append=True,
+    )
 
 
 def psi_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1003,8 +847,6 @@ def psi_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     The production shape: the stream maintains (window, bin) counts;
     the monitor reads the state table and scores it.
     """
-    from oracle_vector_search_spark.io import load_table
-
     ev_b = load_table(spark, sf_dir, "events").select(
         F.floor(F.col("value") * 100).cast("long").alias("c")
     )
@@ -1130,18 +972,14 @@ def audio_vad_admission_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The speech-corpus intake shape at scale: media bytes are decoded
     ONCE on arrival, the admission signal is a few integers per clip,
-    and rejected bytes never reach the training store.
-
-    Source: clips re-split into 4 files, maxFilesPerTrigger=1 → ≥4
-    genuine decision epochs; empty sources degrade to an empty
-    decisions table (the registry-wide empty-input contract)."""
+    and rejected bytes never reach the training store. The clips are
+    synthesized, so the stream does not read ``sf_dir``."""
     import numpy as np
     import pandas as pd
 
     from oracle_vector_search_spark.functions.wav_numpy import (
         encode_wav_pcm16,
     )
-    from oracle_vector_search_spark.scratch import scratch_dir
     from oracle_vector_search_spark.sources.media import (
         decode_audio_samples,
     )
@@ -1164,29 +1002,12 @@ def audio_vad_admission_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(rows, columns=["id", "content"])
 
-    src_dir = scratch_dir("ovs_vad_stream_src_")
-    dec_dir = scratch_dir("ovs_vad_stream_dec_")
-    (
-        spark.range(SAVA_CLIPS)
-        .mapInPandas(make_wavs, schema="id long, content binary")
-        .repartition(4)
-        .write.mode("overwrite")
-        .parquet(src_dir)
-    )
-    stream = (
-        spark.readStream.schema("id long, content binary")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    n_epochs = {"n": 0}
-    dec_schema = (
-        "clip_id long, n_frames long, n_voiced long, admitted int"
+    clips = spark.range(SAVA_CLIPS).mapInPandas(
+        make_wavs, schema="id long, content binary"
     )
 
-    def decide_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        frames = decode_audio_samples(batch_df).select(
+    def decide_batch(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
+        frames = decode_audio_samples(batch).select(
             F.col("id").alias("clip_id"),
             F.explode(
                 F.expr(
@@ -1198,7 +1019,7 @@ def audio_vad_admission_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("ss"),
         )
-        out = (
+        return (
             frames.groupBy("clip_id")
             .agg(
                 F.count(F.lit(1)).alias("n_frames"),
@@ -1218,39 +1039,19 @@ def audio_vad_admission_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("admitted"),
             )
         )
-        out.write.mode("append").parquet(dec_dir)
-        n_epochs["n"] += 1
 
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    q = stream.writeStream.foreachBatch(decide_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-
-    if n_epochs["n"] == 0:
-        # empty source — registry-wide empty-input contract
-        return spark.createDataFrame([], dec_schema)
-    if n_epochs["n"] < 2:
-        raise RuntimeError(
-            f"VAD admission stream drained in {n_epochs['n']} epochs; "
-            "expected multi-batch arrival"
-        )
-    return spark.read.schema(dec_schema).parquet(dec_dir)
-
-
-# -------------------- streaming preference ingestion (round 8)
-
-SPB_FILES = 4  # match-source file splits -> decision epochs
+    return drain_file_stream(
+        clips,
+        "clip_id long, n_frames long, n_voiced long, admitted int",
+        decide_batch,
+        append=True,
+    )
 
 
 def preference_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Bradley-Terry sufficient statistics: pairwise match
-    outcomes arrive in micro-batches (the derived source-vs-source
-    match table re-split into SPB_FILES files, maxFilesPerTrigger=1)
-    and a foreachBatch upsert maintains the at-rest per-source state
+    outcomes (the derived source-vs-source match table) arrive in
+    micro-batches, and each one folds into the at-rest per-source state
     (wins, matches) a reward-model trainer reads — the incremental
     half of `bradley_terry_mm_step`.  Sufficient statistics are sums,
     so the drained state is batching-independent and the batch closed
@@ -1260,81 +1061,28 @@ def preference_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: each arriving batch reduces to O(sources) partials
     map-side; the state table is sources-sized; history is never
     rescanned."""
-    from oracle_vector_search_spark.io import load_table
     from oracle_vector_search_spark.queries.preference_queries import (
         source_matches,
     )
-    from oracle_vector_search_spark.scratch import scratch_dir
 
     matches = source_matches(load_table(spark, sf_dir, "documents"))
-    src_dir = scratch_dir("ovs_pref_stream_src_")
-    state_dir = scratch_dir("ovs_pref_stream_state_")
-    matches.repartition(SPB_FILES).write.mode("overwrite").parquet(
-        src_dir
-    )
-    stream = (
-        spark.readStream.schema("sa string, sb string, a_wins int")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
 
-    def upd(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        part = (
-            batch_df.selectExpr("sa AS source", "a_wins AS w")
-            .unionByName(
-                batch_df.selectExpr("sb AS source", "1 - a_wins AS w")
-            )
-            .groupBy("source")
-            .agg(
-                F.sum("w").cast("long").alias("w_i"),
-                F.count(F.lit(1)).cast("long").alias("n_i"),
-            )
+    def fold(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
+        rows = batch.selectExpr(
+            "sa AS source", "a_wins AS w_i", "1 AS n_i"
+        ).unionByName(
+            batch.selectExpr("sb AS source", "1 - a_wins AS w_i", "1 AS n_i")
         )
-        try:
-            old = s.read.parquet(state_dir)
-            merged = (
-                old.unionByName(part)
-                .groupBy("source")
-                .agg(
-                    F.sum("w_i").cast("long").alias("w_i"),
-                    F.sum("n_i").cast("long").alias("n_i"),
-                )
-            )
-        except AnalysisException:  # first epoch: no state yet
-            # (narrow on purpose — ADVICE r8: a transient FS error
-            # swallowed here would silently restart the totals)
-            merged = part
-        # pin BEFORE overwrite — the merged plan reads the very
-        # directory the write replaces; released right after (the
-        # write is the only consumer). foreachBatch calls back on a
-        # thread with no query scope, hence the scope of its own.
-        from oracle_vector_search_spark.plans.ckpt import (
-            owned_by,
-            pin,
-            unpin,
+        if prev is not None:
+            rows = rows.unionByName(prev)
+        return rows.groupBy("source").agg(
+            F.sum("w_i").cast("long").alias("w_i"),
+            F.sum("n_i").cast("long").alias("n_i"),
         )
 
-        with owned_by(None):
-            state = pin(merged)
-            state.write.mode("overwrite").parquet(state_dir)
-            unpin(state)
-
-    q = (
-        stream.writeStream.foreachBatch(upd)
-        .option("checkpointLocation", scratch_dir("ovs_pref_stream_ckp_"))
-        .trigger(availableNow=True)
-        .start()
+    state = drain_file_stream(
+        matches, "source string, w_i long, n_i long", fold
     )
-    q.awaitTermination()
-    try:
-        state = spark.read.parquet(state_dir)
-    except AnalysisException:  # empty source: typed empty (contract)
-        return spark.createDataFrame(
-            [], "source string, wins long, n_matches long, pi_step1 double"
-        )
     return state.select(
         "source",
         F.col("w_i").alias("wins"),
@@ -1351,11 +1099,10 @@ def preference_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pass_at_k_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming pass@k sufficient statistics: sampled generations
-    arrive in micro-batches (the derived (task, correct) sample table
-    re-split into SPB_FILES files, maxFilesPerTrigger=1) and a
-    foreachBatch upsert maintains the at-rest per-task state (n, c) an
-    eval dashboard reads — the on-arrival twin of ``pass_at_k_per_task``.
+    """Streaming pass@k sufficient statistics: sampled generations (the
+    derived (task, correct) sample table) arrive in micro-batches, and
+    each one folds into the at-rest per-task state (n, c) an eval
+    dashboard reads — the on-arrival twin of ``pass_at_k_per_task``.
     (n, c) are sums, so the drained state is batching-independent and
     the batch closed form is the oracle; the drained output finalizes
     the unbiased pass@k estimate for k in (1, 5, 10).
@@ -1364,14 +1111,12 @@ def pass_at_k_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side; the state table is tasks-sized; history is never
     rescanned; the falling-factorial finalization is a scalar
     projection over O(tasks) rows."""
-    from oracle_vector_search_spark.io import load_table
     from oracle_vector_search_spark.queries.sft_queries import (
         _MIN_SAMPLES,
         _N_TASKS,
         _PASS_K,
         _falling_ratio_sql,
     )
-    from oracle_vector_search_spark.scratch import scratch_dir
 
     samples = load_table(spark, sf_dir, "events").select(
         (F.col("event_id") % _N_TASKS).cast("long").alias("task_id"),
@@ -1380,67 +1125,19 @@ def pass_at_k_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int")
         .alias("correct"),
     )
-    src_dir = scratch_dir("ovs_passk_stream_src_")
-    state_dir = scratch_dir("ovs_passk_stream_state_")
-    samples.repartition(SPB_FILES).write.mode("overwrite").parquet(src_dir)
-    stream = (
-        spark.readStream.schema("task_id long, correct int")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
 
-    def upd(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        part = batch_df.groupBy("task_id").agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("correct").cast("long").alias("c"),
+    def fold(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
+        rows = batch.select(
+            "task_id", F.lit(1).alias("n"), F.col("correct").alias("c")
         )
-        try:
-            old = s.read.parquet(state_dir)
-            merged = (
-                old.unionByName(part)
-                .groupBy("task_id")
-                .agg(
-                    F.sum("n").cast("long").alias("n"),
-                    F.sum("c").cast("long").alias("c"),
-                )
-            )
-        except AnalysisException:  # first epoch: no state yet
-            # (narrow on purpose — ADVICE r8: a transient FS error
-            # swallowed here would silently restart the totals)
-            merged = part
-        # pin BEFORE overwrite — the merged plan reads the very
-        # directory the write replaces; released right after (the
-        # write is the only consumer). foreachBatch calls back on a
-        # thread with no query scope, hence the scope of its own.
-        from oracle_vector_search_spark.plans.ckpt import (
-            owned_by,
-            pin,
-            unpin,
+        if prev is not None:
+            rows = rows.unionByName(prev)
+        return rows.groupBy("task_id").agg(
+            F.sum("n").cast("long").alias("n"),
+            F.sum("c").cast("long").alias("c"),
         )
 
-        with owned_by(None):
-            state = pin(merged)
-            state.write.mode("overwrite").parquet(state_dir)
-            unpin(state)
-
-    q = (
-        stream.writeStream.foreachBatch(upd)
-        .option("checkpointLocation", scratch_dir("ovs_passk_stream_ckp_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    try:
-        state = spark.read.parquet(state_dir)
-    except AnalysisException:  # empty source: typed empty (contract)
-        return spark.createDataFrame(
-            [],
-            "task_id long, n long, c long, pass_at_1 double, "
-            "pass_at_5 double, pass_at_10 double",
-        )
+    state = drain_file_stream(samples, "task_id long, n long, c long", fold)
     cols = [
         F.expr(f"round(1.0 - {_falling_ratio_sql(k)}, 6)").alias(
             f"pass_at_{k}"

@@ -16,8 +16,10 @@ three families, all fixed:
   (zero or one empty micro-batch file) degrades to an empty snapshot;
   the multi-epoch invariant still holds whenever data arrived (3).
 
-Always-on tier: the 28 former crashers. ``OVS_SCALE_STRESS=1`` sweeps
-the full registry (the sweep that found these).
+Always-on tier: the 28 former crashers, plus every stream that runs
+through ``streaming.ops.drain_file_stream``, which must return its
+typed frame. ``OVS_SCALE_STRESS=1`` sweeps the full registry (the
+sweep that found these).
 """
 
 from __future__ import annotations
@@ -88,3 +90,37 @@ def test_empty_input_never_crashes(spark, empty_sf, name):
     df = REGISTRY[name][0](spark, empty_sf)
     df.count()  # must evaluate without raising; row count is free-form
     # (formula-only queries legitimately return rows on empty tables)
+
+
+
+# The streams fed through streaming.ops.drain_file_stream, and the
+# typed frame each returns on the LIMIT-0 fixture.
+DRIVER_STREAMS = {
+    "streaming_audio_vad_admission": "struct<clip_id:bigint,"
+    "n_frames:bigint,n_voiced:bigint,admitted:int>",
+    "streaming_corpus_admission": "struct<doc_id:bigint,"
+    "classifier_keep:int,dup_of:bigint,admitted:int>",
+    "streaming_index_maintenance": "struct<band:int,bucket:int,"
+    "n_vectors:bigint,id_sum:bigint>",
+    "streaming_knn_scores": "struct<query_id:bigint,neighbor_id:bigint,"
+    "score:double,rank:int>",
+    "streaming_pass_at_k_stats": "struct<task_id:bigint,n:bigint,"
+    "c:bigint,pass_at_1:double,pass_at_5:double,pass_at_10:double>",
+    "streaming_preference_bt_stats": "struct<source:string,wins:bigint,"
+    "n_matches:bigint,pi_step1:double>",
+    "streaming_upsert_snapshot": "struct<user_id:bigint,ts_us:bigint,"
+    "event_id:bigint,event_type:string,value_cents:bigint>",
+    "streaming_weighted_reservoir": "struct<doc_id:bigint,source:string,"
+    "w:int,aes_key:double,rnk:int>",
+}
+
+
+@pytest.mark.parametrize("name", sorted(DRIVER_STREAMS))
+def test_driver_stream_returns_typed_empty_frame(spark, empty_sf, name):
+    from oracle_vector_search_spark.streaming.ops import SAVA_CLIPS
+
+    df = REGISTRY[name][0](spark, empty_sf)
+    assert df.schema.simpleString() == DRIVER_STREAMS[name]
+    # the VAD stream synthesizes its clips and reads nothing from sf_dir
+    n = SAVA_CLIPS if name == "streaming_audio_vad_admission" else 0
+    assert df.count() == n

@@ -81,7 +81,7 @@ def test_torch_embed_branch_runs(spark):
     crops = crop_boxes(
         boxes.join(decoded, "stem").filter(F.col("pixels").isNotNull())
     ).filter(F.col("crop").isNotNull())
-    out = embed_crops(crops, use_torch=True).collect()
+    out = embed_crops(crops, tier="torch").collect()
     assert len(out) == 1
     emb = out[0]["embedding"]
     assert emb is not None and len(emb) == 512  # native ResNet-18 dims
@@ -97,7 +97,7 @@ def test_torch_branch_raises_informatively_when_absent(spark):
         "stem string, box_idx long, class_id int, crop binary",
     )
     with pytest.raises(NotImplementedError, match="hash-projection"):
-        embed_crops(df, use_torch=True)
+        embed_crops(df, tier="torch")
 
 
 @pytest.mark.skipif(not HAS_SOUNDFILE, reason="soundfile not installed: "

@@ -1,12 +1,16 @@
 """Streaming operator tests — including TRUE multi-batch execution
 (maxFilesPerTrigger over a multi-file source) to exercise the
-per-batch top-k merge, which single-file sources never do."""
+per-batch top-k merge, which single-file sources never do — and the
+contract of ``drain_file_stream``, the micro-batch driver of the
+file-fed streams."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -16,6 +20,7 @@ from oracle_vector_search_spark.functions.vector import (
 )
 from oracle_vector_search_spark.io import load_table
 from oracle_vector_search_spark.operators.knn import knn_exact
+from oracle_vector_search_spark.streaming import ops
 
 
 def test_streaming_knn_multibatch_merge(spark, sf_dir):
@@ -150,3 +155,87 @@ def test_watermark_drops_late_data(spark):
     # the 00:00 window finalized after batch 1 with total=1.0;
     # the late v=100 record must NOT appear anywhere
     assert not any(t >= 100 for _, t in finalized), finalized
+
+
+def _ids(df) -> list[int]:
+    return sorted(r["id"] for r in df.collect())
+
+
+def test_drain_folds_in_arrival_order(spark):
+    """``step`` sees ``prev=None`` first, then exactly the previous
+    epoch's output: a running union ends as the whole source."""
+    calls = []
+
+    def step(batch, prev):
+        calls.append((_ids(batch), None if prev is None else _ids(prev)))
+        return batch if prev is None else prev.unionByName(batch)
+
+    out = ops.drain_file_stream(spark.range(40), "id long", step)
+    assert len(calls) >= 2
+    assert calls[0][1] is None
+    seen: list[int] = []
+    for batch_ids, prev_ids in calls:
+        if seen:
+            assert prev_ids == sorted(seen)
+        seen += batch_ids
+    assert _ids(out) == sorted(seen) == list(range(40))
+
+
+def _listing(path: str) -> dict[str, tuple[int, int]]:
+    return {
+        f: (st.st_size, st.st_mtime_ns)
+        for f in os.listdir(path)
+        for st in [os.stat(os.path.join(path, f))]
+    }
+
+
+def test_drain_versions_are_write_once(spark, monkeypatch):
+    """Each epoch writes a fresh directory, and no later epoch touches
+    an earlier version."""
+    written = []
+    write = ops.write_artifact
+
+    def recording_write(df, path, partition_by=None):
+        write(df, path, partition_by)
+        written.append((path, _listing(path), _ids(spark.read.parquet(path))))
+
+    monkeypatch.setattr(ops, "write_artifact", recording_write)
+    ops.drain_file_stream(
+        spark.range(40),
+        "id long",
+        lambda batch, prev: batch if prev is None else prev.union(batch),
+    )
+    paths = [p for p, _, _ in written]
+    assert len(paths) >= 2 and len(set(paths)) == len(paths)
+    for path, files, ids in written:
+        assert _listing(path) == files
+        assert _ids(spark.read.parquet(path)) == ids
+
+
+def test_drain_empty_source_returns_typed_empty_frame(spark):
+    calls = []
+    out = ops.drain_file_stream(
+        spark.range(0).selectExpr("id", "'x' AS tag"),
+        "id long, tag string",
+        lambda batch, prev: calls.append(batch) or batch,
+    )
+    assert calls == []
+    assert out.count() == 0
+    assert out.schema.simpleString() == "struct<id:bigint,tag:string>"
+
+
+def test_drain_single_non_empty_batch_raises(spark):
+    with pytest.raises(RuntimeError, match="one micro-batch"):
+        ops.drain_file_stream(
+            spark.range(1), "id long", lambda batch, prev: batch
+        )
+
+
+def test_drain_append_returns_every_epoch(spark):
+    out = ops.drain_file_stream(
+        spark.range(40),
+        "id long",
+        lambda batch, prev: batch.select((F.col("id") * 10).alias("id")),
+        append=True,
+    )
+    assert _ids(out) == [10 * i for i in range(40)]
