@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from oracle_vector_search_spark.operators.ingest import (
     assign_index_ids_two_phase,
     decode_class,
-    denormalize_boxes,
     parse_yolo_labels,
     write_index_table,
 )
@@ -39,6 +38,7 @@ from oracle_vector_search_spark.sources.images import (
     decode_images,
     detect_boxes,
     embed_crops,
+    embed_labelled_crops,
     preprocess_images,
     scan_images,
 )
@@ -86,19 +86,18 @@ def _embedded_rows(
     dims: int,
     split: str,
 ) -> DataFrame:
-    """Shared decode→preprocess→crop→embed DAG (no ids yet) — used by
-    the full build and, over just a batch, by :func:`upsert_index`."""
+    """The build's rows before ids — used by the full build and, over
+    just a batch, by :func:`upsert_index`. The labels are parsed in SQL,
+    then ONE grouped Python pass per stem (``embed_labelled_crops``)
+    decodes, preprocesses, denormalizes, crops and embeds: one Python
+    operator in the plan, where the stage chain of :func:`search` has
+    five. Returns (stem, box_idx, class_id, embedding, class_name,
+    split)."""
     if isinstance(images, str):
         images = scan_images(spark, images)
-    decoded = decode_images(images).filter(F.col("pixels").isNotNull())
-    pre = preprocess_images(decoded, mode=preprocess)
     parsed = parse_yolo_labels(labels, passthrough=["box_idx"])
-    boxes = denormalize_boxes(
-        parsed.join(pre.select("stem", "width", "height"), "stem")
-    ).select("stem", "box_idx", "class_id", "x1", "y1", "x2", "y2")
-    crops = crop_boxes(boxes.join(pre, "stem"))
-    embedded = embed_crops(
-        crops.filter(F.col("crop").isNotNull()), dims=dims
+    embedded = embed_labelled_crops(
+        images, parsed, mode=preprocess, dims=dims
     )
     return decode_class(embedded).withColumn("split", F.lit(split))
 
@@ -120,10 +119,14 @@ def upsert_index(
     stems get dense ids continuing past the current max. Ids of
     untouched rows never move, so downstream artifacts keyed on id
     (cached results, ANN tables via operators/index_maint.py) stay
-    valid. Writes a NEW snapshot when ``out_path`` is given — the
-    versioned-table shape; at warehouse scale an id-bucket-partitioned
-    table with dynamic partition overwrite (operators/index_maint.py)
-    or a transactional format replaces the snapshot swap."""
+    valid. The batch goes through the build's own one-pass-per-stem
+    embedding (:func:`_embedded_rows`), so a re-labelled stem is
+    cropped exactly as a full rebuild would crop it; each of the three
+    consumers of the batch below still re-runs that pass. Writes a NEW
+    snapshot when ``out_path`` is given — the versioned-table shape; at
+    warehouse scale an id-bucket-partitioned table with dynamic
+    partition overwrite (operators/index_maint.py) or a transactional
+    format replaces the snapshot swap."""
     batch = _embedded_rows(
         spark, images, labels, preprocess=preprocess, dims=dims,
         split=split,

@@ -24,6 +24,7 @@ Reference semantics preserved (citations into /root/reference/):
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
 from oracle_vector_search_spark.plans.ckpt import pin
@@ -68,15 +69,17 @@ def parse_yolo_labels(
         & F.col("w").isNotNull()
         & F.col("h").isNotNull()
     )
+    # a class id outside INT (NaN, 1e12) is malformed too: try_cast
+    # drops it instead of failing the job with CAST_OVERFLOW under ANSI
     return d.select(
         "stem",
         *passthrough,
-        F.col("class_id_d").cast("int").alias("class_id"),
+        F.col("class_id_d").try_cast("int").alias("class_id"),
         "x_c",
         "y_c",
         "w",
         "h",
-    )
+    ).filter(F.col("class_id").isNotNull())
 
 
 def denormalize_boxes(
@@ -86,21 +89,55 @@ def denormalize_boxes(
 ) -> DataFrame:
     """T5: normalized (x_c, y_c, w, h) → integer (x1, y1, x2, y2),
     floor-truncated like the reference's int() casts, clipped to the
-    image, empty crops dropped (F4). Pure column arithmetic — no UDF."""
+    image, empty crops dropped (F4). Pure column arithmetic — no UDF.
+
+    Edges are clipped as BIGINT (what ``floor`` of a double returns)
+    and only then cast to INT, so an out-of-range coordinate (±inf,
+    1e9) clips like any other instead of failing the whole job with
+    CAST_OVERFLOW under ANSI. A NaN edge (a NaN coordinate, or
+    inf - inf) is NULL, so its box drops. :func:`denormalize_boxes_numpy`
+    is the numpy twin."""
     W, H = F.col(width_col), F.col(height_col)
-    x1 = F.floor((F.col("x_c") - F.col("w") / 2) * W).cast("int")
-    y1 = F.floor((F.col("y_c") - F.col("h") / 2) * H).cast("int")
-    x2 = F.floor((F.col("x_c") + F.col("w") / 2) * W).cast("int")
-    y2 = F.floor((F.col("y_c") + F.col("h") / 2) * H).cast("int")
-    clip = lambda c, hi: F.greatest(F.lit(0), F.least(c, hi.cast("int")))
+
+    def edge(v, hi):
+        clipped = F.greatest(
+            F.lit(0).cast("long"), F.least(F.floor(v), hi.cast("long"))
+        )
+        return F.when(~F.isnan(v), clipped.cast("int"))
+
     d = labels.select(
         "*",
-        clip(x1, W).alias("x1"),
-        clip(y1, H).alias("y1"),
-        clip(x2, W).alias("x2"),
-        clip(y2, H).alias("y2"),
+        edge((F.col("x_c") - F.col("w") / 2) * W, W).alias("x1"),
+        edge((F.col("y_c") - F.col("h") / 2) * H, H).alias("y1"),
+        edge((F.col("x_c") + F.col("w") / 2) * W, W).alias("x2"),
+        edge((F.col("y_c") + F.col("h") / 2) * H, H).alias("y2"),
     )
     return d.filter((F.col("x2") > F.col("x1")) & (F.col("y2") > F.col("y1")))
+
+
+def denormalize_boxes_numpy(x_c, y_c, w, h, width, height):
+    """Numpy twin of :func:`denormalize_boxes` for Python stages that
+    already hold the pixels (sources.images.embed_labelled_crops): the
+    same float64 edges, floored, clipped to ``[0, width]`` /
+    ``[0, height]`` as floats (so ±inf and huge values clip), NaN edges
+    and empty boxes dropped. ``width`` / ``height`` are scalars or
+    arrays that broadcast against the label arrays.
+
+    Returns ``(keep, boxes)``: ``keep`` is a bool mask over the input
+    labels, ``boxes`` the int64 ``(x1, y1, x2, y2)`` rows of the kept
+    ones, in input order."""
+    x_c, y_c, w, h, W, H = (
+        np.asarray(a, dtype=np.float64)
+        for a in (x_c, y_c, w, h, width, height)
+    )
+    with np.errstate(invalid="ignore", over="ignore"):
+        x1 = np.clip(np.floor((x_c - w / 2) * W), 0, W)
+        y1 = np.clip(np.floor((y_c - h / 2) * H), 0, H)
+        x2 = np.clip(np.floor((x_c + w / 2) * W), 0, W)
+        y2 = np.clip(np.floor((y_c + h / 2) * H), 0, H)
+        keep = ((x2 > x1) & (y2 > y1)).reshape(-1)
+    boxes = np.stack([x1, y1, x2, y2], axis=-1).reshape(-1, 4)[keep]
+    return keep, boxes.astype(np.int64)
 
 
 def decode_class(df: DataFrame, class_id_col: str = "class_id") -> DataFrame:

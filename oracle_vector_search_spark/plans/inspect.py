@@ -10,7 +10,17 @@ UDF) fails CI instead of shipping a 100 TB regression.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
+
+# every physical operator that hands rows to a Python worker; each one
+# costs a Python runner per task it runs in
+PYTHON_OPERATORS = re.compile(
+    r"BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow"
+    r"|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas"
+    r"|FlatMapGroupsInArrow|FlatMapCoGroupsInArrow"
+)
 
 
 def physical_plan(df: DataFrame) -> str:
@@ -23,6 +33,11 @@ def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def python_operators(plan: str) -> list[str]:
+    """The Python operators named in a plan string, in plan order."""
+    return PYTHON_OPERATORS.findall(plan)
 
 
 def assert_plan_contains(df: DataFrame, *needles: str) -> None:

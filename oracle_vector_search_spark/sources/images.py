@@ -208,6 +208,9 @@ def image_dimensions(df: DataFrame, content_col: str = "content") -> DataFrame:
 
 
 # --------------------------------------------------- pixel transforms
+_GAMMA = 1.5  # the reference's gamma (build_faiss_db.py:38)
+
+
 def _gamma_lut(gamma: float) -> np.ndarray:
     """The reference's 256-entry LUT ((i/255)^(1/γ))·255 —
     build_faiss_db.py:53-55."""
@@ -255,8 +258,19 @@ def _equalize(arr: np.ndarray) -> np.ndarray:
         return _equalize_numpy(arr)
 
 
+def _preprocess_one(arr: np.ndarray, mode: str, lut: np.ndarray) -> np.ndarray:
+    """The per-image kernel of :func:`preprocess_images`, shared with
+    the fused build pass (:func:`embed_labelled_crops`) so build-side
+    and query-side preprocessing cannot drift."""
+    if mode == "gamma_blur":
+        return _blur3(lut[arr])
+    if mode == "clahe":
+        return _equalize(arr)
+    return arr
+
+
 def preprocess_images(
-    df: DataFrame, mode: str = "gamma_blur", gamma: float = 1.5
+    df: DataFrame, mode: str = "gamma_blur", gamma: float = _GAMMA
 ) -> DataFrame:
     """T1-T3 as ONE parameterized operator applied identically on build
     and query paths — fixing the reference's build/query preprocessing
@@ -276,14 +290,17 @@ def preprocess_images(
                 arr = np.frombuffer(bytes(px), np.uint8).reshape(
                     int(h), int(w), int(c)
                 )
-                if mode == "gamma_blur":
-                    arr = _blur3(lut[arr])
-                elif mode == "clahe":
-                    arr = _equalize(arr)
-                pixels.append(arr.tobytes())
+                pixels.append(_preprocess_one(arr, mode, lut).tobytes())
             yield pdf.assign(pixels=pixels)
 
     return df.mapInPandas(batches, schema=df.schema)
+
+
+def _crop_one(arr: np.ndarray, x1, y1, x2, y2) -> bytes | None:
+    """The crop kernel of :func:`crop_boxes` and the fused build pass:
+    headerless bytes of ``arr[y1:y2, x1:x2]``, None when empty."""
+    crop = arr[int(y1): int(y2), int(x1): int(x2)]
+    return crop.tobytes() if crop.size else None
 
 
 def crop_boxes(df: DataFrame) -> DataFrame:
@@ -307,8 +324,7 @@ def crop_boxes(df: DataFrame) -> DataFrame:
                 arr = np.frombuffer(bytes(px), np.uint8).reshape(
                     int(h), int(w), int(c)
                 )
-                crop = arr[int(y1): int(y2), int(x1): int(x2)]
-                crops.append(crop.tobytes() if crop.size else None)
+                crops.append(_crop_one(arr, x1, y1, x2, y2))
             yield pd.DataFrame(
                 {
                     "stem": pdf["stem"],
@@ -327,6 +343,83 @@ def crop_boxes(df: DataFrame) -> DataFrame:
         "pixels", "width", "height", "channels",
     ]
     return df.select(*cols).mapInPandas(batches, schema=out_schema)
+
+
+def embed_labelled_crops(
+    images: DataFrame,
+    labels: DataFrame,
+    mode: str = "gamma_blur",
+    dims: int = 8,
+) -> DataFrame:
+    """The offline build's pixel path as ONE grouped Python pass — the
+    reference's per-image loop (build_faiss_db.py:167-205): images
+    (stem, content) cogrouped on ``stem`` with parsed labels (stem,
+    box_idx, class_id, x_c, y_c, w, h). Per stem, each image is decoded
+    once and preprocessed (:func:`_preprocess_one`, the kernel of
+    :func:`preprocess_images`); every label box is denormalized against
+    THAT image's width and height
+    (``operators.ingest.denormalize_boxes_numpy``) and cropped
+    (:func:`_crop_one`, the kernel of :func:`crop_boxes`); the stem's
+    crops are hash-embedded in one call. Undecodable images, stems on
+    one side only and boxes clipped to nothing yield no rows (F2-F4).
+    Returns (stem, box_idx, class_id, embedding).
+
+    Against the stage chain decode → preprocess → join → crop → embed
+    this is one Python operator instead of six, and the pixels are
+    decoded once instead of once per join that reads them: only the
+    encoded bytes and the label rows shuffle."""
+    from oracle_vector_search_spark.functions.embed import (
+        hash_projection_embed_batch,
+    )
+    from oracle_vector_search_spark.operators.ingest import (
+        denormalize_boxes_numpy,
+    )
+
+    lut = _gamma_lut(_GAMMA)
+    cols = ["stem", "box_idx", "class_id", "embedding"]
+
+    def per_stem(imgs: pd.DataFrame, labs: pd.DataFrame) -> pd.DataFrame:
+        rows = []
+        if len(labs):
+            box_idx = labs["box_idx"].to_numpy()
+            class_id = labs["class_id"].to_numpy()
+            for stem, content in zip(imgs["stem"], imgs["content"]):
+                arr = _decode_one(
+                    bytes(content) if content is not None else None
+                )
+                if arr is None:
+                    continue
+                arr = _preprocess_one(arr, mode, lut)
+                keep, boxes = denormalize_boxes_numpy(
+                    labs["x_c"], labs["y_c"], labs["w"], labs["h"],
+                    arr.shape[1], arr.shape[0],
+                )
+                for b, c, box in zip(box_idx[keep], class_id[keep], boxes):
+                    crop = _crop_one(arr, *box)
+                    if crop is not None:
+                        rows.append((stem, int(b), int(c), crop))
+        if not rows:
+            return pd.DataFrame([], columns=cols)
+        emb = hash_projection_embed_batch([r[3] for r in rows], dims)
+        return pd.DataFrame(
+            [(s, b, c, e) for (s, b, c, _), e in zip(rows, emb)],
+            columns=cols,
+        )
+
+    return (
+        images.select("stem", "content")
+        .groupBy("stem")
+        .cogroup(
+            labels.select(
+                "stem", "box_idx", "class_id", "x_c", "y_c", "w", "h"
+            ).groupBy("stem")
+        )
+        .applyInPandas(
+            per_stem,
+            schema="stem string, box_idx long, class_id int, "
+            "embedding array<double>",
+        )
+    )
 
 
 # ------------------------------------------------------------ T8: embed

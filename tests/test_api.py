@@ -8,6 +8,7 @@ import tempfile
 
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from oracle_vector_search_spark.api import build_index, load_index, search
@@ -381,3 +382,270 @@ def test_query_uploads_are_stem_partitioned_before_python(spark):
         assert any(
             "Exchange hashpartitioning(stem#" in b for b in below
         ), plan
+
+
+# --------------------------------------------- build-side pipeline oracle
+def _expected_embedded_rows(images, lines, mode, dims, split="train"):
+    """Pure-numpy twin of ``api._embedded_rows``: a YOLO line is kept
+    when it has five numeric fields and an integral-range class id;
+    every decodable image is preprocessed, each of its stem's boxes is
+    floored and clipped against THAT image's width and height (a NaN
+    edge or an empty box drops), cropped and hash-embedded. Returns
+    sorted (stem, box_idx, class_id, class_name, split, embedding)."""
+    from oracle_vector_search_spark.functions.embed import (
+        hash_projection_embed_batch,
+    )
+    from oracle_vector_search_spark.operators.ingest import CLASS_NAMES
+    from oracle_vector_search_spark.sources.images import (
+        _blur3,
+        _decode_one,
+        _equalize,
+        _gamma_lut,
+    )
+
+    labels = {}
+    for stem, box_idx, line in lines:
+        parts = line.split()
+        if len(parts) != 5:
+            continue
+        try:
+            cls, x_c, y_c, w, h = map(float, parts)
+        except ValueError:
+            continue
+        if not -(2**31) <= cls < 2**31:  # NaN fails too
+            continue
+        labels.setdefault(stem, []).append(
+            (box_idx, int(cls), x_c, y_c, w, h)
+        )
+
+    def edge(v, hi):
+        return None if np.isnan(v) else int(min(max(np.floor(v), 0), hi))
+
+    lut = _gamma_lut(1.5)
+    out = []
+    for stem, content in images:
+        arr = _decode_one(content)
+        if arr is None:
+            continue
+        if mode == "gamma_blur":
+            arr = _blur3(lut[arr])
+        elif mode == "clahe":
+            arr = _equalize(arr)
+        H, W = arr.shape[:2]
+        for box_idx, cls, x_c, y_c, w, h in labels.get(stem, []):
+            x1 = edge((x_c - w / 2) * W, W)
+            y1 = edge((y_c - h / 2) * H, H)
+            x2 = edge((x_c + w / 2) * W, W)
+            y2 = edge((y_c + h / 2) * H, H)
+            if None in (x1, y1, x2, y2) or x2 <= x1 or y2 <= y1:
+                continue
+            (emb,) = hash_projection_embed_batch(
+                [arr[y1:y2, x1:x2].tobytes()], dims
+            )
+            out.append(
+                (stem, box_idx, cls, CLASS_NAMES[cls], split, tuple(emb))
+            )
+    return sorted(out)
+
+
+def _build_corpus():
+    """Images and label lines covering every drop rule of the build:
+    a corrupt image, an image without labels, labels without an image,
+    malformed lines, a zero-area box, a box clipped at the edge, NaN,
+    ±inf and 1e9 coordinates, and one stem shared by two images of
+    different sizes (each is cropped with its own boxes)."""
+    rng = np.random.RandomState(3)
+    img = lambda h, w: encode_fake_image(  # noqa: E731
+        rng.randint(0, 256, (h, w, 3), dtype=np.uint8)
+    )
+    images = [
+        ("a", img(32, 32)),
+        ("b", img(24, 40)),
+        ("corrupt", b"NOTIMG"),
+        ("unlabelled", img(16, 16)),
+        ("shared", img(32, 32)),
+        ("shared", img(16, 48)),
+    ]
+    lines = [
+        ("a", 1, "0 0.5 0.5 0.6 0.6"),
+        ("a", 2, "1 0.9 0.9 0.4 0.4"),  # clipped at the right/bottom
+        ("a", 3, "2 0.5 0.5 0 0.3"),  # zero area
+        ("a", 4, "3 0.5 0.5 0.2"),  # four fields
+        ("a", 5, "x 0.5 0.5 0.2 0.2"),  # non-numeric
+        ("a", 6, "nan 0.5 0.5 0.2 0.2"),  # class id NaN
+        ("a", 7, "1e12 0.5 0.5 0.2 0.2"),  # class id beyond INT
+        ("b", 1, "2 inf 0.5 0.2 0.2"),  # clipped to nothing
+        ("b", 2, "0 0.5 0.5 1e9 0.2"),  # clipped to the full width
+        ("b", 3, "1 0.5 0.5 0.2 inf"),  # clipped to the full height
+        ("b", 4, "3 NaN 0.5 0.2 0.2"),
+        ("b", 5, "0 inf 0.5 inf 0.2"),  # x1 = inf - inf = NaN
+        ("b", 6, "2 -inf 0.5 0.2 0.2"),
+        ("b", 7, "1 0.5 0.5 -1e9 0.2"),
+        ("corrupt", 1, "0 0.5 0.5 0.5 0.5"),
+        ("no_image", 1, "0 0.5 0.5 0.5 0.5"),
+        ("shared", 1, "3 0.3 0.4 0.3 0.5"),
+    ]
+    return images, lines
+
+
+def _build_frames(spark, images, lines):
+    return (
+        spark.createDataFrame(
+            [(s, f"corpus/{s}.fake", c) for s, c in images],
+            "stem string, path string, content binary",
+        ),
+        spark.createDataFrame(
+            lines, "stem string, box_idx long, value string"
+        ),
+    )
+
+
+@pytest.mark.parametrize("mode", ["gamma_blur", "clahe", "none"])
+def test_embedded_rows_match_numpy_oracle(spark, mode):
+    from oracle_vector_search_spark.api import _embedded_rows
+
+    images, lines = _build_corpus()
+    frame, labels = _build_frames(spark, images, lines)
+    rows = _embedded_rows(spark, frame, labels, mode, 8, "train").collect()
+    got = sorted(
+        (
+            r["stem"], r["box_idx"], r["class_id"], r["class_name"],
+            r["split"], tuple(r["embedding"]),
+        )
+        for r in rows
+    )
+    want = _expected_embedded_rows(images, lines, mode, 8)
+    assert [(s, b) for s, b, *_ in want] == [
+        ("a", 1), ("a", 2), ("b", 2), ("b", 3), ("shared", 1),
+        ("shared", 1),
+    ]
+    assert got == want
+
+
+def test_denormalize_boxes_clips_out_of_range_coordinates(spark):
+    """One bad label line must not abort a build: ±inf and 1e9
+    coordinates clip to the image (or to nothing) like any other
+    out-of-range box, and a NaN edge drops its box. Clipping happens
+    before the INT cast, which ANSI mode turns into CAST_OVERFLOW."""
+    from oracle_vector_search_spark.operators.ingest import (
+        denormalize_boxes,
+    )
+
+    inf, nan = float("inf"), float("nan")
+    labels = spark.createDataFrame(
+        [
+            (1, inf, 0.5, 0.2, 0.2),
+            (2, 0.5, 0.5, 1e9, 0.2),
+            (3, 0.5, 0.5, 0.2, inf),
+            (4, -inf, 0.5, 0.2, 0.2),
+            (5, nan, 0.5, 0.2, 0.2),
+            (6, inf, 0.5, inf, 0.2),
+            (7, 0.5, 0.5, -1e9, 0.2),
+            (8, 0.5, -1e9, 0.2, inf),  # -1e9 + inf: full height
+        ],
+        "box_idx int, x_c double, y_c double, w double, h double",
+    ).selectExpr("*", "32 AS width", "32 AS height")
+    got = {
+        r["box_idx"]: (r["x1"], r["y1"], r["x2"], r["y2"])
+        for r in denormalize_boxes(labels).collect()
+    }
+    assert got == {
+        2: (0, 12, 32, 19), 3: (12, 0, 19, 32), 8: (12, 0, 19, 32),
+    }
+
+
+def _denorm_rows(rows):
+    """Compare key: kept box_idx → (x1, y1, x2, y2)."""
+    return {r[0]: tuple(int(v) for v in r[1:]) for r in rows}
+
+
+_EDGE_FLOATS = [
+    0.0, 0.5, 1.0, -0.5, 1.5, 1e9, -1e9, 1e300, -1e300,
+    float("inf"), float("-inf"), float("nan"),
+]
+
+
+def _check_denormalize_twins(spark, rows):
+    """Spark ``denormalize_boxes`` and ``denormalize_boxes_numpy`` keep
+    the same boxes with the same coordinates over (box_idx, x_c, y_c,
+    w, h, width, height) rows."""
+    from oracle_vector_search_spark.operators.ingest import (
+        denormalize_boxes,
+        denormalize_boxes_numpy,
+    )
+
+    df = spark.createDataFrame(
+        rows,
+        "box_idx int, x_c double, y_c double, w double, h double, "
+        "width int, height int",
+    )
+    spark_rows = _denorm_rows(
+        (r["box_idx"], r["x1"], r["y1"], r["x2"], r["y2"])
+        for r in denormalize_boxes(df).collect()
+    )
+    cols = list(zip(*rows))
+    keep, boxes = denormalize_boxes_numpy(*cols[1:])
+    idx = np.asarray(cols[0])[keep]
+    numpy_rows = _denorm_rows(
+        (i, *b) for i, b in zip(idx.tolist(), boxes.tolist())
+    )
+    assert numpy_rows == spark_rows
+    assert boxes.dtype == np.int64
+
+
+def test_denormalize_twins_agree_on_edge_grid(spark):
+    import itertools
+
+    rows = [
+        (i, x_c, 0.5, w, 0.3, 32, 24)
+        for i, (x_c, w) in enumerate(
+            itertools.product(_EDGE_FLOATS, _EDGE_FLOATS)
+        )
+    ]
+    rows += [
+        (len(rows) + i, 0.5, y_c, 0.4, h, 7, 13)
+        for i, (y_c, h) in enumerate(
+            itertools.product(_EDGE_FLOATS, _EDGE_FLOATS)
+        )
+    ]
+    _check_denormalize_twins(spark, rows)
+
+
+_coord = st.one_of(
+    st.floats(min_value=-2.0, max_value=2.0),
+    st.sampled_from(_EDGE_FLOATS),
+    st.floats(allow_nan=True, allow_infinity=True),
+)
+
+
+@given(
+    st.lists(
+        st.tuples(
+            _coord, _coord, _coord, _coord,
+            st.integers(1, 4096), st.integers(1, 4096),
+        ),
+        min_size=1,
+        max_size=40,
+    )
+)
+@settings(max_examples=15, deadline=None)
+def test_denormalize_twins_agree_on_random_boxes(spark, boxes):
+    _check_denormalize_twins(
+        spark, [(i, *b) for i, b in enumerate(boxes)]
+    )
+
+
+def test_embedded_rows_is_one_python_pass(spark):
+    """The build runs decode → preprocess → crop → embed as ONE
+    cogrouped Python operator: no MapInPandas stage chain."""
+    from oracle_vector_search_spark.api import _embedded_rows
+    from oracle_vector_search_spark.plans.inspect import (
+        physical_plan,
+        python_operators,
+    )
+
+    frame, labels = _build_frames(spark, *_build_corpus())
+    plan = physical_plan(
+        _embedded_rows(spark, frame, labels, "gamma_blur", 8, "train")
+    )
+    assert python_operators(plan) == ["FlatMapCoGroupsInPandas"], plan

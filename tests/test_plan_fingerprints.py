@@ -25,6 +25,7 @@ import re
 import pytest
 
 import __spark_entry__ as entrymod
+from oracle_vector_search_spark.plans.inspect import python_operators
 
 # ---- expected fingerprints, generated from the executed initial plans
 # (AdaptiveSparkPlan isFinalPlan=false) at sf0.001 ----
@@ -231,15 +232,6 @@ EXPECTED: dict[str, dict[str, int]] = {
 }
 # fmt: on
 
-_PY_STAGES = (
-    "ArrowEvalPython",
-    "BatchEvalPython",
-    "MapInPandas",
-    "FlatMapGroupsInPandas",
-    "FlatMapCoGroupsInPandas",
-)
-
-
 def fingerprint(df) -> dict[str, int]:
     plan = df._jdf.queryExecution().executedPlan().toString()
     return {
@@ -250,7 +242,7 @@ def fingerprint(df) -> dict[str, int]:
         "broadcast_hash_joins": plan.count("BroadcastHashJoin"),
         "sort_merge_joins": plan.count("SortMergeJoin"),
         "cartesian_products": plan.count("CartesianProduct"),
-        "python_stages": sum(plan.count(t) for t in _PY_STAGES),
+        "python_stages": len(python_operators(plan)),
     }
 
 

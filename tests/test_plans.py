@@ -9,6 +9,8 @@ import __spark_entry__ as entrymod
 from oracle_vector_search_spark.plans.inspect import (
     assert_plan_contains,
     assert_plan_lacks,
+    formatted_plan,
+    python_operators,
 )
 
 
@@ -31,6 +33,18 @@ def test_global_topk_is_take_ordered(spark, sf_dir, qs):
     df = qs["top_orders_global"](spark, sf_dir)
     assert_plan_contains(df, "TakeOrderedAndProject")
     assert_plan_lacks(df, "SortMergeJoin")
+
+
+def test_python_operator_census_counts_cogroups(spark, sf_dir, qs):
+    """tools/plan_census.py counts Python operators with
+    ``python_operators``; a cogrouped applyInPandas is one of them."""
+    head = formatted_plan(
+        qs["cogroup_user_reconcile"](spark, sf_dir)
+    ).split("\n\n")[0]
+    assert python_operators(head) == ["FlatMapCoGroupsInPandas"], head
+    assert python_operators(
+        "FlatMapGroupsInArrow FlatMapCoGroupsInArrow ArrowEvalPython"
+    ) == ["FlatMapGroupsInArrow", "FlatMapCoGroupsInArrow", "ArrowEvalPython"]
 
 
 def test_group_topk_has_window_group_limit(spark, sf_dir, qs):

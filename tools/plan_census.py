@@ -8,6 +8,7 @@ sys.path.insert(0, __import__("os").path.dirname(__import__("os").path.dirname(_
 
 sf_dir = sys.argv[1]
 
+from oracle_vector_search_spark.plans.inspect import python_operators  # noqa: E402
 from oracle_vector_search_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entry  # noqa: E402
 
@@ -30,12 +31,7 @@ for name, fn in qs.items():
     smj = head.count("SortMergeJoin")
     bhj = head.count("BroadcastHashJoin")
     scans = len(re.findall(r"Scan parquet|Scan ExistingRDD", head))
-    py = len(
-        re.findall(
-            r"BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas",
-            head,
-        )
-    )
+    py = len(python_operators(head))
     rows.append((ops, ex, smj, bhj, scans, py, name))
 
 rows.sort(reverse=True)
