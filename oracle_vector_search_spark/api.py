@@ -20,8 +20,9 @@ Differences by design (SURVEY.md §1.3-1.4):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from oracle_vector_search_spark.operators.index_maint import merge_index_rows
 from oracle_vector_search_spark.operators.ingest import (
     assign_index_ids_two_phase,
     decode_class,
@@ -33,6 +34,7 @@ from oracle_vector_search_spark.operators.knn import (
     knn_join_metadata,
     knn_search,
 )
+from oracle_vector_search_spark.plans.ckpt import pin
 from oracle_vector_search_spark.sources.images import (
     crop_boxes,
     decode_images,
@@ -42,6 +44,18 @@ from oracle_vector_search_spark.sources.images import (
     preprocess_images,
     scan_images,
 )
+
+# the index table: one row per labelled box, (split, stem, box_idx) its
+# unique key, ``id`` dense from 1 in key order at the first build
+INDEX_SCHEMA = T.StructType([
+    T.StructField("id", T.LongType()),
+    T.StructField("split", T.StringType()),
+    T.StructField("stem", T.StringType()),
+    T.StructField("box_idx", T.LongType()),
+    T.StructField("class_id", T.IntegerType()),
+    T.StructField("class_name", T.StringType()),
+    T.StructField("embedding", T.ArrayType(T.DoubleType())),
+])
 
 
 def build_index(
@@ -54,28 +68,19 @@ def build_index(
     split: str = "train",
 ) -> DataFrame:
     """The offline build (reference build_faiss_db.py:138-225 as one
-    lazy DAG). ``images``: a directory (binaryFile scan) or a DataFrame
-    with (stem, path, content). ``labels``: (stem, box_idx, value) raw
-    YOLO lines. Returns the unified index table; writes it when
-    ``out_path`` is given."""
-    embedded = _embedded_rows(
-        spark, images, labels, preprocess=preprocess, dims=dims,
-        split=split,
+    lazy DAG): :func:`upsert_index` into an empty index, so ids are
+    assigned and the index is written in one place. ``images``: a
+    directory (binaryFile scan) or a DataFrame with (stem, path,
+    content). ``labels``: (stem, box_idx, value) raw YOLO lines.
+    Returns the index table (``INDEX_SCHEMA``); writes it when
+    ``out_path`` is given. The empty index is a ``limit(0)``, which the
+    optimizer folds to an empty local relation, so the joins against
+    it drop out at plan time and its ``max(id)`` reads nothing."""
+    empty = spark.createDataFrame([], INDEX_SCHEMA).limit(0)
+    return upsert_index(
+        spark, empty, images, labels, out_path=out_path,
+        preprocess=preprocess, dims=dims, split=split,
     )
-    # A5 scale tier: range-partitioned two-phase assignment — ids are
-    # identical to the window tier (tests/test_scale_ops.py) with no
-    # single-task global sort
-    index = assign_index_ids_two_phase(
-        embedded, ["split", "stem", "box_idx"]
-    )
-    index = index.select(
-        "id", "split", "stem", "box_idx", "class_id", "class_name",
-        "embedding",
-    )
-    if out_path:
-        write_index_table(index, out_path)
-        index = read_artifact(spark, out_path)
-    return index
 
 
 def _embedded_rows(
@@ -86,13 +91,12 @@ def _embedded_rows(
     dims: int,
     split: str,
 ) -> DataFrame:
-    """The build's rows before ids — used by the full build and, over
-    just a batch, by :func:`upsert_index`. The labels are parsed in SQL,
-    then ONE grouped Python pass per stem (``embed_labelled_crops``)
-    decodes, preprocesses, denormalizes, crops and embeds: one Python
-    operator in the plan, where the stage chain of :func:`search` has
-    five. Returns (stem, box_idx, class_id, embedding, class_name,
-    split)."""
+    """The rows of a batch before ids, for :func:`upsert_index`. The
+    labels are parsed in SQL, then ONE grouped Python pass per stem
+    (``embed_labelled_crops``) decodes, preprocesses, denormalizes,
+    crops and embeds: one Python operator in the plan, where the stage
+    chain of :func:`search` has five. Returns (stem, box_idx, class_id,
+    embedding, class_name, split)."""
     if isinstance(images, str):
         images = scan_images(spark, images)
     parsed = parse_yolo_labels(labels, passthrough=["box_idx"])
@@ -114,53 +118,46 @@ def upsert_index(
 ) -> DataFrame:
     """Incremental index maintenance — the nightly operation the
     reference lacks (build_faiss_db.py:138-225 rebuilds and renumbers
-    everything). ONLY the batch is decoded/embedded; stems already in
-    the index keep their ids (their rows are replaced in place), new
-    stems get dense ids continuing past the current max. Ids of
-    untouched rows never move, so downstream artifacts keyed on id
-    (cached results, ANN tables via operators/index_maint.py) stay
-    valid. The batch goes through the build's own one-pass-per-stem
-    embedding (:func:`_embedded_rows`), so a re-labelled stem is
-    cropped exactly as a full rebuild would crop it; each of the three
-    consumers of the batch below still re-runs that pass. Writes a NEW
-    snapshot when ``out_path`` is given — the versioned-table shape; at
-    warehouse scale an id-bucket-partitioned table with dynamic
-    partition overwrite (operators/index_maint.py) or a transactional
-    format replaces the snapshot swap."""
-    batch = _embedded_rows(
-        spark, images, labels, preprocess=preprocess, dims=dims,
-        split=split,
-    )
+    everything) — and the one write path of the index (:func:`build_index`
+    is an upsert into an empty index). ONLY the batch is decoded and
+    embedded: stems already in the index keep their ids (their rows are
+    replaced in place), new stems get dense ids continuing past the
+    current max. Ids of untouched rows never move, so downstream
+    artifacts keyed on id (cached results, ANN tables via
+    operators/index_maint.py) stay valid.
+
+    The batch goes through the build's own one-pass-per-stem embedding
+    (:func:`_embedded_rows`), so a re-labelled stem is cropped exactly
+    as a full rebuild would crop it. That pass runs once: the embedded
+    batch is pinned (``plans.ckpt.pin``; outside any scope the pin is
+    GC-owned, so the result stays the caller's), and the id assignment,
+    the rows that keep their ids and the merge all read the pin. The
+    cost at scale: until GC, the batch pin and the id assignment's rank
+    pin hold two copies of the batch payload.
+
+    Returns ``INDEX_SCHEMA`` rows. Writes a NEW snapshot when
+    ``out_path`` is given — the versioned-table shape; at warehouse
+    scale an id-bucket-partitioned table with dynamic partition
+    overwrite (operators/index_maint.py) or a transactional format
+    replaces the snapshot swap."""
+    cols = INDEX_SCHEMA.fieldNames()
     key = ["split", "stem", "box_idx"]
-    ids = index.select("id", *key)
-    # updated rows keep their existing id
-    updated = batch.join(ids, key, "inner")
-    # new rows: dense ids continuing past the current max (two-phase
-    # rank over the batch only + one max aggregate)
+    embedded = _embedded_rows(spark, images, labels, preprocess, dims, split)
+    batch = pin(embedded).join(index.select("id", *key), key, "left")
     # bounded: a single max row
     max_id = index.agg(F.max("id")).collect()[0][0] or 0
+    # rows of keys new to the index: dense ids past the current max
     fresh = assign_index_ids_two_phase(
-        batch.join(ids.select(*key), key, "left_anti"), key
+        batch.filter(F.col("id").isNull()).drop("id"), key
     ).withColumn("id", F.col("id") + F.lit(max_id))
-    # every batch stem's old rows are dropped (stale boxes must not
-    # survive a re-label); batch stems are small → broadcast anti-join
-    batch_stems = batch.select("split", "stem").distinct()
-    kept = index.join(
-        F.broadcast(batch_stems), ["split", "stem"], "left_anti"
-    )
-    cols = [
-        "id", "split", "stem", "box_idx", "class_id", "class_name",
-        "embedding",
-    ]
-    merged = (
-        kept.select(*cols)
-        .unionByName(updated.select(*cols))
-        .unionByName(fresh.select(*cols))
-    )
+    rows = batch.filter(F.col("id").isNotNull()).unionByName(fresh)
+    # every batch stem's old rows are dropped: stale boxes must not
+    # survive a re-label
+    merged = merge_index_rows(index.select(*cols), rows, ["split", "stem"])
     if out_path:
         write_index_table(merged, out_path)
         merged = read_artifact(spark, out_path)
-    return merged
+    return merged.select(*cols)
 
 
 def load_index(spark: SparkSession, path: str) -> DataFrame:
@@ -236,20 +233,6 @@ def _attach_metadata(
         "class_name",
         "score",
     )
-
-
-# Historical auto-cutover threshold, kept for the dispatch tests and as
-# the documented scale above which a deployment MAY want the LSH ANN
-# path. Since round 7 "auto" never routes to ANN: the
-# crossover bench (tools/ann_crossover_bench.py) measured the LSH
-# candidate join on unstructured embeddings blowing a 35-minute budget
-# at Q=65k while the exact chunked GEMM finished, so the approximate
-# path can be both semantically weaker (recall < 1) and slower exactly
-# where the old cutover engaged (ADVICE r6 medium). "auto" now always
-# stays exact (knn.choose_knn_tier routes oversize batches to the
-# streaming expression tier, which never collects); ANN is an explicit
-# ``tier="ann"`` opt-in.
-ANN_CUTOVER_QUERIES = 65_536
 
 
 def search(

@@ -34,12 +34,15 @@ from oracle_vector_search_spark.plans.ckpt import pin, unpin
 
 
 def merge_index_rows(
-    old: DataFrame, fresh: DataFrame, id_col: str = "vec_id"
+    old: DataFrame, fresh: DataFrame, id_col: str | list[str] = "vec_id"
 ) -> DataFrame:
     """Upsert ``fresh`` index rows over ``old``: every id present in
     ``fresh`` replaces ALL its old rows (handles both multi-row-per-id
     layouts like LSH's one-row-per-band and single-row layouts like IVF
-    assignment). Batch ids are broadcast — the corpus-sized side never
+    assignment). ``id_col`` is one column or a list of columns forming
+    the id — ``api.upsert_index`` replaces whole stems with
+    ``["split", "stem"]``. ``old`` and ``fresh`` must have the same
+    columns. Batch ids are broadcast — the corpus-sized side never
     shuffles."""
     batch_ids = fresh.select(id_col).distinct()
     kept = old.join(F.broadcast(batch_ids), on=id_col, how="left_anti")

@@ -141,11 +141,14 @@ def denormalize_boxes_numpy(x_c, y_c, w, h, width, height):
 
 
 def decode_class(df: DataFrame, class_id_col: str = "class_id") -> DataFrame:
-    """T12/J3: class_id → class_name via the authoritative mapping."""
+    """T12/J3: class_id → class_name via the authoritative mapping. An
+    id outside ``0..len(CLASS_NAMES)-1`` gets a NULL name and keeps its
+    row: the box and its class id are data, the names only the display
+    map (app.py:31). ``get`` is 0-based and NULL out of range; under
+    ANSI, ``element_at`` fails the job on such an id (and counts a
+    negative one from the end)."""
     arr = F.array(*[F.lit(c) for c in CLASS_NAMES])
-    return df.withColumn(
-        "class_name", F.element_at(arr, F.col(class_id_col) + 1)
-    )
+    return df.withColumn("class_name", F.get(arr, F.col(class_id_col)))
 
 
 def assign_index_ids(

@@ -38,7 +38,8 @@ to GC — never to a guess.
 Public API results are caller-owned: a caller may hold N live results
 of ``api.search`` and collect them in any order, so no API entry point
 returns a frame whose pins a later call releases (``api.search`` takes
-a lazy, GC-owned ``localCheckpoint(eager=False)`` per call).
+a lazy, GC-owned ``localCheckpoint(eager=False)`` per call;
+``api.upsert_index`` pins its batch outside any scope, so GC owns it).
 """
 
 from __future__ import annotations

@@ -131,6 +131,70 @@ def test_upsert_index_stable_ids(spark, corpus_dir, labels):
     assert len(img1_rows) == 1
 
 
+def test_upsert_reads_the_pinned_batch(
+    spark, corpus_dir, labels, monkeypatch
+):
+    """The batch's Python pass runs once, in its pin: the frame the id
+    assignment gets and the result plan before the write hold no Python
+    operator, for the build (an upsert into an empty index) and for an
+    upsert. Upserting the whole corpus over its own build changes no
+    row."""
+    from oracle_vector_search_spark import api
+    from oracle_vector_search_spark.plans.inspect import (
+        physical_plan,
+        python_operators,
+    )
+
+    seen = []
+    assign = api.assign_index_ids_two_phase
+
+    def spy(df, *a, **kw):
+        seen.append(python_operators(physical_plan(df)))
+        return assign(df, *a, **kw)
+
+    monkeypatch.setattr(api, "assign_index_ids_two_phase", spy)
+    index = api.build_index(spark, corpus_dir, labels)
+    merged = api.upsert_index(spark, index, corpus_dir, labels)
+    assert seen == [[], []]
+    assert python_operators(physical_plan(index)) == []
+    assert python_operators(physical_plan(merged)) == []
+    assert sorted(merged.collect()) == sorted(index.collect())
+
+
+def test_build_without_decodable_image_is_empty(spark):
+    """A corpus with no decodable image builds an empty index with the
+    index schema, in memory and written then read back."""
+    from oracle_vector_search_spark.api import INDEX_SCHEMA
+
+    frame, labels = _build_frames(
+        spark,
+        [("corrupt", b"NOTIMG")],
+        [("corrupt", 1, "0 0.5 0.5 0.5 0.5")],
+    )
+    index = build_index(spark, frame, labels)
+    assert index.schema == INDEX_SCHEMA
+    assert index.count() == 0
+    with tempfile.TemporaryDirectory() as out:
+        index = build_index(spark, frame, labels, out_path=f"{out}/index")
+        assert index.schema == INDEX_SCHEMA
+        assert index.count() == 0
+
+
+def test_upsert_without_decodable_image_keeps_the_index(
+    spark, corpus_dir, labels
+):
+    """A batch with no decodable image changes no row and no id, even
+    for a stem the index already holds."""
+    from oracle_vector_search_spark.api import upsert_index
+
+    index = build_index(spark, corpus_dir, labels)
+    frame, batch_labels = _build_frames(
+        spark, [("img1", b"NOTIMG")], [("img1", 1, "3 0.5 0.5 0.6 0.6")]
+    )
+    merged = upsert_index(spark, index, frame, batch_labels)
+    assert sorted(merged.collect()) == sorted(index.collect())
+
+
 def test_search_radius_contract(spark, corpus_dir, labels):
     """Radius search through the full image pipeline: every hit clears
     the threshold, and lowering the threshold can only ADD matches."""
@@ -164,15 +228,12 @@ def test_search_radius_contract(spark, corpus_dir, labels):
 
 def test_search_auto_stays_exact_above_cutover(spark, corpus_dir, labels):
     """ADVICE r6 medium: tier="auto" must NEVER silently degrade to the
-    approximate LSH path. Above ANN_CUTOVER_QUERIES (driven via the
+    approximate LSH path. Above knn.GEMM_MAX_QUERIES (driven via the
     ``n_queries`` override so the routing decision — not fixture size —
     is under test) "auto" routes to the exact streaming expression tier
     and returns rows identical to tier="expr". The ANN path remains an
     explicit ``tier="ann"`` opt-in with the same output contract."""
-    from oracle_vector_search_spark.api import (
-        ANN_CUTOVER_QUERIES,
-        search,
-    )
+    from oracle_vector_search_spark.operators.knn import GEMM_MAX_QUERIES
 
     with tempfile.TemporaryDirectory() as out:
         build_index(spark, corpus_dir, labels, out_path=f"{out}/index")
@@ -192,7 +253,7 @@ def test_search_auto_stays_exact_above_cutover(spark, corpus_dir, labels):
         )
         routed = search(
             spark, idx, queries, k=3,
-            n_queries=ANN_CUTOVER_QUERIES + 1,
+            n_queries=GEMM_MAX_QUERIES + 1,
         )
         rows = routed.collect()
         assert {r["query_stem"] for r in rows} <= {"q_img1", "q_img4"}
@@ -387,7 +448,8 @@ def test_query_uploads_are_stem_partitioned_before_python(spark):
 # --------------------------------------------- build-side pipeline oracle
 def _expected_embedded_rows(images, lines, mode, dims, split="train"):
     """Pure-numpy twin of ``api._embedded_rows``: a YOLO line is kept
-    when it has five numeric fields and an integral-range class id;
+    when it has five numeric fields and an integral-range class id
+    (one outside the class map keeps its row with a NULL name);
     every decodable image is preprocessed, each of its stem's boxes is
     floored and clipped against THAT image's width and height (a NaN
     edge or an empty box drops), cropped and hash-embedded. Returns
@@ -442,9 +504,8 @@ def _expected_embedded_rows(images, lines, mode, dims, split="train"):
             (emb,) = hash_projection_embed_batch(
                 [arr[y1:y2, x1:x2].tobytes()], dims
             )
-            out.append(
-                (stem, box_idx, cls, CLASS_NAMES[cls], split, tuple(emb))
-            )
+            name = CLASS_NAMES[cls] if 0 <= cls < len(CLASS_NAMES) else None
+            out.append((stem, box_idx, cls, name, split, tuple(emb)))
     return sorted(out)
 
 
@@ -452,8 +513,9 @@ def _build_corpus():
     """Images and label lines covering every drop rule of the build:
     a corrupt image, an image without labels, labels without an image,
     malformed lines, a zero-area box, a box clipped at the edge, NaN,
-    ±inf and 1e9 coordinates, and one stem shared by two images of
-    different sizes (each is cropped with its own boxes)."""
+    ±inf and 1e9 coordinates, class ids outside the class map, and one
+    stem shared by two images of different sizes (each is cropped with
+    its own boxes)."""
     rng = np.random.RandomState(3)
     img = lambda h, w: encode_fake_image(  # noqa: E731
         rng.randint(0, 256, (h, w, 3), dtype=np.uint8)
@@ -474,6 +536,9 @@ def _build_corpus():
         ("a", 5, "x 0.5 0.5 0.2 0.2"),  # non-numeric
         ("a", 6, "nan 0.5 0.5 0.2 0.2"),  # class id NaN
         ("a", 7, "1e12 0.5 0.5 0.2 0.2"),  # class id beyond INT
+        ("a", 8, "7 0.5 0.5 0.2 0.2"),  # class ids outside 0-3
+        ("a", 9, "-1 0.5 0.5 0.2 0.2"),
+        ("b", 8, "-2 0.5 0.5 0.2 0.2"),
         ("b", 1, "2 inf 0.5 0.2 0.2"),  # clipped to nothing
         ("b", 2, "0 0.5 0.5 1e9 0.2"),  # clipped to the full width
         ("b", 3, "1 0.5 0.5 0.2 inf"),  # clipped to the full height
@@ -516,8 +581,8 @@ def test_embedded_rows_match_numpy_oracle(spark, mode):
     )
     want = _expected_embedded_rows(images, lines, mode, 8)
     assert [(s, b) for s, b, *_ in want] == [
-        ("a", 1), ("a", 2), ("b", 2), ("b", 3), ("shared", 1),
-        ("shared", 1),
+        ("a", 1), ("a", 2), ("a", 8), ("a", 9), ("b", 2), ("b", 3),
+        ("b", 8), ("shared", 1), ("shared", 1),
     ]
     assert got == want
 

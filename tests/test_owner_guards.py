@@ -6,12 +6,16 @@
   the file-fed streams; only it and ``upsert_snapshot_stream_recoverable``
   (checkpoint restart, durable ledger) call ``foreachBatch`` or set
   ``maxFilesPerTrigger``.
+* ``api.upsert_index`` is the one write path of the index
+  (``api.build_index`` upserts into an empty index): ``api.py`` calls
+  ``assign_index_ids_two_phase`` and ``write_index_table`` once each.
 """
 
 from __future__ import annotations
 
 import ast
 import os
+from collections import Counter
 
 _PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -71,3 +75,15 @@ def test_max_files_per_trigger_only_in_the_stream_owners():
         and n.value == "maxFilesPerTrigger"
     )
     assert found == _STREAM_OWNERS, sorted(found - _STREAM_OWNERS)
+
+
+def test_one_index_write_path():
+    with open(os.path.join(_PKG, "api.py"), encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    calls = Counter(
+        n.func.id
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+    )
+    assert calls["assign_index_ids_two_phase"] == 1
+    assert calls["write_index_table"] == 1

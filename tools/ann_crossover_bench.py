@@ -1,11 +1,12 @@
 #!/usr/bin/env python
 """Exact-GEMM vs LSH-ANN crossover measurement (VERDICT r5 #5).
 
-``api.search`` auto-routes query batches above ``ANN_CUTOVER_QUERIES``
-(65,536) to the LSH ANN path. This tool measures WHY that cutover is
-where it is: exact-GEMM wall grows linearly in Q (every query scores
-every index vector — Q·N·d FLOPs), while the LSH path scores only
-band-bucket collisions (candidate-sized work) at recall < 1.
+``api.search`` once auto-routed query batches above 65,536 queries to
+the LSH ANN path; this measurement is why "auto" now stays exact and
+ANN is an explicit ``tier="ann"``. Exact-GEMM wall grows linearly in
+Q (every query scores every index vector — Q·N·d FLOPs), while the
+LSH path scores only band-bucket collisions (candidate-sized work) at
+recall < 1.
 
 Index: 100k x 64-d unit-ish vectors at rest (parquet). For each
 Q in {1k, 10k, 65k} both tiers run; 100k runs the ANN tier plus — when
