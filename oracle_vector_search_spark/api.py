@@ -256,11 +256,12 @@ def search(
     exact (ADVICE r6 medium): ``knn.choose_knn_tier`` picks expr /
     GEMM by batch size and falls back to the streaming expression tier
     (never collects) above ``GEMM_MAX_QUERIES``. The approximate LSH
-    path (recall < 1, property-tested ≥ threshold in
-    tests/test_ann_lsh.py) is an explicit ``tier="ann"`` opt-in only —
-    the crossover bench showed it can be slower AND weaker than the
-    exact chunked GEMM on unstructured embeddings. ``n_queries`` skips
-    the dispatch count when already known.
+    path (recall < 1, property-tested ≥ threshold by
+    tests/test_ann.py::test_lsh_topk_recall_vs_exact) is an explicit
+    ``tier="ann"`` opt-in only — the crossover bench showed it can be
+    slower AND weaker than the exact chunked GEMM on unstructured
+    embeddings. ``n_queries`` skips the dispatch count when already
+    known.
 
     Result lifetime: the returned DataFrame is lazy and independent of
     any other invocation — hold as many live results as you like and

@@ -1099,7 +1099,6 @@ def retrieval_ndcg_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- binary (sign-bit) quantization: 64 dims -> two 32-bit halves
 #     (avoids the BIGINT sign bit, which wraps differently per engine)
 
-_BQ_DIM = 64
 _BQ_K = 5
 _BQ_NQ = 10
 

@@ -19,21 +19,25 @@ to run one:
   streams. It writes the source as 4 parquet files and streams them
   one file per trigger, so the stream's merge runs several times.
   Each non-empty micro-batch calls the stream's ``step(batch, prev)``
-  with the previous output version, and writes the result to a fresh
-  version directory. Versions are write-once: no plan ever reads a
-  directory that is being written, so nothing needs pinning. A fold
-  stream returns its last version, an append stream the union of every
-  version. An empty source returns a typed empty frame. Non-empty data
-  that arrived in only one micro-batch raises ``RuntimeError``: the
-  multi-batch merge the stream exists to show never ran.
+  with the previous output version, and writes the result to a
+  version directory named by its epoch id. Versions are write-once:
+  no plan ever reads a directory that is being written, so nothing
+  needs pinning. The one rewrite is a replayed epoch, which rewrites
+  its own version from the same base. A fold stream returns its last
+  version, an append stream the union of every version. An empty
+  source returns a typed empty frame. Non-empty data that arrived in
+  only one micro-batch raises ``RuntimeError``: the multi-batch merge
+  the stream exists to show never ran.
 
-``upsert_snapshot_stream_recoverable`` stays outside the driver: it
-keeps a durable ledger keyed by ``epoch_id`` and restarts from a
-checkpoint.
+Every driver stream is restartable. All it keeps (source files,
+checkpoint, versions and the ledger of committed versions) lives under
+one ``root`` directory; a stream that failed mid-run resumes where it
+stopped when it is run again on the same ``root``.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 from collections.abc import Callable
@@ -101,38 +105,74 @@ def drain_file_stream(
     schema: str,
     step: Callable[[DataFrame, DataFrame | None], DataFrame],
     append: bool = False,
+    root: str | None = None,
 ) -> DataFrame:
     """Stream ``source`` in micro-batches and fold or append ``step``'s
-    output into write-once versions (see the module doc).
+    output into versions (see the module doc).
 
     ``step(batch, prev)`` runs on every non-empty micro-batch, in
     arrival order; ``prev`` is the previous version (``None`` on the
     first), and the result must have the DDL ``schema``. Returns the
-    last version, or with ``append`` the union of every version.
-    ``step`` runs in the stream's cloned session, so state passes
-    between epochs through the version directories, never through
-    session objects."""
+    last version, or with ``append`` the union of every version, in
+    epoch order. ``step`` runs in the stream's cloned session, so state
+    passes between epochs through the version directories, never
+    through session objects.
+
+    Everything the stream keeps lives under ``root`` (a fresh scratch
+    directory by default):
+
+    * ``src/``: the source files, written only if missing or empty, so
+      a restart streams the same files;
+    * ``_checkpoint/``: the query's checkpoint. On restart Spark never
+      re-delivers a committed epoch, and replays the one it had started;
+    * ``v<epoch_id>/``: the version each epoch writes;
+    * ``_ledger.json``: epoch id → version, replaced atomically after
+      each version is written.
+
+    An epoch's ``prev`` is the ledger's highest entry below its own
+    epoch id, so a replayed epoch rewrites its own version from the
+    same base. A failed ``step`` raises ``StreamingQueryException``;
+    running the stream again on the same ``root`` resumes it."""
     spark = source.sparkSession
-    src_dir = scratch_dir("ovs_stream_src_")
-    out_root = scratch_dir("ovs_stream_out_")
-    source.repartition(4).write.mode("overwrite").parquet(src_dir)
-    versions: list[str] = []
+    if root is None:
+        root = scratch_dir("ovs_stream_")
+    src_dir = os.path.join(root, "src")
+    if not os.path.isdir(src_dir) or not os.listdir(src_dir):
+        source.repartition(4).write.mode("overwrite").parquet(src_dir)
+    ledger_path = os.path.join(root, "_ledger.json")
+
+    def read_ledger() -> dict[int, str]:
+        if not os.path.exists(ledger_path):
+            return {}
+        with open(ledger_path) as fh:
+            return {int(e): v for e, v in json.load(fh).items()}
 
     def run_epoch(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
+        ledger = read_ledger()
+        done = [e for e in ledger if e < epoch_id]
         prev = None
-        if versions:
-            prev = batch.sparkSession.read.schema(schema).parquet(versions[-1])
-        out = f"{out_root}/v{len(versions)}"
+        if done:
+            prev = batch.sparkSession.read.schema(schema).parquet(
+                ledger[max(done)]
+            )
+        out = os.path.join(root, f"v{epoch_id}")
         write_artifact(step(batch, prev), out)
-        versions.append(out)
+        ledger[epoch_id] = out
+        tmp = ledger_path + ".tmp"
+        with open(tmp, "w") as fh:
+            json.dump(ledger, fh)
+        os.replace(tmp, ledger_path)
 
     q = (
         spark.readStream.schema(source.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
-        .writeStream.foreachBatch(run_epoch)
+        .writeStream.option(
+            "checkpointLocation", os.path.join(root, "_checkpoint")
+        )
+        .foreachBatch(run_epoch)
         .start()
     )
     try:
@@ -140,13 +180,15 @@ def drain_file_stream(
     finally:
         q.stop()
 
-    if not versions:
+    ledger = read_ledger()
+    if not ledger:
         return spark.createDataFrame([], schema)
-    if len(versions) == 1:
+    if len(ledger) == 1:
         raise RuntimeError(
             "stream data arrived in one micro-batch; expected multi-batch "
             "arrival"
         )
+    versions = [ledger[e] for e in sorted(ledger)]
     return spark.read.schema(schema).parquet(
         *(versions if append else versions[-1:])
     )
@@ -324,7 +366,9 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def upsert_snapshot_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def upsert_snapshot_stream(
+    spark: SparkSession, sf_dir: str, root: str | None = None
+) -> DataFrame:
     """Streaming CDC maintenance: the event stream micro-batches merge
     (latest-record-wins, operators.merge.merge_upsert) into a
     versioned at-rest snapshot — one parquet version per epoch, each
@@ -332,7 +376,10 @@ def upsert_snapshot_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     history. Returns the final snapshot, which must equal the batch
     rebuild over all events: latest-wins over a total (ts_us,
     event_id) order is associative, so the result is independent of
-    how the stream happened to batch.
+    how the stream happened to batch, or of where it stopped and was
+    restarted. ``root`` is ``drain_file_stream``'s: run again on the
+    same ``root``, a stream that failed mid-run resumes from its
+    checkpoint and ledger.
     """
     from pyspark.sql import Window
 
@@ -366,174 +413,8 @@ def upsert_snapshot_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id long, ts_us long, event_id long, "
         "event_type string, value_cents long",
         merge_batch,
+        root=root,
     )
-
-
-class _InjectedCrash(RuntimeError):
-    """Deliberate mid-stream failure injected by tests (see
-    ``upsert_snapshot_stream_recoverable``'s ``crash_after_epochs``)."""
-
-
-def upsert_snapshot_stream_recoverable(
-    spark: SparkSession,
-    sf_dir: str,
-    checkpoint_dir: str,
-    snap_root: str,
-    src_dir: str | None = None,
-    crash_after_epochs: int | None = None,
-) -> DataFrame | None:
-    """The PRODUCTION-shaped twin of ``upsert_snapshot_stream``
-    (VERDICT r10 #6: checkpoint recovery had never been exercised):
-    the same latest-wins CDC merge, but restartable.
-
-    What makes it recoverable:
-
-    * the query runs with a ``checkpointLocation`` — on restart Spark
-      replays only the LAST uncommitted micro-batch and continues;
-      committed epochs are never re-delivered;
-    * merge state lives in a durable ledger (``_ledger.json`` under
-      ``snap_root`` mapping epoch_id → snapshot path), not in Python
-      session objects: a restarted process reconstructs the merge
-      chain from disk;
-    * each epoch writes its snapshot to a path KEYED BY epoch_id and
-      merges against the highest ledger entry STRICTLY BELOW its own
-      epoch — so a replayed epoch (crash after the snapshot write but
-      before the checkpoint commit) overwrites its own output from the
-      same base: the merge is idempotent per epoch, the exactly-once
-      contract foreachBatch requires.
-
-    ``crash_after_epochs=N`` injects a failure at the start of epoch
-    N+1 (after N committed epochs) — the test's kill switch; the
-    function then returns None. A later call with the SAME checkpoint
-    and ledger resumes where the stream died and returns the final
-    snapshot DataFrame.
-    """
-    import json as _json
-
-    from pyspark.errors import StreamingQueryException
-    from pyspark.sql import Window
-
-    from oracle_vector_search_spark.operators.merge import merge_upsert
-
-    schema = (
-        "user_id long, ts_us long, event_id long, "
-        "event_type string, value_cents long"
-    )
-    if src_dir is None:
-        src_dir = os.path.join(snap_root, "src")
-    if not os.path.isdir(src_dir) or not os.listdir(src_dir):
-        (
-            load_table(spark, sf_dir, "events")
-            .select(
-                "user_id",
-                F.expr("ts_ns div 1000").alias("ts_us"),
-                "event_id",
-                "event_type",
-                F.floor(F.col("value") * 100)
-                .cast("long")
-                .alias("value_cents"),
-            )
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(src_dir)
-        )
-
-    ledger_path = os.path.join(snap_root, "_ledger.json")
-
-    def _read_ledger() -> dict[int, str]:
-        if not os.path.exists(ledger_path):
-            return {}
-        with open(ledger_path) as fh:
-            return {int(k): v for k, v in _json.load(fh).items()}
-
-    def _write_ledger(led: dict[int, str]) -> None:
-        tmp = ledger_path + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump({str(k): v for k, v in led.items()}, fh)
-        os.replace(tmp, ledger_path)  # atomic on POSIX
-
-    def _merge_batch_impl(batch_df: DataFrame, epoch_id: int) -> None:
-        led = _read_ledger()
-        done = [e for e in led if e < epoch_id]
-        if (
-            crash_after_epochs is not None
-            and len(done) >= crash_after_epochs
-        ):
-            raise _InjectedCrash(
-                f"injected crash before epoch {epoch_id}"
-            )
-        sess = batch_df.sparkSession
-        w = Window.partitionBy("user_id").orderBy(
-            F.desc("ts_us"), F.desc("event_id")
-        )
-        latest = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        if done:
-            base = sess.read.schema(schema).parquet(led[max(done)])
-            latest = merge_upsert(
-                base,
-                latest,
-                keys=["user_id"],
-                order_cols=["ts_us", "event_id"],
-            )
-        out = os.path.join(snap_root, f"epoch_{epoch_id}")
-        latest.write.mode("overwrite").parquet(out)
-        led[int(epoch_id)] = out
-        _write_ledger(led)
-
-    # foreachBatch runs DRIVER-side in this Python process, so the
-    # injected-vs-genuine decision is a closure flag set at the raise
-    # site — not message/chain parsing, which misclassifies a genuine
-    # error raised while the injected crash is in flight (its message
-    # and __context__ both reach the injection marker).
-    flags: dict[str, object] = {}
-
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        try:
-            _merge_batch_impl(batch_df, epoch_id)
-        except _InjectedCrash:
-            flags["injected"] = True
-            raise
-        except BaseException as err:
-            flags["genuine"] = repr(err)
-            raise
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(merge_batch)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    except StreamingQueryException:
-        # Only the INJECTED crash is an expected outcome — a genuine
-        # merge_batch bug during a crash-injection run must still
-        # surface (ADVICE r11). The closure flags were set at the
-        # Python raise site, so the classification is exact: any
-        # genuine error (even one raised while the injection was in
-        # flight) re-raises.
-        if (
-            crash_after_epochs is None
-            or "genuine" in flags
-            or "injected" not in flags
-        ):
-            raise
-        return None  # the injected crash killed the query, as asked
-    finally:
-        q.stop()
-
-    led = _read_ledger()
-    if not led:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(led[max(led)])
 
 
 def index_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,9 +3,8 @@
 * ``session.get_spark`` is the only code that sizes shuffles: no other
   engine file mentions ``spark.sql.shuffle.partitions``.
 * ``streaming.ops.drain_file_stream`` is the one micro-batch driver for
-  the file-fed streams; only it and ``upsert_snapshot_stream_recoverable``
-  (checkpoint restart, durable ledger) call ``foreachBatch`` or set
-  ``maxFilesPerTrigger``.
+  the file-fed streams, restartable from its checkpoint: only it calls
+  ``foreachBatch`` or sets ``maxFilesPerTrigger``.
 * ``api.upsert_index`` is the one write path of the index
   (``api.build_index`` upserts into an empty index): ``api.py`` calls
   ``assign_index_ids_two_phase`` and ``write_index_table`` once each.
@@ -21,10 +20,7 @@ _PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "oracle_vector_search_spark",
 )
-_STREAM_OWNERS = {
-    ("streaming/ops.py", "drain_file_stream"),
-    ("streaming/ops.py", "upsert_snapshot_stream_recoverable"),
-}
+_STREAM_OWNERS = {("streaming/ops.py", "drain_file_stream")}
 
 
 def _engine_sources():

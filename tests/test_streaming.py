@@ -11,6 +11,7 @@ import tempfile
 import uuid
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -239,3 +240,66 @@ def test_drain_append_returns_every_epoch(spark):
         append=True,
     )
     assert _ids(out) == [10 * i for i in range(40)]
+
+
+def _failing_on(n, step):
+    """``step``, except that its n-th call raises."""
+    calls = [0]
+
+    def wrapped(batch, prev):
+        calls[0] += 1
+        if calls[0] == n:
+            raise RuntimeError(f"killed at step {n}")
+        return step(batch, prev)
+
+    return wrapped
+
+
+def test_drain_resumes_from_its_checkpoint(spark, tmp_path):
+    """Kill an append stream in its third epoch, then run it again on
+    the same ``root``: the restart runs only the two missing epochs,
+    and the result equals an uninterrupted run, with no epoch lost or
+    delivered twice."""
+    calls = []
+
+    def tag(batch, prev):
+        calls.append(prev is None)
+        return batch.select((F.col("id") * 10).alias("id"))
+
+    root = str(tmp_path)
+    with pytest.raises(StreamingQueryException):
+        ops.drain_file_stream(
+            spark.range(40),
+            "id long",
+            _failing_on(3, tag),
+            append=True,
+            root=root,
+        )
+    calls.clear()
+    out = ops.drain_file_stream(
+        spark.range(40), "id long", tag, append=True, root=root
+    )
+    assert calls == [False, False]
+    whole = ops.drain_file_stream(
+        spark.range(40), "id long", tag, append=True
+    )
+    assert _ids(out) == _ids(whole) == [10 * i for i in range(40)]
+
+
+def test_failed_drain_leaves_no_temporary_checkpoint(spark):
+    """Spark deletes a checkpoint it created itself only when the query
+    succeeds; the driver's checkpoint lives under its scratch root, so a
+    failed stream leaves nothing in the JVM's temp directory."""
+    tmp = spark.sparkContext._jvm.System.getProperty("java.io.tmpdir")
+
+    def temporaries():
+        return {f for f in os.listdir(tmp) if f.startswith("temporary-")}
+
+    before = temporaries()
+    with pytest.raises(StreamingQueryException):
+        ops.drain_file_stream(
+            spark.range(40),
+            "id long",
+            _failing_on(2, lambda batch, prev: batch),
+        )
+    assert temporaries() <= before

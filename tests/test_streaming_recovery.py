@@ -1,10 +1,11 @@
-"""Checkpoint-recovery for the CDC upsert stream (VERDICT r10 #6).
+"""Checkpoint recovery for the CDC upsert stream.
 
-Kill the foreachBatch upsert stream mid-run with an injected crash,
-restart it from the SAME checkpoint, and assert:
+Kill the upsert stream mid-run (``merge_upsert`` raises on its n-th
+call), restart it on the SAME ``root``, and assert:
 
 * the restart does NOT re-deliver committed epochs (the ledger gains
-  only the missing ones),
+  only the missing ones, and the old entries are unchanged),
+* a replayed epoch rewrites its own version from the same base,
 * the drained final snapshot equals the batch latest-wins oracle —
   i.e. the crash/restart left no duplicate, lost or stale rows.
 """
@@ -14,12 +15,13 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import Window, functions as F
 
 from oracle_vector_search_spark.io import load_table
-from oracle_vector_search_spark.streaming.ops import (
-    upsert_snapshot_stream_recoverable,
-)
+from oracle_vector_search_spark.operators import merge as merge_mod
+from oracle_vector_search_spark.streaming.ops import upsert_snapshot_stream
 
 
 def _batch_oracle(spark, sf_dir):
@@ -42,104 +44,75 @@ def _batch_oracle(spark, sf_dir):
     )
 
 
-def test_upsert_stream_recovers_from_checkpoint(spark, sf_dir, tmp_path):
-    ckp = str(tmp_path / "ckp")
-    snap = str(tmp_path / "snap")
-    os.makedirs(snap, exist_ok=True)
+def _crash_on_merge(spark, sf_dir, root, monkeypatch, n):
+    """Run the stream with ``merge_upsert`` failing on its n-th call
+    (epoch n: epoch 0 has nothing to merge into); the stream dies."""
+    merge = merge_mod.merge_upsert
+    calls = [0]
 
-    # phase 1: crash after 2 committed epochs (source is 4 files at
-    # maxFilesPerTrigger=1, so 2 epochs is genuinely mid-run)
-    out = upsert_snapshot_stream_recoverable(
-        spark, sf_dir, ckp, snap, crash_after_epochs=2
-    )
-    assert out is None  # the injected crash killed the query
+    def failing_merge(*args, **kwargs):
+        calls[0] += 1
+        if calls[0] == n:
+            raise RuntimeError(f"killed at merge {n}")
+        return merge(*args, **kwargs)
 
-    ledger_path = os.path.join(snap, "_ledger.json")
-    with open(ledger_path) as fh:
-        led1 = {int(k): v for k, v in json.load(fh).items()}
-    assert len(led1) == 2, led1  # exactly the committed prefix
-    assert sorted(led1) == [0, 1]
+    with monkeypatch.context() as m:
+        m.setattr(merge_mod, "merge_upsert", failing_merge)
+        with pytest.raises(StreamingQueryException):
+            upsert_snapshot_stream(spark, sf_dir, root=root)
 
-    # the half-way snapshot must NOT already equal the full oracle —
-    # otherwise the restart below proves nothing
-    partial = spark.read.parquet(led1[max(led1)])
-    oracle = _batch_oracle(spark, sf_dir)
-    assert partial.count() <= oracle.count()
 
-    # phase 2: restart with the SAME checkpoint + ledger — no crash
-    final = upsert_snapshot_stream_recoverable(spark, sf_dir, ckp, snap)
-    assert final is not None
+def _ledger(root):
+    with open(os.path.join(root, "_ledger.json")) as fh:
+        return {int(k): v for k, v in json.load(fh).items()}
 
-    with open(ledger_path) as fh:
-        led2 = {int(k): v for k, v in json.load(fh).items()}
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_upsert_stream_recovers_from_checkpoint(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    root = str(tmp_path)
+    # the source is 4 files at maxFilesPerTrigger=1, so dying in epoch 2
+    # is genuinely mid-run
+    _crash_on_merge(spark, sf_dir, root, monkeypatch, n=2)
+    led1 = _ledger(root)
+    assert sorted(led1) == [0, 1], led1  # exactly the committed prefix
+    # parquet part files carry a per-write uuid: a rewrite renames them
+    before = {e: sorted(os.listdir(p)) for e, p in led1.items()}
+
+    final = upsert_snapshot_stream(spark, sf_dir, root=root)
+
+    led2 = _ledger(root)
     # committed epochs were not re-delivered; only the tail was run
     assert sorted(led2) == [0, 1, 2, 3], led2
     assert all(led2[e] == led1[e] for e in led1)
+    assert all(sorted(os.listdir(led2[e])) == f for e, f in before.items())
+    oracle = _rows(_batch_oracle(spark, sf_dir))
+    # else the restart proves nothing
+    assert _rows(spark.read.parquet(led1[1])) != oracle
+    assert _rows(final) == oracle
 
-    # drained snapshot == batch oracle, row for row
-    got = {tuple(r) for r in final.collect()}
-    want = {tuple(r) for r in oracle.collect()}
-    assert got == want
-    assert len(got) == oracle.count()
 
+def test_replayed_epoch_is_idempotent(spark, sf_dir, tmp_path, monkeypatch):
+    """A crash after an epoch's version was written but before its
+    checkpoint commit makes the restart replay that epoch. Plant such a
+    half-done epoch 3 as a garbage version: the replay must rewrite it
+    from epoch 2's version, neither keep it nor merge on top of it."""
+    root = str(tmp_path)
+    _crash_on_merge(spark, sf_dir, root, monkeypatch, n=3)
+    led = _ledger(root)
+    assert sorted(led) == [0, 1, 2], led
 
-def test_replayed_epoch_is_idempotent(spark, sf_dir, tmp_path):
-    """Crash DURING epoch 2 semantics: foreachBatch may write the
-    snapshot and die before the checkpoint commit, so the restart
-    replays epoch 2. The ledger design must absorb that — re-running
-    an epoch against the highest ledger entry BELOW it overwrites the
-    same output from the same base."""
-    ckp = str(tmp_path / "ckp")
-    snap = str(tmp_path / "snap")
-    os.makedirs(snap, exist_ok=True)
-
-    out = upsert_snapshot_stream_recoverable(
-        spark, sf_dir, ckp, snap, crash_after_epochs=3
-    )
-    assert out is None
-    ledger_path = os.path.join(snap, "_ledger.json")
-    with open(ledger_path) as fh:
-        led = {int(k): v for k, v in json.load(fh).items()}
-
-    # simulate "snapshot written but epoch uncommitted": hand-plant a
-    # ledger entry for epoch 3 pointing at a GARBAGE copy of epoch 2 —
-    # the replay must overwrite it, not merge on top of it
-    import shutil
-
-    fake = os.path.join(snap, "epoch_3")
-    shutil.copytree(led[2], fake)
+    fake = os.path.join(root, "v3")
+    spark.read.parquet(led[2]).limit(1).withColumn(
+        "user_id", F.lit(-1).cast("long")
+    ).write.mode("overwrite").parquet(fake)
     led[3] = fake
-    with open(ledger_path, "w") as fh:
-        json.dump({str(k): v for k, v in led.items()}, fh)
+    with open(os.path.join(root, "_ledger.json"), "w") as fh:
+        json.dump(led, fh)
 
-    final = upsert_snapshot_stream_recoverable(spark, sf_dir, ckp, snap)
-    got = {tuple(r) for r in final.collect()}
-    want = {tuple(r) for r in _batch_oracle(spark, sf_dir).collect()}
-    assert got == want
-
-
-def test_genuine_failure_is_not_masked_as_the_injected_crash(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """ADVICE r11: with crash_after_epochs set, a REAL merge_batch bug
-    must still raise — only the injected kill may return None.
-    Sabotage merge_upsert (used from epoch 1 on) and assert the
-    StreamingQueryException escapes instead of being read as the
-    injection."""
-    import pytest
-    from pyspark.errors import StreamingQueryException
-
-    from oracle_vector_search_spark.operators import merge as merge_mod
-
-    def boom(*args, **kwargs):
-        raise ValueError("genuine merge bug, not the injection")
-
-    monkeypatch.setattr(merge_mod, "merge_upsert", boom)
-    with pytest.raises(StreamingQueryException):
-        upsert_snapshot_stream_recoverable(
-            spark,
-            sf_dir,
-            str(tmp_path / "ckp"),
-            str(tmp_path / "snap"),
-            crash_after_epochs=3,
-        )
+    final = upsert_snapshot_stream(spark, sf_dir, root=root)
+    assert _rows(final) == _rows(_batch_oracle(spark, sf_dir))
