@@ -51,6 +51,15 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 _MEMBW_BUF = None  # 1 GiB, allocated once per process
 
 
+def read_loadavg() -> list | None:
+    """The 1-, 5- and 15-minute load averages, or None off Linux."""
+    try:
+        with open("/proc/loadavg") as fh:
+            return [float(x) for x in fh.read().split()[:3]]
+    except (OSError, ValueError):
+        return None
+
+
 def ambient_probe() -> dict:
     """Fixed-work probes + load average, so a capture carries its own
     contention evidence (VERDICT r12 #1: the driver's BENCH_r12 read
@@ -74,14 +83,18 @@ def ambient_probe() -> dict:
     rng = np.random.default_rng(7)
     a = rng.standard_normal((1024, 1024)).astype(np.float64)
     b = rng.standard_normal((1024, 1024)).astype(np.float64)
-    # warm untimed for >=0.25 s: one matmul is not enough to ramp an
-    # idle CPU out of its low-power frequency state, and a cold-start
-    # probe would false-flag `contended` on a genuinely idle host
+    # warm untimed for >=0.25 s AND >=8 matmuls: one matmul is not
+    # enough to ramp an idle CPU out of its low-power frequency state,
+    # and on a slow-ramping host the first matmuls run ~4x their floor,
+    # so a time-only warm-up finishes after two of them and the first
+    # probe in a process reads cold, false-flagging `contended`
     t0 = time.time()
-    while time.time() - t0 < 0.25:
+    n = 0
+    while n < 8 or time.time() - t0 < 0.25:
         a @ b
+        n += 1
     reps = []
-    for _ in range(3):
+    for _ in range(5):
         t0 = time.time()
         a @ b
         reps.append(time.time() - t0)
@@ -94,15 +107,10 @@ def ambient_probe() -> dict:
         t0 = time.time()
         float(_MEMBW_BUF.sum())
         mreps.append(time.time() - t0)
-    try:
-        with open("/proc/loadavg") as fh:
-            load = [float(x) for x in fh.read().split()[:3]]
-    except (OSError, ValueError):
-        load = None
     return {
         "gemm_1024_median_sec": round(statistics.median(reps), 4),
         "membw_1g_median_sec": round(statistics.median(mreps), 4),
-        "loadavg": load,
+        "loadavg": read_loadavg(),
     }
 
 

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from oracle_vector_search_spark.functions import text as T
 from oracle_vector_search_spark.functions.embed import duck_embedding_expr
 from oracle_vector_search_spark.io import load_table
+from oracle_vector_search_spark.operators.rowmap import map_rows
 from oracle_vector_search_spark.operators.topk import bounded_global_order
 from oracle_vector_search_spark.plans.ckpt import pin, unpin
 from oracle_vector_search_spark.queries import register
@@ -945,7 +946,7 @@ FROM frames
 )
 def media_frame_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal binary-column plumbing, oracle-checked: documents
-    become opaque BINARY blobs, an Arrow ``mapInPandas`` stage samples
+    become opaque BINARY blobs, an Arrow row-map stage samples
     fixed-stride "frames" (the video frame-sample batch shape of
     ``sources.media.video_frame_sample`` — 1 row in, N frame rows out)
     and emits a per-frame manifest (index, byte offset, md5).
@@ -957,11 +958,7 @@ def media_frame_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Real codec decode stays in sources.media behind optional deps; the
     Spark-side shape is identical.
     """
-    from collections.abc import Iterator
-
     import hashlib
-
-    import pandas as pd
 
     docs = (
         load_table(spark, sf_dir, "documents")
@@ -972,36 +969,19 @@ def media_frame_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.col("text").cast("binary").alias("content"))
     )
 
-    out_schema = (
-        "doc_id long, frame_idx int, byte_offset long, frame_md5 string"
+    def frames(did, blob):
+        b = bytes(blob)
+        offsets = range(0, len(b) - _FRAME_SIZE + 1, _FRAME_STRIDE)
+        return [
+            (did, i, off, hashlib.md5(b[off: off + _FRAME_SIZE]).hexdigest())
+            for i, off in enumerate(offsets)
+        ]
+
+    return map_rows(
+        docs,
+        frames,
+        "doc_id long, frame_idx int, byte_offset long, frame_md5 string",
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, blob in zip(pdf["doc_id"], pdf["content"]):
-                b = bytes(blob)
-                n_frames = (len(b) - _FRAME_SIZE) // _FRAME_STRIDE + 1
-                for i in range(n_frames):
-                    off = i * _FRAME_STRIDE
-                    rows.append(
-                        {
-                            "doc_id": did,
-                            "frame_idx": i,
-                            "byte_offset": off,
-                            "frame_md5": hashlib.md5(
-                                b[off : off + _FRAME_SIZE]
-                            ).hexdigest(),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "byte_offset", "frame_md5",
-                ],
-            )
-
-    return docs.mapInPandas(batches, schema=out_schema)
 
 
 # ------------------------------------------------------------ shard export
@@ -1879,10 +1859,7 @@ def audio_wav_feature_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference repo is image-only — this is the training-data
     pipeline surface (brief: multimodal columns), image analogue
     ``reference_crops_decode_parity``."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from oracle_vector_search_spark.functions.wav_numpy import (
         encode_wav_pcm,
@@ -1892,37 +1869,31 @@ def audio_wav_feature_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         decode_audio_samples,
     )
 
-    def make_wavs(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for cid in pdf["id"]:
-                c = int(cid)
-                if c >= _N_CLIPS:  # planted malformed blob (F3)
-                    rows.append((c, b"RIFF\x10\x00\x00\x00WAVEtrunc"))
-                    continue
-                n = 512 + (c % 7) * 128
-                sr = 8000 * (1 + c % 3)
-                t = np.arange(n, dtype=np.int64)
-                s = ((c * 7919 + t * 1103 + 211) % 65536) - 32768
-                br = c % 4
-                if br == 1:  # stereo: decode must floor-mean downmix
-                    r = ((c * 104729 + t * 31 + 997) % 65536) - 32768
-                    lr = np.stack([s, r], axis=1).astype(np.int16)
-                    b = encode_wav_pcm(lr, sr, bits=16, channels=2)
-                elif br == 2:  # 8-bit: decode must promote (u-128)*256
-                    u8 = ((c * 31 + t * 17) % 256).astype(np.uint8)
-                    b = encode_wav_pcm(u8, sr, bits=8)
-                elif br == 3:  # odd-sized unknown chunk: walker skips
-                    b = encode_wav_pcm(
-                        s.astype(np.int16), sr, junk_chunk=b"\x01\x02\x03"
-                    )
-                else:
-                    b = encode_wav_pcm16(s.astype(np.int16), sr)
-                rows.append((c, b))
-            yield pd.DataFrame(rows, columns=["id", "content"])
+    def make_wav(c):
+        if c >= _N_CLIPS:  # planted malformed blob (F3)
+            return [(c, b"RIFF\x10\x00\x00\x00WAVEtrunc")]
+        n = 512 + (c % 7) * 128
+        sr = 8000 * (1 + c % 3)
+        t = np.arange(n, dtype=np.int64)
+        s = ((c * 7919 + t * 1103 + 211) % 65536) - 32768
+        br = c % 4
+        if br == 1:  # stereo: decode must floor-mean downmix
+            r = ((c * 104729 + t * 31 + 997) % 65536) - 32768
+            lr = np.stack([s, r], axis=1).astype(np.int16)
+            b = encode_wav_pcm(lr, sr, bits=16, channels=2)
+        elif br == 2:  # 8-bit: decode must promote (u-128)*256
+            u8 = ((c * 31 + t * 17) % 256).astype(np.uint8)
+            b = encode_wav_pcm(u8, sr, bits=8)
+        elif br == 3:  # odd-sized unknown chunk: walker skips
+            b = encode_wav_pcm(
+                s.astype(np.int16), sr, junk_chunk=b"\x01\x02\x03"
+            )
+        else:
+            b = encode_wav_pcm16(s.astype(np.int16), sr)
+        return [(c, b)]
 
-    clips = spark.range(0, _N_CLIPS + 1, 1, 4).mapInPandas(
-        make_wavs, schema="id long, content binary"
+    clips = map_rows(
+        spark.range(0, _N_CLIPS + 1, 1, 4), make_wav, "id long, content binary"
     )
     decoded = decode_audio_samples(clips)  # malformed clip drops here
 
@@ -1988,10 +1959,6 @@ _NV_H, _NV_W = 16, 24  # frame geometry (even levels are MJPEG-lossless)
 
 
 def _clip_corpus(spark: SparkSession) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from oracle_vector_search_spark.io import (
         at_rest,
         read_artifact,
@@ -2006,31 +1973,20 @@ def _clip_corpus(spark: SparkSession) -> DataFrame:
             encode_avi_mjpeg,
         )
 
-        def make_avis(
-            it: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                rows = []
-                for cid in pdf["id"]:
-                    c = int(cid)
-                    if c >= _NV_CLIPS:  # planted malformed container
-                        rows.append((c, b"RIFF\x08\x00\x00\x00AVI hdrl"))
-                        continue
-                    nf = 4 + c % 5
-                    frames = np.stack(
-                        [
-                            np.full(
-                                (_NV_H, _NV_W),
-                                2 * ((c * 37 + f * 11) % 128),
-                                dtype=np.uint8,
-                            )
-                            for f in range(nf)
-                        ]
+        def make_avi(c):
+            if c >= _NV_CLIPS:  # planted malformed container
+                return [(c, b"RIFF\x08\x00\x00\x00AVI hdrl")]
+            frames = np.stack(
+                [
+                    np.full(
+                        (_NV_H, _NV_W),
+                        2 * ((c * 37 + f * 11) % 128),
+                        dtype=np.uint8,
                     )
-                    rows.append(
-                        (c, encode_avi_mjpeg(frames, fps=10 + c % 3))
-                    )
-                yield pd.DataFrame(rows, columns=["id", "content"])
+                    for f in range(4 + c % 5)
+                ]
+            )
+            return [(c, encode_avi_mjpeg(frames, fps=10 + c % 3))]
 
         path = scratch_dir("ovs_clip_corpus_")
         # explicit small partition count: a bare range() inherits
@@ -2042,8 +1998,10 @@ def _clip_corpus(spark: SparkSession) -> DataFrame:
         # per-task overhead dwarfing the work; a real 100 TB clip
         # corpus arrives as many multi-GiB files, not synth rows.
         write_artifact(
-            spark.range(0, _NV_CLIPS + 1, 1, 4).mapInPandas(
-                make_avis, schema="id long, content binary"
+            map_rows(
+                spark.range(0, _NV_CLIPS + 1, 1, 4),
+                make_avi,
+                "id long, content binary",
             ),
             path,
         )
@@ -2094,10 +2052,7 @@ def video_mjpeg_frame_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the sampled frames a downstream trainer actually keeps); stats
     are one row per frame. The corpus itself is written once per
     session (``_clip_corpus``) — encode cost is ingest, not query."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from oracle_vector_search_spark.sources.media import (
         video_frame_sample,
@@ -2105,44 +2060,19 @@ def video_mjpeg_frame_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     frames = video_frame_sample(_clip_corpus(spark), every_k=2)
 
-    stats_schema = (
+    def frame_stats(cid, fi, w, h, fb):
+        arr = np.frombuffer(bytes(fb), np.uint8)
+        return [(
+            cid, fi, w, h, int(arr.min()), int(arr.max()),
+            int(arr.astype(np.int64).sum()),
+        )]
+
+    return map_rows(
+        frames,
+        frame_stats,
         "clip_id long, frame_idx int, width int, height int, "
-        "luma_min long, luma_max long, luma_sum long"
-    )
-
-    def frame_stats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for cid, fi, w, h, fb in zip(
-                pdf["id"],
-                pdf["frame_idx"],
-                pdf["width"],
-                pdf["height"],
-                pdf["frame"],
-            ):
-                arr = np.frombuffer(bytes(fb), np.uint8)
-                rows.append(
-                    {
-                        "clip_id": int(cid),
-                        "frame_idx": int(fi),
-                        "width": int(w),
-                        "height": int(h),
-                        "luma_min": int(arr.min()),
-                        "luma_max": int(arr.max()),
-                        "luma_sum": int(arr.astype(np.int64).sum()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "clip_id", "frame_idx", "width", "height",
-                    "luma_min", "luma_max", "luma_sum",
-                ],
-            )
-
-    return frames.mapInPandas(frame_stats, schema=stats_schema).orderBy(
-        "clip_id", "frame_idx"
-    )
+        "luma_min long, luma_max long, luma_sum long",
+    ).orderBy("clip_id", "frame_idx")
 
 
 # ------------------------------------- audio VAD / silence segmentation
@@ -2210,10 +2140,7 @@ def audio_vad_silence_segments(
     100 TB shape: decode + framing are scan-stage; the only shuffle
     carries (clip, frame, energy) rows — 10 per clip, audio-seconds
     sized, not sample sized."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from oracle_vector_search_spark.functions.wav_numpy import (
         encode_wav_pcm16,
@@ -2222,26 +2149,19 @@ def audio_vad_silence_segments(
         decode_audio_samples,
     )
 
-    def make_wavs(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for cid in pdf["id"]:
-                c = int(cid)
-                t = np.arange(_VAD_N, dtype=np.int64)
-                k = t // _VAD_FRAME
-                voiced = ((c * 13 + k * 7) % 5) < 3
-                s = np.where(
-                    voiced,
-                    ((c * 31 + t * 17) % 4096) - 2048,
-                    ((c * 31 + t * 17) % 64) - 32,
-                )
-                rows.append(
-                    (c, encode_wav_pcm16(s.astype(np.int16), 16000))
-                )
-            yield pd.DataFrame(rows, columns=["id", "content"])
+    def make_wav(c):
+        t = np.arange(_VAD_N, dtype=np.int64)
+        k = t // _VAD_FRAME
+        voiced = ((c * 13 + k * 7) % 5) < 3
+        s = np.where(
+            voiced,
+            ((c * 31 + t * 17) % 4096) - 2048,
+            ((c * 31 + t * 17) % 64) - 32,
+        )
+        return [(c, encode_wav_pcm16(s.astype(np.int16), 16000))]
 
-    clips = spark.range(0, _VAD_CLIPS, 1, 4).mapInPandas(
-        make_wavs, schema="id long, content binary"
+    clips = map_rows(
+        spark.range(0, _VAD_CLIPS, 1, 4), make_wav, "id long, content binary"
     )
     decoded = decode_audio_samples(clips)
     frames = decoded.select(
@@ -2530,74 +2450,45 @@ def image_png_decode_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: decode is Arrow-batched scan-stage work (stdlib
     zlib inflate + numpy unfilter); one stats row per image shuffles,
     pixels never do."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
     from oracle_vector_search_spark.functions.png_numpy import encode_png
     from oracle_vector_search_spark.sources.images import _decode_one
 
-    def make_pngs(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for iid in pdf["id"]:
-                i = int(iid)
-                if i >= _NP_IMGS:  # planted malformed blob (F3)
-                    rows.append((i, b"\x89PNG\r\n\x1a\n\x00trunc"))
-                    continue
-                w, h = 8 + i % 5, 6 + i % 7
-                cin = (1, 3, 4)[i % 3]
-                y, x, ch = np.meshgrid(
-                    np.arange(h), np.arange(w), np.arange(cin),
-                    indexing="ij",
-                )
-                a = ((i * 7 + y * 5 + x * 3 + ch * 11) % 256).astype(
-                    np.uint8
-                )
-                rows.append((i, encode_png(a, "cycle")))
-            yield pd.DataFrame(rows, columns=["id", "content"])
+    def make_png(i):
+        if i >= _NP_IMGS:  # planted malformed blob (F3)
+            return [(i, b"\x89PNG\r\n\x1a\n\x00trunc")]
+        w, h = 8 + i % 5, 6 + i % 7
+        y, x, ch = np.meshgrid(
+            np.arange(h), np.arange(w), np.arange((1, 3, 4)[i % 3]),
+            indexing="ij",
+        )
+        a = ((i * 7 + y * 5 + x * 3 + ch * 11) % 256).astype(np.uint8)
+        return [(i, encode_png(a, "cycle"))]
 
-    blobs = spark.range(0, _NP_IMGS + 1, 1, 4).mapInPandas(
-        make_pngs, schema="id long, content binary"
+    blobs = map_rows(
+        spark.range(0, _NP_IMGS + 1, 1, 4), make_png, "id long, content binary"
     )
 
-    def stats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for iid, b in zip(pdf["id"], pdf["content"]):
-                arr = _decode_one(bytes(b))
-                if arr is None:
-                    continue  # F3: malformed drops
-                h, w, _ = arr.shape
-                y, x, c = np.meshgrid(
-                    np.arange(h), np.arange(w), np.arange(3),
-                    indexing="ij",
-                )
-                wgt = (y * 31 + x * 17 + c * 7) % 97
-                a64 = arr.astype(np.int64)
-                rows.append(
-                    {
-                        "img_id": int(iid),
-                        "width": int(w),
-                        "height": int(h),
-                        "pix_sum": int(a64.sum()),
-                        "pos_checksum": int((a64 * wgt).sum()),
-                        "v_min": int(a64.min()),
-                        "v_max": int(a64.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "img_id", "width", "height", "pix_sum",
-                    "pos_checksum", "v_min", "v_max",
-                ],
-            )
+    def stats(iid, b):
+        arr = _decode_one(bytes(b))
+        if arr is None:
+            return []  # F3: malformed drops
+        h, w, _ = arr.shape
+        y, x, c = np.meshgrid(
+            np.arange(h), np.arange(w), np.arange(3), indexing="ij"
+        )
+        wgt = (y * 31 + x * 17 + c * 7) % 97
+        a64 = arr.astype(np.int64)
+        return [(
+            iid, w, h, int(a64.sum()), int((a64 * wgt).sum()),
+            int(a64.min()), int(a64.max()),
+        )]
 
-    return blobs.mapInPandas(
+    return map_rows(
+        blobs,
         stats,
-        schema="img_id long, width int, height int, pix_sum long, "
+        "img_id long, width int, height int, pix_sum long, "
         "pos_checksum long, v_min long, v_max long",
     ).orderBy("img_id")
 

@@ -1367,45 +1367,34 @@ def image_dhash_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: decode+hash are scan-stage Arrow work emitting 64
     bits per image; the dedup shuffle carries (hash, id) pairs —
     exactly the exact-dedup layout, pixels never move."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
+    from oracle_vector_search_spark.operators.rowmap import map_rows
     from oracle_vector_search_spark.sources.images import (
         decode_images,
         encode_fake_image,
         image_dhash,
     )
 
-    def make_images(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid in pdf["id"]:
-                m = int(mid)
-                i, j = np.meshgrid(
-                    np.arange(_DH_H, dtype=np.int64),
-                    np.arange(_DH_W, dtype=np.int64),
-                    indexing="ij",
-                )
-                base = (((m // 3) * 53 + i * 17 + j * 29) % 200) + 10
-                perturb = ((m * 7 + i * 3 + j) % 5) - 2
-                gray = (base + perturb).astype(np.uint8)
-                arr = np.dstack([gray, gray, gray])
-                rows.append(
-                    (
-                        f"m{m:02d}",
-                        f"mem/m{m:02d}.fake",
-                        encode_fake_image(arr),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["stem", "path", "content"])
+    def make_image(m):
+        i, j = np.meshgrid(
+            np.arange(_DH_H, dtype=np.int64),
+            np.arange(_DH_W, dtype=np.int64),
+            indexing="ij",
+        )
+        base = (((m // 3) * 53 + i * 17 + j * 29) % 200) + 10
+        perturb = ((m * 7 + i * 3 + j) % 5) - 2
+        gray = (base + perturb).astype(np.uint8)
+        arr = np.dstack([gray, gray, gray])
+        return [(f"m{m:02d}", f"mem/m{m:02d}.fake", encode_fake_image(arr))]
 
     # 4 partitions, not defaultParallelism(32): 60 tiny images over
     # 32 partitions costs 32 python workers PER python stage — under
     # bench-session worker churn that fork cost dwarfs the query
-    imgs = spark.range(0, _DH_IMAGES, 1, 4).mapInPandas(
-        make_images, schema="stem string, path string, content binary"
+    imgs = map_rows(
+        spark.range(0, _DH_IMAGES, 1, 4),
+        make_image,
+        "stem string, path string, content binary",
     )
     hashes = image_dhash(decode_images(imgs)).select(
         F.regexp_extract("stem", r"m(\d+)", 1)

@@ -31,6 +31,7 @@ from oracle_vector_search_spark.operators.ingest import (
     denormalize_boxes,
     parse_yolo_labels,
 )
+from oracle_vector_search_spark.operators.rowmap import map_rows
 from oracle_vector_search_spark.plans.ckpt import pin
 from oracle_vector_search_spark.queries import register
 
@@ -792,7 +793,9 @@ def reference_crops_decode_parity(
     and the decoder's two luma paths agree to <0.05 gray levels
     (dc_consistent; measured max 0.009). sf_dir unused — pinned to the
     reference's shipped data."""
-    import pandas as pd
+    from oracle_vector_search_spark.functions.jpeg_numpy import (
+        jpeg_decode_stats,
+    )
 
     scan = (
         spark.read.format("binaryFile")
@@ -807,33 +810,17 @@ def reference_crops_decode_parity(
         "content",
     )
 
-    def batches(it):
-        from oracle_vector_search_spark.functions.jpeg_numpy import (
-            jpeg_decode_stats,
-        )
+    def decode_stats(stem, nb, b):
+        stats = jpeg_decode_stats(bytes(b))
+        if stats is None:
+            return [(stem, nb, None, None, None)]
+        h, w, idct_m, dc_m = stats
+        return [(stem, nb, h, w, abs(idct_m - dc_m))]
 
-        for pdf in it:
-            rows = []
-            for stem, nb, b in zip(
-                pdf["stem"], pdf["length"], pdf["content"]
-            ):
-                stats = jpeg_decode_stats(bytes(b))
-                if stats is None:
-                    rows.append((stem, int(nb), None, None, None))
-                else:
-                    h, w, idct_m, dc_m = stats
-                    rows.append(
-                        (stem, int(nb), h, w, abs(idct_m - dc_m))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["stem", "nb", "dec_h", "dec_w", "dcdiff"],
-            )
-
-    per = src.mapInPandas(
-        batches,
-        schema="stem string, nb long, dec_h int, dec_w int, "
-        "dcdiff double",
+    per = map_rows(
+        src,
+        decode_stats,
+        "stem string, nb long, dec_h int, dec_w int, dcdiff double",
     )
     return per.groupBy("stem").agg(
         F.count("*").alias("n_files"),
@@ -947,7 +934,18 @@ def reference_crops_pixel_chain_profile(
     is cross-validated by `reference_crops_decode_parity`). sf_dir
     unused — pinned to the reference's shipped data."""
     import numpy as np
-    import pandas as pd
+
+    from oracle_vector_search_spark.functions.embed import (
+        hash_projection_embed_batch,
+    )
+    from oracle_vector_search_spark.functions.jpeg_numpy import (
+        decode_baseline_jpeg,
+    )
+    from oracle_vector_search_spark.sources.images import (
+        _blur3,
+        _cnn_input_tensor,
+        _gamma_lut,
+    )
 
     scan = (
         spark.read.format("binaryFile")
@@ -961,56 +959,28 @@ def reference_crops_pixel_chain_profile(
         "length",
         "content",
     )
+    lut = _gamma_lut(1.5)
 
-    def batches(it):
-        from oracle_vector_search_spark.functions.embed import (
-            hash_projection_embed_batch,
-        )
-        from oracle_vector_search_spark.functions.jpeg_numpy import (
-            decode_baseline_jpeg,
-        )
-        from oracle_vector_search_spark.sources.images import (
-            _blur3,
-            _cnn_input_tensor,
-            _gamma_lut,
-        )
+    def chain_stats(stem, nb, b):
+        arr = decode_baseline_jpeg(bytes(b))
+        if arr is None:  # F3: skip undecodable, never raise
+            return []
+        chain = _blur3(lut[arr])
+        tensor = _cnn_input_tensor(chain)
+        emb = hash_projection_embed_batch([tensor.tobytes()], 8)[0]
+        return [(
+            stem.split("_", 1)[0],
+            nb,
+            arr.shape[0] * arr.shape[1],
+            int(arr.astype(np.int64).sum()),
+            int(chain.astype(np.int64).sum()),
+            int(np.rint(sum(emb) * 1e6)),
+        )]
 
-        lut = _gamma_lut(1.5)
-        for pdf in it:
-            rows = []
-            for stem, nb, b in zip(
-                pdf["stem"], pdf["length"], pdf["content"]
-            ):
-                prefix = stem.split("_", 1)[0]
-                arr = decode_baseline_jpeg(bytes(b))
-                if arr is None:  # F3: skip undecodable, never raise
-                    continue
-                chain = _blur3(lut[arr])
-                tensor = _cnn_input_tensor(chain)
-                emb = hash_projection_embed_batch(
-                    [tensor.tobytes()], 8
-                )[0]
-                rows.append(
-                    (
-                        prefix,
-                        int(nb),
-                        arr.shape[0] * arr.shape[1],
-                        int(arr.astype(np.int64).sum()),
-                        int(chain.astype(np.int64).sum()),
-                        int(np.rint(sum(emb) * 1e6)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "prefix", "nb", "px", "raw_sum", "chain_sum",
-                    "emb_micros",
-                ],
-            )
-
-    per = src.mapInPandas(
-        batches,
-        schema="prefix string, nb long, px long, raw_sum long, "
+    per = map_rows(
+        src,
+        chain_stats,
+        "prefix string, nb long, px long, raw_sum long, "
         "chain_sum long, emb_micros long",
     )
     agg = per.groupBy("prefix").agg(
@@ -1119,7 +1089,17 @@ def reference_crops_clahe_chain_profile(
     importable).  sf_dir unused — pinned to the reference's shipped
     data."""
     import numpy as np
-    import pandas as pd
+
+    from oracle_vector_search_spark.functions.embed import (
+        hash_projection_embed_batch,
+    )
+    from oracle_vector_search_spark.functions.jpeg_numpy import (
+        decode_baseline_jpeg,
+    )
+    from oracle_vector_search_spark.sources.images import (
+        _cnn_input_tensor,
+        _equalize_numpy,
+    )
 
     scan = (
         spark.read.format("binaryFile")
@@ -1133,47 +1113,27 @@ def reference_crops_clahe_chain_profile(
         "content",
     )
 
-    def batches(it):
-        from oracle_vector_search_spark.functions.embed import (
-            hash_projection_embed_batch,
-        )
-        from oracle_vector_search_spark.functions.jpeg_numpy import (
-            decode_baseline_jpeg,
-        )
-        from oracle_vector_search_spark.sources.images import (
-            _cnn_input_tensor,
-            _equalize_numpy,
-        )
+    def clahe_stats(stem, b):
+        arr = decode_baseline_jpeg(bytes(b))
+        if arr is None:  # F3: skip undecodable, never raise
+            return []
+        # decode is RGB; the reference reads BGR (cv2.imread)
+        # and CLAHE's gray weights are order-sensitive
+        eq = _equalize_numpy(arr[:, :, ::-1].copy())
+        emb = hash_projection_embed_batch(
+            [_cnn_input_tensor(eq).tobytes()], 8
+        )[0]
+        return [(
+            stem.split("_", 1)[0],
+            arr.shape[0] * arr.shape[1],
+            int(eq.astype(np.int64).sum()),
+            int(np.rint(sum(emb) * 1e6)),
+        )]
 
-        for pdf in it:
-            rows = []
-            for stem, b in zip(pdf["stem"], pdf["content"]):
-                prefix = stem.split("_", 1)[0]
-                arr = decode_baseline_jpeg(bytes(b))
-                if arr is None:  # F3: skip undecodable, never raise
-                    continue
-                # decode is RGB; the reference reads BGR (cv2.imread)
-                # and CLAHE's gray weights are order-sensitive
-                eq = _equalize_numpy(arr[:, :, ::-1].copy())
-                tensor = _cnn_input_tensor(eq)
-                emb = hash_projection_embed_batch(
-                    [tensor.tobytes()], 8
-                )[0]
-                rows.append(
-                    (
-                        prefix,
-                        arr.shape[0] * arr.shape[1],
-                        int(eq.astype(np.int64).sum()),
-                        int(np.rint(sum(emb) * 1e6)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["prefix", "px", "eq_sum", "emb_micros"]
-            )
-
-    per = src.mapInPandas(
-        batches,
-        schema="prefix string, px long, eq_sum long, emb_micros long",
+    per = map_rows(
+        src,
+        clahe_stats,
+        "prefix string, px long, eq_sum long, emb_micros long",
     )
     agg = per.groupBy("prefix").agg(
         F.count(F.lit(1)).alias("n_crops"),
@@ -1212,6 +1172,7 @@ def _mri_query_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from oracle_vector_search_spark.functions.detect_numpy import (
         MRI_H,
         MRI_W,
+        render_mri_like,
     )
 
     ks = (
@@ -1220,35 +1181,14 @@ def _mri_query_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("p_partkey").cast("int").alias("k"))
     )
 
-    def batches(it):
-        import pandas as pd
+    def frame(k):
+        px = render_mri_like(k).reshape(MRI_H, MRI_W, 1).tobytes()
+        return [(f"q_{k}", MRI_W, MRI_H, 1, px)]
 
-        from oracle_vector_search_spark.functions.detect_numpy import (
-            render_mri_like,
-        )
-
-        for pdf in it:
-            rows = []
-            for k in pdf["k"]:
-                arr = render_mri_like(int(k))
-                rows.append(
-                    {
-                        "stem": f"q_{int(k)}",
-                        "width": MRI_W,
-                        "height": MRI_H,
-                        "channels": 1,
-                        "pixels": arr.reshape(MRI_H, MRI_W, 1).tobytes(),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["stem", "width", "height", "channels", "pixels"],
-            )
-
-    return ks.mapInPandas(
-        batches,
-        schema="stem string, width int, height int, channels int, "
-        "pixels binary",
+    return map_rows(
+        ks,
+        frame,
+        "stem string, width int, height int, channels int, pixels binary",
     )
 
 
@@ -1259,46 +1199,22 @@ def _crop_serialize_best(best: DataFrame) -> DataFrame:
     shuffling every frame's pixels to the ranking stage), numpy-slice
     the crop and serialize it as '<h>x<w>:<row-major csv>' for the
     hash-projection embedder."""
+    from oracle_vector_search_spark.functions.detect_numpy import (
+        render_mri_like,
+    )
 
-    cols = ["stem", "n_boxes", "x1", "y1", "x2", "y2", "conf", "cls"]
+    def serialize(stem, nb, x1, y1, x2, y2, conf, cls):
+        arr = render_mri_like(int(stem.split("_")[1]))
+        vals = ",".join(str(int(v)) for v in arr[y1:y2, x1:x2].ravel())
+        csv = f"{y2 - y1}x{x2 - x1}:" + vals
+        return [(stem, nb, x1, y1, x2, y2, conf, cls, csv)]
 
-    def batches(it):
-        import pandas as pd
-
-        from oracle_vector_search_spark.functions.detect_numpy import (
-            render_mri_like,
-        )
-
-        for pdf in it:
-            out = []
-            for stem, nb, x1, y1, x2, y2, conf, cls in zip(
-                *(pdf[c] for c in cols)
-            ):
-                arr = render_mri_like(int(str(stem).split("_")[1]))
-                crop = arr[int(y1): int(y2), int(x1): int(x2)]
-                vals = ",".join(str(int(v)) for v in crop.ravel())
-                out.append(
-                    {
-                        "stem": stem,
-                        "n_boxes": int(nb),
-                        "x1": int(x1),
-                        "y1": int(y1),
-                        "x2": int(x2),
-                        "y2": int(y2),
-                        "conf": float(conf),
-                        "cls": int(cls),
-                        "crop_csv": (
-                            f"{int(y2) - int(y1)}x{int(x2) - int(x1)}:"
-                            + vals
-                        ),
-                    }
-                )
-            yield pd.DataFrame(out, columns=cols + ["crop_csv"])
-
-    return best.select(*cols).mapInPandas(
-        batches,
-        schema="stem string, n_boxes long, x1 int, y1 int, x2 int, "
+    return map_rows(
+        best,
+        serialize,
+        "stem string, n_boxes long, x1 int, y1 int, x2 int, "
         "y2 int, conf double, cls int, crop_csv string",
+        ["stem", "n_boxes", "x1", "y1", "x2", "y2", "conf", "cls"],
     )
 
 

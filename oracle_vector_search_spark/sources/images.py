@@ -2,10 +2,12 @@
 path (S1/S2, T1-T9) as Spark binary columns + Arrow pandas UDFs.
 
 Design (multimodal-columns pattern): an image is an opaque BINARY
-column plus typed metadata (width, height, channels); every pixel
-operation is a pandas UDF over Arrow batches — model/pixel code runs
-vectorized per batch, never per row, and the DataFrame plan stays
-declarative around it.
+column plus typed metadata (width, height, channels). Decode,
+preprocess, crop, detect and the other per-image steps are row
+kernels run through ``operators.rowmap.map_rows`` (one image in, zero
+or more rows out); only embedding runs per Arrow batch, so a model
+forward covers many crops. The DataFrame plan stays declarative
+around both.
 
 Heavy deps are OPTIONAL: cv2/torch are imported lazily; without them
 - decoding falls back to the engine's deterministic FAKEIMG codec
@@ -24,12 +26,16 @@ app.py:113-125.
 
 from __future__ import annotations
 
+import hashlib
 import struct
+from functools import partial
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from oracle_vector_search_spark.operators.rowmap import map_rows
 
 FAKE_MAGIC = b"FAKEIMG1"
 
@@ -121,37 +127,23 @@ def _decode_one(b: bytes | None):
     return None  # no decoder for this format → F3 drop
 
 
+def _image_array(px, w, h, c) -> np.ndarray:
+    """Headerless ``pixels`` bytes → the (h, w, c) uint8 array."""
+    return np.frombuffer(bytes(px), np.uint8).reshape(int(h), int(w), int(c))
+
+
 def decode_images(df: DataFrame) -> DataFrame:
     """S2: content BINARY → (width, height, channels, pixels BINARY).
     Undecodable rows yield NULL pixels; callers filter (F3)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                "path": pdf["path"],
-                "stem": pdf["stem"],
-                "width": [],
-                "height": [],
-                "channels": [],
-                "pixels": [],
-            }
-            for b in pdf["content"]:
-                arr = _decode_one(bytes(b) if b is not None else None)
-                if arr is None:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["channels"].append(None)
-                    out["pixels"].append(None)
-                else:
-                    out["height"].append(arr.shape[0])
-                    out["width"].append(arr.shape[1])
-                    out["channels"].append(arr.shape[2])
-                    out["pixels"].append(arr.tobytes())
-            yield pd.DataFrame(out)
+    def decode(path, stem, content):
+        arr = _decode_one(None if content is None else bytes(content))
+        if arr is None:
+            return [(path, stem, None, None, None, None)]
+        h, w, c = arr.shape
+        return [(path, stem, w, h, c, arr.tobytes())]
 
-    return df.select("path", "stem", "content").mapInPandas(
-        batches, schema=IMAGE_SCHEMA
-    )
+    return map_rows(df, decode, IMAGE_SCHEMA, ["path", "stem", "content"])
 
 
 # ----------------------------------------- JPEG header metadata (no deps)
@@ -277,23 +269,19 @@ def preprocess_images(
     mismatch by construction (SURVEY.md §1.4.2). mode ∈ {gamma_blur,
     clahe, none}."""
     lut = _gamma_lut(gamma)
+    px, w, h, c = (
+        df.columns.index(n) for n in ("pixels", "width", "height", "channels")
+    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pixels = []
-            for px, w, h, c in zip(
-                pdf["pixels"], pdf["width"], pdf["height"], pdf["channels"]
-            ):
-                if px is None:
-                    pixels.append(None)
-                    continue
-                arr = np.frombuffer(bytes(px), np.uint8).reshape(
-                    int(h), int(w), int(c)
-                )
-                pixels.append(_preprocess_one(arr, mode, lut).tobytes())
-            yield pdf.assign(pixels=pixels)
+    def preprocess(*row):
+        if row[px] is None:
+            return [row]
+        arr = _image_array(row[px], row[w], row[h], row[c])
+        out = list(row)
+        out[px] = _preprocess_one(arr, mode, lut).tobytes()
+        return [tuple(out)]
 
-    return df.mapInPandas(batches, schema=df.schema)
+    return map_rows(df, preprocess, df.schema)
 
 
 def _crop_one(arr: np.ndarray, x1, y1, x2, y2) -> bytes | None:
@@ -306,43 +294,22 @@ def _crop_one(arr: np.ndarray, x1, y1, x2, y2) -> bytes | None:
 def crop_boxes(df: DataFrame) -> DataFrame:
     """T6: numpy slice crop pixels[y1:y2, x1:x2] per row (the box columns
     come from operators.ingest.denormalize_boxes)."""
-    out_schema = (
+
+    def crop(stem, box_idx, class_id, x1, y1, x2, y2, px, w, h, c):
+        if px is not None:
+            px = _crop_one(_image_array(px, w, h, c), x1, y1, x2, y2)
+        return [(stem, box_idx, class_id, x1, y1, x2, y2, px)]
+
+    return map_rows(
+        df,
+        crop,
         "stem string, box_idx long, class_id int, x1 int, y1 int, "
-        "x2 int, y2 int, crop binary"
+        "x2 int, y2 int, crop binary",
+        [
+            "stem", "box_idx", "class_id", "x1", "y1", "x2", "y2",
+            "pixels", "width", "height", "channels",
+        ],
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            crops = []
-            for px, w, h, c, x1, y1, x2, y2 in zip(
-                pdf["pixels"], pdf["width"], pdf["height"], pdf["channels"],
-                pdf["x1"], pdf["y1"], pdf["x2"], pdf["y2"],
-            ):
-                if px is None:
-                    crops.append(None)
-                    continue
-                arr = np.frombuffer(bytes(px), np.uint8).reshape(
-                    int(h), int(w), int(c)
-                )
-                crops.append(_crop_one(arr, x1, y1, x2, y2))
-            yield pd.DataFrame(
-                {
-                    "stem": pdf["stem"],
-                    "box_idx": pdf["box_idx"],
-                    "class_id": pdf["class_id"],
-                    "x1": pdf["x1"],
-                    "y1": pdf["y1"],
-                    "x2": pdf["x2"],
-                    "y2": pdf["y2"],
-                    "crop": crops,
-                }
-            )
-
-    cols = [
-        "stem", "box_idx", "class_id", "x1", "y1", "x2", "y2",
-        "pixels", "width", "height", "channels",
-    ]
-    return df.select(*cols).mapInPandas(batches, schema=out_schema)
 
 
 def embed_labelled_crops(
@@ -528,16 +495,11 @@ def embed_crops(
             if b is None:
                 arrays.append(None)
                 continue
-            raw = bytes(b)
             h, w = int(y2) - int(y1), int(x2) - int(x1)
-            if h <= 0 or w <= 0 or len(raw) % (h * w):
+            if h <= 0 or w <= 0 or len(b) % (h * w):
                 arrays.append(None)
                 continue
-            arrays.append(
-                np.frombuffer(raw, np.uint8).reshape(
-                    h, w, len(raw) // (h * w)
-                )
-            )
+            arrays.append(_image_array(b, w, h, len(b) // (h * w)))
         return arrays
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -575,46 +537,54 @@ def embed_crops(
 
 
 # ------------------------------------------------------------ T9: detect
+_BOX_SCHEMA = (
+    "stem string, box_idx int, x1 int, y1 int, x2 int, y2 int, "
+    "area int, conf double, cls int"
+)
+_IMAGE_COLS = ["stem", "pixels", "width", "height", "channels"]
+
+
 def detect_boxes(df: DataFrame) -> DataFrame:
-    """Detector (UDTF shape): pixels → ARRAY<STRUCT<x1,y1,x2,y2,conf,
-    cls>> then explode. Deterministic stub: one centered box covering
-    the middle half, conf from the content hash — the YOLO path
-    (app.py:113-125) plugs in here when ultralytics is available."""
-    out_schema = (
-        "stem string, x1 int, y1 int, x2 int, y2 int, conf double, cls int"
+    """Detector (UDTF shape): a row map from one image's pixels to its
+    boxes (x1, y1, x2, y2, conf, cls); NULL pixels give no row (F5).
+    Deterministic stub: one centered box covering the middle half, conf
+    from the content hash — the YOLO path (app.py:113-125) plugs in
+    here when ultralytics is available."""
+
+    def detect(stem, px, w, h):
+        if px is None:
+            return []  # F5: no detection
+        hsh = hashlib.md5(bytes(px)).hexdigest()
+        conf = int(hsh[:6], 16) / float(0xFFFFFF)
+        w, h = int(w), int(h)
+        return [(
+            stem, w // 4, h // 4, 3 * w // 4, 3 * h // 4, round(conf, 6),
+            int(hsh[6], 16) % 4,
+        )]
+
+    return map_rows(
+        df,
+        detect,
+        "stem string, x1 int, y1 int, x2 int, y2 int, conf double, cls int",
+        ["stem", "pixels", "width", "height"],
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
 
-        for pdf in it:
-            rows = []
-            for stem, px, w, h in zip(
-                pdf["stem"], pdf["pixels"], pdf["width"], pdf["height"]
-            ):
-                if px is None:
-                    continue  # F5: no detection
-                hsh = hashlib.md5(bytes(px)).hexdigest()
-                conf = int(hsh[:6], 16) / float(0xFFFFFF)
-                rows.append(
-                    {
-                        "stem": stem,
-                        "x1": int(w) // 4,
-                        "y1": int(h) // 4,
-                        "x2": 3 * int(w) // 4,
-                        "y2": 3 * int(h) // 4,
-                        "conf": round(conf, 6),
-                        "cls": int(hsh[6], 16) % 4,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["stem", "x1", "y1", "x2", "y2", "conf", "cls"],
-            )
-
-    return df.select("stem", "pixels", "width", "height").mapInPandas(
-        batches, schema=out_schema
-    )
+def _detect_rows(propose, stem, px, w, h, c) -> list[tuple]:
+    """The row kernel of the detect tiers: one decoded image → one
+    ``_BOX_SCHEMA`` row per box ``propose(arr)`` returns, ``box_idx``
+    in its rank order. NULL pixels never reach ``propose`` and give no
+    row (F3/F5, undecodable frames yield zero detections)."""
+    if px is None:
+        return []
+    boxes = propose(_image_array(px, w, h, c))
+    return [
+        (
+            stem, i, b["x1"], b["y1"], b["x2"], b["y2"], b["area"],
+            b["conf"], b["cls"],
+        )
+        for i, b in enumerate(boxes)
+    ]
 
 
 def detect_boxes_numpy(df: DataFrame, min_area: int | None = None) -> DataFrame:
@@ -631,36 +601,10 @@ def detect_boxes_numpy(df: DataFrame, min_area: int | None = None) -> DataFrame:
     )
 
     ma = DEFAULT_MIN_AREA if min_area is None else min_area
-    out_schema = (
-        "stem string, box_idx int, x1 int, y1 int, x2 int, y2 int, "
-        "area int, conf double, cls int"
+    propose = partial(propose_boxes, min_area=ma)
+    return map_rows(
+        df, partial(_detect_rows, propose), _BOX_SCHEMA, _IMAGE_COLS
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for stem, px, w, h, c in zip(
-                pdf["stem"], pdf["pixels"], pdf["width"], pdf["height"],
-                pdf["channels"],
-            ):
-                if px is None:
-                    continue  # F3/F5: undecodable → no detections
-                arr = np.frombuffer(bytes(px), np.uint8).reshape(
-                    int(h), int(w), int(c)
-                )
-                for i, b in enumerate(propose_boxes(arr, min_area=ma)):
-                    rows.append({"stem": stem, "box_idx": i, **b})
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "stem", "box_idx", "x1", "y1", "x2", "y2", "area",
-                    "conf", "cls",
-                ],
-            )
-
-    return df.select(
-        "stem", "pixels", "width", "height", "channels"
-    ).mapInPandas(batches, schema=out_schema)
 
 
 _YOLO_CACHE: dict[str, object] = {}  # per-executor-process model cache
@@ -717,24 +661,9 @@ def _yolo_boxes_one(model, arr: np.ndarray) -> list[dict]:
     return out
 
 
-def _yolo_detect_batch(model, pdf: pd.DataFrame) -> list[dict]:
-    """One Arrow batch of decoded image rows → detection rows. NULL
-    pixels skip (F3/F5 — undecodable frames yield zero detections,
-    never an error). Shared kernel so the ungated fake-ultralytics
-    contract test exercises exactly what the Spark stage runs."""
-    rows: list[dict] = []
-    for stem, px, w, h, c in zip(
-        pdf["stem"], pdf["pixels"], pdf["width"], pdf["height"],
-        pdf["channels"],
-    ):
-        if px is None:
-            continue
-        arr = np.frombuffer(bytes(px), np.uint8).reshape(
-            int(h), int(w), int(c)
-        )
-        for i, b in enumerate(_yolo_boxes_one(model, arr)):
-            rows.append({"stem": stem, "box_idx": i, **b})
-    return rows
+def _yolo_propose(weights: str, arr: np.ndarray) -> list[dict]:
+    """``_yolo_boxes_one`` with the executor's cached model."""
+    return _yolo_boxes_one(_yolo_model(weights), arr)
 
 
 def detect_boxes_yolo(
@@ -759,25 +688,10 @@ def detect_boxes_yolo(
             "at the same seam"
         ) from exc
 
-    out_schema = (
-        "stem string, box_idx int, x1 int, y1 int, x2 int, y2 int, "
-        "area int, conf double, cls int"
+    propose = partial(_yolo_propose, weights)
+    return map_rows(
+        df, partial(_detect_rows, propose), _BOX_SCHEMA, _IMAGE_COLS
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = _yolo_model(weights)
-        for pdf in it:
-            yield pd.DataFrame(
-                _yolo_detect_batch(model, pdf),
-                columns=[
-                    "stem", "box_idx", "x1", "y1", "x2", "y2", "area",
-                    "conf", "cls",
-                ],
-            )
-
-    return df.select(
-        "stem", "pixels", "width", "height", "channels"
-    ).mapInPandas(batches, schema=out_schema)
 
 
 _IMAGENET_MEAN = np.array([0.485, 0.456, 0.406], dtype=np.float32)
@@ -811,39 +725,19 @@ def cnn_preprocess(
 ) -> DataFrame:
     """T7: the reference's CNN input pipeline (Resize 256 → CenterCrop
     224 → scale to [0,1] → ImageNet mean/std normalize,
-    build_faiss_db.py:117-124) as one numpy pandas UDF. Output float32
+    build_faiss_db.py:117-124) as one numpy row map. Output float32
     CHW tensors as binary — the exact shape a torch embedder consumes."""
-    out_schema = "stem string, tensor binary, c int, h int, w int"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for stem, px, w, h, ch in zip(
-                pdf["stem"], pdf["pixels"], pdf["width"], pdf["height"],
-                pdf["channels"],
-            ):
-                if px is None:
-                    continue
-                arr = np.frombuffer(bytes(px), np.uint8).reshape(
-                    int(h), int(w), int(ch)
-                )
-                t = _cnn_input_tensor(arr, resize_to, crop_to)
-                rows.append(
-                    {
-                        "stem": stem,
-                        "tensor": t.tobytes(),
-                        "c": t.shape[0],
-                        "h": t.shape[1],
-                        "w": t.shape[2],
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["stem", "tensor", "c", "h", "w"]
-            )
+    def tensor(stem, px, w, h, c):
+        if px is None:
+            return []
+        t = _cnn_input_tensor(_image_array(px, w, h, c), resize_to, crop_to)
+        return [(stem, t.tobytes(), *t.shape)]
 
-    return df.select(
-        "stem", "pixels", "width", "height", "channels"
-    ).mapInPandas(batches, schema=out_schema)
+    return map_rows(
+        df, tensor, "stem string, tensor binary, c int, h int, w int",
+        _IMAGE_COLS,
+    )
 
 
 def image_dhash(df: DataFrame) -> DataFrame:
@@ -858,38 +752,15 @@ def image_dhash(df: DataFrame) -> DataFrame:
     Input: decoded rows (stem, pixels, width, height, channels).
     Output: (stem, dhash). Robust to small brightness perturbations by
     construction — the dedup signal for near-identical crops/thumbs."""
-    out_schema = "stem string, dhash string"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for stem, px, w, h, ch in zip(
-                pdf["stem"],
-                pdf["pixels"],
-                pdf["width"],
-                pdf["height"],
-                pdf["channels"],
-            ):
-                if px is None:
-                    continue
-                arr = np.frombuffer(bytes(px), np.uint8).reshape(
-                    int(h), int(w), int(ch)
-                )
-                g = arr.mean(axis=2)
-                yi = (np.arange(8) * int(h) // 8).astype(int)
-                xi = (np.arange(9) * int(w) // 9).astype(int)
-                r = g[np.ix_(yi, xi)]
-                bits = (r[:, 1:] > r[:, :-1]).astype(np.uint8)
-                rows.append(
-                    {
-                        "stem": stem,
-                        "dhash": "".join(
-                            "1" if b else "0" for b in bits.ravel()
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["stem", "dhash"])
+    def dhash(stem, px, w, h, c):
+        if px is None:
+            return []
+        g = _image_array(px, w, h, c).mean(axis=2)
+        yi = (np.arange(8) * int(h) // 8).astype(int)
+        xi = (np.arange(9) * int(w) // 9).astype(int)
+        r = g[np.ix_(yi, xi)]
+        bits = r[:, 1:] > r[:, :-1]
+        return [(stem, "".join("1" if b else "0" for b in bits.ravel()))]
 
-    return df.select(
-        "stem", "pixels", "width", "height", "channels"
-    ).mapInPandas(batches, schema=out_schema)
+    return map_rows(df, dhash, "stem string, dhash string", _IMAGE_COLS)

@@ -1,12 +1,12 @@
 """Audio / video multimodal columns (training-data pipeline surface).
 
 Same pattern as images (sources/images.py): media is an opaque BINARY
-column with typed metadata; every transform is an Arrow pandas UDF over
-``mapInPandas`` batches so the plumbing — schemas, batch iteration,
-explode shapes, partitioning — is real and tested.  Audio is no longer
-stub-only: genuine RIFF/WAVE PCM bytes decode through the
-dependency-free numpy codec (``functions/wav_numpy.py``, same move as
-the JPEG codec for images).  Neither is video: AVI/MJPEG files decode
+column with typed metadata; every transform is a row kernel run through
+``operators.rowmap.map_rows`` (one ``mapInPandas`` stage), so the
+plumbing — schemas, batch iteration, explode shapes, partitioning — is
+real and tested.  Audio is no longer stub-only: genuine RIFF/WAVE PCM
+bytes decode through the dependency-free numpy codec
+(``functions/wav_numpy.py``, same move as the JPEG codec for images).  Neither is video: AVI/MJPEG files decode
 through ``functions/avi_numpy.py`` (RIFF chunk walk + per-frame
 baseline-JPEG decode).  soundfile/ffmpeg remain optional tiers for
 formats outside those scopes (flac/ogg/mp4/webm).
@@ -21,11 +21,11 @@ for real media so every operator is testable end-to-end:
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from oracle_vector_search_spark.operators.rowmap import map_rows
 
 VID_MAGIC = b"FAKEVID1"
 AUD_MAGIC = b"FAKEAUD1"
@@ -110,34 +110,22 @@ def video_frame_sample(df: DataFrame, every_k: int = 2) -> DataFrame:
     """Frame sampling (1→N, UDTF shape): every k-th frame becomes a row
     (id, frame_idx, width, height, frame BINARY). Undecodable videos
     drop (F3 semantics)."""
-    out_schema = (
-        "id long, frame_idx int, width int, height int, frame binary"
+
+    def sample(vid, content):
+        frames = _decode_video(None if content is None else bytes(content))
+        if frames is None:
+            return []
+        n, h, w = frames.shape
+        return [
+            (vid, i, w, h, frames[i].tobytes()) for i in range(0, n, every_k)
+        ]
+
+    return map_rows(
+        df,
+        sample,
+        "id long, frame_idx int, width int, height int, frame binary",
+        ["id", "content"],
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for vid, b in zip(pdf["id"], pdf["content"]):
-                frames = _decode_video(
-                    bytes(b) if b is not None else None
-                )
-                if frames is None:
-                    continue
-                for i in range(0, frames.shape[0], every_k):
-                    rows.append(
-                        {
-                            "id": vid,
-                            "frame_idx": i,
-                            "width": frames.shape[2],
-                            "height": frames.shape[1],
-                            "frame": frames[i].tobytes(),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["id", "frame_idx", "width", "height", "frame"]
-            )
-
-    return df.select("id", "content").mapInPandas(batches, schema=out_schema)
 
 
 def resize_frames(
@@ -145,25 +133,21 @@ def resize_frames(
 ) -> DataFrame:
     """Nearest-neighbor resize of grayscale frames (numpy index grid —
     deterministic, no interpolation library)."""
+    fb, w, h = (df.columns.index(n) for n in (frame_col, "width", "height"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for b, w, h in zip(pdf[frame_col], pdf["width"], pdf["height"]):
-                if b is None:
-                    out.append(None)
-                    continue
-                arr = np.frombuffer(bytes(b), np.uint8).reshape(
-                    int(h), int(w)
-                )
-                yi = (np.arange(out_h) * h // out_h).astype(int)
-                xi = (np.arange(out_w) * w // out_w).astype(int)
-                out.append(arr[np.ix_(yi, xi)].tobytes())
-            yield pdf.assign(
-                **{frame_col: out, "width": out_w, "height": out_h}
+    def resize(*row):
+        out = list(row)
+        out[w], out[h] = out_w, out_h
+        if row[fb] is not None:
+            arr = np.frombuffer(bytes(row[fb]), np.uint8).reshape(
+                int(row[h]), int(row[w])
             )
+            yi = (np.arange(out_h) * row[h] // out_h).astype(int)
+            xi = (np.arange(out_w) * row[w] // out_w).astype(int)
+            out[fb] = arr[np.ix_(yi, xi)].tobytes()
+        return [tuple(out)]
 
-    return df.mapInPandas(batches, schema=df.schema)
+    return map_rows(df, resize, df.schema)
 
 
 def decode_audio_samples(df: DataFrame) -> DataFrame:
@@ -173,77 +157,47 @@ def decode_audio_samples(df: DataFrame) -> DataFrame:
     JVM-side, whole-stage-codegen'd) instead of Python. Real WAV bytes
     take the numpy codec tier; FAKEAUD1 takes the test container;
     undecodable rows drop (F3)."""
-    out_schema = "id long, sample_rate int, samples array<int>"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for aid, b in zip(pdf["id"], pdf["content"]):
-                dec = _decode_audio(bytes(b) if b is not None else None)
-                if dec is None:
-                    continue
-                sr, x = dec
-                rows.append(
-                    {
-                        "id": aid,
-                        "sample_rate": int(sr),
-                        "samples": x.astype(np.int32).tolist(),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["id", "sample_rate", "samples"]
-            )
+    def decode(aid, content):
+        dec = _decode_audio(None if content is None else bytes(content))
+        if dec is None:
+            return []
+        sr, x = dec
+        return [(aid, int(sr), x.astype(np.int32).tolist())]
 
-    return df.select("id", "content").mapInPandas(batches, schema=out_schema)
+    return map_rows(
+        df, decode, "id long, sample_rate int, samples array<int>",
+        ["id", "content"],
+    )
 
 
 def audio_features(df: DataFrame) -> DataFrame:
     """Per-clip acoustic features: duration, RMS, zero-crossing rate,
     peak — the deterministic stand-ins for MFCC-style extraction
     (librosa plugs in behind the same schema)."""
-    out_schema = (
+
+    def features(aid, content):
+        dec = _decode_audio(None if content is None else bytes(content))
+        if dec is None:
+            return []
+        sr, x = dec
+        n = len(x)
+        xf = x.astype(np.float64)
+        zc = int(np.sum(np.abs(np.diff(np.signbit(xf))))) if n > 1 else 0
+        return [(
+            aid,
+            int(sr),
+            n,
+            round(n / sr, 6),
+            round(float(np.sqrt(np.mean(xf * xf))), 6),
+            round(zc / max(n - 1, 1), 6),
+            int(np.max(np.abs(xf))) if n else 0,
+        )]
+
+    return map_rows(
+        df,
+        features,
         "id long, sample_rate int, n_samples long, duration_sec double, "
-        "rms double, zero_crossing_rate double, peak int"
+        "rms double, zero_crossing_rate double, peak int",
+        ["id", "content"],
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for aid, b in zip(pdf["id"], pdf["content"]):
-                dec = _decode_audio(bytes(b) if b is not None else None)
-                if dec is None:
-                    continue
-                sr, x = dec
-                xf = x.astype(np.float64)
-                zc = int(np.sum(np.abs(np.diff(np.signbit(xf))))) if len(
-                    x
-                ) > 1 else 0
-                rows.append(
-                    {
-                        "id": aid,
-                        "sample_rate": int(sr),
-                        "n_samples": len(x),
-                        "duration_sec": round(len(x) / sr, 6),
-                        "rms": round(
-                            float(np.sqrt(np.mean(xf * xf))), 6
-                        ),
-                        "zero_crossing_rate": round(
-                            zc / max(len(x) - 1, 1), 6
-                        ),
-                        "peak": int(np.max(np.abs(xf))) if len(x) else 0,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id",
-                    "sample_rate",
-                    "n_samples",
-                    "duration_sec",
-                    "rms",
-                    "zero_crossing_rate",
-                    "peak",
-                ],
-            )
-
-    return df.select("id", "content").mapInPandas(batches, schema=out_schema)

@@ -85,12 +85,15 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
-    """Start → processAllAvailable → stop; return the memory-sink table."""
+    """Start → processAllAvailable → stop; return the memory-sink table.
+    The checkpoint lives in a scratch directory: Spark removes one it
+    made itself only when the query succeeds."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
     q = (
         stream_df.writeStream.outputMode(output_mode)
         .format("memory")
         .queryName(name)
+        .option("checkpointLocation", scratch_dir("ovs_mem_"))
         .start()
     )
     try:
@@ -856,35 +859,28 @@ def audio_vad_admission_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     and rejected bytes never reach the training store. The clips are
     synthesized, so the stream does not read ``sf_dir``."""
     import numpy as np
-    import pandas as pd
 
     from oracle_vector_search_spark.functions.wav_numpy import (
         encode_wav_pcm16,
     )
+    from oracle_vector_search_spark.operators.rowmap import map_rows
     from oracle_vector_search_spark.sources.media import (
         decode_audio_samples,
     )
 
-    def make_wavs(it):
-        for pdf in it:
-            rows = []
-            for cid in pdf["id"]:
-                c = int(cid)
-                t = np.arange(SAVA_N, dtype=np.int64)
-                k = t // SAVA_FRAME
-                voiced = ((c * 13 + k * 7) % 5) < (c % 6)
-                s = np.where(
-                    voiced,
-                    ((c * 31 + t * 17) % 4096) - 2048,
-                    ((c * 31 + t * 17) % 64) - 32,
-                )
-                rows.append(
-                    (c, encode_wav_pcm16(s.astype(np.int16), 16000))
-                )
-            yield pd.DataFrame(rows, columns=["id", "content"])
+    def make_wav(c):
+        t = np.arange(SAVA_N, dtype=np.int64)
+        k = t // SAVA_FRAME
+        voiced = ((c * 13 + k * 7) % 5) < (c % 6)
+        s = np.where(
+            voiced,
+            ((c * 31 + t * 17) % 4096) - 2048,
+            ((c * 31 + t * 17) % 64) - 32,
+        )
+        return [(c, encode_wav_pcm16(s.astype(np.int16), 16000))]
 
-    clips = spark.range(SAVA_CLIPS).mapInPandas(
-        make_wavs, schema="id long, content binary"
+    clips = map_rows(
+        spark.range(SAVA_CLIPS), make_wav, "id long, content binary"
     )
 
     def decide_batch(batch: DataFrame, prev: DataFrame | None) -> DataFrame:

@@ -38,7 +38,22 @@ def test_probe_is_fixed_work():
     hold (that's the condition the probe exists to DETECT), so the
     test skips rather than flake: adjudicating the adjudicator needs
     a quiet bench, same as any other timing assertion."""
+    import time
+
     import pytest
+
+    # The 1-minute load average still carries the Spark work of the
+    # tests that ran just before this one in the same session (seen:
+    # load1 4.8-6.7 right after the api tests, on a parent checkout
+    # too). That is our own past load, not external load now, and with
+    # the session idle it decays on its 60 s time constant; wait for
+    # it, bounded, before judging whether the host is quiet.
+    deadline = time.time() + 60.0
+    while time.time() < deadline:
+        load = bench.read_loadavg()
+        if load is None or load[0] <= 4.0:
+            break
+        time.sleep(1.0)
 
     probes = [bench.ambient_probe() for _ in range(4)]
     load1 = max(

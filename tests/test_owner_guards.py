@@ -8,6 +8,9 @@
 * ``api.upsert_index`` is the one write path of the index
   (``api.build_index`` upserts into an empty index): ``api.py`` calls
   ``assign_index_ids_two_phase`` and ``write_index_table`` once each.
+* ``operators.rowmap.map_rows`` is the one Arrow batch loop for row
+  kernels: only it and the batch-wise stages in ``_BATCH_MAPS`` call
+  ``mapInPandas``, ``applyInPandas`` or ``mapInArrow``.
 """
 
 from __future__ import annotations
@@ -21,6 +24,26 @@ _PKG = os.path.join(
     "oracle_vector_search_spark",
 )
 _STREAM_OWNERS = {("streaming/ops.py", "drain_file_stream")}
+_PANDAS_MAPS = {"mapInPandas", "applyInPandas", "mapInArrow"}
+# (file, top-level function) → why it works on a batch or group, not a row
+_BATCH_MAPS = {
+    ("operators/rowmap.py", "map_rows"): "the row-map helper itself",
+    ("operators/knn.py", "knn_exact_gemm"): "one GEMM per batch",
+    ("operators/knn.py", "knn_exact_gemm_int8"): "one int8 GEMM per batch",
+    ("operators/linalg.py", "gram_matrix"): "one partial Gram matrix "
+    "per batch",
+    ("operators/chunking.py", "pack_chunks_greedy"): "sequential greedy "
+    "packing over a whole shard",
+    ("sources/images.py", "embed_crops"): "one embedding call per batch",
+    ("sources/images.py", "embed_labelled_crops"): "a cogroup per stem, "
+    "its crops embedded in one call",
+    ("queries/grouped_map_queries.py", "grouped_map_centroids"): "a "
+    "numpy mean per label group",
+    ("queries/grouped_map_queries.py", "cogroup_user_reconcile"): "a "
+    "cogroup per user",
+    ("queries/curation_queries.py", "video_keyframe_knn"): "one "
+    "embedding call per batch of frames",
+}
 
 
 def _engine_sources():
@@ -83,3 +106,15 @@ def test_one_index_write_path():
     )
     assert calls["assign_index_ids_two_phase"] == 1
     assert calls["write_index_table"] == 1
+
+
+def test_row_kernels_run_through_map_rows():
+    found = _owners_of(
+        lambda n: isinstance(n, ast.Attribute) and n.attr in _PANDAS_MAPS
+    )
+    assert found <= set(_BATCH_MAPS), (
+        "run row kernels through operators.rowmap.map_rows: "
+        f"{sorted(found - set(_BATCH_MAPS))}"
+    )
+    # a stale allow-list entry hides nothing but misleads the reader
+    assert found == set(_BATCH_MAPS), sorted(set(_BATCH_MAPS) - found)

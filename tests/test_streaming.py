@@ -286,20 +286,41 @@ def test_drain_resumes_from_its_checkpoint(spark, tmp_path):
     assert _ids(out) == _ids(whole) == [10 * i for i in range(40)]
 
 
+def _jvm_temporaries(spark):
+    """The checkpoint directories Spark made itself in the JVM's
+    ``java.io.tmpdir``."""
+    tmp = spark.sparkContext._jvm.System.getProperty("java.io.tmpdir")
+    return {f for f in os.listdir(tmp) if f.startswith("temporary-")}
+
+
 def test_failed_drain_leaves_no_temporary_checkpoint(spark):
     """Spark deletes a checkpoint it created itself only when the query
     succeeds; the driver's checkpoint lives under its scratch root, so a
     failed stream leaves nothing in the JVM's temp directory."""
-    tmp = spark.sparkContext._jvm.System.getProperty("java.io.tmpdir")
-
-    def temporaries():
-        return {f for f in os.listdir(tmp) if f.startswith("temporary-")}
-
-    before = temporaries()
+    before = _jvm_temporaries(spark)
     with pytest.raises(StreamingQueryException):
         ops.drain_file_stream(
             spark.range(40),
             "id long",
             _failing_on(2, lambda batch, prev: batch),
         )
-    assert temporaries() <= before
+    assert _jvm_temporaries(spark) <= before
+
+
+def test_failed_memory_stream_leaves_no_temporary_checkpoint(
+    spark, tmp_path
+):
+    """The same for ``run_to_memory``: a stateful stream whose UDF
+    raises leaves nothing in the JVM's temp directory."""
+    src = str(tmp_path / "src")
+    spark.range(40).write.parquet(src)
+    boom = F.udf(lambda i: i // 0, "long")
+    counts = (
+        spark.readStream.schema("id long").parquet(src)
+        .groupBy(boom("id").alias("k"))
+        .count()
+    )
+    before = _jvm_temporaries(spark)
+    with pytest.raises(StreamingQueryException):
+        ops.run_to_memory(counts, "complete")
+    assert _jvm_temporaries(spark) <= before

@@ -27,9 +27,9 @@ from __future__ import annotations
 
 import sys
 import types
+from functools import partial
 
 import numpy as np
-import pandas as pd
 import pytest
 
 
@@ -127,29 +127,30 @@ def test_boxes_conf_cls_wiring_and_top1(fake_ultralytics):
 
 
 def test_no_detection_and_null_pixel_propagation(fake_ultralytics):
+    """Through the detect tiers' row kernel, as the Spark stage of
+    ``detect_boxes_yolo`` runs it, one image row at a time."""
     from oracle_vector_search_spark.sources.images import (
-        _yolo_detect_batch, _yolo_model,
+        _detect_rows, _yolo_model, _yolo_propose,
     )
 
     model = _yolo_model("best.pt")
+    propose = partial(_yolo_propose, "best.pt")
     flat = _frame(fill=0)  # fake returns zero boxes → F5
     live = _frame()
-    pdf = pd.DataFrame(
-        {
-            "stem": ["dead", "null", "live"],
-            "pixels": [flat.tobytes(), None, live.tobytes()],
-            "width": [24, 24, 24],
-            "height": [32, 32, 32],
-            "channels": [3, 3, 3],
-        }
-    )
-    rows = _yolo_detect_batch(model, pdf)
+    rows = [
+        r
+        for stem, px in [
+            ("dead", flat.tobytes()), ("null", None), ("live", live.tobytes())
+        ]
+        for r in _detect_rows(propose, stem, px, 24, 32, 3)
+    ]
 
     # NULL pixels never reach the model (F3); flat frame yields zero
     # rows (F5); only the live frame detects
     assert model.calls == [(32, 24, 3), (32, 24, 3)]
-    assert {r["stem"] for r in rows} == {"live"}
-    assert [r["box_idx"] for r in rows] == [0, 1, 2]
+    assert {r[0] for r in rows} == {"live"}
+    assert [r[1] for r in rows] == [0, 1, 2]
+    assert rows[0] == ("live", 0, 4, 4, 20, 20, 256, 0.9, 1)
 
 
 def test_model_cached_per_weights(fake_ultralytics):
