@@ -26,12 +26,13 @@ Two tiers:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from oracle_vector_search_spark.functions.vector import (
     as_double_array,
     cosine_similarity,
 )
+from oracle_vector_search_spark.operators.topk import top_k_per_group
 
 N_PLANES = 16
 N_BANDS = 4
@@ -230,12 +231,8 @@ def lsh_ann_topk(
             F.round(cosine_similarity("qv", "nv"), 6).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return top_k_per_group(
+        scored, ["query_id"], k, F.desc("score"), F.asc("neighbor_id")
     )
 
 
@@ -315,14 +312,9 @@ def ivf_assign(
         "seed_id",
         F.round(cosine_similarity("v", "sv"), 6).alias("seed_score"),
     )
-    w = Window.partitionBy(id_col).orderBy(
-        F.desc("seed_score"), F.asc("seed_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(F.col(id_col), F.col("seed_id").alias("cluster_id"))
-    )
+    return top_k_per_group(
+        scored, [id_col], 1, F.desc("seed_score"), F.asc("seed_id")
+    ).select(F.col(id_col), F.col("seed_id").alias("cluster_id"))
 
 
 def ivf_closure_assign(
@@ -355,12 +347,9 @@ def ivf_closure_assign(
         "seed_id",
         F.round(cosine_similarity("v", "sv"), 6).alias("seed_score"),
     )
-    w = Window.partitionBy(id_col).orderBy(
-        F.desc("seed_score"), F.asc("seed_id")
-    )
-    out = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= n_assign)
+    out = top_k_per_group(
+        scored, [id_col], n_assign, F.desc("seed_score"), F.asc("seed_id"),
+        rank_col="rn",
     )
     cols = [F.col(id_col), F.col("seed_id").alias("cluster_id")]
     if with_rank:
@@ -405,14 +394,9 @@ def ivf_ann_topk(
         "seed_id",
         F.round(cosine_similarity("qv", "sv"), 6).alias("seed_score"),
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("seed_score"), F.asc("seed_id")
-    )
-    probes = (
-        qscored.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "qv", F.col("seed_id").alias("cluster_id"))
-    )
+    probes = top_k_per_group(
+        qscored, ["query_id"], n_probe, F.desc("seed_score"), F.asc("seed_id")
+    ).select("query_id", "qv", F.col("seed_id").alias("cluster_id"))
     members = assign.select(
         F.col(id_col).alias("neighbor_id"), "cluster_id"
     )
@@ -426,12 +410,8 @@ def ivf_ann_topk(
         "neighbor_id",
         F.round(cosine_similarity("qv", "nv"), 6).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return top_k_per_group(
+        scored, ["query_id"], k, F.desc("score"), F.asc("neighbor_id")
     )
 
 

@@ -26,12 +26,13 @@ from __future__ import annotations
 
 from typing import Iterator
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from oracle_vector_search_spark.functions.vector import (
     as_double_array,
     cosine_similarity,
 )
+from oracle_vector_search_spark.operators.topk import top_k_per_group
 
 SCORE_DECIMALS = 6  # oracle comparison policy, SURVEY.md §5.2
 
@@ -71,12 +72,8 @@ def knn_exact(
         v.join(F.broadcast(q))  # cross join; index side streams, no shuffle
         .select("query_id", "neighbor_id", score.alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return top_k_per_group(
+        scored, ["query_id"], k, F.desc("score"), F.asc("neighbor_id")
     )
 
 
@@ -256,13 +253,9 @@ def knn_exact_gemm(
     score = F.when(F.isnan("score"), None).otherwise(F.col("score"))
     if round_decimals is not None:
         score = F.round(score, round_decimals)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        candidates.select("query_id", "neighbor_id", score.alias("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return top_k_per_group(
+        candidates.select("query_id", "neighbor_id", score.alias("score")),
+        ["query_id"], k, F.desc("score"), F.asc("neighbor_id"),
     )
 
 
@@ -356,8 +349,8 @@ def knn_exact_gemm_int8(
 
     qid = query_id_col or id_col
     qvec = query_vec_col or vec_col
-    # guard BEFORE materializing (the old post-collect check would
-    # already have paid the driver memory it was refusing)
+    # guard before collecting, so a refused query set costs no driver
+    # memory
     n_queries = query_df.count()
     if n_queries > max_queries:
         raise ValueError(
@@ -430,14 +423,9 @@ def knn_exact_gemm_int8(
     cand = codes.mapInPandas(
         stage1, schema="query_id long, neighbor_id long, iscore long"
     )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.desc("iscore"), F.asc("neighbor_id")
-    )
-    cand = (
-        cand.withColumn("__r", F.row_number().over(w1))
-        .filter(F.col("__r") <= refine)
-        .select("query_id", "neighbor_id")
-    )
+    cand = top_k_per_group(
+        cand, ["query_id"], refine, F.desc("iscore"), F.asc("neighbor_id")
+    ).select("query_id", "neighbor_id")
 
     # stage 2: exact float rescore of candidates only
     q = _prep(query_df, qid, qvec, "query_id", "q_vec")
@@ -454,12 +442,8 @@ def knn_exact_gemm_int8(
         )
         .select("query_id", "neighbor_id", score.alias("score"))
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
+    return top_k_per_group(
+        rescored, ["query_id"], k, F.desc("score"), F.asc("neighbor_id")
     )
 
 

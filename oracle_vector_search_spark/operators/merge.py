@@ -19,7 +19,9 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from oracle_vector_search_spark.operators.topk import top_k_per_group
 
 
 def merge_upsert(
@@ -38,11 +40,7 @@ def merge_upsert(
     tagged = base.withColumn("__src", F.lit(0)).unionByName(
         updates.withColumn("__src", F.lit(1))
     )
-    w = Window.partitionBy(*keys).orderBy(
-        *[F.desc(c) for c in order_cols], F.desc("__src")
-    )
-    return (
-        tagged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__src")
-    )
+    return top_k_per_group(
+        tagged, keys, 1, *[F.desc(c) for c in order_cols], F.desc("__src"),
+        rank_col="__rn",
+    ).drop("__rn", "__src")

@@ -21,8 +21,9 @@ of the corpus the graph was built from.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
+from oracle_vector_search_spark.operators.topk import top_k_per_group
 from oracle_vector_search_spark.plans.ckpt import pin, unpin
 
 
@@ -117,14 +118,9 @@ def propagate_labels(
             .groupBy("src", "lbl")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        w_mode = Window.partitionBy("src").orderBy(
-            F.desc("c"), F.asc("lbl")
-        )
-        mode = (
-            votes.withColumn("rn", F.row_number().over(w_mode))
-            .filter(F.col("rn") == 1)
-            .select(F.col("src").alias("_mn"), F.col("lbl").alias("_ml"))
-        )
+        mode = top_k_per_group(
+            votes, ["src"], 1, F.desc("c"), F.asc("lbl")
+        ).select(F.col("src").alias("_mn"), F.col("lbl").alias("_ml"))
         lbl = d.join(mode, d._n == F.col("_mn"), "left").select(
             F.col("_n").alias("node"),
             F.when(F.col("_seed"), F.col("_true"))

@@ -7,12 +7,19 @@ app.py:142-143). Both are Catalyst-native here:
 * global: ``orderBy(...).limit(k)`` → Catalyst plans
   ``TakeOrderedAndProject`` — per-partition partial top-k, then a single
   driver-side merge of partitions×k rows. No full sort, no full shuffle.
-* per-group: ``row_number`` over a window + filter — Spark ≥3.5 pushes a
-  ``WindowGroupLimit`` below the shuffle so each map task emits at most
-  k rows per group.
+* per-group: ``top_k_per_group`` is the engine's one per-group top-k
+  (best-of per group is ``k=1``): ``row_number`` over a window + filter,
+  which Spark ≥3.5 plans as a ``WindowGroupLimit`` below the shuffle so
+  each map task emits at most k rows per group.
+  ``operators.knn.knn_exact`` is its exact-cosine caller;
+  ``tests/test_owner_guards.py`` keeps every other ``row_number`` to
+  sites that number rows rather than cut a top-k.
 
-Determinism rule: every ordering carries an explicit id tie-break so
-results are stable under float ties and partitioning (A5 discipline).
+Determinism rule: every ordering carries an explicit id tie-break as its
+last key (``F.asc("neighbor_id")`` after the score), so the rows kept at
+the k-th place are the same under float ties and any partitioning (A5
+discipline). ``top_k_per_group`` does not add one: the caller's order
+must already be total within a group.
 """
 
 from __future__ import annotations
@@ -113,7 +120,9 @@ def top_k_per_group(
     *order: Column,
     rank_col: str = "rank",
 ) -> DataFrame:
-    """Top-k rows per group via row_number (WindowGroupLimit-optimized)."""
+    """The ``k`` first rows of each ``group_cols`` group under ``order``,
+    numbered 1..k in ``rank_col`` (an INT). A group smaller than ``k``
+    keeps all its rows."""
     w = Window.partitionBy(*group_cols).orderBy(*order)
     return (
         df.withColumn(rank_col, F.row_number().over(w))

@@ -133,7 +133,8 @@ _PRIORITY: tuple[str, ...] = (
     # --- freshness: 17 of the 38 r7-latest names (registration
     # order; bigram_lm_fluency / ivf_closure_recall_audit /
     # fuzzy_token_pairs_edit1 are already re-check slots above);
-    # the other 18 roll to r17 — list in the r16 note above ---
+    # the other 18 roll to r17 — list in COVERAGE.md, "Driver
+    # window" ---
     "retrieval_ndcg_audit",
     "funnel_view_click_purchase",
     "events_trailing_hour_range_sum",

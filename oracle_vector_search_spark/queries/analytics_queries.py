@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from oracle_vector_search_spark.functions import text as T
 from oracle_vector_search_spark.functions.rounding import cents
 from oracle_vector_search_spark.io import load_table
+from oracle_vector_search_spark.operators.topk import top_k_per_group
 from oracle_vector_search_spark.plans.ckpt import pin
 from oracle_vector_search_spark.queries import register
 
@@ -597,17 +598,12 @@ def event_type_value_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     ).agg(F.count(F.lit(1)).alias("n"))
-    w = Window.partitionBy("event_type").orderBy(
-        F.desc("n"), F.asc("cents")
-    )
-    return (
-        c.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "event_type",
-            F.col("cents").alias("mode_cents"),
-            F.col("n").alias("n_occurrences"),
-        )
+    return top_k_per_group(
+        c, ["event_type"], 1, F.desc("n"), F.asc("cents")
+    ).select(
+        "event_type",
+        F.col("cents").alias("mode_cents"),
+        F.col("n").alias("n_occurrences"),
     )
 
 
@@ -711,10 +707,8 @@ def item_cf_similar_parts_top3(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("pa").orderBy(F.desc("cosine"), F.asc("pb"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _CF_TOP)
+        top_k_per_group(scored, ["pa"], _CF_TOP, F.desc("cosine"), F.asc("pb"))
         .select(
             F.col("pa").alias("part"),
             F.col("pb").alias("similar_part"),

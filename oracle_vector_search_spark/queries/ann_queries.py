@@ -8,7 +8,7 @@ statistically. Recall-vs-exact is covered by property tests.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from oracle_vector_search_spark.functions.vector import (
     as_double_array,
@@ -22,6 +22,8 @@ from oracle_vector_search_spark.io import (
     write_artifact,
 )
 from oracle_vector_search_spark.operators import ann
+from oracle_vector_search_spark.operators.knn import knn_exact
+from oracle_vector_search_spark.operators.topk import top_k_per_group
 from oracle_vector_search_spark.plans.ckpt import pin, unpin
 from oracle_vector_search_spark.queries import register
 
@@ -465,26 +467,17 @@ def kmeans_refine_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transform(array_sort(collect_list(struct(dim, cd))), x -> x.cd)"
         ).alias("cv")
     )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.desc("score"), F.asc("cluster_id")
-    )
-    # OPTIMIZATION r16 (guide §5): `reassigned` feeds BOTH f and st, so
-    # unpinned the whole Lloyd step — the (cluster, dim) posexplode
-    # shuffle AND the broadcast-centroid reassignment scan — replayed
-    # per consumer (measured 90 physical ops / 2× corpus passes). Pin
-    # the (vec_id, cluster_id) result exactly like the chained twin
-    # (kmeans_chain_two_steps) pins its iterations: ids only, one
-    # corpus pass per run. Same localCheckpoint fault-tolerance trade
-    # as operators/dedup.dedup_clusters (documented there).
+    # `reassigned` feeds both f and st; unpinned, each consumer would
+    # replay the whole Lloyd step (the (cluster, dim) posexplode
+    # shuffle and the broadcast-centroid scan), so pin the ids only
     reassigned = pin(
-        vecs.join(F.broadcast(cents))
-        .select(
-            "vec_id", "cluster_id",
-            F.round(cosine_similarity("v", "cv"), 6).alias("score"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cluster_id"),
+        top_k_per_group(
+            vecs.join(F.broadcast(cents)).select(
+                "vec_id", "cluster_id",
+                F.round(cosine_similarity("v", "cv"), 6).alias("score"),
+            ),
+            ["vec_id"], 1, F.desc("score"), F.asc("cluster_id"),
+        ).select("vec_id", "cluster_id"),
     )
     seeds = vecs.filter(F.col("vec_id") % ann.SEED_STRIDE == 0).select(
         F.col("vec_id").alias("cluster_id")
@@ -789,20 +782,14 @@ def _lloyd_step(vecs: DataFrame, assigned: DataFrame) -> DataFrame:
             "transform(array_sort(collect_list(struct(dim, cd))), x -> x.cd)"
         ).alias("cv")
     )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.desc("score"), F.asc("cluster_id")
-    )
-    return (
-        vecs.join(F.broadcast(cents))
-        .select(
+    return top_k_per_group(
+        vecs.join(F.broadcast(cents)).select(
             "vec_id",
             "cluster_id",
             F.round(cosine_similarity("v", "cv"), 6).alias("score"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cluster_id")
-    )
+        ),
+        ["vec_id"], 1, F.desc("score"), F.asc("cluster_id"),
+    ).select("vec_id", "cluster_id")
 
 
 @register("kmeans_chain_two_steps", _KMEANS_CHAIN_ORACLE)
@@ -1083,20 +1070,14 @@ def matryoshka_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def topk(score_col):
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("neighbor_id")
-        )
-        return (
-            emb.crossJoin(F.broadcast(q))
-            .select(
+        return top_k_per_group(
+            emb.crossJoin(F.broadcast(q)).select(
                 "query_id",
                 F.col("vec_id").alias("neighbor_id"),
                 F.round(score_col, 6).alias("score"),
-            )
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= 5)
-            .select("query_id", "neighbor_id")
-        )
+            ),
+            ["query_id"], 5, F.desc("score"), F.asc("neighbor_id"),
+        ).select("query_id", "neighbor_id")
 
     full_top = topk(cosine_similarity("qv", "v"))
     trunc_top = topk(
@@ -1230,12 +1211,10 @@ def filtered_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine_similarity("qv", "nv"), 6).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
+        top_k_per_group(
+            scored, ["query_id"], 3, F.desc("score"), F.asc("neighbor_id")
+        )
         .select("query_id", "neighbor_id", "label", "score", "rank")
         .orderBy("query_id", "rank")
     )
@@ -1307,11 +1286,9 @@ def multiprobe_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ib = ibuckets.select(
         F.col("vec_id").alias("neighbor_id"), "band", "bucket"
     )
-    # OPTIMIZATION r15 (guide §2.4): one tagged probe union + ONE
-    # bucket join + one (query, neighbor) flag aggregation replaces
-    # the two joins + two DISTINCTs (both probe tables hit the same
-    # at-rest bucket table; the flags reproduce set membership exactly
-    # without assuming the multi-probe set is a superset)
+    # one tagged probe union, one bucket join and one (query, neighbor)
+    # flag aggregation; the flags reproduce set membership exactly
+    # without assuming the multi-probe set is a superset
     qall = qb.withColumn("is_single", F.lit(True)).unionByName(
         qprobes.withColumn("is_single", F.lit(False))
     )
@@ -1324,23 +1301,8 @@ def multiprobe_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # exact top-5 ground truth
-    vs = emb.select("vec_id", as_double_array("embedding").alias("v"))
-    q = vs.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    exact_top = (
-        vs.crossJoin(F.broadcast(q))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_similarity("qv", "v"), 6).alias("score"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id")
+    exact_top = knn_exact(emb, emb.filter(F.col("vec_id") < 10)).select(
+        "query_id", "neighbor_id"
     )
     s_hit = F.count(F.when(F.col("in_single"), F.lit(1)))
     m_hit = F.count(F.when(F.col("in_multi"), F.lit(1)))
@@ -1454,50 +1416,30 @@ def ivf_closure_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = vs.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("seed_score"), F.asc("seed_id")
-    )
-    qprobe = (
-        q.join(F.broadcast(seeds))
-        .select(
+    qprobe = top_k_per_group(
+        q.join(F.broadcast(seeds)).select(
             "query_id",
             "seed_id",
             F.round(cosine_similarity("qv", "sv"), 6).alias("seed_score"),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") == 1)
-        .select("query_id", F.col("seed_id").alias("cluster_id"))
-    )
-    # OPTIMIZATION r15 (guide §2.4): single_cand was the rn=1 slice of
-    # the SAME probed posting lists closure_cand reads — two joins +
-    # two DISTINCT shuffles against one at-rest table. One join and
-    # one (query, neighbor) MIN(rn) aggregation carries both tiers:
-    # membership in the single set ⟺ best_rn = 1, membership in the
-    # closure set ⟺ presence. Identical hit counts by construction.
+        ),
+        ["query_id"], 1, F.desc("seed_score"), F.asc("seed_id"),
+    ).select("query_id", F.col("seed_id").alias("cluster_id"))
+    # single_cand is the rn=1 slice of the same probed posting lists
+    # closure_cand reads, so one join and one (query, neighbor)
+    # MIN(rn) aggregation carries both tiers: membership in the single
+    # set ⟺ best_rn = 1, membership in the closure set ⟺ presence
     cand = (
         ranked.withColumnRenamed("vec_id", "neighbor_id")
         .join(F.broadcast(qprobe), "cluster_id")
         .groupBy("query_id", "neighbor_id")
         .agg(F.min("rn").alias("best_rn"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    exact_top = (
-        vs.crossJoin(F.broadcast(q))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_similarity("qv", "v"), 6).alias("score"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id")
+    exact_top = knn_exact(emb, emb.filter(F.col("vec_id") < 10)).select(
+        "query_id", "neighbor_id"
     )
     # one left join carries both tiers: best_rn = 1 ⟺ the neighbor is
     # in the single-assignment candidate set, best_rn NOT NULL ⟺ it is
-    # in the closure candidate set (superset) — same counts as the old
-    # two joins against the rn=1 slice and the full table
+    # in the closure candidate set (superset)
     s_hit = F.count(F.when(F.col("best_rn") == 1, F.lit(1)))
     c_hit = F.count("best_rn")
     return (
@@ -1735,20 +1677,8 @@ def ann_recall_vs_exact_clustered(
     q = vs.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    exact_top = (
-        vs.crossJoin(F.broadcast(q))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_similarity("qv", "v"), 6).alias("score"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id")
-        # single consumer in the one-pass rollup — no pin needed
+    exact_top = knn_exact(emb, emb.filter(F.col("vec_id") < 10)).select(
+        "query_id", "neighbor_id"
     )
 
     def tagged(name, df, with_score=False):
@@ -1762,7 +1692,7 @@ def ann_recall_vs_exact_clustered(
         )
 
     # --- index tables: same values as the at-rest artifacts
-    # (fast path, VERDICT r7 #5 — see _audit_tables)
+    # (see _audit_tables)
     audit = _audit_tables(spark, sf_dir)
     buckets = audit["buckets"]
     qb = buckets.filter(F.col("vec_id") < 10)
@@ -1788,22 +1718,14 @@ def ann_recall_vs_exact_clustered(
     seeds = vs.filter(F.col("vec_id") % ann.SEED_STRIDE == 0).select(
         F.col("vec_id").alias("seed_id"), F.col("v").alias("sv")
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("seed_score"), F.asc("seed_id")
-    )
-    qprobe = (
-        q.join(F.broadcast(seeds))
-        .select(
+    qprobe = top_k_per_group(
+        q.join(F.broadcast(seeds)).select(
             "query_id",
             "seed_id",
-            F.round(cosine_similarity("qv", "sv"), 6).alias(
-                "seed_score"
-            ),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") == 1)
-        .select("query_id", F.col("seed_id").alias("cluster_id"))
-    )
+            F.round(cosine_similarity("qv", "sv"), 6).alias("seed_score"),
+        ),
+        ["query_id"], 1, F.desc("seed_score"), F.asc("seed_id"),
+    ).select("query_id", F.col("seed_id").alias("cluster_id"))
     ivf_s_cand = (
         ranked.filter(F.col("rn") == 1)
         .withColumnRenamed("vec_id", "neighbor_id")
@@ -1820,22 +1742,14 @@ def ann_recall_vs_exact_clustered(
 
     # --- IVF-PQ: ADC ranking over the reconstruction table
     approx = audit["ivfpq"]
-    wp = Window.partitionBy("query_id").orderBy(
-        F.desc("probe_score"), F.asc("cluster_id")
-    )
-    pq_probes = (
-        q.crossJoin(F.broadcast(seeds))
-        .select(
+    pq_probes = top_k_per_group(
+        q.crossJoin(F.broadcast(seeds)).select(
             "query_id",
             F.col("seed_id").alias("cluster_id"),
-            F.round(cosine_similarity("qv", "sv"), 6).alias(
-                "probe_score"
-            ),
-        )
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= PQ_NPROBE)
-        .select("query_id", "cluster_id")
-    )
+            F.round(cosine_similarity("qv", "sv"), 6).alias("probe_score"),
+        ),
+        ["query_id"], PQ_NPROBE, F.desc("probe_score"), F.asc("cluster_id"),
+    ).select("query_id", "cluster_id")
     pq_scored = (
         pq_probes.join(approx, "cluster_id")
         .join(F.broadcast(q), "query_id")
@@ -1845,14 +1759,13 @@ def ann_recall_vs_exact_clustered(
             F.round(cosine_similarity("qv", "av"), 6).alias("score"),
         )
     )
-    # ONE aggregation pass over all five methods (VERDICT r7 #5): the
-    # five candidate derivations union under a method tag and pin ONCE
-    # (localCheckpoint — a single job whose branches the scheduler runs
-    # concurrently); per-query counts, the exact-top join, the ADC
-    # top-5 window, and the final per-method rollup all read the pinned
-    # ~10^4-row table, so the whole audit is builds + one candidate job
-    # + one cheap rollup job. Values identical to five independent
-    # method_agg sub-DAGs (~15 shuffles, each re-deriving candidates).
+    # ONE aggregation pass over all five methods: the five candidate
+    # derivations union under a method tag and pin ONCE (localCheckpoint
+    # — a single job whose branches the scheduler runs concurrently);
+    # per-query counts, the exact-top join, the ADC top-5 window, and
+    # the final per-method rollup all read the pinned ~10^4-row table,
+    # so the whole audit is builds + one candidate job + one cheap
+    # rollup job.
     cand_all = (
         tagged("lsh_single", lsh_cand)
         .unionByName(tagged("lsh_multiprobe", mp_cand))
@@ -1864,15 +1777,10 @@ def ann_recall_vs_exact_clustered(
     cand_all = pin(cand_all)
     # retrieved = candidates for the exact-rerank tiers; the ADC top-5
     # for ivfpq (the only tier whose ranking is approximate)
-    wpq2 = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    pq_top5 = (
-        cand_all.filter(F.col("method") == "ivfpq_adc")
-        .withColumn("rn", F.row_number().over(wpq2))
-        .filter(F.col("rn") <= 5)
-        .select("method", "query_id", "neighbor_id")
-    )
+    pq_top5 = top_k_per_group(
+        cand_all.filter(F.col("method") == "ivfpq_adc"),
+        ["query_id"], 5, F.desc("score"), F.asc("neighbor_id"),
+    ).select("method", "query_id", "neighbor_id")
     retr_all = (
         cand_all.filter(F.col("method") != "ivfpq_adc")
         .select("method", "query_id", "neighbor_id")
@@ -2029,24 +1937,16 @@ def ann_fusion_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = vs.filter(F.col("vec_id") % ann.SEED_STRIDE == 0).select(
         F.col("vec_id").alias("seed_id"), F.col("v").alias("sv")
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("seed_score"), F.asc("seed_id")
-    )
-    qprobe = (
-        q.join(F.broadcast(seeds))
-        .select(
+    qprobe = top_k_per_group(
+        q.join(F.broadcast(seeds)).select(
             "query_id",
             "seed_id",
             F.round(cosine_similarity("qv", "sv"), 6).alias("seed_score"),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= 2)
-        .select("query_id", F.col("seed_id").alias("cluster_id"))
-    )
-    # OPTIMIZATION r15 (guide §2.4): no .distinct() on either candidate
-    # tier — the provenance groupBy below dedups (query, neighbor)
-    # anyway, so the two pre-union DISTINCT shuffles were pure cost
-    # (ivf candidates are unique already: one cluster per vector).
+        ),
+        ["query_id"], 2, F.desc("seed_score"), F.asc("seed_id"),
+    ).select("query_id", F.col("seed_id").alias("cluster_id"))
+    # no .distinct() on either candidate tier: the provenance groupBy
+    # below dedups (query, neighbor)
     ivf_cand = (
         _ivf_assign_table(spark, sf_dir)
         .withColumnRenamed("vec_id", "neighbor_id")
@@ -2103,27 +2003,11 @@ def ann_fusion_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine_similarity("qv", "nv"), 6).alias("score"),
         )
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
+    ranked = top_k_per_group(
+        scored, ["query_id"], 5, F.desc("score"), F.asc("neighbor_id")
     )
-    ranked = (
-        scored.withColumn("rank", F.row_number().over(wr).cast("int"))
-        .filter(F.col("rank") <= 5)
-    )
-    wx = Window.partitionBy("query_id").orderBy(
-        F.desc("xscore"), F.asc("neighbor_id")
-    )
-    exact_top = (
-        vs.select(F.col("vec_id").alias("neighbor_id"), "v")
-        .crossJoin(F.broadcast(q))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_similarity("qv", "v"), 6).alias("xscore"),
-        )
-        .withColumn("rn", F.row_number().over(wx))
-        .filter(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id", F.lit(True).alias("hit"))
+    exact_top = knn_exact(emb, emb.filter(F.col("vec_id") < 10)).select(
+        "query_id", "neighbor_id", F.lit(True).alias("hit")
     )
     return (
         ranked.join(exact_top, ["query_id", "neighbor_id"], "left")

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from oracle_vector_search_spark.functions import text as T
 from oracle_vector_search_spark.io import load_table
+from oracle_vector_search_spark.operators.topk import top_k_per_group
 from oracle_vector_search_spark.plans.ckpt import pin
 from oracle_vector_search_spark.queries import register
 
@@ -166,21 +167,14 @@ def snapshot_diff_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deletes can't occur in an append-only event stream, so the
     'delete' branch is structurally absent rather than untested.
     """
-    from pyspark.sql import Window
-
     e = load_table(spark, sf_dir, "events").select(
         "user_id", F.expr("ts_ns div 1000").alias("ts_us"), "event_id"
     )
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc("ts_us"), F.desc("event_id")
-    )
 
     def snap(df: DataFrame, out_col: str) -> DataFrame:
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("user_id", F.col("event_id").alias(out_col))
-        )
+        return top_k_per_group(
+            df, ["user_id"], 1, F.desc("ts_us"), F.desc("event_id")
+        ).select("user_id", F.col("event_id").alias(out_col))
 
     old = snap(e.filter(F.col("ts_us") < _UPSERT_CUT_US), "old_event_id")
     new = snap(e, "new_event_id")
@@ -800,12 +794,11 @@ def cdc_merge_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("op"),
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc("ts_ns"), F.desc("event_id")
-    )
     return (
-        feed.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("op") == "U"))
+        top_k_per_group(
+            feed, ["user_id"], 1, F.desc("ts_ns"), F.desc("event_id")
+        )
+        .filter(F.col("op") == "U")
         .select(
             "user_id",
             F.col("cents").alias("last_cents"),
@@ -864,20 +857,12 @@ def null_safe_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(cents % 7)
         .alias("k7"),
     )
-    wf = Window.partitionBy("user_id").orderBy("ts_ns", "event_id")
-    wl = Window.partitionBy("user_id").orderBy(
-        F.desc("ts_ns"), F.desc("event_id")
-    )
-    firsts = (
-        feed.withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") == 1)
-        .select(F.col("k7").alias("f_k7"))
-    )
-    lasts = (
-        feed.withColumn("rn", F.row_number().over(wl))
-        .filter(F.col("rn") == 1)
-        .select(F.col("k7").alias("l_k7"))
-    )
+    firsts = top_k_per_group(
+        feed, ["user_id"], 1, F.col("ts_ns"), F.col("event_id")
+    ).select(F.col("k7").alias("f_k7"))
+    lasts = top_k_per_group(
+        feed, ["user_id"], 1, F.desc("ts_ns"), F.desc("event_id")
+    ).select(F.col("k7").alias("l_k7"))
     return (
         firsts.join(lasts, F.col("f_k7").eqNullSafe(F.col("l_k7")))
         .groupBy(F.coalesce("f_k7", F.lit(-1)).alias("k7"))

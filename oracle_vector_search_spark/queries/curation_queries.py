@@ -45,7 +45,10 @@ from oracle_vector_search_spark.functions import text as T
 from oracle_vector_search_spark.functions.embed import duck_embedding_expr
 from oracle_vector_search_spark.io import load_table
 from oracle_vector_search_spark.operators.rowmap import map_rows
-from oracle_vector_search_spark.operators.topk import bounded_global_order
+from oracle_vector_search_spark.operators.topk import (
+    bounded_global_order,
+    top_k_per_group,
+)
 from oracle_vector_search_spark.plans.ckpt import pin, unpin
 from oracle_vector_search_spark.queries import register
 
@@ -496,12 +499,11 @@ def sequential_poisson_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars",
         (u.cast("double") / F.col("n_chars")).alias("rank_key"),
     )
-    w = Window.partitionBy("lang").orderBy(
-        F.asc("rank_key"), F.asc("doc_id")
-    )
     return (
-        keyed.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _SPS_K)
+        top_k_per_group(
+            keyed, ["lang"], _SPS_K, F.asc("rank_key"), F.asc("doc_id"),
+            rank_col="rnk",
+        )
         .select(
             "doc_id",
             "lang",
@@ -607,12 +609,11 @@ def weighted_reservoir_sample_aes(
     (``streaming_weighted_reservoir``) maintains the k largest keys
     per stratum in bounded state against the SAME oracle."""
     scored = aes_keyed_docs(load_table(spark, sf_dir, "documents"))
-    win = Window.partitionBy("source").orderBy(
-        F.desc("aes_key"), F.asc("doc_id")
-    )
     return (
-        scored.withColumn("rnk", F.row_number().over(win))
-        .filter(F.col("rnk") <= _AES_K)
+        top_k_per_group(
+            scored, ["source"], _AES_K, F.desc("aes_key"), F.asc("doc_id"),
+            rank_col="rnk",
+        )
         .select(
             "doc_id",
             "source",
@@ -1636,15 +1637,10 @@ def class_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     text column never shuffles.
     """
     doc = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy(
-        F.expr(T.hash28_sql(_BAL_HASH)), F.asc("doc_id")
-    )
-    kept = (
-        doc.select("lang", "doc_id")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _BAL_CAP)
-        .select(F.col("doc_id").alias("kept_id"))
-    )
+    kept = top_k_per_group(
+        doc.select("lang", "doc_id"), ["lang"], _BAL_CAP,
+        F.expr(T.hash28_sql(_BAL_HASH)), F.asc("doc_id"),
+    ).select(F.col("doc_id").alias("kept_id"))
     return (
         doc.join(kept, doc.doc_id == kept.kept_id, "left")
         .groupBy("lang")

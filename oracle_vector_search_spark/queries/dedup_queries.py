@@ -25,6 +25,7 @@ from oracle_vector_search_spark.operators.dedup import (
     simhash_fingerprints,
     simhash_near_dup,
 )
+from oracle_vector_search_spark.operators.topk import top_k_per_group
 from oracle_vector_search_spark.plans.ckpt import pin, unpin
 from oracle_vector_search_spark.queries import register
 
@@ -512,7 +513,6 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_clusters,
         with_norm_tokens,
     )
-    from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_near_dup(
@@ -582,7 +582,6 @@ def domain_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from oracle_vector_search_spark.operators.dedup import (
         with_norm_tokens,
     )
-    from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
     qual = with_norm_tokens(docs).select(
@@ -590,12 +589,10 @@ def domain_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.size("toks").cast("long").alias("n_tokens"),
     )
-    w = Window.partitionBy("source").orderBy(
-        F.desc("n_tokens"), F.asc("doc_id")
-    )
     return (
-        qual.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= 5)
+        top_k_per_group(
+            qual, ["source"], 5, F.desc("n_tokens"), F.asc("doc_id")
+        )
         .select("source", "doc_id", "n_tokens", "rank")
         .orderBy("source", "rank")
     )
@@ -901,8 +898,6 @@ def hamming_knn_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = fp.filter(F.col("doc_id") < 10).select(
         F.col("doc_id").alias("query_id"), F.col("simhash").alias("qfp")
     )
-    from pyspark.sql import Window
-
     scored = (
         fp.join(F.broadcast(q))
         .filter(F.col("doc_id") != F.col("query_id"))
@@ -914,10 +909,10 @@ def hamming_knn_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long").alias("hamming"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
+        top_k_per_group(
+            scored, ["query_id"], 5, F.col("hamming"), F.col("neighbor_id")
+        )
         .select("query_id", "neighbor_id", "hamming", "rank")
         .orderBy("query_id", "rank")
     )

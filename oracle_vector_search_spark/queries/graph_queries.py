@@ -30,6 +30,7 @@ from oracle_vector_search_spark.io import (
     read_artifact,
     write_artifact,
 )
+from oracle_vector_search_spark.operators.topk import top_k_per_group
 from oracle_vector_search_spark.plans.ckpt import pin, unpin
 from oracle_vector_search_spark.queries import register
 
@@ -273,16 +274,13 @@ def knn_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = tier(d, d, k=_LP_K + 1).filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
     # pin the graph: the vote loop references edges once per round and
     # nodes three times — without this the kNN build (a full index scan
-    # + GEMM) re-executes per round (measured 9-scan plan at 2 rounds)
+    # + GEMM) re-executes per round
     edges = pin(
-        cand.withColumn("rn2", F.row_number().over(w_rank))
-        .filter(F.col("rn2") <= _LP_K)
-        .select(
+        top_k_per_group(
+            cand, ["query_id"], _LP_K, F.desc("score"), F.asc("neighbor_id")
+        ).select(
             F.col("query_id").alias("src"),
             F.col("neighbor_id").alias("dst"),
         ),
@@ -1218,13 +1216,10 @@ def graph_ann_greedy_walk_recall(
     cand = tier(d, d, k=_LP_K + 1, vec_col="v").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
     edges = pin(
-        cand.withColumn("rn2", F.row_number().over(w_rank))
-        .filter(F.col("rn2") <= _LP_K)
-        .select(
+        top_k_per_group(
+            cand, ["query_id"], _LP_K, F.desc("score"), F.asc("neighbor_id")
+        ).select(
             F.col("query_id").alias("src"),
             F.col("neighbor_id").alias("dst"),
         ),
@@ -1257,13 +1252,10 @@ def graph_ann_greedy_walk_recall(
             .join(F.broadcast(q), "query_id")
             .select("query_id", "node", score.alias("s"))
         )
-        w_best = Window.partitionBy("query_id").orderBy(
-            F.desc("s"), F.asc("node")
-        )
         prev, walk = walk, pin(
-            scored.withColumn("rn", F.row_number().over(w_best))
-            .filter(F.col("rn") == 1)
-            .select("query_id", F.col("node").alias("cur"))
+            top_k_per_group(
+                scored, ["query_id"], 1, F.desc("s"), F.asc("node")
+            ).select("query_id", F.col("node").alias("cur"))
         )
         if r:  # the new hop is materialized: prior hop's blocks are dead
             unpin(prev)

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from oracle_vector_search_spark.io import load_table
+from oracle_vector_search_spark.operators.topk import top_k_per_group
 from oracle_vector_search_spark.queries import register
 
 N_DIMS_OUT = 8
@@ -109,13 +110,8 @@ def stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mem = run_to_memory(updated, "update")
     # update mode may emit one row per (user, batch); keep the last state
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        mem.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", "sum_value_cents")
+    return top_k_per_group(mem, ["user_id"], 1, F.desc("n_events")).select(
+        "user_id", "n_events", "sum_value_cents"
     )
 
 

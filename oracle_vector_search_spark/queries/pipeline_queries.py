@@ -32,6 +32,7 @@ from oracle_vector_search_spark.operators.ingest import (
     parse_yolo_labels,
 )
 from oracle_vector_search_spark.operators.rowmap import map_rows
+from oracle_vector_search_spark.operators.topk import top_k_per_group
 from oracle_vector_search_spark.plans.ckpt import pin
 from oracle_vector_search_spark.queries import register
 
@@ -417,8 +418,6 @@ def pipeline_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic "uploads" -> embed (T8) -> exact cosine top-5 against the
     freshly built index (M1+A2) -> class metadata (J2/T12) -> rank label
     (T13). Build + query in one oracle-checked lazy plan."""
-    from pyspark.sql import Window
-
     from oracle_vector_search_spark.functions.vector import cosine_similarity
 
     idx = _materialized_index(spark, sf_dir, 500).select(
@@ -436,12 +435,9 @@ def pipeline_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "class_name",
         F.round(cosine_similarity("qvec", "emb"), 6).alias("score"),
     )
-    w = Window.partitionBy("qname").orderBy(F.desc("score"), F.asc("id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("qname", "rank", "id", "class_name", "score")
-    )
+    return top_k_per_group(
+        scored, ["qname"], 5, F.desc("score"), F.asc("id")
+    ).select("qname", "rank", "id", "class_name", "score")
 
 
 # ------------------------------------------- custom Python data source
@@ -1329,14 +1325,10 @@ def query_path_detect_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     frames = _mri_query_frames(spark, sf_dir)
     dets = detect_boxes_numpy(frames)
-    wst = Window.partitionBy("stem")
-    wrank = Window.partitionBy("stem").orderBy(
-        F.desc("conf"), F.asc("y1"), F.asc("x1")
-    )
-    best = (
-        dets.withColumn("n_boxes", F.count("*").over(wst).cast("bigint"))
-        .withColumn("rk", F.row_number().over(wrank))
-        .filter(F.col("rk") == 1)
+    n_boxes = F.count("*").over(Window.partitionBy("stem")).cast("bigint")
+    best = top_k_per_group(
+        dets.withColumn("n_boxes", n_boxes),
+        ["stem"], 1, F.desc("conf"), F.asc("y1"), F.asc("x1"),
     )
     q = _crop_serialize_best(best)
     q = pin(

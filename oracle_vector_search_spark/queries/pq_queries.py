@@ -8,7 +8,7 @@ sum uses the same left-assoc fold on both engines.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from oracle_vector_search_spark.functions.vector import cosine_similarity
 from oracle_vector_search_spark.io import (
@@ -18,6 +18,7 @@ from oracle_vector_search_spark.io import (
     write_artifact,
 )
 from oracle_vector_search_spark.operators import quantize as Q
+from oracle_vector_search_spark.operators.topk import top_k_per_group
 from oracle_vector_search_spark.queries import register
 
 _CODE_COLS = [f"code{s}" for s in range(Q.PQ_SUBSPACES)]
@@ -101,12 +102,8 @@ def pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neighbor_id",
         F.round(cosine_similarity("qv", "recon"), 6).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
+    return top_k_per_group(
+        scored, ["query_id"], 5, F.desc("score"), F.asc("neighbor_id")
     )
 
 
@@ -159,20 +156,14 @@ def pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.col("embedding").cast("array<double>").alias("qv"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("pq_score"), F.asc("neighbor_id")
-    )
-    cand = (
-        recon.join(F.broadcast(q))
-        .select(
+    cand = top_k_per_group(
+        recon.join(F.broadcast(q)).select(
             "query_id",
             "neighbor_id",
             F.round(cosine_similarity("qv", "recon"), 6).alias("pq_score"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 20)
-        .select("query_id", "neighbor_id")
-    )
+        ),
+        ["query_id"], 20, F.desc("pq_score"), F.asc("neighbor_id"),
+    ).select("query_id", "neighbor_id")
     exact_vecs = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").cast("array<double>").alias("ev"),
@@ -186,12 +177,8 @@ def pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine_similarity("qv", "ev"), 6).alias("score"),
         )
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= 5)
+    return top_k_per_group(
+        refined, ["query_id"], 5, F.desc("score"), F.asc("neighbor_id")
     )
 
 
@@ -363,22 +350,14 @@ def ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         as_double_array("embedding").alias("qv"),
     )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.desc("probe_score"), F.asc("cluster_id")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(seeds))
-        .select(
+    probes = top_k_per_group(
+        q.crossJoin(F.broadcast(seeds)).select(
             "query_id",
             "cluster_id",
-            F.round(cosine_similarity("qv", "sv"), 6).alias(
-                "probe_score"
-            ),
-        )
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= _NPROBE)
-        .select("query_id", "cluster_id")
-    )
+            F.round(cosine_similarity("qv", "sv"), 6).alias("probe_score"),
+        ),
+        ["query_id"], _NPROBE, F.desc("probe_score"), F.asc("cluster_id"),
+    ).select("query_id", "cluster_id")
     scored = (
         probes.join(approx, "cluster_id")
         .join(F.broadcast(q), "query_id")
@@ -388,12 +367,8 @@ def ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine_similarity("qv", "av"), 6).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
+    return top_k_per_group(
+        scored, ["query_id"], 5, F.desc("score"), F.asc("neighbor_id")
     )
 
 

@@ -36,6 +36,7 @@ from oracle_vector_search_spark.operators.skew import (
     profile_guided_salted_join,
     salted_join,
 )
+from oracle_vector_search_spark.operators.topk import top_k_per_group
 from oracle_vector_search_spark.queries import register
 
 _BUCKETS = 16
@@ -316,7 +317,6 @@ def events_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ingest.write_index_table) use instead of full rebuilds.
     """
     from oracle_vector_search_spark.operators.merge import merge_upsert
-    from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "events").select(
         "user_id",
@@ -327,14 +327,9 @@ def events_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     old = e.filter(F.col("ts_us") < _UPSERT_CUT_US)
     updates = e.filter(F.col("ts_us") >= _UPSERT_CUT_US)
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc("ts_us"), F.desc("event_id")
-    )
-    base = (
-        old.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    base = top_k_per_group(
+        old, ["user_id"], 1, F.desc("ts_us"), F.desc("event_id")
+    ).drop("rank")
     merged = merge_upsert(
         base, updates, keys=["user_id"], order_cols=["ts_us", "event_id"]
     )

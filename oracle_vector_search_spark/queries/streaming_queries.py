@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from oracle_vector_search_spark.operators.topk import top_k_per_group
 from oracle_vector_search_spark.queries import register
 from oracle_vector_search_spark.streaming import ops
 
@@ -335,18 +336,12 @@ def streaming_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
     trending view is served in production (state in the sink, rank at
     read time). Deterministic: count ties break on event_type.
     """
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     snap = ops.hourly_windows_stream(spark, sf_dir)
-    w = Window.partitionBy("window_start_ns").orderBy(
-        F.desc("n"), F.asc("event_type")
-    )
-    return (
-        snap.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("window_start_ns", "event_type", "n", "rank")
-    )
+    return top_k_per_group(
+        snap, ["window_start_ns"], 3, F.desc("n"), F.asc("event_type")
+    ).select("window_start_ns", "event_type", "n", "rank")
 
 
 @register(

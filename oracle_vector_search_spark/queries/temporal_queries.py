@@ -16,6 +16,7 @@ from oracle_vector_search_spark.operators.temporal import (
     range_join_within,
     sessionize,
 )
+from oracle_vector_search_spark.operators.topk import top_k_per_group
 from oracle_vector_search_spark.queries import register
 
 
@@ -434,8 +435,6 @@ def events_hourly_gapfill_locf(
     window; rows before a user's first observation stay NULL rather
     than inventing data.
     """
-    from pyspark.sql import Window
-
     e = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.expr("ts_ns div 1000").alias("ts_us"),
@@ -453,14 +452,9 @@ def events_hourly_gapfill_locf(
             "hour_id"
         ),
     )
-    w_obs = Window.partitionBy("user_id", "hour_id").orderBy(
-        F.desc("ts_us"), F.desc("event_id")
-    )
-    obs = (
-        h.withColumn("rn", F.row_number().over(w_obs))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "hour_id", "value_cents")
-    )
+    obs = top_k_per_group(
+        h, ["user_id", "hour_id"], 1, F.desc("ts_us"), F.desc("event_id")
+    ).select("user_id", "hour_id", "value_cents")
     j = grid.join(obs, ["user_id", "hour_id"], "left")
     w_fill = (
         Window.partitionBy("user_id")
@@ -811,14 +805,9 @@ def events_hourly_gapfill_ffill(
         "ts_ns",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    wdedup = Window.partitionBy("user_id", "hr").orderBy(
-        F.desc("ts_ns"), F.desc("event_id")
-    )
-    hourly = (
-        e.withColumn("rn", F.row_number().over(wdedup))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "hr", "cents")
-    )
+    hourly = top_k_per_group(
+        e, ["user_id", "hr"], 1, F.desc("ts_ns"), F.desc("event_id")
+    ).select("user_id", "hr", "cents")
     spans = e.groupBy("user_id").agg(
         F.min("hr").alias("h0"), F.max("hr").alias("h1")
     )

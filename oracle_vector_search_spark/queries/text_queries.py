@@ -8,7 +8,7 @@ oracles are generated from the SAME constants in ``functions.text``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from oracle_vector_search_spark.functions import text as T
 from oracle_vector_search_spark.io import at_rest, load_table
@@ -276,8 +276,6 @@ def bigram_collocations_top20(
     tokenizer/LM quality checks. One shuffle per count table; unigram
     counts broadcast back onto the bigram table.
     """
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select(F.split(T.norm_text("text"), " ").alias("toks"))
     big = base.select(

@@ -4,10 +4,11 @@ using the established determinism policies."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from oracle_vector_search_spark.functions.rounding import cents
 from oracle_vector_search_spark.io import load_table
+from oracle_vector_search_spark.operators.topk import top_k_per_group
 from oracle_vector_search_spark.plans.ckpt import pin
 from oracle_vector_search_spark.queries import register
 
@@ -45,10 +46,11 @@ def min_cost_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    w = Window.partitionBy("l_partkey").orderBy("unit_cost", "l_suppkey")
     return (
-        costs.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("l_partkey") < 500))
+        top_k_per_group(
+            costs, ["l_partkey"], 1, F.col("unit_cost"), F.col("l_suppkey")
+        )
+        .filter(F.col("l_partkey") < 500)
         .select(
             "l_partkey",
             "l_suppkey",

@@ -24,7 +24,10 @@ from oracle_vector_search_spark.io import (
     read_artifact,
     write_artifact,
 )
-from oracle_vector_search_spark.operators.topk import global_topn_ranked
+from oracle_vector_search_spark.operators.topk import (
+    global_topn_ranked,
+    top_k_per_group,
+)
 from oracle_vector_search_spark.plans.ckpt import pin
 from oracle_vector_search_spark.queries import register
 
@@ -587,8 +590,6 @@ def chunk_embed_retrieve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from oracle_vector_search_spark.functions.vector import cosine_similarity
 
-    from pyspark.sql import Window
-
     scored = embedded.join(F.broadcast(q)).select(
         "doc_id",
         "chunk_idx",
@@ -765,7 +766,6 @@ def term_doc_frequency_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     over it; corpus size joins in from the one-row stats table."""
     postings, stats = _posting_tables(spark, sf_dir)
     dfreq = postings.groupBy("term").agg(F.count("*").alias("doc_freq"))
-    from pyspark.sql import Window
 
     return (
         global_topn_ranked(dfreq, 20, F.desc("doc_freq"), F.asc("term"))
@@ -848,7 +848,6 @@ def bm25_retrieval_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject, never a global sort.
     """
     agg = _bm25_doc_scores(spark, sf_dir)
-    from pyspark.sql import Window
 
     return global_topn_ranked(
         agg, 10, F.desc("bm25_micros"), F.asc("doc_id")
@@ -1074,7 +1073,6 @@ def boolean_and_retrieval_top20(
         )
         .filter(F.col("n_terms") == len(BM25_TERMS))
     )
-    from pyspark.sql import Window
 
     return (
         global_topn_ranked(cand, 20, F.desc("total_tf"), F.asc("doc_id"))
@@ -1148,7 +1146,6 @@ def phrase_retrieval_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("n_matches") > 0)
     )
-    from pyspark.sql import Window
 
     return global_topn_ranked(
         m, 20, F.desc("n_matches"), F.asc("doc_id")
@@ -1331,7 +1328,6 @@ def mmr_rerank_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     per query (candidate pairs ≤100/query, built by a per-query join,
     never a global cross join); the windows partition by query_id.
     """
-    from pyspark.sql import Window
     from oracle_vector_search_spark.functions.vector import (
         cosine_similarity,
     )
@@ -1340,13 +1336,10 @@ def mmr_rerank_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     lam = float(MMR_LAMBDA)
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES_HN)
-    # OPTIMIZATION r15 (guide §2.4/§5): the greedy unroll consumes the
-    # candidate table in every pick round (cv, s1, sc2, sc3, the final
-    # union) and Catalyst replays the subtree per consumer — the
-    # corpus-sized exact-kNN pass re-ran for each (measured 372
-    # physical ops / 38 scans at sf0.001). Pin the ≤k-rows-per-query
-    # candidate table and the ≤k²-per-query pairwise-sim table once;
-    # every pick round reads the pins.
+    # the greedy unroll consumes the candidate table in every pick round
+    # (cv, s1, sc2, sc3, the final union) and Catalyst replays the
+    # subtree per consumer, so pin the ≤k-rows-per-query candidate
+    # table and the ≤k²-per-query pairwise-sim table once
     cand = pin(
         knn_exact(emb, queries, k=10)
         .withColumnRenamed("score", "rel")
@@ -1372,14 +1365,10 @@ def mmr_rerank_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def pick(df: DataFrame, score_col: str) -> DataFrame:
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc(score_col), F.asc("neighbor_id")
-        )
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
+        return top_k_per_group(
+            df, ["query_id"], 1, F.desc(score_col), F.asc("neighbor_id"),
+            rank_col="rn",
+        ).drop("rn")
 
     s1 = pick(cand, "rel").select(
         "query_id",
@@ -2494,16 +2483,9 @@ def doc_top_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         "idf_millis",
         (F.col("tf") * F.col("idf_millis")).alias("weight"),
     )
-    from pyspark.sql import Window
-
-    win = Window.partitionBy("doc_id").orderBy(
-        F.desc("weight"), F.asc("term")
-    )
-    return (
-        w.withColumn("rank", F.row_number().over(win).cast("int"))
-        .filter(F.col("rank") <= 3)
-        .select("doc_id", "rank", "term", "tf", "idf_millis", "weight")
-    )
+    return top_k_per_group(
+        w, ["doc_id"], 3, F.desc("weight"), F.asc("term")
+    ).select("doc_id", "rank", "term", "tf", "idf_millis", "weight")
 
 
 _FIM_MIN_CHARS = 8  # skip degenerate docs (pivot arithmetic needs n >= 1)

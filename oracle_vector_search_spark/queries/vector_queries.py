@@ -8,7 +8,7 @@ Reference behavior: L2-normalize + IndexFlatIP top-5 cosine
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from oracle_vector_search_spark.io import (
     at_rest,
@@ -29,6 +29,7 @@ from oracle_vector_search_spark.operators.knn import (
     knn_join_metadata,
     similarity_join,
 )
+from oracle_vector_search_spark.operators.topk import top_k_per_group
 from oracle_vector_search_spark.plans.ckpt import pin
 from oracle_vector_search_spark.queries import register
 
@@ -202,8 +203,6 @@ def q_knn_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query label purity of the top-5 (self excluded) — an
     aggregate consumer of the kNN operator (classification-style eval,
     the reference's class-decode path J3/T12 generalized)."""
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -226,12 +225,10 @@ def q_knn_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine_similarity("q_vec", "v_vec"), 6).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= K)
+        top_k_per_group(
+            scored, ["query_id"], K, F.desc("score"), F.asc("neighbor_id")
+        )
         .groupBy("query_id")
         .agg(
             F.sum(
@@ -576,10 +573,9 @@ def sq8_recall_refine_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    # OPTIMIZATION r15 (guide §2.4/§5): the exact ground truth feeds
-    # both hit joins and the qids projection — unpinned, the corpus
-    # kNN crossJoin + window replayed three times per run (measured
-    # 128 ops / 13 exchanges). K×|queries| rows: pin once.
+    # the exact ground truth feeds both hit joins and the qids
+    # projection; unpinned, the corpus kNN would replay per consumer.
+    # K×|queries| rows: pin once.
     exact = pin(knn_exact(emb, queries, k=K).select("query_id", "neighbor_id"))
 
     # stage-1-only top-5: integer code dot products in pure Catalyst
@@ -612,16 +608,9 @@ def sq8_recall_refine_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             iscore.alias("iscore"),
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("iscore"), F.asc("neighbor_id")
-    )
-    stage1 = (
-        st1.withColumn("rr", F.row_number().over(w))
-        .filter(F.col("rr") <= K)
-        .select("query_id", "neighbor_id")
-    )
+    stage1 = top_k_per_group(
+        st1, ["query_id"], K, F.desc("iscore"), F.asc("neighbor_id")
+    ).select("query_id", "neighbor_id")
     refined = knn_exact_gemm_int8(
         emb, queries, k=K, refine=REFINE,
         codes=_int8_codes_table(spark, sf_dir),
@@ -759,12 +748,11 @@ def retrieval_map_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine_similarity("qv", "dv"), 6).alias("score"),
         )
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
     ranked = (
-        scored.withColumn("rnk", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rnk") <= _MAP_K)
+        top_k_per_group(
+            scored, ["query_id"], _MAP_K, F.desc("score"),
+            F.asc("neighbor_id"), rank_col="rnk",
+        )
         .withColumn(
             "hit",
             F.when(
@@ -863,20 +851,15 @@ def knn_classifier_confusion(
 
     Scale: same broadcast-query exact-kNN plan; voting and the matrix
     are two metadata-sized aggregations."""
-    from pyspark.sql import Window
-
-    from oracle_vector_search_spark.operators.knn import knn_exact
-
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < N_QUERIES * 5)
     # fetch k+1 then drop the self-match (the oracle's
     # neighbor_id <> query_id), renumbering to keep exactly k votes
-    wq = Window.partitionBy("query_id").orderBy("rank")
-    topk = (
-        knn_exact(emb, q, k=K + 1)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("rn2", F.row_number().over(wq))
-        .filter(F.col("rn2") <= K)
+    topk = top_k_per_group(
+        knn_exact(emb, q, k=K + 1).filter(
+            F.col("neighbor_id") != F.col("query_id")
+        ),
+        ["query_id"], K, F.col("rank"), rank_col="rn2",
     )
     labels = emb.select(
         F.col("vec_id").alias("neighbor_id"),
@@ -892,17 +875,10 @@ def knn_classifier_confusion(
         .groupBy("query_id", "true_label", "neighbor_label")
         .agg(F.count("*").alias("n_votes"))
     )
-    wv = Window.partitionBy("query_id").orderBy(
-        F.desc("n_votes"), F.asc("neighbor_label")
-    )
-    decided = (
-        votes.withColumn("rn", F.row_number().over(wv))
-        .filter(F.col("rn") == 1)
-        .select(
-            "query_id",
-            "true_label",
-            F.col("neighbor_label").alias("predicted"),
-        )
+    decided = top_k_per_group(
+        votes, ["query_id"], 1, F.desc("n_votes"), F.asc("neighbor_label")
+    ).select(
+        "query_id", "true_label", F.col("neighbor_label").alias("predicted")
     )
     return (
         decided.groupBy("true_label", "predicted")
@@ -1011,8 +987,6 @@ def retrieval_ndcg_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: same broadcast-queries exact-kNN plan as the mAP audit plus
     one metadata-sized aggregation over Q x 20 rows."""
-    from pyspark.sql import Window
-
     from oracle_vector_search_spark.functions.vector import (
         as_double_array,
         cosine_similarity,
@@ -1049,12 +1023,11 @@ def retrieval_ndcg_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine_similarity("qv", "dv"), 6).alias("score"),
         )
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
     dcg = (
-        scored.withColumn("rnk", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rnk") <= _NDCG_K)
+        top_k_per_group(
+            scored, ["query_id"], _NDCG_K, F.desc("score"),
+            F.asc("neighbor_id"), rank_col="rnk",
+        )
         .groupBy("query_id")
         .agg(
             F.sum(
@@ -1198,15 +1171,10 @@ def binary_quantization_recall(
         F.col("hi").alias("qhi"),
     )
     hd = F.expr("bit_count(qlo ^ lo) + bit_count(qhi ^ hi)")
-    w_h = Window.partitionBy("query_id").orderBy(
-        hd.asc(), F.asc("vec_id")
-    )
-    hat = (
-        codes.crossJoin(F.broadcast(q))
-        .withColumn("rn", F.row_number().over(w_h))
-        .filter(F.col("rn") <= _BQ_K)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
+    hat = top_k_per_group(
+        codes.crossJoin(F.broadcast(q)),
+        ["query_id"], _BQ_K, hd.asc(), F.asc("vec_id"),
+    ).select("query_id", F.col("vec_id").alias("neighbor_id"))
     ext5 = knn_exact(
         emb, emb.filter(F.col("vec_id") < _BQ_NQ), k=_BQ_K
     ).select("query_id", "neighbor_id")

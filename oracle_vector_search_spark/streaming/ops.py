@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from oracle_vector_search_spark.io import load_table, write_artifact
+from oracle_vector_search_spark.operators.topk import top_k_per_group
 from oracle_vector_search_spark.scratch import scratch_dir
 
 
@@ -269,42 +270,16 @@ def streaming_knn_scores(
     re-rank over the accumulated candidates is the GEMM tier's merge.
     Nothing collects to the driver, so throughput is unbounded in the
     number of queries; the candidates are ≤ k rows per query per batch."""
-    from pyspark.sql import Window
-
-    from oracle_vector_search_spark.functions.vector import (
-        as_double_array,
-        cosine_similarity,
-    )
+    from oracle_vector_search_spark.operators.knn import knn_exact
 
     emb = load_table(spark, sf_dir, "embeddings")
-    index_df = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        as_double_array("embedding").alias("v_vec"),
-    )
     queries = emb.filter(F.col("vec_id") < n_queries).select(
         "vec_id", "embedding"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
 
     def score_batch(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
-        q = batch.select(
-            F.col("vec_id").alias("query_id"),
-            as_double_array("embedding").alias("q_vec"),
-        )
-        return (
-            index_df.join(F.broadcast(q))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(
-                    cosine_similarity("q_vec", "v_vec"), 6
-                ).alias("score"),
-            )
-            .withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") <= k)
-            .select("query_id", "neighbor_id", "score")
+        return knn_exact(emb, batch, k).select(
+            "query_id", "neighbor_id", "score"
         )
 
     acc = drain_file_stream(
@@ -313,9 +288,8 @@ def streaming_knn_scores(
         score_batch,
         append=True,
     )
-    return (
-        acc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return top_k_per_group(
+        acc, ["query_id"], k, F.desc("score"), F.asc("neighbor_id")
     )
 
 
@@ -384,8 +358,6 @@ def upsert_snapshot_stream(
     same ``root``, a stream that failed mid-run resumes from its
     checkpoint and ledger.
     """
-    from pyspark.sql import Window
-
     from oracle_vector_search_spark.operators.merge import merge_upsert
 
     events = load_table(spark, sf_dir, "events").select(
@@ -395,16 +367,12 @@ def upsert_snapshot_stream(
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("value_cents"),
     )
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc("ts_us"), F.desc("event_id")
-    )
 
     def merge_batch(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
-        latest = (
-            batch.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        latest = top_k_per_group(
+            batch, ["user_id"], 1, F.desc("ts_us"), F.desc("event_id"),
+            rank_col="__rn",
+        ).drop("__rn")
         if prev is None:
             return latest
         return merge_upsert(
@@ -544,13 +512,8 @@ def transform_with_state_user_type_stats(
         timeMode="None",
     )
     mem = run_to_memory(updated, "update")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        mem.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", "n_types", "sum_value_cents")
+    return top_k_per_group(mem, ["user_id"], 1, F.desc("n_events")).select(
+        "user_id", "n_events", "n_types", "sum_value_cents"
     )
 
 
@@ -621,8 +584,6 @@ def weighted_reservoir_stream(
     and each epoch's work is one batch-sized scan plus a
     reservoir-sized merge window.
     """
-    from pyspark.sql import Window
-
     from oracle_vector_search_spark.queries.curation_queries import (
         _AES_K,
         aes_keyed_docs,
@@ -631,18 +592,17 @@ def weighted_reservoir_stream(
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    win = Window.partitionBy("source").orderBy(
-        F.desc("aes_key"), F.asc("doc_id")
-    )
 
     def merge_batch(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         incoming = aes_keyed_docs(batch)
         if prev is not None:
             incoming = incoming.unionByName(prev)
         return (
-            incoming.withColumn("rnk", F.row_number().over(win))
-            .filter(F.col("rnk") <= _AES_K)
-            .drop("rnk")
+            top_k_per_group(
+                incoming, ["source"], _AES_K, F.desc("aes_key"),
+                F.asc("doc_id"),
+            )
+            .drop("rank")
             .coalesce(1)
         )
 

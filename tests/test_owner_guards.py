@@ -11,6 +11,9 @@
 * ``operators.rowmap.map_rows`` is the one Arrow batch loop for row
   kernels: only it and the batch-wise stages in ``_BATCH_MAPS`` call
   ``mapInPandas``, ``applyInPandas`` or ``mapInArrow``.
+* ``operators.topk.top_k_per_group`` is the one per-group top-k: only
+  ``operators/topk.py`` and the row-numbering sites in ``_ROW_NUMBERS``
+  call ``F.row_number``.
 """
 
 from __future__ import annotations
@@ -43,6 +46,51 @@ _BATCH_MAPS = {
     "cogroup per user",
     ("queries/curation_queries.py", "video_keyframe_knn"): "one "
     "embedding call per batch of frames",
+}
+# (file, top-level function) → why it numbers rows instead of cutting a
+# per-group top-k with a constant k
+_ROW_NUMBERS = {
+    ("operators/dedup.py", "prefix_filter_jaccard_join"): "the prefix "
+    "length is a per-row expression of the set size",
+    ("operators/ingest.py", "assign_index_ids"): "dense ids for every row",
+    ("operators/ingest.py", "assign_index_ids_two_phase"): "dense "
+    "per-partition ranks for every row",
+    ("operators/sft.py", "turn_alternation_stats"): "turn index of every "
+    "turn",
+    ("queries/curation_queries.py", "dsir_importance_select"): "position "
+    "in a score-tie group, compared with a data-dependent quota",
+    ("queries/curation_queries.py", "largest_remainder_allocation"): "the "
+    "round-robin order of every source",
+    ("queries/curation_queries.py", "temperature_mixture_allocation"): "the "
+    "round-robin order of every source",
+    ("queries/dedup_queries.py", "dedup_keep_best"): "the rank-1 member is "
+    "picked inside an aggregate that also counts every member",
+    ("queries/feature_queries.py", "sprt_ab_sequential_test"): "the step "
+    "index of a running sum",
+    ("queries/feature_queries.py", "split_conformal_intervals"): "an order "
+    "statistic at a data-dependent rank",
+    ("queries/feature_queries.py", "qq_deciles_by_arm"): "order "
+    "statistics at data-dependent ranks",
+    ("queries/preference_queries.py", "preference_pairs_dpo"): "top and "
+    "bottom ranks from one pass, paired on the rank number",
+    ("queries/relational_queries.py", "supplier_running_revenue"): "the "
+    "row number is an output column of every row",
+    ("queries/scale_queries.py", "two_pass_exact_median"): "the median's "
+    "rank inside its bucket is data-dependent",
+    ("queries/sft_queries.py", "sft_loss_mask_accounting"): "turn index "
+    "of every turn",
+    ("queries/sft_queries.py", "bleu2_pair_eval"): "pairs consecutive "
+    "rows by their number",
+    ("queries/streaming_queries.py", "streaming_weighted_reservoir"): "numbers "
+    "the drained reservoir, already at most k rows per source",
+    ("queries/temporal_queries.py", "scd2_user_type_intervals"): "SCD2 "
+    "version of every row",
+    ("queries/temporal_queries.py", "scd2_point_in_time_join"): "SCD2 "
+    "version of every row",
+    ("queries/temporal_queries.py", "temporal_holdout_split"): "the kept "
+    "row carries its group's size from a sibling window over every row",
+    ("queries/training_queries.py", "hybrid_rrf_retrieval_top10"): "full "
+    "lexical and vector ranks of every document, fused before any cut",
 }
 
 
@@ -118,3 +166,20 @@ def test_row_kernels_run_through_map_rows():
     )
     # a stale allow-list entry hides nothing but misleads the reader
     assert found == set(_BATCH_MAPS), sorted(set(_BATCH_MAPS) - found)
+
+
+def test_per_group_top_k_runs_through_top_k_per_group():
+    found = {
+        (rel, fn)
+        for rel, fn in _owners_of(
+            lambda n: isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "row_number"
+        )
+        if rel != "operators/topk.py"
+    }
+    assert found <= set(_ROW_NUMBERS), (
+        "cut per-group top-k with operators.topk.top_k_per_group: "
+        f"{sorted(found - set(_ROW_NUMBERS))}"
+    )
+    assert found == set(_ROW_NUMBERS), sorted(set(_ROW_NUMBERS) - found)

@@ -286,29 +286,43 @@ def test_drain_resumes_from_its_checkpoint(spark, tmp_path):
     assert _ids(out) == _ids(whole) == [10 * i for i in range(40)]
 
 
-def _jvm_temporaries(spark):
-    """The checkpoint directories Spark made itself in the JVM's
-    ``java.io.tmpdir``."""
-    tmp = spark.sparkContext._jvm.System.getProperty("java.io.tmpdir")
-    return {f for f in os.listdir(tmp) if f.startswith("temporary-")}
+@pytest.fixture
+def jvm_tmpdir(spark, tmp_path):
+    """The session JVM's ``java.io.tmpdir``, pointed at a directory of
+    this test's own while it runs (Spark makes the checkpoint directory
+    of a query without one there), so no other Spark process on the
+    host can add to what the test inspects."""
+    system = spark.sparkContext._jvm.System
+    host = system.getProperty("java.io.tmpdir")
+    mine = tmp_path / "jvm_tmpdir"
+    mine.mkdir()
+    system.setProperty("java.io.tmpdir", str(mine))
+    try:
+        yield mine
+    finally:
+        system.setProperty("java.io.tmpdir", host)
 
 
-def test_failed_drain_leaves_no_temporary_checkpoint(spark):
+def _temporaries(tmpdir):
+    """The checkpoint directories Spark made itself in ``tmpdir``."""
+    return [f for f in os.listdir(tmpdir) if f.startswith("temporary-")]
+
+
+def test_failed_drain_leaves_no_temporary_checkpoint(spark, jvm_tmpdir):
     """Spark deletes a checkpoint it created itself only when the query
     succeeds; the driver's checkpoint lives under its scratch root, so a
     failed stream leaves nothing in the JVM's temp directory."""
-    before = _jvm_temporaries(spark)
     with pytest.raises(StreamingQueryException):
         ops.drain_file_stream(
             spark.range(40),
             "id long",
             _failing_on(2, lambda batch, prev: batch),
         )
-    assert _jvm_temporaries(spark) <= before
+    assert _temporaries(jvm_tmpdir) == []
 
 
 def test_failed_memory_stream_leaves_no_temporary_checkpoint(
-    spark, tmp_path
+    spark, tmp_path, jvm_tmpdir
 ):
     """The same for ``run_to_memory``: a stateful stream whose UDF
     raises leaves nothing in the JVM's temp directory."""
@@ -320,7 +334,6 @@ def test_failed_memory_stream_leaves_no_temporary_checkpoint(
         .groupBy(boom("id").alias("k"))
         .count()
     )
-    before = _jvm_temporaries(spark)
     with pytest.raises(StreamingQueryException):
         ops.run_to_memory(counts, "complete")
-    assert _jvm_temporaries(spark) <= before
+    assert _temporaries(jvm_tmpdir) == []

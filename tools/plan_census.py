@@ -1,10 +1,21 @@
 #!/usr/bin/env python
-"""Registry-wide physical-plan census at a given SF; ranks by op count."""
+"""Registry-wide physical-plan census at a given SF: one row per query.
+
+Usage: python tools/plan_census.py <sf_dir>
+
+Prints every registered query sorted by name with its physical-operator
+count and the counts of the plan features a refactor must not move
+(exchanges, joins, scans, windows, window group limits, Python
+operators), plus Project and Filter counts. The last line is a checksum
+over all rows, so two censuses compare with one line.
+"""
+import hashlib
+import os
 import re
 import sys
 import traceback
 
-sys.path.insert(0, __import__("os").path.dirname(__import__("os").path.dirname(__import__("os").path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 sf_dir = sys.argv[1]
 
@@ -12,31 +23,38 @@ from oracle_vector_search_spark.plans.inspect import python_operators  # noqa: E
 from oracle_vector_search_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entry  # noqa: E402
 
-spark = get_spark("census_all_r16")
+spark = get_spark("plan_census")
 qs = entry.queries()
 
-rows = []
-for name, fn in qs.items():
+COLS = ("ops", "ex", "smj", "bhj", "scan", "win", "wgl", "py", "proj", "filt")
+lines = [" ".join(f"{c:>4}" for c in COLS) + "  name"]
+for name in sorted(qs):
     try:
-        df = fn(spark, sf_dir)
+        df = qs[name](spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
     except Exception:
-        print(f"{name}: ERROR {traceback.format_exc(limit=1).splitlines()[-1]}")
+        lines.append(
+            f"ERROR {traceback.format_exc(limit=1).splitlines()[-1]}  {name}"
+        )
         continue
     head = plan.split("\n\n")[0]
-    ops = len(re.findall(r"^\(\d+\) ", plan, re.M))
-    ex = len(re.findall(r"\bExchange\b", head))
-    smj = head.count("SortMergeJoin")
-    bhj = head.count("BroadcastHashJoin")
-    scans = len(re.findall(r"Scan parquet|Scan ExistingRDD", head))
-    py = len(python_operators(head))
-    rows.append((ops, ex, smj, bhj, scans, py, name))
+    row = (
+        len(re.findall(r"^\(\d+\) ", plan, re.M)),
+        len(re.findall(r"\bExchange\b", head)),
+        head.count("SortMergeJoin"),
+        head.count("BroadcastHashJoin"),
+        len(re.findall(r"Scan parquet|Scan ExistingRDD", head)),
+        len(re.findall(r"\bWindow \(", head)),
+        len(re.findall(r"\bWindowGroupLimit \(", head)),
+        len(python_operators(head)),
+        len(re.findall(r"\bProject \(", head)),
+        len(re.findall(r"\bFilter \(", head)),
+    )
+    lines.append(" ".join(f"{v:4d}" for v in row) + f"  {name}")
 
-rows.sort(reverse=True)
-print(f"{'ops':>4} {'ex':>3} {'smj':>3} {'bhj':>3} {'scan':>4} {'py':>2}  name")
-for ops, ex, smj, bhj, scans, py, name in rows[:40]:
-    print(f"{ops:4d} {ex:3d} {smj:3d} {bhj:3d} {scans:4d} {py:2d}  {name}")
-print("...")
-print("total censused:", len(rows))
+for line in lines:
+    print(line)
+digest = hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
+print(f"total censused: {len(lines) - 1}  checksum: {digest}")
