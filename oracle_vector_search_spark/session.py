@@ -1,10 +1,16 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode defaults mirror the driver environment (local[32], single JVM)
-but every knob is chosen so the same code runs unchanged on a multi-node
-cluster: AQE on (runtime re-plan + skew-join handling), Arrow on (pandas
-UDF fast path), UTC session timezone (oracle comparability), shuffle
-partitions sized to cores rather than the 200 default.
+Local mode runs one JVM with one task slot per core this process may
+run on (``SPARK_GRAFT_CPUS`` overrides), but every knob is chosen so the
+same code runs unchanged on a multi-node cluster: AQE on (runtime
+re-plan + skew-join handling), Arrow on (pandas UDF fast path), UTC
+session timezone (oracle comparability), shuffle partitions sized to
+cores rather than the 200 default.
+
+In local mode the Python workers fork from ``pyworker``, the engine's
+daemon, whenever they can import this package: stock pyspark re-reads
+pyspark.zip and the Spark jar on the workers' path at the start of
+every Python runner (see that module).
 
 ``get_spark`` is the only code that sizes shuffles; no query or stream
 overrides ``spark.sql.shuffle.partitions``. One count is enough: AQE
@@ -17,6 +23,8 @@ the host's cores.
 from __future__ import annotations
 
 import os
+import site
+from importlib.machinery import PathFinder
 
 from py4j.protocol import Py4JError
 from pyspark import SparkContext
@@ -33,11 +41,19 @@ def _default_driver_mem() -> str:
     return f"{min(phys // 2, 48 << 30) >> 20}m"
 
 
+def _workers_import_engine() -> bool:
+    """Whether a local Python worker, which starts in this directory
+    with this ``PYTHONPATH``, finds this package. A program that put the
+    package on ``sys.path`` by hand keeps the stock daemon."""
+    path = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    path = [p for p in path + site.getsitepackages() if p]
+    return PathFinder.find_spec(__package__, path) is not None
+
+
 def get_spark(
     app_name: str = "oracle_vector_search_spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
@@ -45,7 +61,9 @@ def get_spark(
     everything set here is cluster-safe.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+        cpus = int(
+            os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+        )
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cpus), 8)
 
@@ -68,11 +86,14 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
         )
+        if _workers_import_engine():
+            # a static conf: it must reach the daemon before its first fork
+            builder = builder.config(
+                "spark.python.daemon.module",
+                "oracle_vector_search_spark.pyworker",
+            )
 
     spark = builder.getOrCreate()
-    if extra_conf:
-        for k, v in extra_conf.items():
-            spark.conf.set(k, v)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

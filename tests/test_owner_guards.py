@@ -14,6 +14,9 @@
 * ``operators.topk.top_k_per_group`` is the one per-group top-k: only
   ``operators/topk.py`` and the row-numbering sites in ``_ROW_NUMBERS``
   call ``F.row_number``.
+* ``pyworker`` is the one Python worker bootstrap: only ``session.py``
+  names ``spark.python.daemon.module`` and only ``pyworker.py`` assigns
+  to ``zipimport``.
 """
 
 from __future__ import annotations
@@ -183,3 +186,34 @@ def test_per_group_top_k_runs_through_top_k_per_group():
         f"{sorted(found - set(_ROW_NUMBERS))}"
     )
     assert found == set(_ROW_NUMBERS), sorted(set(_ROW_NUMBERS) - found)
+
+
+def _assigns_to_zipimport(n) -> bool:
+    if isinstance(n, ast.Assign):
+        targets = n.targets
+    elif isinstance(n, (ast.AugAssign, ast.AnnAssign)):
+        targets = [n.target]
+    elif (
+        isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Name)
+        and n.func.id == "setattr"
+    ):
+        targets = n.args[:1]
+    else:
+        return False
+    for t in targets:
+        while isinstance(t, ast.Attribute):
+            t = t.value
+        if isinstance(t, ast.Name) and t.id == "zipimport":
+            return True
+    return False
+
+
+def test_one_python_worker_bootstrap():
+    named = _owners_of(
+        lambda n: isinstance(n, ast.Constant)
+        and n.value == "spark.python.daemon.module"
+    )
+    assert named == {("session.py", "get_spark")}, sorted(named)
+    patched = _owners_of(_assigns_to_zipimport)
+    assert patched == {("pyworker.py", None)}, sorted(patched)
